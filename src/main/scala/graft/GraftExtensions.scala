@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{ArrayDot, ArrayNorm, BpeMerges, BpeSplit, GramHashes, Minhash16Agg, MinhashSigExpr, ShinglesOf, Simhash64Agg, SubwordCount, SubwordSplit, SubwordVocab, WinnowFps}
+import graft.functions.VectorExprs
 
 /** Spark-idiomatic library entry point: enable the graft codegen
   * kernels on any session with
@@ -12,39 +12,13 @@ import graft.functions.{ArrayDot, ArrayNorm, BpeMerges, BpeSplit, GramHashes, Mi
   * `VectorExprs.register` call needed, and the functions are injected
   * at session build, so they exist before the first query (including
   * in spark-sql / JDBC contexts that never touch Scala code).
-  * Registers the same kernels as
-  * [[graft.functions.VectorExprs.register]]: array_dot / array_norm
-  * (codegen'd vector folds), shingles_of (single-pass distinct
-  * n-gram builder), simhash64_agg / minhash16_agg (map-side-combining
-  * imperative signature aggregates), subword_count / subword_split
-  * (greedy longest-match tokenization against a constant-plan-size
-  * vocab reference).
+  * Injects exactly [[graft.functions.VectorExprs.functions]], the
+  * table `VectorExprs.register` installs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String) =
-    new ExpressionInfo("graft.functions", name)
-
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "array_dot" -> (es => ArrayDot(es.head, es(1))),
-    "array_norm" -> (es => ArrayNorm(es.head)),
-    "shingles_of" -> (es => ShinglesOf(es.head,
-      es(1).eval().asInstanceOf[Number].intValue())),
-    "simhash64_agg" -> (es => Simhash64Agg(es.head)),
-    "minhash16_agg" -> (es => Minhash16Agg(es.head)),
-    "subword_count" -> (es => SubwordCount(es.head, SubwordVocab.fromArgs(es))),
-    "subword_split" -> (es => SubwordSplit(es.head, SubwordVocab.fromArgs(es))),
-    "bpe_split" -> (es => BpeSplit(es.head, BpeMerges.fromArgs(es))),
-    "gram_hashes" -> (es => GramHashes(es.head,
-      es(1).eval().asInstanceOf[Number].intValue())),
-    "winnow_fps" -> (es => WinnowFps(es.head,
-      es(1).eval().asInstanceOf[Number].intValue(),
-      es(2).eval().asInstanceOf[Number].intValue())),
-    "minhash_sig" -> (es => MinhashSigExpr(es.head,
-      es(1).eval().asInstanceOf[Number].intValue())))
-
   override def apply(ext: SparkSessionExtensions): Unit =
-    fns.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info(name), builder))
+    VectorExprs.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), builder))
     }
 }

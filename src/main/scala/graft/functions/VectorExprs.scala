@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -123,44 +124,43 @@ case class ShinglesOf(child: Expression, n: Int)
 }
 
 object VectorExprs {
-  /** Register `array_dot` / `array_norm` / `shingles_of` with the
-    * session's function registry so they are usable via
-    * expr("array_dot(a, b)") / call_function. Idempotent.
+  /** Every graft kernel by SQL name — the one table both entry points
+    * install: [[register]] (imperative, per session) and
+    * [[graft.GraftExtensions]] (`spark.sql.extensions`, at session
+    * build). `subword_xxx(word, vocabArray, minLen, maxLen)` folds the
+    * vocab literal into a hash-set reference at resolution time, so
+    * the resolved plan stays constant-size at any vocab size.
+    */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = {
+    def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+    Seq(
+      "array_dot" -> (es => ArrayDot(es.head, es(1))),
+      "array_norm" -> (es => ArrayNorm(es.head)),
+      "shingles_of" -> (es => ShinglesOf(es.head, int(es(1)))),
+      "simhash64_agg" -> (es => Simhash64Agg(es.head)),
+      "minhash16_agg" -> (es => Minhash16Agg(es.head)),
+      "bottom_k_agg" -> (es => BottomKAgg(es.head, int(es(1)))),
+      "subword_count" -> (es =>
+        SubwordCount(es.head, SubwordVocab.fromArgs(es))),
+      "subword_split" -> (es =>
+        SubwordSplit(es.head, SubwordVocab.fromArgs(es))),
+      "bpe_split" -> (es => BpeSplit(es.head, BpeMerges.fromArgs(es))),
+      "gram_hashes" -> (es => GramHashes(es.head, int(es(1)))),
+      "winnow_fps" -> (es => WinnowFps(es.head, int(es(1)), int(es(2)))),
+      "minhash_sig" -> (es => MinhashSigExpr(es.head, int(es(1)))))
+  }
+
+  /** Register [[functions]] with the session's function registry so
+    * they are usable via expr("array_dot(a, b)") / call_function.
+    * Check-before-register: a name already present (an earlier call,
+    * or the extensions path) is left as is, so repeated calls are
+    * free and log nothing.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("array_dot",
-      es => ArrayDot(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("array_norm",
-      es => ArrayNorm(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingles_of",
-      es => ShinglesOf(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64_agg",
-      es => Simhash64Agg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash16_agg",
-      es => Minhash16Agg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bottom_k_agg",
-      es => BottomKAgg(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    // subword_xxx(word, vocabArray, minLen, maxLen): the vocab literal
-    // is folded into a hash-set reference at resolution time, so the
-    // resolved plan stays constant-size at any vocab size
-    reg.createOrReplaceTempFunction("subword_count",
-      es => SubwordCount(es.head, SubwordVocab.fromArgs(es)), "scala_udf")
-    reg.createOrReplaceTempFunction("subword_split",
-      es => SubwordSplit(es.head, SubwordVocab.fromArgs(es)), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_split",
-      es => BpeSplit(es.head, BpeMerges.fromArgs(es)), "scala_udf")
-    reg.createOrReplaceTempFunction("gram_hashes",
-      es => GramHashes(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fps",
-      es => WinnowFps(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinhashSigExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
+    functions.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -1306,8 +1306,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       val (u1, u2) = (unknownNow(), unknownNow())
       // classification-reclaimable on BOTH fresh reads AND not
       // parser-readable: the parse layer is more lenient than the
-      // header scan in one corner (a legacy header-only body whose
-      // final newline a copy clipped still folds), and a generation
+      // header scan in one corner (an `mlist=0` header-only body whose
+      // last header line a copy clipped still folds), and a generation
       // ANY reader can fold must never be deletable through the ack
       // path — deleting a foldable newest head would silently roll
       // the table back

@@ -47,18 +47,17 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * group under the catch-all partition key `""`, which every admit
   * function must pass.
   *
-  * Format-compat contract: FORWARD-only, like round 18's delta-log
-  * bump — a pre-round-19 binary sees `mlist=`/`madd`/`mdel` bodies as
-  * unreadable generations and degrades to legacy listing mode; a
-  * `protocol` marker file under `_manifest` names the format for
-  * operators debugging a mixed-version rollout. THIS binary reads
-  * every older on-disk form forever: plain or gzip `count=`
-  * checkpoints with inline entries, file-level `add`/`del` deltas,
-  * info-less bodies. A chain must be form-homogeneous (file-level
-  * patches cannot soundly apply to a manifest set, and vice versa);
-  * the fold rejects mixed chains whole, and writers never produce
-  * them — a commit atop a legacy-form parent folds it and writes a
-  * two-level CHECKPOINT (the upgrade path).
+  * Format-compat contract: ONE format. Every generation is an
+  * `mlist=` checkpoint or an `madd`/`mdel` delta over `mf-*` files,
+  * plain or gzip, with or without an `info` line; anything else —
+  * including the pre-round-19 inline `count=` checkpoints and
+  * file-level `add`/`del` deltas, which this binary no longer reads —
+  * is an unknown body form: reads skip it (falling back to the next
+  * foldable generation or to listing mode) and vacuum stands down
+  * while it is present (fail closed, never acknowledgeable). Future
+  * formats announce themselves per body with a `protocol` capability
+  * line ([[StoreManifest.SupportedProtocols]]), rejected whole by a
+  * reader that lacks the capability.
   *
   * Snapshot-isolation contract (round-16, unchanged): the manifest
   * generation IS the commit point for every layout mutation. Rewrites
@@ -200,23 +199,20 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   // ---- raw generation bodies (parse layer) ----
 
   /** One parsed generation FILE, before chain folding. A checkpoint
-    * carries the absolute state — inline `entries` (pre-round-19
-    * bodies) OR `manifests` refs (two-level), with `twoLevel` naming
-    * the form so the fold can reject mixed chains; a delta carries one
-    * commit's patch plus its required parent pointer, file-level
-    * (`adds`/`drops`, legacy) or manifest-level (`mAdds`/`mDels`).
-    * Both carry the ABSOLUTE schema state (a publisher that no longer
-    * knows the exact schema writes none, and readers must drop to
-    * footer inference — expire's drifted-column contract).
+    * carries the absolute state as `manifests` refs; a delta carries
+    * one commit's manifest-set patch (`mAdds`/`mDels`) plus its
+    * required parent pointer. Both carry the ABSOLUTE schema state (a
+    * publisher that no longer knows the exact schema writes none, and
+    * readers must drop to footer inference — expire's drifted-column
+    * contract).
     */
   private sealed trait RawGen
   private final case class FullGen(parent: Option[String],
-      entries: Seq[Entry], manifests: Seq[MfRef], twoLevel: Boolean,
+      manifests: Seq[MfRef],
       schema: Option[org.apache.spark.sql.types.StructType],
       dead: Seq[Dead], info: Option[String]) extends RawGen
   private final case class DeltaGen(parent: String,
       schema: Option[org.apache.spark.sql.types.StructType],
-      adds: Seq[Entry], drops: Seq[String],
       mAdds: Seq[MfRef], mDels: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
       info: Option[String]) extends RawGen
@@ -227,8 +223,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * warm planner re-GETs nothing. Bounded two ways: by KEY count (a
     * cadence-committing engine publishes every flush; months of
     * cadences must not pin every generation ever retained) and by
-    * cumulative cached WEIGHT — a legacy inline checkpoint of a
-    * 10⁶-file table holds ~150 MB of Entry objects, so a count-only
+    * cumulative cached WEIGHT — an assembled snapshot of a 10⁶-file
+    * table holds ~150 MB of Entry objects, so a count-only
     * cap would admit gigabytes. The weight bound scales with the
     * largest single item (one legitimately-huge parse must stay
     * cacheable without being evicted by its own size); `largest`
@@ -268,9 +264,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   private val parseMemo =
     new CappedMemo[(String, Long, Long), RawGen](
       StoreManifest.ParseMemoCap, {
-        case f: FullGen =>
-          f.entries.size.toLong + f.manifests.size.toLong
-        case d: DeltaGen => d.adds.size.toLong + d.mAdds.size.toLong
+        case f: FullGen => f.manifests.size.toLong
+        case d: DeltaGen => d.mAdds.size.toLong
       })
 
   private def parseRaw(st: FileStatus): Option[RawGen] =
@@ -280,8 +275,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   /** Read one small metadata file whole, gzip-sniffed (magic 1f 8b):
     * checkpoints and large manifest files compress ~13× (shared path
-    * prefixes); legacy plain bodies and small deltas/manifests stay
-    * uncompressed — both forms must read forever. A TRUNCATED gzip
+    * prefixes); deltas and small manifests stay uncompressed, so both
+    * encodings must read. A TRUNCATED gzip
     * body throws (missing CRC trailer), the same whole-file rejection
     * a torn plain self-count gets.
     */
@@ -308,8 +303,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     try {
       val lines = readBody(p).split("\n", -1).toSeq.dropRight(1)
       lines.headOption.flatMap { h =>
-        if (h.startsWith("count=")) parseFull(h, lines.drop(1))
-        else if (h.startsWith("mlist=")) parseMlist(h, lines.drop(1))
+        if (h.startsWith("mlist=")) parseMlist(h, lines.drop(1))
         else if (h.startsWith("delta=")) parseDelta(h, lines.drop(1))
         else None
       }
@@ -362,28 +356,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       case None => Some(rest)
     }
 
-  /** The legacy full-list body: `count=N` (inline entry lines only —
-    * they come last, so a torn suffix always breaks the count),
-    * optional headers, `dead` lines, entry lines. Read-only since
-    * round 19 (writers emit `mlist=` checkpoints), kept forever for
-    * pre-round-19 stores.
-    */
-  private def parseFull(h: String, rest: Seq[String]): Option[RawGen] = {
-    val (parentName, schemaJson, info, afterInfo) = parseHeader(rest)
-    val (deadLines, entryLines) = afterInfo.span(_.startsWith("dead\t"))
-    if (!h.stripPrefix("count=").toIntOption.contains(entryLines.size))
-      None
-    else {
-      val schema = schemaJson.map(parseSchema)
-      val dead = deadLines.map(l => parseDead(l.stripPrefix("dead\t")))
-      val entries = entryLines.map(parseEntry)
-      if (entries.forall(_.isDefined) && dead.forall(_.isDefined))
-        Some(FullGen(parentName, entries.flatten, Nil, twoLevel = false,
-          schema, dead.flatten, info))
-      else None
-    }
-  }
-
   /** The two-level checkpoint body: `mlist=N` (manifest-ref lines
     * only — last, so a torn suffix breaks the count), optional
     * headers, `dead` lines, `m` lines.
@@ -399,8 +371,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       val dead = deadLines.map(l => parseDead(l.stripPrefix("dead\t")))
       val refs = mLines.map(parseMfRef(_, "m\t"))
       if (refs.forall(_.isDefined) && dead.forall(_.isDefined))
-        Some(FullGen(parentName, Nil, refs.flatten, twoLevel = true,
-          schema, dead.flatten, info))
+        Some(FullGen(parentName, refs.flatten, schema, dead.flatten,
+          info))
       else None
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -409,8 +381,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * torn suffix breaks it — deltas can be adds-free, so an entry-only
     * count would miss a truncation through the tombstone lines),
     * required `parent`, optional `schema` (ABSOLUTE state), optional
-    * `info`, then `del`/`dead-`/`dead+`/`add` (legacy file-level) or
-    * `mdel`/`madd` (two-level) lines.
+    * `info`, then `dead-`/`dead+`/`mdel`/`madd` lines; any other line
+    * is malformed.
     */
   private def parseDelta(h: String, rest: Seq[String]): Option[RawGen] = {
     if (!h.stripPrefix("delta=").toIntOption.contains(rest.size))
@@ -420,21 +392,16 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     if (parentName.isEmpty) return None // a delta without a parent is torn
     try {
       val schema = schemaJson.map(parseSchema)
-      val drops = scala.collection.mutable.ArrayBuffer.empty[String]
       val deadMinus = scala.collection.mutable.ArrayBuffer.empty[String]
       val deadPlus = scala.collection.mutable.ArrayBuffer.empty[Option[Dead]]
-      val adds = scala.collection.mutable.ArrayBuffer.empty[Option[Entry]]
       val mDels = scala.collection.mutable.ArrayBuffer.empty[String]
       val mAdds = scala.collection.mutable.ArrayBuffer.empty[Option[MfRef]]
       var malformed = false
       afterInfo.foreach {
-        case l if l.startsWith("del\t") => drops += l.stripPrefix("del\t")
         case l if l.startsWith("dead-\t") =>
           deadMinus += l.stripPrefix("dead-\t")
         case l if l.startsWith("dead+\t") =>
           deadPlus += parseDead(l.stripPrefix("dead+\t"))
-        case l if l.startsWith("add\t") =>
-          adds += parseEntry(l.stripPrefix("add\t"))
         case l if l.startsWith("mdel\t") =>
           mDels += l.stripPrefix("mdel\t")
         case l if l.startsWith("madd\t") =>
@@ -442,10 +409,9 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         case _ => malformed = true
       }
       if (malformed || deadPlus.exists(_.isEmpty) ||
-          adds.exists(_.isEmpty) || mAdds.exists(_.isEmpty)) None
-      else Some(DeltaGen(parentName.get, schema, adds.toSeq.flatten,
-        drops.toSeq, mAdds.toSeq.flatten, mDels.toSeq,
-        deadPlus.toSeq.flatten, deadMinus.toSeq, info))
+          mAdds.exists(_.isEmpty)) None
+      else Some(DeltaGen(parentName.get, schema, mAdds.toSeq.flatten,
+        mDels.toSeq, deadPlus.toSeq.flatten, deadMinus.toSeq, info))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -601,26 +567,23 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   private def genStatuses(): Map[String, FileStatus] = listState()._1
 
   /** One generation's chain-folded state at the MANIFEST level: the
-    * live manifest refs (two-level chains) or the inline entry list
-    * (legacy chains) — exactly one side populated, plus the
-    * chain-absolute schema/tombstones. Cheap for two-level chains
-    * (O(partitions), no entry assembly) — what commits plan from.
+    * live manifest refs plus the chain-absolute schema/tombstones.
+    * Cheap (O(partitions), no entry assembly) — what commits plan
+    * from.
     */
   private final case class GenState(gen: String, parent: Option[String],
-      inline: Seq[Entry], mfs: Seq[MfRef], twoLevel: Boolean,
+      mfs: Seq[MfRef],
       schema: Option[org.apache.spark.sql.types.StructType],
       dead: Seq[Dead], depth: Int, info: Option[String]) {
-    def approxSize: Long = inline.size.toLong + mfs.map(_.n).sum
+    def approxSize: Long = mfs.map(_.n).sum
   }
 
   /** Head-keyed fold memo, (name, size, mtime) like every other memo:
     * chain files are immutable, so a head's fold is valid as long as
-    * the head file itself is. Two-level states are tiny; the weight
-    * cap only matters for legacy inline chains.
+    * the head file itself is.
     */
   private val foldMemo = new CappedMemo[(String, Long, Long), GenState](
-    StoreManifest.ParseMemoCap,
-    s => s.inline.size.toLong + s.mfs.size.toLong)
+    StoreManifest.ParseMemoCap, _.mfs.size.toLong)
 
   private def fold(name: String,
       statuses: Map[String, FileStatus]): Option[GenState] =
@@ -633,14 +596,11 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     }
 
   /** Fold one generation's chain: a checkpoint IS its state; a delta
-    * patches its parent's fold — manifest-set patches for two-level
-    * chains, entry patches for legacy ones, and a MIXED chain is
-    * rejected whole (a file-level patch cannot soundly apply to a
-    * manifest set). None when this generation — or ANY link its chain
-    * needs — is missing, torn, mixed or cyclic: half a chain must
-    * read as no chain. Iterative one-pass application (collect the
-    * chain, patch one keyed map): a per-link rebuild would make
-    * folding O(size × depth) for no semantic gain.
+    * patches its parent's fold's manifest set. None when this
+    * generation — or ANY link its chain needs — is missing, torn or
+    * cyclic: half a chain must read as no chain. Iterative one-pass
+    * application (collect the chain, patch one keyed map): a per-link
+    * rebuild would make folding O(size × depth) for no semantic gain.
     */
   private def foldUncached(name: String,
       statuses: Map[String, FileStatus]): Option[GenState] = {
@@ -657,22 +617,13 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       }
     }
     val fg = full.get
-    val entryMap = scala.collection.mutable.LinkedHashMap
-      .from(fg.entries.map(e => e.rel -> e))
     val mfMap = scala.collection.mutable.LinkedHashMap
       .from(fg.manifests.map(r => r.name -> r))
     val deadMap = scala.collection.mutable.LinkedHashMap
       .from(fg.dead.map(d => d.rel -> d))
     var schema = fg.schema
-    var mixed = false
     chain.dropRight(1).reverseIterator.foreach {
       case (_, d: DeltaGen) =>
-        if ((d.adds.nonEmpty || d.drops.nonEmpty) && fg.twoLevel)
-          mixed = true
-        if ((d.mAdds.nonEmpty || d.mDels.nonEmpty) && !fg.twoLevel)
-          mixed = true
-        d.drops.foreach(entryMap.remove(_): Unit)
-        d.adds.foreach(e => entryMap(e.rel) = e)
         d.mDels.foreach(mfMap.remove(_): Unit)
         d.mAdds.foreach(r => mfMap(r.name) = r)
         d.deadMinus.foreach(deadMap.remove(_): Unit)
@@ -680,35 +631,27 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         schema = d.schema // ABSOLUTE per commit, like a checkpoint's
       case _ => // unreachable: only the chain tail is a FullGen
     }
-    if (mixed) return None
     val (parent, headInfo) = chain.head._2 match {
       case d: DeltaGen => (Some(d.parent), d.info)
       case f: FullGen => (f.parent, f.info)
     }
-    Some(GenState(name, parent, entryMap.values.toSeq,
-      mfMap.values.toSeq, fg.twoLevel, schema, deadMap.values.toSeq,
-      depth = chain.size - 1, info = headInfo))
+    Some(GenState(name, parent, mfMap.values.toSeq, schema,
+      deadMap.values.toSeq, depth = chain.size - 1, info = headInfo))
   }
 
   /** Assemble a folded state into its absolute entry-level
     * [[Snapshot]], reading only the manifests `admit` passes (by
     * partition key; the catch-all `""` must always pass). Duplicate
     * rels across one partition's accumulated manifests resolve
-    * newest-manifest-wins — the same overwrite semantics a legacy
-    * chain's entry patches had. None when any ADMITTED manifest is
+    * newest-manifest-wins. None when any ADMITTED manifest is
     * missing or torn: half a snapshot must read as no snapshot (an
     * unreadable manifest OUTSIDE the admitted window deliberately
     * does not poison the window's answer).
     */
   private def assemble(st: GenState,
       admit: String => Boolean): Option[Snapshot] = {
-    val inlineAdm =
-      if (st.inline.isEmpty) st.inline
-      else st.inline.filter(e => admit(partKeyOf(e.rel)))
-    val refsAdm = st.mfs.filter(r => admit(r.partKey))
-    val map = scala.collection.mutable.LinkedHashMap
-      .from(inlineAdm.map(e => e.rel -> e))
-    refsAdm.foreach { r =>
+    val map = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
+    st.mfs.filter(r => admit(r.partKey)).foreach { r =>
       parseMf(r) match {
         case None => return None // torn/missing admitted manifest
         case Some((_, es)) => es.foreach(e => map(e.rel) = e)
@@ -844,8 +787,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * manifest holding JUST the adds (accumulation — merged back to
     * one file per partition at the next checkpoint); partitions with
     * drops rewrite their manifests (cost ∝ touched partition, never
-    * the table). Rolls a checkpoint on cadence ([[CheckpointEvery]]),
-    * outsized patches, or a legacy-form parent (the upgrade path).
+    * the table). Rolls a checkpoint on cadence ([[CheckpointEvery]])
+    * or for outsized patches.
     * Same CAS + rename atom + rollback + retention as [[publish]].
     * Throws IllegalStateException when the parent no longer folds or
     * a touched partition's manifest is unreadable (the caller's
@@ -889,7 +832,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   private[graft] def resplitHot(): Seq[String] = {
     val ps = newestFold().getOrElse(return Nil)
-    if (!ps.twoLevel) return Nil
     val parent = ps.gen
     val hot = ps.mfs.groupBy(r => StoreManifest.dateKeyOf(r.partKey))
       .collect { case (part, refs) if part.nonEmpty &&
@@ -928,12 +870,9 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       resplit: Set[String] = Set.empty): Unit = {
     val patchLines = adds.size.toLong + drops.size + deadPlus.size +
       deadMinus.size
-    // delta only atop a two-level parent (a legacy parent converts via
-    // checkpoint), within the cadence, for a patch smaller than the
-    // resulting table — the same size heuristic the single-level form
-    // used, so commit-form decisions (and the specs pinning them) are
-    // unchanged
-    val isDelta = parentState.exists(ps => ps.twoLevel &&
+    // delta only atop a foldable parent, within the cadence, for a
+    // patch smaller than the resulting table
+    val isDelta = parentState.exists(ps =>
       ps.depth + 1 < CheckpointEvery &&
       patchLines < math.max(1L, newSize))
     val addsByPart = adds.groupBy(e => partKeyOf(e.rel))
@@ -1044,7 +983,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         val finalRefs = scala.collection.mutable.ArrayBuffer.empty[MfRef]
         val touched = addsByPart.keySet ++ dropsByPart.keySet ++ resplit
         parentState match {
-          case Some(ps) if ps.twoLevel =>
+          case Some(ps) =>
             val byPart = ps.mfs.groupBy(r => dateKeyOf(r.partKey))
             (byPart.keySet ++ touched).toSeq.sorted.foreach { part =>
               val refs = byPart.getOrElse(part, Nil)
@@ -1080,16 +1019,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
                 }
               }
             }
-          case Some(ps) => // legacy inline parent: convert whole
-            val cur = scala.collection.mutable.LinkedHashMap
-              .from(ps.inline.map(e => e.rel -> e))
-            drops.foreach(cur.remove(_): Unit)
-            adds.foreach(e => cur(e.rel) = e)
-            cur.values.toSeq.groupBy(e => partKeyOf(e.rel))
-              .toSeq.sortBy(_._1).foreach { case (part, es) =>
-                val rs = writeMfs(part, es)
-                newMfs ++= rs; finalRefs ++= rs
-              }
           case None => // first publish (or absolute re-publish over
                        // an unreadable parent): all partitions fresh
             adds.groupBy(e => partKeyOf(e.rel)).toSeq.sortBy(_._1)
@@ -1139,7 +1068,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   private def commitBody(bodyLines: Iterator[String], ext: String,
       parent: Option[String]): Unit = {
     fs.mkdirs(mdir): Unit
-    writeProtocolMarker()
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new Path(mdir, s".tmp-$uuid")
     // checkpoints gzip (shared path/digit prefixes compress ~13×, and
@@ -1280,38 +1208,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           .foreach(n => fs.delete(new Path(mfdir, n), false): Unit)
       }
     } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** Set once the marker is known present: the exists-probe must not
-    * cost every commit a metadata round trip on a long-lived writer.
-    */
-  @volatile private var protocolKnown = false
-
-  /** One-time advisory marker naming the on-disk protocol, so an
-    * operator (or an older binary's logs) can see WHY a pre-round-19
-    * reader degrades to listing mode instead of silently serving
-    * stale truth. Advisory only — the real contract is the header
-    * self-describing each body.
-    */
-  private def writeProtocolMarker(): Unit = if (!protocolKnown) {
-    val proto = new Path(mdir, "protocol")
-    if (fs.exists(proto)) protocolKnown = true
-    else {
-      try {
-        val o = fs.create(proto, false)
-        try o.write(("duospark manifest protocol: two-level (round 19)\n" +
-          "generations: gen-*.list (mlist manifest-list), " +
-          "gen-*.delta (madd/mdel manifest patches)\n" +
-          "partition manifests: mf-* (one date partition's entries)\n" +
-          "readers older than this protocol cannot fold these " +
-          "generations and degrade to legacy listing mode.\n")
-          .getBytes(StandardCharsets.UTF_8))
-        finally o.close()
-        protocolKnown = true
-      } catch { case scala.util.control.NonFatal(_) => () }
-      // advisory either way: a racing creator's failure is fine, the
-      // next commit re-probes
-    }
   }
 
   /** The operation-audit line, newline-scrubbed: the body is
@@ -1456,11 +1352,11 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * line-streamed until the first complete non-header line, however
     * wide the header grows (a drifted-schema `schema\t` line can run
     * to megabytes; a fixed read cap would truncate the `protocol`
-    * line away and silently fail the gate open). A `protocol\t` match
-    * must carry exactly one value token: a KNOWN-form body whose
-    * first entry names a root-level rel literally `protocol`
-    * (`protocol\t<size>\t<mtime>`) is an entry line ending the header
-    * region, not a capability.
+    * line away and silently fail the gate open). Any `protocol\t`
+    * value outside [[StoreManifest.SupportedProtocols]] classifies,
+    * exactly as the reader refuses to interpret it; a body line never
+    * starts with `protocol\t` (`m`/`dead` and delta patch lines do
+    * not), so no such line is ever mistaken for a capability.
     */
   private[graft] def futureFormatGens(): Seq[StoreManifest.UnknownGen] = {
     val (gens, _) = listState()
@@ -1560,7 +1456,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         Seq("parent\t", "schema\t", "info\t", "protocol\t")
       val sb = new java.lang.StringBuilder
       var lineNo = 0
-      var legacyForm = false
       var read = 0L
       while (true) {
         val c = data.read()
@@ -1587,21 +1482,14 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         if (c == '\n') {
           val line = sb.toString; sb.setLength(0)
           if (lineNo == 0) {
-            legacyForm = line.startsWith("count=")
-            if (!(legacyForm || line.startsWith("mlist=") ||
-                line.startsWith("delta=")))
+            if (!(line.startsWith("mlist=") || line.startsWith("delta=")))
               return Some(StoreManifest.UnknownGen(n,
                 s"unknown body form '${line.take(32)}'"))
           } else if (line.startsWith("protocol\t")) {
-            // LEGACY (count=) bodies have no protocol concept at all:
-            // their parser reads such a line as a (malformed or
-            // rel-literally-named-`protocol`) ENTRY — interpretable
-            // form either way, never a capability. In the two-level
-            // forms `parseProtocol` rejects ANY unrecognized value
-            // whole — multi-token included — so the classifier must
-            // flag exactly what the reader refuses to interpret, or
-            // the gate fails open on a future multi-token capability.
-            if (legacyForm) return None
+            // `parseProtocol` rejects ANY unrecognized value whole —
+            // multi-token included — so the classifier must flag
+            // exactly what the reader refuses to interpret, or the
+            // gate fails open on a future multi-token capability
             val cap = line.stripPrefix("protocol\t")
             if (!StoreManifest.SupportedProtocols(cap))
               return Some(StoreManifest.UnknownGen(n,
@@ -1634,8 +1522,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   /** The newest foldable generation's manifest refs as (name,
     * partKey) — spec/probe introspection for hot-split shape and
-    * checkpoint reuse-by-name assertions. Nil for legacy (inline)
-    * states.
+    * checkpoint reuse-by-name assertions.
     */
   private[graft] def mfRefs(): Seq[(String, String)] =
     newestFold().map(_.mfs.map(r => (r.name, r.partKey))).getOrElse(Nil)
@@ -1713,7 +1600,7 @@ object StoreManifest {
     * 1,000-files/date shape observability tables actually have never
     * crosses it, so normal tables keep one manifest per date. The
     * split engages only when a partition's manifest is (re)written —
-    * merge at checkpoint, rewrite, convert or first publish — never
+    * merge at checkpoint, rewrite or first publish — never
     * by re-keying untouched manifests. `SPARK_GRAFT_MF_SPLIT`
     * overrides for probes.
     */

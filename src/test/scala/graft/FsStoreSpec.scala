@@ -273,7 +273,7 @@ class FsStoreSpec extends SparkSpec {
       .filter(_.getPath.getName.startsWith("gen-"))
       .maxBy(_.getPath.getName).getPath
     val out = fsys.create(newestGen, true)
-    out.write("count=7\ndate=x/part-0.parquet\n".getBytes("UTF-8"))
+    out.write("mlist=7\nm\tmf-torn\tdate=x\t1\t10\n".getBytes("UTF-8"))
     out.close()
     assert(store.manifestPresent,
       "the previous retained generation must still serve")
@@ -285,9 +285,7 @@ class FsStoreSpec extends SparkSpec {
     fsys.listStatus(mdir).filter(_.getPath.getName.startsWith("gen-"))
       .foreach { g =>
         val o = fsys.create(g.getPath, true)
-        o.write(
-          "count=1\nschema\t{not json]\ndate=x/part-0.parquet\t1\t1\n"
-            .getBytes("UTF-8"))
+        o.write("mlist=0\nschema\t{not json]\n".getBytes("UTF-8"))
         o.close()
       }
     assert(!store.manifestPresent, "corrupt generations must be rejected")
@@ -425,9 +423,9 @@ class FsStoreSpec extends SparkSpec {
     assert(df.columns.toSet ==
       Set("id", "start", "trace_id"))
     assert(df.count() == 40L)
-    // strip the schema line (count= header counts entries only, so the
-    // generation stays valid): planning now pays footer inference over
-    // the 40 files — the bill the recorded schema removes
+    // strip the schema line (the mlist= header counts manifest refs
+    // only, so the generation stays valid): planning now pays footer
+    // inference over the 40 files — the bill the recorded schema removes
     val fsys = graft.store.StoreFs.fs(
       new org.apache.hadoop.fs.Path(s"$root/span"))
     val gen = fsys.listStatus(
@@ -437,7 +435,7 @@ class FsStoreSpec extends SparkSpec {
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(fsys.open(gen))
     // checkpoint bodies are gzip on disk since round 18 — decompress
     // to edit; writing the stripped body back PLAIN is fine (reads
-    // sniff the magic, both forms are valid forever)
+    // sniff the magic, both encodings read)
     val body = new String(
       new java.util.zip.GZIPInputStream(
         new java.io.ByteArrayInputStream(rawGen)).readAllBytes(),
@@ -1116,7 +1114,7 @@ class FsStoreSpec extends SparkSpec {
   }
 
   test("checkpoint bodies are gzip on disk, read back exactly; plain " +
-      "legacy checkpoints still read; truncated gzip falls back whole") {
+      "checkpoints still read; truncated gzip falls back whole") {
     import graft.store.{StoreFs, StoreManifest}
     val local = java.nio.file.Files.createTempDirectory("gzckpt")
     val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
@@ -1140,15 +1138,18 @@ class FsStoreSpec extends SparkSpec {
       s"gzip checkpoint ${ckpt.getLen} B should be well below the " +
         s"plain body's ~$plainSize B")
     assert(m.read().get.entries == entries.sortBy(_.rel))
-    // a PLAIN-TEXT checkpoint (the pre-round-18 on-disk form) written
-    // beside it must keep reading: sniff, don't assume
+    // the same checkpoint body written PLAIN beside it must read too:
+    // sniff, don't assume
     val older = new org.apache.hadoop.fs.Path(mdir,
-      "gen-0000000000000000001-legacy.list")
-    val legacyBody = "count=1\nlegacy/part-0.parquet\t7\t7\n"
+      "gen-0000000000000000001-plain.list")
+    val plainBody = {
+      val gz = new java.util.zip.GZIPInputStream(fsys.open(ckpt.getPath))
+      try gz.readAllBytes() finally gz.close()
+    }
     val o = fsys.create(older, true)
-    o.write(legacyBody.getBytes("UTF-8")); o.close()
+    o.write(plainBody); o.close()
     assert(m.readGen(older.getName).exists(
-      _.entries == Seq(StoreManifest.Entry("legacy/part-0.parquet", 7, 7))))
+      _.entries == entries.sortBy(_.rel)))
     // TRUNCATED gzip (torn write): the missing CRC trailer rejects the
     // generation whole and reads fall back to the older one
     val full = {
@@ -2349,11 +2350,50 @@ class FsStoreSpec extends SparkSpec {
     feedA.reset(); feedM.reset()
   }
 
+  test("a pre-round-19 count= generation is never folded and never " +
+      "deleted: reads fall back past it, vacuum stands down and " +
+      "refuses to reclaim it") {
+    import graft.store.{StoreFs, StoreManifest}
+    val root = newRoot()
+    val store = new ParquetStore(spark, root, "span", "start")
+    store.writeStaged((1L to 3L).map(i =>
+      (i, t0 + i * 60L * 1000000L, i * 10L))
+      .toDF("id", "start", "trace_id"))
+    store.compact()
+    val served = store.generations().last
+    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(root))
+    val mdir = new org.apache.hadoop.fs.Path(s"$root/span/_manifest")
+    // the newest name, and a self-consistent inline checkpoint that
+    // pre-round-19 readers folded
+    val legacy = f"gen-${9L * 1000000000000000000L}%019d-inline.list"
+    val legacyPath = new org.apache.hadoop.fs.Path(mdir, legacy)
+    val o = fsys.create(legacyPath, true)
+    o.write("count=1\ndate=2020-01-01/part-0.parquet\t7\t7\n"
+      .getBytes("UTF-8"))
+    o.close()
+    assert(store.generations().last == legacy)
+    // reads fall back past it to the newest two-level generation
+    assert(!store.generationReadable(legacy))
+    assert(new StoreManifest(fsys, s"$root/span").read().map(_.gen)
+      .contains(served))
+    assert(store.read(None, None).get.count() == 3L)
+    // vacuum stands down on it and never reclaims it
+    assert(store.vacuumStandDowns().exists { case (n, r, rec) =>
+      n == legacy && r.contains("unknown body form") && !rec },
+      s"${store.vacuumStandDowns()}")
+    intercept[IllegalArgumentException] {
+      store.vacuum(0, reclaimUnknown = Seq(legacy))
+    }
+    store.vacuum(0): Unit
+    assert(fsys.exists(legacyPath), "vacuum must not delete it")
+    assert(store.read(None, None).get.count() == 3L)
+  }
+
   test("future-format classifier reads the WHOLE header region: a " +
       "future protocol behind a megabyte schema line stands vacuum " +
       "down; header-torn and empty debris stand down with reasons; a " +
-      "body rel literally named 'protocol' does not; acknowledged " +
-      "debris reclaims and the sweeps resume") {
+      "pre-round-19 count= body stands down as an unknown form; " +
+      "acknowledged debris reclaims and the sweeps resume") {
     import graft.store.StoreFs
     val root = newRoot()
     val store = new ParquetStore(spark, root, "span", "start")
@@ -2401,10 +2441,11 @@ class FsStoreSpec extends SparkSpec {
     // dead (whole-file rename publishing never produces it)
     val tornGz = plant(f"gen-${6L}%019d-gztorn.list",
       wideBody.take(400).toArray)
-    // 4. the ADVICE low: a KNOWN-form body whose first entry line
-    // names a root-level rel literally `protocol` — an entry, not a
-    // capability; must NOT trip the gate
-    plant(f"gen-${5L}%019d-prot.list",
+    // 4. a pre-round-19 inline checkpoint (`count=` header, here with
+    // an entry line whose rel is literally `protocol`): no longer a
+    // known form, so it stands down like any unknown body — never
+    // reclaimable, since a form this binary cannot read proves nothing
+    val prot = plant(f"gen-${5L}%019d-prot.list",
       "count=1\nprotocol\t10\t20\n".getBytes("UTF-8"))
     val stand = store.vacuumStandDowns()
     assert(stand.exists { case (n, r, rec) =>
@@ -2420,9 +2461,10 @@ class FsStoreSpec extends SparkSpec {
     assert(stand.exists { case (n, r, rec) =>
       n == tornReadable && r.contains("torn inside the header region") &&
         !rec }, s"a foldable tear must report non-reclaimable: $stand")
-    assert(!stand.exists(_._1.contains("prot")),
-      "an entry rel named 'protocol' is not a capability")
-    assert(stand.size == 5)
+    assert(stand.exists { case (n, r, rec) =>
+      n == prot && r.contains("unknown body form") && !rec },
+      s"a count= body must classify as an unknown form: $stand")
+    assert(stand.size == 6)
     // stand-down holds under maximal deletion pressure
     val (_, orphans1, pruned1) = store.vacuum(0)
     assert(orphans1 == 0 && pruned1 == 0)
@@ -2444,20 +2486,22 @@ class FsStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       store.vacuum(0, reclaimUnknown = Seq(tornReadable))
     }
-    assert(store.vacuumStandDowns().size == 5, "failed acks reclaim nothing")
+    intercept[IllegalArgumentException] {
+      store.vacuum(0, reclaimUnknown = Seq(prot))
+    }
+    assert(store.vacuumStandDowns().size == 6, "failed acks reclaim nothing")
     // the operator acknowledges the provably-dead debris: reclaimed,
     // but the future-protocol generation still gates the sweeps
     store.vacuum(0, reclaimUnknown = Seq(torn, empty, tornGz)): Unit
     assert(store.vacuumStandDowns().map(_._1).sorted ==
-      Seq(wide, tornReadable).sorted)
+      Seq(wide, tornReadable, prot).sorted)
     assert(store.manifestDead.exists(_.nonEmpty),
       "sweeps stay down while the future commit is present")
-    // the future generation and the foldable tear gone (the newer
-    // binary's / the operator's out-of-band cleanup), the same pass's
-    // sweeps resume
-    fsys.delete(new org.apache.hadoop.fs.Path(mdir, wide), false): Unit
-    fsys.delete(new org.apache.hadoop.fs.Path(mdir, tornReadable),
-      false): Unit
+    // the future generation, the foldable tear and the count= body
+    // gone (the newer binary's / the operator's out-of-band cleanup),
+    // the same pass's sweeps resume
+    Seq(wide, tornReadable, prot).foreach(n =>
+      fsys.delete(new org.apache.hadoop.fs.Path(mdir, n), false): Unit)
     store.vacuum(0): Unit
     assert(store.vacuumStandDowns().isEmpty)
     assert(store.manifestDead.exists(_.isEmpty),

@@ -143,17 +143,37 @@ class VectorExprsSpec extends SparkSpec {
 
   test("GraftExtensions injects every kernel through the extensions path") {
     // the spark.sql.extensions entry point a library user configures:
-    // apply to a fresh extensions object, register into the session's
-    // registry (registerFunctions is the hook session build invokes),
-    // and exercise each kernel through SQL
+    // apply to a fresh extensions object, register into a fresh
+    // session's registry (registerFunctions is the hook session build
+    // invokes), and exercise each kernel through SQL
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry,
+      SimpleFunctionRegistry}
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.GraftExtensions().apply(ext)
     // private[sql] in Scala, public in bytecode — reflect to invoke
-    classOf[org.apache.spark.sql.SparkSessionExtensions]
-      .getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, spark.sessionState.functionRegistry)
-    val r = spark.sql(
+    def inject(reg: FunctionRegistry): Unit =
+      classOf[org.apache.spark.sql.SparkSessionExtensions]
+        .getMethod("registerFunctions", classOf[FunctionRegistry])
+        .invoke(ext, reg): Unit
+    // both entry points expose the same kernels: the names the
+    // extension injects into an empty registry equal the names
+    // register adds to a fresh session (bottom_k_agg included — the
+    // Sketches operators call it by name)
+    val injected = new SimpleFunctionRegistry
+    inject(injected)
+    val extNames = injected.listFunction().map(_.funcName).toSet
+    val fresh = spark.newSession()
+    val builtin = fresh.sessionState.functionRegistry.listFunction().toSet
+    VectorExprs.register(fresh)
+    val regNames = (fresh.sessionState.functionRegistry.listFunction()
+      .toSet -- builtin).map(_.funcName)
+    assert(extNames == regNames,
+      s"extension-only ${extNames -- regNames}, " +
+        s"register-only ${regNames -- extNames}")
+    assert(extNames("bottom_k_agg"))
+    val viaExt = spark.newSession()
+    inject(viaExt.sessionState.functionRegistry)
+    val r = viaExt.sql(
       """SELECT array_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
         |       array_norm(array(3.0d, 4.0d)) AS n,
         |       size(shingles_of(array('a','b','c','d'), 3)) AS s,
@@ -161,9 +181,11 @@ class VectorExprsSpec extends SparkSpec {
       .collect().head
     assert(r.getDouble(0) == 11.0 && r.getDouble(1) == 5.0 && r.getInt(2) == 2)
     assert(r.getInt(3) == 2)
-    val agg = spark.sql(
-      "SELECT minhash16_agg(md5(x)), simhash64_agg(md5(x)) " +
+    val agg = viaExt.sql(
+      "SELECT minhash16_agg(md5(x)), simhash64_agg(md5(x)), " +
+        "size(bottom_k_agg(hash(x), 4)) " +
         "FROM VALUES ('a'), ('b') AS t(x)").collect().head
     assert(agg.getSeq[Long](0).size == 16 && agg.getSeq[Int](1).size == 4)
+    assert(agg.getInt(2) == 2)
   }
 }
