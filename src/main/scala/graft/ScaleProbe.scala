@@ -630,12 +630,13 @@ object ScaleProbe {
     val probeTid = mm.getAs[Long]("t")
     val sTotal = sst.manifestFiles.map(_.size).getOrElse(-1)
     val lTotal = lst.manifestFiles.map(_.size).getOrElse(-1)
+    // `df` is re-evaluated inside the clock: a trace search runs its
+    // fetches when its frame is built
     def probe(name: String, planned: Long, total: Long)
         (df: => DataFrame): Unit = {
-      val d = df
-      d.count() // warm: plan + codegen outside the clock
+      df.count() // warm: plan + codegen outside the clock
       val t0 = System.nanoTime()
-      val rows = d.count()
+      val rows = df.count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"query":"$name","scale":"$scale","rows":$rows,""" +
         f""""sec":$sec%.2f,"files_planned":$planned,""" +

@@ -32,8 +32,9 @@ import graft.query.{LogQueries, TraceQueries}
   *     arrow-schema serde JSON ([[ArrowSchemaJson]], logs.rs:37-39)
   *   - `GET /api/logs/stats/:field` → bare array of `{value, count}`;
   *     unknown field is 404 (logs.rs:64-98)
-  *   - `GET /stats` → `{"process": {id: process}, "logs": 0,
-  *     "spans": 0}` (mod.rs:96-105)
+  *   - `GET /stats` → `{"process": {id: process}, "logs": n,
+  *     "spans": m}` (mod.rs:96-105), the counts being the rows held
+  *     in the hot memory views
   *   - `POST /api/ingest/logs` — EXTENSION (see [[ingestLogs]]): the
   *     raw-JSON log ingest edge over HTTP, since the reference's gRPC
   *     transport needs dependencies this library cannot take
@@ -48,7 +49,8 @@ import graft.query.{LogQueries, TraceQueries}
   *     [&limit]` serves the generation-diff CDC (see [[changes]])
   *
   * Query-parameter leniency mirrors deser.rs: `limit`/`skip` ignore
-  * unparseable values (option_ignore_error), `start`/`end` are µs
+  * unparseable values (option_ignore_error; the reference parses a
+  * usize, so a negative value is unparseable too), `start`/`end` are µs
   * integers, `minDuration`/`maxDuration` are duration strings through
   * the C2 parser (deser.rs:196-240 routes them through
   * parse_duration). A missing required `service` is 400, as axum's
@@ -184,7 +186,7 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
             .flatMap(graft.functions.Timing.parseDuration),
           maxDurationUs = q.get("maxDuration")
             .flatMap(graft.functions.Timing.parseDuration),
-          limit = q.get("limit").flatMap(_.toIntOption).getOrElse(20))
+          limit = pageParam(q, "limit", 20))
         // EXTENSION: AS-OF search over pinned retained generations of
         // BOTH stores (spanAsof + logAsof, required together), or over
         // ONE wall-clock instant (`asofTs=<millis>` — both tables pin
@@ -264,7 +266,7 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
         val table = q.getOrElse("table", "log")
         val keys = q.get("keys").toSeq
           .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        val limit = q.get("limit").flatMap(_.toIntOption).getOrElse(1000)
+        val limit = pageParam(q, "limit", 1000)
         val removed = q.get("removed").contains("true")
         val diff = scala.util.Try {
           if (removed) engine.removedBetween(table, from, to, keys)
@@ -407,8 +409,8 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
           startUs = q.get("start").flatMap(_.toLongOption),
           endUs = q.get("end").flatMap(_.toLongOption),
           expr = q.get("expr"),
-          skip = q.get("skip").flatMap(_.toIntOption).getOrElse(0),
-          limit = q.get("limit").flatMap(_.toIntOption).getOrElse(50))
+          skip = pageParam(q, "skip", 0),
+          limit = pageParam(q, "limit", 50))
         // EXTENSION: `asof=<generation>` answers from the pinned
         // retained log-store generation (time travel over HTTP); the
         // plain route stays the current truth. A generation is a
@@ -533,8 +535,8 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
     }
     val body = JObject(
       "process" -> JObject(procs.toList),
-      "logs" -> JInt(0),
-      "spans" -> JInt(0))
+      "logs" -> JLong(engine.logMemory.rows),
+      "spans" -> JLong(engine.spanMemory.rows))
     json(ex, 200, JsonMethods.compact(JsonMethods.render(body)))
   }
 
@@ -618,6 +620,13 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
   }
 
   // ---- plumbing ----
+
+  /** A `limit`/`skip` parameter: absent, unparseable or negative → the
+    * default (see the class doc).
+    */
+  private def pageParam(q: Map[String, String], key: String,
+      default: Int): Int =
+    q.get(key).flatMap(_.toIntOption).filter(_ >= 0).getOrElse(default)
 
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).toSeq

@@ -1,29 +1,39 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaeger-style trace search + assembly
   * (reference: duo/src/web/services.rs:13-130, correlation
   * duo/src/models.rs:80-94).
   *
-  * The reference does all of this app-side after collecting every
-  * matching span; here each step is a distributed operator (SURVEY §2.3
-  * J1-J3):
-  *  - root-span admission = filter on parent_id IS NULL + operation /
-  *    start-range / duration predicates (F8-F11);
-  *  - trace scoping = left_semi joins on trace_id (J1) — the admitted
-  *    trace-id set is tiny (≤ limit) and broadcastable;
-  *  - span↔log correlation + error tag = left outer join on
-  *    span_id == id with an ERROR-count aggregate (J2/A3);
-  *  - assembly = groupBy(trace_id) + collect_list(struct(...)) (J3) —
-  *    one shuffle keyed by trace_id; a trace's spans are bounded (one
-  *    request), so collect_list cannot skew a reducer.
+  * The answer is bounded by the search `limit` (20 traces by default)
+  * and the HTTP route renders it on the driver anyway, so the engine
+  * runs three narrow fetches and assembles the traces on the driver,
+  * like the reference's J1 -> J2 order (SURVEY §2.3 J1-J3):
+  *  - admission = root filter on parent_id IS NULL + operation /
+  *    start-range / duration predicates (F8-F11), ordered and limited
+  *    inside the scan stage (a top-K, one job), collected as trace ids;
+  *  - trace-scoped log fetch (J1) = `trace_id IN ids`, collecting only
+  *    `trace_id, span_id, level`: the driver counts `n_logs` per trace
+  *    and keeps the span ids that carry an ERROR log (J2/A3);
+  *  - trace-scoped span fetch (J1) = `trace_id IN ids`, with the error
+  *    flag and the `"error":true` tag splice as column expressions over
+  *    that id set ([[correlateSpanLogs]]);
+  *  - assembly (J3) = a driver-side group per trace, the spans in
+  *    `sort_array`'s struct order, returned as a local relation.
+  * No stage shuffles; a search runs at most three jobs, a by-id fetch
+  * two. Only logs of the admitted traces count, as in the reference.
   *
   * Deliberate divergences (documented, SURVEY §7.4): the trace limit
-  * picks the N most recent roots (the reference's HashMap take(limit) is
-  * nondeterministic, O4); children arriving before their root are kept
-  * (the reference drops them, §3.2).
+  * picks the N most recent roots and traces come newest root first
+  * (the reference's HashMap take(limit) is nondeterministic, O4);
+  * children arriving before their root are kept (the reference drops
+  * them, §3.2).
   */
 object TraceQueries {
 
@@ -68,23 +78,21 @@ object TraceQueries {
     roots
   }
 
-  /** Attach logs to spans and inject the `error=true` tag for spans with
-    * at least one ERROR-level log (J2 + A3 + C4: the tag lives in the
-    * JSON tags string, so it is decoded, merged, re-encoded).
+  /** Flag spans with an ERROR log and inject the `error=true` tag (J2 +
+    * A3 + C4: the tag lives in the JSON tags string, so it is decoded,
+    * checked, re-encoded). `errSpanIds` are the span ids of the ERROR
+    * logs in scope.
     */
-  def correlateSpanLogs(spans: DataFrame, logs: DataFrame): DataFrame = {
-    val errCounts = logs
-      .filter(col("level") === "ERROR" && col("span_id").isNotNull)
-      .groupBy(col("span_id")).agg(count(lit(1)).as("n_errors"))
-    spans.join(errCounts, spans("id") === errCounts("span_id"), "left_outer")
-      // the error flag rides out as a real column (consumed by
-      // [[assemble]]): log-derived, OR already present in the span's own
+  def correlateSpanLogs(spans: DataFrame, errSpanIds: Set[Long]): DataFrame = {
+    val logErr = coalesce(col("id").isin(errSpanIds.toSeq: _*), lit(false))
+    spans
+      // the error flag rides out as a real column (consumed by the
+      // assembly): log-derived, OR already present in the span's own
       // tags — decoded with a real JSON path lookup, not a substring
       // sniff a user tag could false-positive
       .withColumn("has_err",
-        (col("n_errors").isNotNull && col("n_errors") > 0) ||
-          coalesce(get_json_object(col("tags"), "$.error") === "true",
-            lit(false)))
+        logErr || coalesce(get_json_object(col("tags"), "$.error") === "true",
+          lit(false)))
       // splice `"error":true` into the raw JSON text — a typed JSON
       // bool like the reference's Value::Bool insert
       // (duo/src/models.rs:80-94); a from_json(Map[String,String])
@@ -98,12 +106,9 @@ object TraceQueries {
       // null value ({"error":null}), which would splice a duplicate key.
       .withColumn("tags",
         when(
-          col("n_errors").isNotNull && col("n_errors") > 0 &&
+          logErr &&
             !coalesce(map_contains_key(
-              from_json(col("tags"),
-                org.apache.spark.sql.types.MapType(
-                  org.apache.spark.sql.types.StringType,
-                  org.apache.spark.sql.types.StringType)),
+              from_json(col("tags"), MapType(StringType, StringType)),
               lit("error")), lit(false)),
           when(col("tags").isNull || trim(col("tags")).rlike("^\\{\\s*\\}$")
               || trim(col("tags")) === "",
@@ -112,49 +117,88 @@ object TraceQueries {
               regexp_replace(trim(col("tags")), "\\}\\s*$", ""),
               lit(""","error":true}"""))))
           .otherwise(col("tags")))
-      .drop("span_id", "n_errors")
   }
 
-  /** GET /api/traces: search → scope → correlate → assemble. Returns one
-    * row per trace with the span list collected as structs, ordered by
-    * span start (deterministic), plus trace-level rollups.
+  /** GET /api/traces: admit → fetch logs → fetch spans → assemble. One
+    * row per trace, newest root first, with the span list as structs
+    * in span-start order plus trace-level rollups.
     */
   def filterTraces(spark: SparkSession, spans: DataFrame, logs: DataFrame,
       p: TraceSearchParams): DataFrame = {
-    val roots = admittedRoots(spans, p)
-      .select(col("trace_id"), col("start").as("root_start"))
-      .orderBy(col("root_start").desc, col("trace_id"))
+    // several roots of one trace take one slot each, as the limit
+    // counts roots; the trace itself appears once
+    val ids = admittedRoots(spans, p)
+      .select(col("trace_id"), col("start"))
+      .orderBy(col("start").desc, col("trace_id"))
       .limit(p.limit)
-    val ids = broadcast(roots.select(col("trace_id")))
-    assemble(
-      correlateSpanLogs(spans.join(ids, Seq("trace_id"), "left_semi"), logs),
-      logs.join(ids, Seq("trace_id"), "left_semi"))
+      .collect().map(_.getLong(0)).distinct.toSeq
+    assemble(spark, spans, logs, ids)
   }
 
-  /** GET /api/traces/:id — same pipeline, exact trace_id filter (F2). */
+  /** GET /api/traces/:id — the same fetches for one exact trace_id (F2). */
   def getTrace(spark: SparkSession, spans: DataFrame, logs: DataFrame,
       traceId: Long): DataFrame =
-    assemble(
-      correlateSpanLogs(spans.filter(col("trace_id") === traceId), logs),
-      logs.filter(col("trace_id") === traceId))
+    assemble(spark, spans, logs, Seq(traceId))
 
-  /** Group a scoped span/log set into TraceExt rows (J3). Expects the
-    * [[correlateSpanLogs]] output (the `has_err` column).
+  /** Fetch the logs and spans of `ids` and group them into TraceExt rows
+    * (J1-J3), in the order of `ids`. Each fetch is one job; none runs
+    * when `ids` is empty.
     */
-  def assemble(spans: DataFrame, logs: DataFrame): DataFrame = {
-    val logCounts = logs.groupBy(col("trace_id"))
-      .agg(count(lit(1)).as("n_logs"))
-    spans
-      .groupBy(col("trace_id"))
-      .agg(
-        count(lit(1)).as("n_spans"),
-        min(col("start")).as("trace_start"),
-        max(col("end")).as("trace_end"),
-        max(col("has_err").cast("int")).as("has_error"),
-        sort_array(collect_list(struct(
-          col("start"), col("id"), col("parent_id"), col("name"),
-          col("process_id"), col("end"), col("tags")))).as("spans"))
-      .join(logCounts, Seq("trace_id"), "left_outer")
-      .withColumn("n_logs", coalesce(col("n_logs"), lit(0L)))
+  private def assemble(spark: SparkSession, spans: DataFrame,
+      logs: DataFrame, ids: Seq[Long]): DataFrame = {
+    def fetch(df: DataFrame): Array[Row] =
+      if (ids.isEmpty) Array.empty else df.collect()
+    val inScope = col("trace_id").isin(ids: _*)
+    val logRows = fetch(logs.filter(inScope)
+      .select(col("trace_id"), col("span_id"), col("level")))
+    val nLogs = logRows.groupMapReduce(_.getLong(0))(_ => 1L)(_ + _)
+    val errSpanIds = logRows.iterator
+      .filter(r => r.getString(2) == "ERROR" && !r.isNullAt(1))
+      .map(_.getLong(1)).toSet
+    val scoped = correlateSpanLogs(spans.filter(inScope), errSpanIds)
+      .select(col("trace_id"), col("has_err"),
+        struct(col("start"), col("id"), col("parent_id"), col("name"),
+          col("process_id"), col("end"), col("tags")).as("span"))
+    val byTrace = fetch(scoped).groupBy(_.getLong(0))
+    val rows = ids.flatMap(id => byTrace.get(id).map { rs =>
+      val structs = rs.map(_.getStruct(2)).sorted(structOrder)
+      def longs(f: String) = structs.iterator
+        .map(_.getAs[java.lang.Long](f)).filter(_ != null)
+      Row(id, rs.length.toLong, longs("start").minOption.orNull,
+        longs("end").maxOption.orNull,
+        if (rs.exists(_.getBoolean(1))) 1 else 0,
+        structs.toSeq, nLogs.getOrElse(id, 0L))
+    })
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      scoped.schema("trace_id"),
+      StructField("n_spans", LongType, nullable = false),
+      StructField("trace_start", LongType),
+      StructField("trace_end", LongType),
+      StructField("has_error", IntegerType),
+      StructField("spans",
+        ArrayType(scoped.schema("span").dataType, containsNull = false),
+        nullable = false),
+      StructField("n_logs", LongType, nullable = false))))
+  }
+
+  /** `sort_array`'s ascending struct order: field by field in struct
+    * order (start first), nulls first, strings by their UTF-8 bytes.
+    */
+  private val structOrder: Ordering[Row] = (a, b) => {
+    var c = 0
+    var i = 0
+    while (c == 0 && i < a.length) {
+      c = (a.get(i), b.get(i)) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (x: String, y: String) =>
+          UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+        case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
+        case (x, y) => sys.error(s"unordered span field: $x vs $y")
+      }
+      i += 1
+    }
+    c
   }
 }

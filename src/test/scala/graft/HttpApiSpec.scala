@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{ArrowSchemaJson, HttpApi}
 import graft.model.{Span, TagValue}
+import org.json4s.jackson.JsonMethods.parse
 
 /** The HTTP façade's route surface and wire shapes (SURVEY "missing"
   * item 2, minus the UI asset bundle): real HTTP round-trips through
@@ -92,6 +93,10 @@ class HttpApiSpec extends SparkSpec {
       assert(traces.contains(""""traceID":"9001"""") &&
         traces.contains(""""traceID":"9002""""), traces)
       assert(traces.contains(""""operationName":"foo""""))
+      // newest root first: -1 (t0+700ms), 9002 (t0+500ms), 9001 (t0)
+      val order = Seq(java.lang.Long.toUnsignedString(-1L), "9002", "9001")
+        .map(id => traces.indexOf(s""""traceID":"$id""""))
+      assert(order.forall(_ >= 0) && order == order.sorted, traces)
       assert(traces.contains(""""refType":"CHILD_OF""""))
       assert(traces.contains(""""serviceName":"example""""))
       // minDuration through the C2 duration parser drops the 100ms trace
@@ -143,11 +148,12 @@ class HttpApiSpec extends SparkSpec {
       assert(logs2.contains(""""region":"eu""""))
       assert(logs2.indexOf("region") == logs2.lastIndexOf("region"),
         "rows without the dynamic field must omit the key")
-      // /stats: the process map + zeroed counters
+      // /stats: the process map + the hot views' row counts (four
+      // spans; two log rows plus the JSON-ingested one)
       val (_, st) = get(port, "/stats")
       assert(st.contains(""""process":{"example-0":{"id":"example-0",""" +
         """"service_name":"example""""), st)
-      assert(st.contains(""""logs":0""") && st.contains(""""spans":0"""))
+      assert(st.contains(""""logs":3""") && st.contains(""""spans":4"""), st)
       // axum-like rejections: missing required service, unknown route
       assert(get(port, "/api/traces")._1 == 400)
       assert(get(port, "/api/logs")._1 == 400)
@@ -172,6 +178,31 @@ class HttpApiSpec extends SparkSpec {
         k.equalsIgnoreCase("Access-Control-Allow-Methods") &&
           v.contains("POST")
       }, optHeaders)
+    } finally api.stop()
+  }
+
+  test("negative limit and skip are ignored: the default page is served") {
+    val root = java.nio.file.Files.createTempDirectory("httppage").toString
+    val engine = new DuoEngine(spark, root)
+    engine.appendSpanBatch((1 to 25).map(i => Span(i.toLong, None, i.toLong,
+      "op", "example-0", t0 + i, Some(t0 + i + 1L), None)).toDF())
+    engine.appendLogBatch((1 to 60).map(i =>
+      ("example-0", t0 + i, "INFO", s"m$i"))
+      .toDF("process_id", "time", "level", "message"))
+    val api = new HttpApi(engine)
+    api.start()
+    try {
+      val port = api.boundPort
+      val win = s"start=${t0 - 1000000L}&end=${t0 + 1000000L}"
+      def size(j: org.json4s.JValue) = j.children.size
+      val (scT, traces) =
+        get(port, s"/api/traces?service=example&$win&limit=-1")
+      assert(scT == 200 && size(parse(traces) \ "data") == 20, traces)
+      val (scL, logs) = get(port, s"/api/logs?service=example&$win&limit=-1")
+      assert(scL == 200 && size(parse(logs)) == 50, logs)
+      val (scS, skipped) = get(port, s"/api/logs?service=example&$win&skip=-1")
+      assert(scS == 200 && skipped == get(port,
+        s"/api/logs?service=example&$win")._2)
     } finally api.stop()
   }
 
@@ -306,6 +337,10 @@ class HttpApiSpec extends SparkSpec {
       assert(get(port, s"/api/changes?table=log&from=${gens.head}" +
         s"&to=${gens.last}")._1 == 404)
       assert(get(port, "/api/changes?table=log&from=x")._1 == 400)
+      // a negative limit is ignored like an unparseable one
+      val (scL, lim) = get(port, s"/api/changes?table=log&" +
+        s"from=${gens.head}&to=${gens.last}&removed=true&limit=-1")
+      assert(scL == 200 && lim.contains("old-day"), lim)
       // keyed mode rides the same route: the retired row is a TRUE
       // delete under the message key, so it still pages out
       val (scK, keyed) = get(port, s"/api/changes?table=log&" +
@@ -342,6 +377,9 @@ class HttpApiSpec extends SparkSpec {
         val s = java.nio.file.Files.walk(logDir)
         try s.anyMatch(p => p.toString.endsWith(".parquet") &&
           !p.toString.contains("_staging"))
+        // a file the write's commit moved away during the walk: the
+        // flush is still in flight, look again on the next poll
+        catch { case _: java.io.UncheckedIOException => false }
         finally s.close()
       } && !java.nio.file.Files.exists(walLog)
       while (!flushed() && System.currentTimeMillis() < deadline)

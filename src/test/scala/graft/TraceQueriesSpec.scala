@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -104,12 +106,8 @@ class TraceQueriesSpec extends SparkSpec {
         Some("""{"retries":2,"cached":true}""")),
       Span(2L, None, 2L, "b", "svc-0", t0, Some(t0 + 1), None),
       Span(3L, None, 3L, "c", "svc-0", t0, Some(t0 + 1), Some("{}"))).toDF()
-    val lg = Seq(
-      ("svc-0", t0, Some(1L), Some(1L), "ERROR", Some("x")),
-      ("svc-0", t0, Some(2L), Some(2L), "ERROR", Some("y")),
-      ("svc-0", t0, Some(3L), Some(3L), "ERROR", Some("z")))
-      .toDF("process_id", "time", "trace_id", "span_id", "level", "message")
-    val got = TraceQueries.correlateSpanLogs(sp, lg)
+    // every span carries an ERROR log
+    val got = TraceQueries.correlateSpanLogs(sp, Set(1L, 2L, 3L))
       .orderBy("id").select("tags").as[String].collect().toSeq
     assert(got == Seq(
       """{"retries":2,"cached":true,"error":true}""",
@@ -140,13 +138,8 @@ class TraceQueriesSpec extends SparkSpec {
       // check can — no second `error` key may be spliced
       Span(4L, None, 4L, "d", "svc-0", t0, Some(t0 + 1),
         Some("""{"error":null}"""))).toDF()
-    val lg = Seq(
-      ("svc-0", t0, Some(1L), Some(1L), "ERROR", Some("x")),
-      ("svc-0", t0, Some(2L), Some(2L), "ERROR", Some("y")),
-      ("svc-0", t0, Some(3L), Some(3L), "ERROR", Some("z")),
-      ("svc-0", t0, Some(4L), Some(4L), "ERROR", Some("w")))
-      .toDF("process_id", "time", "trace_id", "span_id", "level", "message")
-    val rows = TraceQueries.correlateSpanLogs(sp, lg)
+    // every span carries an ERROR log
+    val rows = TraceQueries.correlateSpanLogs(sp, Set(1L, 2L, 3L, 4L))
       .orderBy("id").select("tags", "has_err").collect()
     assert(rows.map(_.getAs[String]("tags")).toSeq == Seq(
       """{"a":1,"error":true}""",
@@ -173,6 +166,84 @@ class TraceQueriesSpec extends SparkSpec {
   test("getTrace returns the single assembled trace") {
     val row = TraceQueries.getTrace(spark, spans, logs, 9001L).collect()
     assert(row.length == 1 && row.head.getAs[Long]("n_spans") == 3)
+  }
+
+  test("traces come newest root first") {
+    // root starts rise with the trace id, so newest first is the
+    // reverse id order
+    val many = (1 to 8).map(i => Span(i * 10L, None, 8000L + i, "op",
+      "example-0", t0 + i * 1000L, Some(t0 + i * 1000L + 10L), None)).toDF()
+    val ids = TraceQueries.filterTraces(spark, many, logs,
+      TraceSearchParams(service = "example"))
+      .select("trace_id").as[Long].collect().toSeq
+    assert(ids == (8 to 1 by -1).map(8000L + _))
+  }
+
+  test("only logs of the admitted traces flag, splice and count") {
+    // an ERROR log naming span 201 (trace 9002) under trace 9003's id:
+    // trace 9003 is not in scope, so the log is not 9002's
+    val crossed = logs.union(Seq(
+      ("log-0", t0 + 560000, Some(9003L), Some(201L), "ERROR", Some("x")))
+      .toDF("process_id", "time", "trace_id", "span_id", "level", "message"))
+    val searched = TraceQueries.filterTraces(spark, spans, crossed,
+      TraceSearchParams(service = "example")).collect()
+      .find(_.getAs[Long]("trace_id") == 9002L).get
+    val byId = TraceQueries.getTrace(spark, spans, crossed, 9002L).collect()
+    for (t <- searched +: byId.toSeq) {
+      assert(t.getAs[Int]("has_error") == 0)
+      assert(t.getAs[Long]("n_logs") == 1)
+      val s201 = t.getAs[scala.collection.Seq[Row]]("spans").head
+      assert(s201.getAs[String]("tags") == null)
+    }
+  }
+
+  test("plan shape: a search runs at most three jobs, a fetch by id two, " +
+      "and no stage shuffles") {
+    val dir = java.nio.file.Files.createTempDirectory("traceplan").toString
+    spans.write.parquet(s"$dir/spans")
+    logs.write.parquet(s"$dir/logs")
+    val sp = spark.read.parquet(s"$dir/spans")
+    val lg = spark.read.parquet(s"$dir/logs")
+    val group = "trace-plan-shape"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          shuffled.addAndGet(
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    // (jobs, shuffle bytes written) of one call, its rows collected
+    def measure(run: => DataFrame): (Int, Long, Array[Row]) = {
+      graft.util.StreamGate.quiesce(spark)
+      jobs.set(0); shuffled.set(0L)
+      sc.setJobGroup(group, "plan shape")
+      val rows = try run.collect() finally sc.clearJobGroup()
+      graft.util.StreamGate.quiesce(spark)
+      (jobs.get, shuffled.get, rows)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (searchJobs, searchShuffle, found) = measure(
+        TraceQueries.filterTraces(spark, sp, lg,
+          TraceSearchParams(service = "example")))
+      assert(found.map(_.getAs[Long]("trace_id")).toSeq == Seq(9002L, 9001L))
+      assert(searchJobs <= 3, s"$searchJobs jobs")
+      assert(searchShuffle == 0L, s"$searchShuffle shuffle bytes")
+      val (byIdJobs, byIdShuffle, one) = measure(
+        TraceQueries.getTrace(spark, sp, lg, 9001L))
+      assert(one.length == 1 && one.head.getAs[Long]("n_logs") == 2)
+      assert(byIdJobs <= 2, s"$byIdJobs jobs")
+      assert(byIdShuffle == 0L, s"$byIdShuffle shuffle bytes")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("Jaeger shaping: unsigned ids, CHILD_OF refs, name* for non-intact") {
