@@ -8,25 +8,23 @@ import org.apache.spark.sql.SparkSession
   * A warmup pass (tiny action + a footer read per table) runs first so
   * the first timed query doesn't absorb JVM/codegen/session startup —
   * per-query numbers reflect the plans, not the warmup.
+  *
+  * Nothing a gate declares runs off the clock. Each memoized build —
+  * a gate store (EngineQueries.memoStore), a staged streaming feed
+  * (StreamGate's feed memo), a trained artifact (clusters, centroids,
+  * codebooks, kept3, BPE merges, LR weights, subword vocab) — is paid
+  * once, on-clock, by the first gate in run order that needs it;
+  * later gates and repeats reuse it.
+  *
+  * SPARK_GRAFT_BENCH_REPEAT=N with gate-name args is also the A/B
+  * timing harness: the full record keeps every repeat's seconds
+  * ("runs") and the last repeat's Spark jobs/stages/tasks ("counts").
   */
 object Bench {
   /** A single-shot time this many × over its committed warm record
     * triggers an immediate replication (see the outlier block below).
     */
   val OutlierFactor: Double = 3.0
-
-  /** The Structured Streaming gates whose deterministic feeds are
-    * prestaged off-clock before the timed loop (see the prestage block
-    * in [[main]]). Exactly the gate entries that pass a fixed-corpus
-    * `feedKey` into [[graft.util.StreamGate]]; the batch window gates
-    * (w01/w02) have no feed to stage.
-    */
-  val streamingGates: Set[String] = Set(
-    "w03_clean_stream", "w04_neardup_stream", "w05_tumbling_stream",
-    "w06_session_stream", "w07_spanmerge_stream", "w08_hll_stream",
-    "w09_spanlog_join_stream", "w10_cms_stream", "w11_ingest_loop",
-    "w12_hist_stream", "w13_kmv_stream", "w14_rollup_stream",
-    "w15_decontam_stream", "w16_ivf_stream")
 
   /** Whether a single-shot time demands replication: over
     * [[OutlierFactor]]× its committed warm record AND over the
@@ -50,6 +48,46 @@ object Bench {
       floorSec: Double): Boolean =
     coldSec > 0 && warmSec > 0 && warmSec > 1.3 * coldSec &&
       warmSec > floorSec
+
+  /** A gate's authoritative warm number: when the in-pass warm carried
+    * the impossible signature, the SMALLER of it and its fresh-JVM
+    * replica — a faster replica confirms the pass contaminated the
+    * measurement (use the replica); a slower replica means the child
+    * paid environment cold-start the parent had amortized (measured on
+    * local-cluster: fresh 4-executor JVMs re-JIT everything and a
+    * genuine 3.8 s gate replicated at 18 s), so the in-pass number
+    * stands. A failed (negative) time is never replaced.
+    */
+  def warmOf(times: Seq[Double], jvmRep: Option[Double]): Double =
+    jvmRep.filter(r => r > 0 && r < times.last).getOrElse(times.last)
+
+  /** The pass total over (repeat times, fresh-JVM replica) per gate.
+    * A failed run reports its time negated (the per-gate failure
+    * flag), but that time still elapsed: the total adds its absolute
+    * value, so a failure never makes a pass look faster.
+    */
+  def totalOf(gates: Seq[(Seq[Double], Option[Double])]): Double =
+    gates.map { case (t, j) => math.abs(warmOf(t, j)) }.sum
+
+  /** Median of one gate's repeat times, failures counted by their
+    * elapsed (absolute) time as in [[totalOf]]; an even count averages
+    * the middle pair.
+    */
+  def medianOf(runs: Seq[Double]): Double = {
+    val s = runs.map(math.abs).sorted
+    val m = s.size / 2
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
+  /** One gate's pass: every repeat's seconds (negative = failed), the
+    * in-pass outlier replica, the fresh-JVM replica, and the last
+    * repeat's [jobs, stages, tasks].
+    */
+  private final case class Timed(name: String, times: Seq[Double],
+      replica: Option[Double], jvmReplica: Option[Double],
+      counts: Seq[Long]) {
+    def warm: Double = warmOf(times, jvmReplica)
+  }
 
   /** Re-measure one query in a fresh JVM (same JVM args, classpath
     * and env; repeat=2 so the replica is itself a warm number) and
@@ -91,7 +129,8 @@ object Bench {
     // args: [queryName...] restrict the run for local profiling; the
     // driver always runs with no args. SPARK_GRAFT_BENCH_REPEAT=N times
     // each query N times and reports the LAST run (separates plan cost
-    // from first-touch IO/codegen when iterating locally; default 1).
+    // from first-touch IO/codegen when iterating locally; default 1);
+    // the file record keeps all N under "runs".
     val only: Set[String] = args.toSet
     // defensive parse: a garbage/empty value must not kill the whole
     // bench run, and repeat < 1 would make the timing .last throw
@@ -139,64 +178,25 @@ object Bench {
       util.StreamGate.quiesce(spark)
     }
 
-    // Prestage the streaming gates' deterministic feeds OFF-CLOCK
-    // (r21 VERDICT #4; guide §1 "time the operator, not the harness"):
-    // each gate's feed derivation + parquet staging runs once here,
-    // before any timed query, and the timed runs — cold repeat-1
-    // included — hard-link the staged immutable files into their fresh
-    // watch dirs. At 100 TB the feed is landed by the upstream system,
-    // not re-synthesized per query, so the gate clocks should measure
-    // the streaming execution; the staging cost is real harness work
-    // and is reported separately as "prestage_sec" in the full record.
-    // Gates whose post-stream code reads a store the skipped stream
-    // would have filled (w11/w14) throw AFTER their feed is staged —
-    // expected and swallowed here.
-    // The engine gates' memoized store builds get the same treatment
-    // (r20-accepted justification: deterministic harness builds are
-    // not query cost — they already ran once per corpus and never on
-    // warm repeats; this moves that once off the timed clock too).
-    // Every gate still executes its full query face per timed run.
-    val prestageSec = {
-      val t0 = System.nanoTime()
-      util.StreamGate.prestageMode = true
-      try SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          Bench.streamingGates.contains(name) &&
-            (only.isEmpty || only.contains(name)) }
-        .foreach { case (name, fn) =>
-          try { fn(spark, sfDir); () }
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] prestage $name (expected for store-backed " +
-                s"gates): ${e.getMessage}") }
+    // Deterministic structure counters: wall time on a shared box
+    // swings with external load, but the NUMBER of jobs / stages /
+    // tasks a gate schedules is a property of the code.
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val stages = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+        override def onStageCompleted(
+            st: org.apache.spark.scheduler.SparkListenerStageCompleted)
+            : Unit = {
+          stages.incrementAndGet(): Unit
+          tasks.addAndGet(st.stageInfo.numTasks.toLong): Unit
         }
-      finally util.StreamGate.prestageMode = false
-      queries.EngineQueries.storeBuilds.foreach { case (name, build) =>
-        if (only.isEmpty || only.contains(name))
-          try { build(spark, sfDir); () }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] prestage $name: ${e.getMessage}") }
-      }
-      // memoized trained artifacts (clusters, centroids, codebooks,
-      // BPE merges, LR weights, subword vocab) — same r20-accepted
-      // once-per-corpus justification, same disclosed off-clock move.
-      // Full runs only: an arg-restricted profiling run should not
-      // pay every module's training to time one gate.
-      if (only.isEmpty) {
-        val artifacts: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-          "dedup" -> (operators.Dedup.prestageArtifacts _),
-          "pipelines" -> (operators.Pipelines.prestageArtifacts _),
-          "similarity" -> (operators.Similarity.prestageArtifacts _),
-          "textanalysis" -> (operators.TextAnalysis.prestageArtifacts _))
-        artifacts.foreach { case (mod, pre) =>
-          try pre(spark, sfDir)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] prestage $mod: ${e.getMessage}") }
-        }
-      }
-      util.StreamGate.quiesce(spark)
-      (System.nanoTime() - t0) / 1e9
-    }
+      })
+    def counts(): Seq[Long] = Seq(jobs.get(), stages.get(), tasks.get())
 
     // Outlier self-defense (round-15 lesson: the driver's single-shot
     // pass recorded d15 at 66.7 s where the committed warm record and
@@ -236,7 +236,11 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .map { case (name, fn) =>
-      def timeOnce(): Double = {
+      // a run's seconds and its counter delta, read after the listener
+      // bus has drained (off the clock); the previous run or gate left
+      // the bus empty
+      def timeOnce(): (Double, Seq[Long]) = {
+        val c0 = counts()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable =>
@@ -244,16 +248,18 @@ object Bench {
             false
         }
         val t = (System.nanoTime() - t0) / 1e9
-        if (ok) t else -t
+        util.StreamGate.drainListenerBus(spark)
+        (if (ok) t else -t, counts().zip(c0).map { case (a, b) => a - b })
       }
-      val times = (1 to repeat).map(_ => timeOnce())
+      val runs = (1 to repeat).map(_ => timeOnce())
+      val times = runs.map(_._1)
       // outlier? replicate NOW (same process, seconds later) so the
       // record itself carries the contention-vs-regression evidence
       val replica = priorWarm.get(name).collect {
         case prior if Bench.isOutlier(times.last, prior, outlierFloor) =>
           System.err.println(f"[bench] $name ${times.last}%.2fs is >" +
             f"${Bench.OutlierFactor}× its ${prior}%.2fs record — replicating")
-          timeOnce()
+          timeOnce()._1
       }
       // warm-slower-than-cold is a pass artifact, not a query cost —
       // auto-replicate in a FRESH JVM and let the replica stand as the
@@ -279,43 +285,34 @@ object Bench {
       // listener bus: a heavy streaming gate must not bill its
       // carry-over to the next gate's clock (VERDICT r17 #2)
       util.StreamGate.quiesce(spark)
-      (name, times, replica, jvmReplica)
+      Timed(name, times, replica, jvmReplica, runs.last._2)
     }
-    // the authoritative warm number: when the in-pass warm carried the
-    // impossible signature, the SMALLER of it and its fresh-JVM
-    // replica — a faster replica confirms the pass contaminated the
-    // measurement (use the replica); a slower replica means the child
-    // paid environment cold-start the parent had amortized (measured
-    // on local-cluster: fresh 4-executor JVMs re-JIT everything and a
-    // genuine 3.8 s gate replicated at 18 s), so the in-pass number
-    // stands. Either way both ride in "jvm_replicated".
-    def warmOf(times: Seq[Double], jvmRep: Option[Double]): Double =
-      jvmRep.filter(r => r > 0 && r < times.last).getOrElse(times.last)
-    val total = results.map { case (_, t, _, j) => warmOf(t, j) }.sum
+    val total = totalOf(results.map(g => (g.times, g.jvmReplica)))
+    val medianTotal = results.map(g => medianOf(g.times)).sum
     // Full-precision, full-name record → files (stdout capture windows
     // clip long lines — the r5 AND r6 records both lost their heads, so
     // the parseable line below is deliberately compact).
-    val warmJson = results
-      .map { case (k, t, _, j) => "\"" + k + "\":" + warmOf(t, j) }
-      .mkString("{", ",", "}")
-    val coldJson = results
-      .map { case (k, t, _, _) => "\"" + k + "\":" + t.head }
-      .mkString("{", ",", "}")
-    // [original, replica] pairs for every outlier that re-ran — empty
-    // object on a clean pass
-    val replicatedFull = results.collect { case (k, v, Some(r), _) =>
-      "\"" + k + "\":[" + v.last + "," + r + "]"
-    }.mkString("{", ",", "}")
-    // [in-pass original, fresh-JVM replica] for every impossible-
-    // signature gate; the replica already stands in "queries"
-    val jvmReplicatedFull = results.collect { case (k, v, _, Some(r)) =>
-      "\"" + k + "\":[" + v.last + "," + r + "]"
-    }.mkString("{", ",", "}")
+    def perGate(gates: Seq[Timed])(value: Timed => String): String =
+      gates.map(g => "\"" + g.name + "\":" + value(g)).mkString("{", ",", "}")
+    def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
+    val failedJson =
+      arr(results.filter(_.times.exists(_ < 0)).map("\"" + _.name + "\""))
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$warmJson,""" +
-        s""""cold":$coldJson,"replicated":$replicatedFull,""" +
-        s""""jvm_replicated":$jvmReplicatedFull,""" +
-        s""""prestage_sec":$prestageSec,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec",""" +
+        s""""protocol":"onclock-repeat$repeat","median_total":$medianTotal,""" +
+        s""""queries":${perGate(results)(_.warm.toString)},""" +
+        s""""cold":${perGate(results)(_.times.head.toString)},""" +
+        s""""runs":${perGate(results)(g => arr(g.times))},""" +
+        s""""counts":${perGate(results)(g => arr(g.counts))},""" +
+        s""""failed":$failedJson,""" +
+        // [original, replica] pairs for every outlier that re-ran —
+        // empty object on a clean pass
+        s""""replicated":${perGate(results.filter(_.replica.isDefined))(
+          g => arr(Seq(g.times.last, g.replica.get)))},""" +
+        // [in-pass original, fresh-JVM replica] for every impossible-
+        // signature gate; the replica already stands in "queries"
+        s""""jvm_replicated":${perGate(results.filter(_.jvmReplica.isDefined))(
+          g => arr(Seq(g.times.last, g.jvmReplica.get)))},""" +
         s""""repeat":$repeat,"sf":"$sfDir"}"""
     // BENCH_FULL_LATEST.json is the committed full-pass record: only a
     // full (unfiltered) run may write it, and the path is anchored off
@@ -341,17 +338,21 @@ object Bench {
     }
     // Stdout line: the driver captures only the LAST ~2000 chars of
     // stdout (measured: BENCH_r01-r21 all carry a 2000-char tail,
-    // truncated mid-JSON at the head — 21 rounds of parsed:null), and
-    // the sbt "[success] Total time ..." suffix eats ~75 of those. So
-    // the line is budgeted to fit ~1925 chars: keys are the unique gate
-    // prefix ("d01_exact_dedup" → "d01" — every gate name is
-    // prefix-coded), values carry 3 significant digits (centisecond
-    // under 10 s — the driver's geomean math never needs more), and the
-    // replicated/jvm_replicated maps live ONLY in the full-record files
-    // (they are storm diagnostics, unbounded in count). Full names and
-    // ms precision live in the files above.
+    // truncated mid-JSON at the head — 21 rounds of parsed:null). The
+    // forked run prints undecorated (build.sbt `run / outputStrategy`:
+    // no "[info] " prefix), and `sbt --batch -error "runMain ..."`
+    // also drops the trailing "[success] Total time ..." line, so the
+    // JSON is the last stdout line. A plain `sbt runMain` still appends
+    // that ~75-char line, so the line is budgeted to fit ~1915 chars:
+    // keys are the unique gate prefix ("d01_exact_dedup" → "d01" —
+    // every gate name is prefix-coded), values carry 3 significant
+    // digits (centisecond under 10 s — the driver's geomean math never
+    // needs more), and everything else (protocol, median_total, runs,
+    // counts, failed, the replicated/jvm_replicated storm diagnostics)
+    // lives ONLY in the full-record files, with full names and ms
+    // precision.
     def short(k: String): String = k.takeWhile(_ != '_')
-    val keys = results.map { case (k, _, _, _) => k -> short(k) }.toMap
+    val keys = results.map(g => g.name -> short(g.name)).toMap
     val unique = keys.values.toSeq.distinct.size == keys.size
     // ≤4 chars for any non-negative value under 1000 s: 2 decimals
     // under 10, 1 under 100, none above — then trailing zeros dropped
@@ -363,8 +364,8 @@ object Bench {
         .reverse
       else s
     }
-    val qs = results.map { case (k, v, _, j) =>
-      "\"" + (if (unique) keys(k) else k) + "\":" + cs(warmOf(v, j))
+    val qs = results.map { g =>
+      "\"" + (if (unique) keys(g.name) else g.name) + "\":" + cs(g.warm)
     }.mkString("{", ",", "}")
     val totalR = cs(total)
     // point at the round-stamped record when one was written — it is the
@@ -374,8 +375,9 @@ object Bench {
       s""","full":"${p.getFileName}"""")
     val base =
       s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"sf":"$sfDir""""
-    // budget: 2000-char capture − ~75-char sbt "[success]" suffix −
-    // slack; measured full-suite line is ~1884 chars without the ref
+    // budget: 2000-char capture − ~75-char sbt "[success]" line (plain
+    // `sbt runMain` only) − slack; the full-suite line measured
+    // 1903–1915 chars across the r22 passes
     val line = if ((base + fullRef).length + 1 <= 1915) base + fullRef + "}"
       else base + "}"
     println(line)

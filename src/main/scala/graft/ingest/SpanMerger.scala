@@ -99,7 +99,7 @@ object SpanMerger {
     // at w07's 600k keys) but per-batch state update time was equal or
     // WORSE (batch-1 allUpdatesTimeMs 9.4 s -> 11.4-14.1 s: every
     // buffered key pays an extra encode/decode hop) and wall time was
-    // flat (TimeGate medians 3.86 vs 3.96 s) — the commit term is the
+    // flat (repeat-5 medians 3.86 vs 3.96 s) — the commit term is the
     // store machinery, not the Map encoder. Reverted; see
     // OPTIMIZATION_r22.md.
     records.groupByKey(_.id)

@@ -1466,16 +1466,6 @@ object Dedup {
       semanticClusters(Tables.embeddings(s, d), 0.4,
         nPlanes = graft.util.Resolution.Fixed(4)).localCheckpoint(true))
 
-  /** Bench prestage hook: train this module's memoized per-corpus
-    * artifacts off the timed clock (see graft.Bench — disclosed, cost
-    * reported as prestage_sec; the artifacts build once per corpus
-    * either way).
-    */
-  private[graft] def prestageArtifacts(s: SparkSession, d: String): Unit = {
-    gateClusters(s, d): Unit
-    gateSemClusters(s, d): Unit
-  }
-
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(

@@ -960,10 +960,6 @@ object Pipelines {
     Dedup.sessionMemo(s).getOrElseUpdate(s"$d|kept3",
       cleanStagesKept3(Tables.documents(s, d)).localCheckpoint(true))
 
-  /** Bench prestage hook (see [[graft.operators.Dedup.prestageArtifacts]]). */
-  private[graft] def prestageArtifacts(s: SparkSession, d: String): Unit =
-    gateKept3(s, d): Unit
-
   val queries: Map[String, Q] = Map(
     "p22_clean_corpus_full" -> ((s, d) =>
       cleanTrainingCorpusFull(Tables.documents(s, d),

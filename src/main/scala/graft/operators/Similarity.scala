@@ -723,12 +723,6 @@ object Similarity {
     trainedBooks.getOrElseUpdate(s"$d|$GatePqM|$GatePqK|$GatePqIters",
       pqCodebooks(Tables.embeddings(s, d), GatePqM, GatePqK, GatePqIters))
 
-  /** Bench prestage hook (see [[graft.operators.Dedup.prestageArtifacts]]). */
-  private[graft] def prestageArtifacts(s: SparkSession, d: String): Unit = {
-    gateCents(s, d): Unit
-    gateBooks(s, d): Unit
-  }
-
   /** s14: thresholded kNN JOIN — every vector's top-k neighbors with
     * cos ≥ tau, in one distributed operator (the SemDeDup/retrieval-
     * mining shape: "for EACH document, its nearest neighbors", not a

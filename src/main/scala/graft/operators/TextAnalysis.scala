@@ -1268,13 +1268,6 @@ object TextAnalysis {
     trainedVocab.getOrElseUpdate(s"$d|$SubwordVocabSize",
       subwordVocab(graft.Tables.documents(s, d)))
 
-  /** Bench prestage hook (see [[graft.operators.Dedup.prestageArtifacts]]). */
-  private[graft] def prestageArtifacts(s: SparkSession, d: String): Unit = {
-    gateMerges(s, d): Unit
-    gateLrWeights(s, d): Unit
-    gateVocab(s, d): Unit
-  }
-
   // ---- t22: PII redaction (training-data hygiene pass) ----
 
   /** The t22 GATE's redaction classes, ordered; patterns are

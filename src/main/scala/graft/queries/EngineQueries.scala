@@ -312,7 +312,7 @@ object EngineQueries {
       // volume does — earlier ladder: 8 → 9.4 s, 16 → 12.8 s,
       // 32 → 18.4 s; r21 remeasure (median of 5 warmed repeats, same
       // feed fan-in): 4 partitions 8.9 s vs 8 → 10.6 s; r22 cold-JVM
-      // A/B with feeds prestaged off-clock (3 fresh JVMs per arm,
+      // A/B with pre-staged feeds (3 fresh JVMs per arm,
       // interleaved) re-confirmed it driver-visibly — while ~200k
       // buffered rows/store at 4 is nowhere near memory pressure.
       // The default is the partitionsForStateRows rule's answer for
@@ -558,9 +558,10 @@ object EngineQueries {
     * same justification as the trained ANN artifacts
     * (`Similarity.scala` trainedCents/trainedBooks) — so each store is
     * built once per (gate, corpus) and every later invocation runs
-    * only the READ path under the oracle. Trees live until JVM exit
-    * (deleteOnExit), not the per-gate janitor: surviving intermediate
-    * reclaims is the point.
+    * only the READ path under the oracle. In graft.Bench the build is
+    * paid on the clock of the first gate that needs it (g09/g12 reuse
+    * g07's store). Trees live until JVM exit (deleteOnExit), not the
+    * per-gate janitor: surviving intermediate reclaims is the point.
     */
   private val builtStores =
     new scala.collection.concurrent.TrieMap[String, String]
@@ -573,31 +574,6 @@ object EngineQueries {
       build(root.toString)
       root.toString
     })
-
-  /** Every store-backed gate's memoized deterministic build, keyed by
-    * gate name — the hook graft.Bench uses to PRESTAGE the builds
-    * off-clock before its timed loop (disclosed; the cost is reported
-    * separately as prestage_sec in the bench record). Each entry
-    * invokes the exact memoStore builder its gate hits on first use,
-    * so only WHEN the one-per-(gate, corpus) build runs moves; Verify
-    * and the oracle paths never prestage, and every gate still
-    * executes its full query face per invocation.
-    */
-  private[graft] val storeBuilds
-      : Seq[(String, (SparkSession, String) => String)] = Seq(
-    "g06_dynamic_schema" -> (g06Store _),
-    "g07_prefix_read" -> (g07Store _),
-    "g08_json_dir_ingest" -> (g08Store _),
-    "g09_prefix_read_coarse" -> (g09Store _),
-    "g10_expire" -> (g10Store _),
-    "g12_manifest_read" -> (g12Store _),
-    "g13_maintain_live" -> (g13Store _),
-    "g14_time_travel" -> (g14Store _),
-    "g15_cdc_incremental" -> (g15Store _),
-    "g16_cdc_keyed" -> (g16Store _),
-    "g17_cdc_feed" -> (g17Store _),
-    "g18_cdc_consume" -> (g18Store _),
-    "g19_cdc_mirror" -> (g19Store _))
 
   /** The narrow/wide drifted-batch pair over a ⅕ subset of an
     * events-as-logs frame — shared by the g06 (line-feed) and g08

@@ -39,6 +39,10 @@ object Cols {
     * deployment's table), this is the identity — no corpus-wide
     * shuffle is ever added at scale. Use only above partitioning-
     * invariant consumers (aggregations, joins, deterministic windows).
+    * Cost: `df.rdd.getNumPartitions` forces analysis, optimization and
+    * physical planning of `df` once per call, so keep it off
+    * per-request paths (HTTP routes, engine reads); batch operators
+    * pay it once per operator invocation.
     */
   def rebalanceIfNarrow(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {

@@ -24,4 +24,27 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.isOutlier(10.0, -1.0, 0.0))
     assert(!Bench.isOutlier(10.0, 0.0, 0.0))
   }
+
+  test("totalOf: a failed gate adds its elapsed time, never subtracts it") {
+    val ok = (Seq(2.0), None)
+    // failures report their time negated; the total counts 3 s elapsed
+    assert(Bench.totalOf(Seq(ok, (Seq(-3.0), None))) == 5.0)
+    assert(Bench.totalOf(Seq(ok, (Seq(-3.0), None))) >
+      Bench.totalOf(Seq(ok)))
+    // a fresh-JVM replica replaces a slower successful warm time ...
+    assert(Bench.totalOf(Seq((Seq(1.0, 4.0), Some(0.5)))) == 0.5)
+    // ... but never a failed one: the failure's 4 s stand
+    assert(Bench.totalOf(Seq((Seq(1.0, -4.0), Some(0.5)))) == 4.0)
+    // the per-gate value keeps the sign as the failure flag
+    assert(Bench.warmOf(Seq(1.0, -4.0), Some(0.5)) == -4.0)
+  }
+
+  test("medianOf: odd and even counts, failures by elapsed time") {
+    assert(Bench.medianOf(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(Bench.medianOf(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+    assert(Bench.medianOf(Seq(7.0)) == 7.0)
+    // a failed run (negative) counts as its elapsed 5 s, not as -5
+    assert(Bench.medianOf(Seq(1.0, -5.0, 2.0)) == 2.0)
+    assert(Bench.medianOf(Seq(-5.0, 6.0)) == 5.5)
+  }
 }

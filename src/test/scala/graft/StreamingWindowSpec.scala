@@ -54,6 +54,29 @@ class StreamingWindowSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
+  test("runParquet stages a keyed feed once; an unkeyed feed stages per call") {
+    import spark.implicits._
+    val derivations = spark.sparkContext.longAccumulator("feed_derivations")
+    // one partition: every derivation of the feed bumps the counter once
+    def feed = spark.range(0, 8, 1, 1).as[Long]
+      .mapPartitions { it => derivations.add(1); it }.toDF("x")
+    def runOnce(key: Option[String]): Seq[Long] =
+      graft.util.StreamGate.runParquet(spark, "feed_memo_spec", Seq(feed),
+          _.select((col("x") * 2).as("y")), feedKey = key)
+        .collect().map(_.getLong(0)).toSeq.sorted
+    val want = (0L until 8L).map(_ * 2)
+
+    val key = Some(s"feed_memo_spec|${System.nanoTime()}")
+    assert(runOnce(key) == want)
+    assert(runOnce(key) == want)
+    assert(derivations.value == 1L)
+
+    derivations.reset()
+    assert(runOnce(None) == want)
+    assert(runOnce(None) == want)
+    assert(derivations.value == 2L)
+  }
+
   test("streaming dedup drops re-arrivals within the watermark horizon") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
