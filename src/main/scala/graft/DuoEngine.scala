@@ -10,15 +10,22 @@ import graft.store.{MemoryView, ParquetStore, ProcessRegistry, SchemaRegistry}
 /** The engine facade: two-table store (hot memory view ∪ cold
   * time-partitioned parquet) + the reference's full query surface.
   *
-  * Layout under `root` mirrors the reference
-  * (duo/src/partition/writer.rs:22-30, duo/src/memory.rs:141-148):
+  * Layout under `root` follows the reference
+  * (duo/src/partition/writer.rs:22-30, duo/src/memory.rs:141-148),
+  * with each flush's minute dirs under its own generation tree and
+  * the manifest that lists them ([[graft.store.ParquetStore]]):
   * {{{
   * root/
   *   process.json
   *   schema/log_schema.json
-  *   span/date=…/hour=…/minute=…/&lt;part&gt;.parquet
-  *   log/date=…/hour=…/minute=…/&lt;part&gt;.parquet
+  *   span/_gen-…/date=…/hour=…/minute=…/&lt;part&gt;.parquet
+  *   span/_manifest/gen-…
+  *   log/_gen-…/date=…/hour=…/minute=…/&lt;part&gt;.parquet
+  *   log/_manifest/gen-…
   * }}}
+  * A store in the reference's own layout (minute dirs straight under
+  * `span/` and `log/`, no manifest) reads by listing until the first
+  * flush folds its files into the first generation.
   *
   * `memoryMode = true` skips persistence entirely and queries serve from
   * the memory view alone (duo/src/main.rs:82-85, ST6).
@@ -183,11 +190,15 @@ final class DuoEngine(val spark: SparkSession, root: String,
     }
 
   /** The 60 s parquet flush + WAL clear (ST5): drain both memory views
-    * into the partitioned store, then drop the replay log
-    * (duo/src/grpc/server.rs:89-120). No-op in memory mode.
-    * Synchronized against the append paths (the monitor is reentrant,
-    * so [[maybeEarlyFlush]]'s nested call is fine): a WAL clear must
-    * never land between another thread's walAppend and view append.
+    * into the partitioned store, each table's rows committed as one
+    * manifest generation ([[graft.store.ParquetStore.write]]), then
+    * drop the replay log (duo/src/grpc/server.rs:89-120). No-op in
+    * memory mode. Synchronized against the append paths (the monitor
+    * is reentrant, so [[maybeEarlyFlush]]'s nested call is fine): a
+    * WAL clear must never land between another thread's walAppend and
+    * view append. A [[maintain]] tick on another thread does not take
+    * this monitor; its commits and the flush's serialize on the
+    * store's own lock.
     */
   def flush(): Unit = this.synchronized { if (!memoryMode) {
     val spans = spanMemory.drain()
@@ -202,14 +213,11 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * lacks — duo never rewrites its partitions): plan small-file
     * compactions for both stores
     * ([[graft.store.ParquetStore.planCompactions]] — pure metadata,
-    * zero data reads; one manifest GET when a manifest is live, a
-    * tree walk when the 60 s direct-write [[flush]] has marked it
-    * dirty) and heal up to `maxHeals` of the most-fragmented date
-    * partitions each via the manifest-committed per-date rewrite,
-    * whose scoped republish restores the one-GET planning until the
-    * next flush; concurrent readers planned before a heal stay green
-    * (snapshot isolation — superseded files live until the vacuum
-    * grace passes).
+    * one manifest GET, zero data reads) and heal up to `maxHeals` of
+    * the most-fragmented date partitions each via the
+    * manifest-committed per-date rewrite; concurrent readers planned
+    * before a heal stay green (snapshot isolation — superseded files
+    * live until the vacuum grace passes).
     * The flush appends a file per touched minute, so a long-running
     * ingest inevitably fragments; a maintenance cadence calling this
     * keeps read plans bounded without ever blocking the ingest path,
@@ -603,7 +611,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
     val baseNames = Schemas.logBase.fieldNames.toSet
     val candidates = logSchema.fieldNames.toSeq.filterNot(baseNames)
     if (candidates.isEmpty) return Seq.empty
-    // the retained truth: the current table (staged + dirty appends
+    // the retained truth: the current table (staged flushes
     // included) plus every OLDER retained generation (the newest is
     // a subset of the current read)
     val frames = logStore.read(None, None).toSeq ++

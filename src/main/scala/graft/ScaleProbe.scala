@@ -709,7 +709,7 @@ object ScaleProbe {
         pk == "date=2024-06-01" || pk == "date=2024-06-01/hour=03"
       val cold = new StoreManifest(fs, local.toString)
       val t0 = System.nanoTime()
-      val hourEntries = cold.readStateFor(hourAdmit)._1
+      val hourEntries = cold.readStateFor(hourAdmit)
         .map(_.entries.size).getOrElse(0)
       val hourColdMs = (System.nanoTime() - t0) / 1e6
       val warmMs = (0 until 3).map { _ =>
@@ -719,7 +719,7 @@ object ScaleProbe {
       }.min
       val t1 = System.nanoTime()
       val fullEntries = new StoreManifest(fs, local.toString)
-        .readState()._1.map(_.entries.size).getOrElse(0)
+        .read().map(_.entries.size).getOrElse(0)
       val fullColdMs = (System.nanoTime() - t1) / 1e6
       // the unsplit table then ADOPTS the layout by the metadata-only
       // heal — the one-commit migration wall a pre-split deployment
@@ -827,7 +827,7 @@ object ScaleProbe {
           deadPlus = Nil, deadMinus = Nil, schema = None,
           parent = parent.get)
         val dt = System.nanoTime() - t0
-        val snap = m.readState()._1.get
+        val snap = m.read().get
         // commit footprint = growth of the whole _manifest dir
         // (generation + manifests written, minus retention's prunes)
         val bytes = math.max(0L, metaBytes() - before)
@@ -848,7 +848,7 @@ object ScaleProbe {
         m.publishPatch(adds = newFiles, drops = Nil, deadPlus = Nil,
           deadMinus = Nil, schema = None, parent = parent.get)
         val dt = System.nanoTime() - t0
-        val snap = m.readState()._1.get
+        val snap = m.read().get
         val bytes = math.max(0L, metaBytes() - before)
         if (snap.gen.endsWith(".delta")) {
           deltaNs += dt; deltaBytes += bytes; deltas += 1
@@ -861,7 +861,7 @@ object ScaleProbe {
       // as the table grows — while the full assembly stays O(files)
       val coldFull = new StoreManifest(fs, local.toString)
       val tf = System.nanoTime()
-      val fullEntries = coldFull.readState()._1.map(_.entries.size).getOrElse(0)
+      val fullEntries = coldFull.read().map(_.entries.size).getOrElse(0)
       val fullColdMs = (System.nanoTime() - tf) / 1e6
       val windowAdmit: String => Boolean = {
         val d0 = dateOf(0)
@@ -869,7 +869,7 @@ object ScaleProbe {
       }
       val coldWin = new StoreManifest(fs, local.toString)
       val tw = System.nanoTime()
-      val winEntries = coldWin.readStateFor(windowAdmit)._1
+      val winEntries = coldWin.readStateFor(windowAdmit)
         .map(_.entries.size).getOrElse(0)
       val winColdMs = (System.nanoTime() - tw) / 1e6
       // min of 3: the full-assembly garbage above makes a single
@@ -901,9 +901,25 @@ object ScaleProbe {
     * store over the SAME content — since round 16 the manifest is the
     * table of record once a store compacts (rewrites live in `_gen-*`
     * trees the legacy listing never sees), so the listing baseline is
-    * a store built by direct writes alone, exactly the state a
-    * pre-first-compaction deployment is in.
+    * duo's native un-manifested layout: plain minute dirs that no
+    * store mutation has touched.
     */
+  /** `rows` in duo's native un-manifested layout: minute dirs straight
+    * under `tableDir` and no manifest — a store in this state plans by
+    * listing until its first write or compaction commits a generation.
+    */
+  private[graft] def writeNativeLayout(rows: org.apache.spark.sql.DataFrame,
+      tableDir: String, timeCol: String): Unit = {
+    import org.apache.spark.sql.functions.{col, date_format,
+      timestamp_micros}
+    val ts = timestamp_micros(col(timeCol))
+    rows.withColumn("date", date_format(ts, "yyyy-MM-dd"))
+      .withColumn("hour", date_format(ts, "HH"))
+      .withColumn("minute", date_format(ts, "mm"))
+      .write.mode("append").partitionBy("date", "hour", "minute")
+      .parquet(tableDir)
+  }
+
   private def g12Probe(scale: String,
       ev: org.apache.spark.sql.DataFrame): Unit = {
     val spark = ev.sparkSession
@@ -915,9 +931,12 @@ object ScaleProbe {
       val local = java.nio.file.Files.createTempDirectory(s"g12_$mode")
       graft.util.StreamGate.deferDelete(local)
       val root = s"probefs://$local"
-      graft.queries.EngineQueries.prefixReadBuild(spark, logs, root)
       val st = new graft.store.ParquetStore(spark, root, "log", "time")
-      if (mode == "manifest") st.compact()
+      if (mode == "manifest") {
+        graft.queries.EngineQueries.prefixReadBuild(spark, logs, root)
+        st.compact()
+      } else writeNativeLayout(graft.queries.EngineQueries.g07Logs(logs),
+        s"$root/log", "time")
       // warm once (FS handle, parquet session state), then count
       st.readPrefixes(startUs, endUs, schema = Some(schema)): Unit
       CountingProbeFs.lists.set(0)

@@ -733,7 +733,7 @@ object EngineQueries {
     */
   private val G07WindowUs = 3L * 3600L * 1000000L
 
-  private def g07Logs(logs0: DataFrame): DataFrame =
+  private[graft] def g07Logs(logs0: DataFrame): DataFrame =
     logs0.filter(col("span_id") % 5 === 1)
       .withColumn("time",
         lit(G06BaseUs) + pmod(col("time"), lit(G07WindowUs)))
@@ -918,14 +918,14 @@ object EngineQueries {
     * AFTER EVERY SECOND FLUSH — planCompactions flags the fragmented
     * date, compactDate heals it through the manifest-commit protocol,
     * vacuum (grace 0) reclaims the superseded files — while later
-    * flushes keep landing on the healed store (dirty-marker mode).
-    * The final state is then answered through the SAME mid-minute
-    * prefix query, and the oracle is g07's replay VERBATIM: however
-    * many heal/flush/vacuum interleavings the store went through, the
-    * table must be observationally identical to one clean landing.
-    * This pins that dirty-walk union + scoped rebuild + tombstone
-    * reclaim compose under live traffic — the composition no single-
-    * operation spec can pin.
+    * flushes keep committing their own generations on the healed
+    * store. The final state is then answered through the SAME
+    * mid-minute prefix query, and the oracle is g07's replay VERBATIM:
+    * however many heal/flush/vacuum interleavings the store went
+    * through, the table must be observationally identical to one clean
+    * landing. This pins that flush commits + scoped rebuild +
+    * tombstone reclaim compose under live traffic — the composition no
+    * single-operation spec can pin.
     */
   def maintainGate(s: SparkSession, d: String): DataFrame = {
     val root = g13Store(s, d)
@@ -947,7 +947,7 @@ object EngineQueries {
         val engine = new graft.DuoEngine(s, root)
         (0 until 6).foreach { k =>
           engine.appendLogBatch(logs.filter(col("span_id") % 6 === k))
-          engine.flush() // the 60 s cadence: direct partitioned write
+          engine.flush() // the 60 s cadence: one generation per flush
           if (k % 2 == 1)
             engine.maintain(maxFilesPerDate = 4, minAvgBytes = 0L,
               vacuumGraceMs = 0L): Unit
@@ -1069,10 +1069,10 @@ object EngineQueries {
     * diff ([[graft.store.ParquetStore.changesBetween]]) instead of a
     * caller-supplied batch. The landed corpus (even doc ids, day 1)
     * commits as generation A; the incoming batch (odd ids) lands on
-    * day 2 as a direct append and is folded by a date-SCOPED
+    * day 2 as an append commit and is folded by a date-SCOPED
     * [[graft.store.ParquetStore.compactDate]] — the rolling
-    * maintenance shape — into generation B, so the file-level diff
-    * B∖A is exactly the increment. The oracle is d08's VERBATIM: the
+    * maintenance shape — into generation C, so the file-level diff
+    * C∖A is exactly the increment. The oracle is d08's VERBATIM: the
     * storage-derived increment must reproduce the caller-supplied
     * split bit for bit.
     */
@@ -1102,10 +1102,9 @@ object EngineQueries {
     memoStore("g15", d) { root =>
       val (batchOf, day2) = cdcTimedDocs(s, d)
       val st = new graft.store.ParquetStore(s, root, "documents", "time")
-      st.write(batchOf(0L))
-      st.compact() // gen A: the landed corpus
-      st.write(batchOf(1L))
-      st.compactDate(day2) // gen B: scoped fold of the day-2 increment
+      st.write(batchOf(0L)) // gen A: the landed corpus
+      st.write(batchOf(1L)) // gen B: the day-2 append
+      st.compactDate(day2) // gen C: scoped fold of the day-2 increment
     }
 
   def cdcIncrementalGate(s: SparkSession, d: String): DataFrame = {
@@ -1139,17 +1138,17 @@ object EngineQueries {
     * dropped real ones) breaks the hash.
     */
   /** The g16/g17 build: gen A = landed evens, gen B = pure hour-grain
-    * re-layout, gen C = the true day-2 odd increment.
+    * re-layout, gen C = the true day-2 odd increment (its append
+    * commit; a compactDate after it would make a fourth generation
+    * and retention would prune A).
     */
   private def relayoutCdcBuild(s: SparkSession, d: String,
       root: String): Unit = {
-    val (batchOf, day2) = cdcTimedDocs(s, d)
+    val (batchOf, _) = cdcTimedDocs(s, d)
     val st = new graft.store.ParquetStore(s, root, "documents", "time")
-    st.write(batchOf(0L))
-    st.compact() // gen A: the landed corpus
+    st.write(batchOf(0L)) // gen A: the landed corpus
     st.compact(granularity = "hour") // gen B: pure re-layout
-    st.write(batchOf(1L))
-    st.compactDate(day2) // gen C: the true day-2 increment
+    st.write(batchOf(1L)) // gen C: the true day-2 increment
   }
 
   private def g16Store(s: SparkSession, d: String): String =
@@ -1238,32 +1237,31 @@ object EngineQueries {
   }
 
   /** g18: the EXACTLY-ONCE consumer pipeline driven end-to-end under
-    * the oracle hash — stepped replay (`poll(maxGenerations = 1)`)
+    * the oracle hash — stepped replay (`poll(maxGenerations = n)`)
     * plus `consumeInto` landing each bounded increment in a SINK
     * store through its manifest commit. The pinned lineage: gen A
-    * lands the evens (compact), gen B the true day-2 odd increment
-    * (compactDate — its audit line names the operation), gen C the
-    * day-1 expiry (delete-only: nothing to land, the consumer just
-    * advances). A consumer rewound to A steps through B then C one
-    * generation at a time, each step attributed by the commit's own
-    * info JSON; the sink ends holding exactly the odd rows once —
+    * lands the evens, gen B appends the day-2 odds and gen C folds
+    * them (compactDate — its audit line names the operation), gen D
+    * the day-1 expiry (delete-only: nothing to land, the consumer just
+    * advances). A consumer rewound to A steps over B and C in one
+    * `maxGenerations = 2` step (attributed by C's info JSON), then
+    * over D alone; the sink ends holding exactly the odd rows once —
     * count and id-sum hash-compared against DuckDB — and a further
     * consume is caught up. Sink and consumer are fresh per
     * invocation (janitor-deleted / reset) so repeated runs replay
     * the whole lifecycle against the memoized source.
     */
   /** The g18/g19 build: gen A = landed evens, gen B = the day-2 odd
-    * compactDate increment, gen C = the day-1 expiry.
+    * append, gen C = its compactDate fold, gen D = the day-1 expiry.
     */
   private def expiryCdcBuild(s: SparkSession, d: String,
       root: String): Unit = {
     val (batchOf, day2) = cdcTimedDocs(s, d)
     val st = new graft.store.ParquetStore(s, root, "documents", "time")
-    st.write(batchOf(0L))
-    st.compact() // gen A: the landed evens
-    st.write(batchOf(1L))
-    st.compactDate(day2) // gen B: the true day-2 odd increment
-    st.expire(G06BaseUs + 86400000000L): Unit // gen C: day 1 retired
+    st.write(batchOf(0L)) // gen A: the landed evens
+    st.write(batchOf(1L)) // gen B: the day-2 odd append
+    st.compactDate(day2) // gen C: the true day-2 odd increment
+    st.expire(G06BaseUs + 86400000000L): Unit // gen D: day 1 retired
   }
 
   private def g18Store(s: SparkSession, d: String): String =
@@ -1283,12 +1281,13 @@ object EngineQueries {
     val feed = st.cdcFeed(consumer, keyCols = Seq("doc_id"))
     feed.commit(gens.head) // rewind: replay history from gen A
     // peek each step's attribution BEFORE consuming it (poll is
-    // read-only; consumeInto re-polls the same increment)
-    val p1 = feed.poll(maxGenerations = 1)
+    // read-only; consumeInto re-polls the same increment). Step 1
+    // spans the append and its compactDate fold
+    val p1 = feed.poll(maxGenerations = 2)
       .getOrElse(sys.error("g18: step-1 poll empty"))
     val step1Op = if (p1.info.exists(_.contains(""""op":"compactDate""""))
       && !p1.resync) 1L else 0L
-    val c1 = feed.consumeInto(sink, maxGenerations = 1)
+    val c1 = feed.consumeInto(sink, maxGenerations = 2)
     val p2 = feed.poll(maxGenerations = 1)
       .getOrElse(sys.error("g18: step-2 poll empty"))
     val step2Op = if (p2.info.exists(_.contains(""""op":"expire""""))
@@ -1323,11 +1322,12 @@ object EngineQueries {
     * the source's net state as of every consumed generation — the
     * invalidation g18's append-only consumer deliberately leaves to
     * the caller, made first-class. Same pinned lineage as g18 (gen A
-    * = landed evens, gen B = the day-2 odd compactDate increment,
-    * gen C = the day-1 expiry that REMOVES the evens). The mirror
-    * bootstraps at source@A through the documented rebootstrap
-    * procedure (transactional [[graft.store.ParquetStore.replaceCommitted]]
-    * + cursor commit), then steps one generation at a time; after
+    * = landed evens, gens B–C = the day-2 odd append and its
+    * compactDate fold, gen D = the day-1 expiry that REMOVES the
+    * evens). The mirror bootstraps at source@A through the documented
+    * rebootstrap procedure (transactional
+    * [[graft.store.ParquetStore.replaceCommitted]] + cursor commit),
+    * then steps to C (`maxGenerations = 2`) and to D; after
     * EACH step the sink is compared row-for-row (count + key-sum)
     * against `readGeneration(toGen)` — a mirror that drifted from
     * net state at any step breaks the hash. The final sink holds
@@ -1361,15 +1361,15 @@ object EngineQueries {
         coalesce(sum(col("doc_id")), lit(0L)).as("s")).collect()(0)
       (r.getAs[Long]("n"), r.getAs[Long]("s"))
     }.getOrElse((0L, 0L))
-    def stepMatches(): Long = {
-      val toGen = feed.consumeInto(sink, maxGenerations = 1,
+    def stepMatches(maxGenerations: Int): Long = {
+      val toGen = feed.consumeInto(sink, maxGenerations = maxGenerations,
         mirror = true).getOrElse(sys.error("g19: step poll empty"))
       val sinkAgg = agg(sink.read(None, None))
       val srcAgg = agg(st.readGeneration(toGen))
       if (sinkAgg == srcAgg) 1L else 0L
     }
-    val step1 = stepMatches() // A→B: the odd append mirrors in
-    val step2 = stepMatches() // B→C: the expiry's removals apply
+    val step1 = stepMatches(2) // A→C: the odd append mirrors in
+    val step2 = stepMatches(1) // C→D: the expiry's removals apply
     val caughtUp =
       if (feed.consumeInto(sink, mirror = true).isEmpty) 1L else 0L
     val (sinkN, sinkSum) = agg(sink.read(None, None))
@@ -1536,7 +1536,7 @@ object EngineQueries {
         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
         |ORDER BY kind""".stripMargin,
     // the exactly-once consumer pipeline: a cursor rewound to gen A
-    // steps through the compactDate and expire commits one at a time
+    // steps to the compactDate commit, then to the expire commit
     // (two steps, each attributed by its op), lands exactly the odd
     // rows ONCE in the sink, and is then caught up
     "g18_cdc_consume" ->

@@ -211,7 +211,7 @@ final class CdcFeed private[store] (store: ParquetStore,
     * [[ParquetStore]] — the transactional consumer the at-least-once
     * [[poll]]/[[commit]] contract otherwise pushes onto every
     * downstream: one increment's rows land in the sink THROUGH its
-    * manifest commit ([[ParquetStore.writeCommitted]]), whose
+    * manifest commit ([[ParquetStore.write]]), whose
     * generation info durably records `{"op":"cdcConsume","consumer":…,
     * "toGen":…}` in the SAME rename that makes the rows visible; the
     * cursor advances after. A crash at any step replays safely:
@@ -280,7 +280,7 @@ final class CdcFeed private[store] (store: ParquetStore,
               Some(consumeInfoOf(inc.toGen, mirror = true)))
           // both sides None (housekeeping commit): nothing to land,
           // the cursor advance below is the whole consumption
-        } else inc.added.foreach(df => sink.writeCommitted(transform(df),
+        } else inc.added.foreach(df => sink.write(transform(df),
           Some(consumeInfoOf(inc.toGen))))
         commit(inc.toGen)
         Some(inc.toGen)

@@ -27,6 +27,15 @@ import org.apache.spark.sql.types.StructType
   * the ROOT's scheme ([[StoreFs]]), so the same store code serves a
   * local path, an HDFS URI, or an `s3a://bucket/...` root.
   *
+  * One landing path: every partitioned append ([[write]], the flush
+  * landing) and every rewrite lands an immutable `_gen-*` tree and
+  * publishes a [[StoreManifest]] generation, so a store that has ever
+  * been written plans every read from its manifest and recorded
+  * schema. Listing mode remains only for a store no write has touched
+  * yet — duo's native layout, or one fed through [[writeStaged]]
+  * alone; the first [[write]] or [[compact]] folds its files into the
+  * first generation.
+  *
   * Snapshot isolation (round-16; the reference has no analog — it
   * never rewrites files, duo/src/partition/writer.rs:55-59): layout
   * mutations never modify or delete a file a reader could have
@@ -61,7 +70,8 @@ import org.apache.spark.sql.types.StructType
   * throws [[StoreManifest.ConcurrentCommitException]] when any other
   * generation is newest — so even a mutation that somehow passed both
   * lease checks cannot overwrite another writer's commit. Readers
-  * never fence.
+  * never fence. Within one process, the mutations of one store
+  * instance serialize on its monitor ([[mutation]]).
   *
   * At scale: minute-grained dirs are only sensible for recent data; the
   * same layout compacts upward (minute→hour→day files) without changing
@@ -362,17 +372,22 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     fenceLease()
   }
 
-  /** Epoch bump on mutation EXIT, paired with the entry-side bump in
-    * [[fence]] (ADVICE r21): a concurrent reader that observes the
-    * post-entry epoch and plans BEFORE the mutation lands would
-    * otherwise memoize the pre-mutation plan under a key no later
-    * read distinguishes — the exit bump makes that key stale the
-    * moment the mutation completes (or aborts — a partial landing
-    * must not be memo-servable either). Wraps every public mutator
-    * body; early `return`s inside still run the finally.
+  /** Wraps every public mutator body. Mutations of one instance run
+    * one at a time under its monitor: every commit plans from the
+    * newest generation and CASes on it, so two overlapping mutations
+    * (an engine's early flush on an ingest thread against its
+    * maintenance tick) would otherwise fail one of them with
+    * [[StoreManifest.ConcurrentCommitException]]. The epoch bump on
+    * EXIT pairs with the entry-side bump in [[fence]] (ADVICE r21): a
+    * concurrent reader that observes the post-entry epoch and plans
+    * BEFORE the mutation lands would otherwise memoize the
+    * pre-mutation plan under a key no later read distinguishes — the
+    * exit bump makes that key stale the moment the mutation completes
+    * (or aborts — a partial landing must not be memo-servable either).
+    * Early `return`s inside still run the finally.
     */
-  private def bumpOnExit[A](body: => A): A =
-    try body finally bumpEpoch()
+  private def mutation[A](body: => A): A =
+    synchronized { try body finally bumpEpoch() }
 
   private def fenceLease(): Unit = myLease match {
     case None =>
@@ -401,78 +416,33 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   // ---- writes ----
 
-  /** Append a batch, deriving partition columns from the row's µs
-    * epoch time column. A flush whose rows span D time partitions
-    * across T tasks writes up to D×T files — batches with a WIDE
-    * event-time spread should land through [[writeStaged]] instead
-    * (flat append now, [[compact]] owns the layout); this direct
-    * partitioned write is for the common observability case where a
-    * flush touches the current few minutes.
+  /** Append a batch THROUGH the manifest commit protocol — the one
+    * partitioned landing: the rows land in a fresh immutable `_gen-*`
+    * tree (partition columns derived from the row's µs time column,
+    * one file per touched minute dir — see [[landGenTree]]), and one
+    * generation publish makes them the table's truth, carrying the
+    * caller's `info` audit line. The rename that makes the rows
+    * VISIBLE is the same rename that durably records the audit line,
+    * which is what [[CdcFeed.consumeInto]] builds exactly-once
+    * delivery on: a consumer crashing between landing and
+    * cursor-advance detects the landed increment from the sink's own
+    * generation info and skips the replay. A crash before the publish
+    * leaves an orphan tree for [[vacuum]]. A first write into a store
+    * with no generation folds the legacy tree's files (duo's native
+    * layout) into the first generation.
+    *
+    * The recorded schema stays EXACT when it provably can: the parent's
+    * recorded columns plus the batch's new ones, which is the union the
+    * live files' footers merge to, so a drifting ingest still plans
+    * from the manifest schema and never pays per-file footer
+    * inference. A parent with no recorded schema, or a batch that
+    * re-types a column, records None (footer inference until the next
+    * compact), the same conservative contract as [[expire]]. A flush
+    * whose rows span a WIDE event-time range should land through
+    * [[writeStaged]] instead (flat append now, [[compact]] owns the
+    * layout).
     */
-  def write(batch: DataFrame): Unit = bumpOnExit {
-    fence()
-    // dirty-before-mutate: once a manifest exists, readers plan from
-    // it — the marker (dropped BEFORE any new file can land) tells
-    // them to union a legacy-tree walk in until the next compaction
-    // folds the appended files. A crash after the marker but before
-    // the append leaves a spurious marker: readers pay a walk that
-    // finds nothing new — correct, just unindexed.
-    manifest.markDirty()
-    batch
-      .withColumn("__ts", timestamp_micros(col(timeCol)))
-      .withColumn("date", date_format(col("__ts"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("__ts"), "HH"))
-      .withColumn("minute", date_format(col("__ts"), "mm"))
-      .drop("__ts")
-      // co-locate each partition dir's rows in one task before the
-      // dynamic-partition write: without this every task writes every
-      // dir it touches, so a T-task flush spanning D minutes lands up
-      // to T×D files (measured: a 60-minute-spread flush from a
-      // 32-partition batch wrote ~1,900 one-KB files and every later
-      // read paid the listing). The exchange is bounded by the flush
-      // batch — the store's write unit — and yields exactly one file
-      // per touched partition dir. The partition count is EXPLICIT
-      // (defaultParallelism — scale-adaptive, cluster cores): a
-      // column-only repartition let AQE coalesce a small flush's
-      // shuffle to ONE task that then opened every touched dir's
-      // parquet writer serially (guide §2.6 idle capacity — measured
-      // on g13's 181-minute-spread flushes: 2-3.6 s single-task write
-      // stages, 31 of 32 cores idle). One-file-per-dir is partition-
-      // count-independent: each dir hashes wholly into one task.
-      .repartition(spark.sparkContext.defaultParallelism,
-        col("date"), col("hour"), col("minute"))
-      .write
-      .mode("append")
-      .option("parquet.bloom.filter.enabled#trace_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#trace_id",
-        bloomNdv.toString)
-      .partitionBy("date", "hour", "minute")
-      .parquet(dir)
-  }
-
-  /** Append a batch THROUGH the manifest commit protocol: the rows
-    * land in a fresh immutable `_gen-*` tree (invisible — no dirty
-    * marker, no staging), and one generation publish makes them the
-    * table's truth, carrying the caller's `info` audit line. This is
-    * the transactional landing [[CdcFeed.consumeInto]] builds
-    * exactly-once delivery on: the rename that makes the rows
-    * VISIBLE is the same rename that durably records WHICH increment
-    * they came from, so a consumer crashing between landing and
-    * cursor-advance can detect the landed increment from the sink's
-    * own generation info and skip the replay. A crash before the
-    * publish leaves an orphan tree for [[vacuum]]. Requires a batch
-    * whose `timeCol` drives the partition derivation, like [[write]].
-    * The recorded schema stays EXACT when it provably can: a batch
-    * whose (all-nullable) schema equals the parent's recorded one
-    * keeps it, and the first commit into an empty table records the
-    * batch's — so a sink fed only by uniform committed appends (the
-    * CDC-consumer shape) plans from the manifest schema forever,
-    * never paying per-file footer inference. A DRIFTED batch drops
-    * the recorded schema to None (footer inference until the next
-    * compact), the same conservative contract as [[expire]].
-    */
-  def writeCommitted(batch: DataFrame,
-      info: Option[String] = None): Unit = bumpOnExit {
+  def write(batch: DataFrame, info: Option[String] = None): Unit = mutation {
     fence()
     val t = truth()
     val batchSchema = StoreManifest.allNullable(batch.schema)
@@ -483,12 +453,10 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val landed = manifest.walkSubtree(gen)
     t match {
       case Some(snap) =>
-        // keep the parent's recorded schema only when the batch
-        // provably conforms to it (order-sensitive equality — a
-        // mismatch is just conservative: footer inference)
         manifest.publishPatch(adds = landed, drops = Nil,
           deadPlus = Nil, deadMinus = Nil,
-          schema = snap.schema.filter(_ == batchSchema),
+          schema = snap.schema.flatMap(
+            ParquetStore.appendSchema(_, batchSchema)),
           parent = snap.gen, info = info)
       case None => // first commit ever: absolute, legacy files folded
         val legacy = manifest.walkLegacy()
@@ -503,7 +471,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * table and `adds` land, so a sink fed by
     * [[CdcFeed.consumeInto]]'s mirror mode equals the source's NET
     * state as of the consumed generation — the invalidation the
-    * append-only `writeCommitted` path deliberately leaves to the
+    * append-only [[write]] path deliberately leaves to the
     * consumer ([[CdcFeed]] `maxGenerations` stepping surfaces
     * mid-history removals a single jump would net out).
     *
@@ -517,29 +485,26 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * increment landed) is the same rename atom every commit uses, so
     * the exactly-once handshake holds: a crash before it leaves an
     * orphan tree and a replayable increment, after it a healable
-    * cursor. Contract: the store must be commit-owned (no direct
-    * [[write]]s — mirror removal rewrites manifested files only), and
-    * a consumer `transform` must preserve `keyCols` and the time
-    * column (they are the row identity and the partition coordinate
-    * the removal is applied in).
+    * cursor. Contract: the store must be commit-owned (no
+    * [[writeStaged]] landings — mirror removal rewrites manifested
+    * files only), and a consumer `transform` must preserve `keyCols`
+    * and the time column (they are the row identity and the partition
+    * coordinate the removal is applied in).
     */
   def applyMirror(adds: Option[DataFrame], removed: Option[DataFrame],
-      keyCols: Seq[String], info: Option[String] = None): Unit = bumpOnExit {
+      keyCols: Seq[String], info: Option[String] = None): Unit = mutation {
     require(keyCols.nonEmpty, "applyMirror needs row-identity keyCols")
     fence()
     // commit-owned contract ENFORCED, not narrated (ADVICE r20):
-    // staged files and dirty-marked direct-write landings are
-    // invisible to the manifest truth this rewrite plans from, so a
-    // removed key living in one would silently survive the mirror —
-    // the worst failure class. A mirror sink fed by anything other
-    // than manifest commits fails loudly here instead.
+    // staged files are invisible to the manifest truth this rewrite
+    // plans from, so a removed key living in one would silently
+    // survive the mirror — the worst failure class. A mirror sink fed
+    // by anything other than manifest commits fails loudly here.
     val stagedN = stagedFileCount
-    val dirtyN = manifest.dirtyMarkers().size
-    require(stagedN == 0 && dirtyN == 0,
+    require(stagedN == 0,
       s"applyMirror requires a commit-owned sink: $stagedN staged " +
-        s"file(s), $dirtyN dirty marker(s) under $dir — direct " +
-        "write()/writeStaged() landings cannot participate in mirror " +
-        "removal")
+        s"file(s) under $dir — writeStaged() landings cannot " +
+        "participate in mirror removal")
     // the removed side is read TWICE (affected dates here, the
     // anti-join build below) and it is a generation-diff plan over
     // source files — persist so each mirror step scans those files
@@ -556,8 +521,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     def admits(pk: String): Boolean = pk.isEmpty ||
       affectedDates(StoreManifest.dateKeyOf(pk).stripPrefix("date="))
     val t = truthFor(Some(admits))
-    val allEntries = t.map(_.entries)
-      .getOrElse(manifest.walkLegacyFor(admits))
+    val allEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
     val affected = allEntries.filter { e =>
       val l = logicalRel(e.rel)
       val i = l.indexOf('/')
@@ -614,7 +578,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * grace passes, like every mutation.
     */
   def replaceCommitted(batch: Option[DataFrame],
-      info: Option[String] = None): Unit = bumpOnExit {
+      info: Option[String] = None): Unit = mutation {
     fence()
     val t = truth()
     val gen = newGenName()
@@ -638,7 +602,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   /** Land `rows` in the immutable `_gen-*` tree `gen`: partition
     * columns derived from the row's own time, one file per touched
     * minute dir, trace_id bloom — the shared landing block of every
-    * manifest-committed write ([[writeCommitted]] / [[applyMirror]] /
+    * appending commit ([[write]] / [[applyMirror]] /
     * [[replaceCommitted]]); a change here (bloom knobs, partition
     * scheme) must reach all three or an unbounded trace lookup
     * silently loses its pruning on one path.
@@ -650,9 +614,15 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       .withColumn("hour", date_format(col("__ts"), "HH"))
       .withColumn("minute", date_format(col("__ts"), "mm"))
       .drop("__ts")
-      // explicit count for the same reason as [[write]]: a wide-
-      // event-time landing must parallelize across dirs, not serialize
-      // behind AQE's byte-sized coalescing
+      // co-locate each partition dir's rows in one task: without this
+      // every task writes every dir it touches, so a T-task flush
+      // spanning D minutes lands up to T×D files (measured: a
+      // 60-minute-spread flush from a 32-partition batch wrote ~1,900
+      // one-KB files). The partition count is EXPLICIT: a column-only
+      // repartition let AQE coalesce a small flush to ONE task that
+      // opened every touched dir's writer serially (measured on g13's
+      // 181-minute-spread flushes: 2-3.6 s single-task write stages,
+      // 31 of 32 cores idle). One-file-per-dir holds at any count.
       .repartition(spark.sparkContext.defaultParallelism,
         col("date"), col("hour"), col("minute"))
       .write
@@ -681,7 +651,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * layout. This is the LSM-shaped ingest split every real columnar
     * store uses: land fast now, organize in the background.
     */
-  def writeStaged(batch: DataFrame): Unit = bumpOnExit {
+  def writeStaged(batch: DataFrame): Unit = mutation {
     fence()
     batch.write.mode("append")
       .option("parquet.bloom.filter.enabled#trace_id", "true")
@@ -692,20 +662,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   // ---- truth resolution (what IS the table right now) ----
 
-  /** The planning state one read or mutation works from: the live main
-    * file list (manifest entries, plus a legacy walk's extras when
-    * dirty markers are present), the recorded schema when it is still
-    * exact, the tombstone set, and the dirty markers observed (so a
-    * compaction clears exactly those). None ⇔ no readable manifest
-    * generation — the store is in legacy listing mode (never
-    * compacted, or catastrophic manifest loss).
+  /** The planning state one read or mutation works from: the newest
+    * readable generation's live files, recorded schema and tombstones.
+    * None ⇔ no readable manifest generation — the store is in legacy
+    * listing mode (never written through [[write]] or compacted, or
+    * catastrophic manifest loss).
     */
-  private case class Truth(gen: String,
-      entries: Seq[StoreManifest.Entry],
-      schema: Option[StructType], deadRels: Set[String],
-      dirtyNames: Seq[String], dead: Seq[StoreManifest.Dead])
-
-  private def truth(): Option[Truth] = truthFor(None)
+  private def truth(): Option[StoreManifest.Snapshot] = manifest.read()
 
   /** [[truth]] restricted to the partitions `admit` passes (see
     * [[StoreManifest.readStateFor]]): only admitted partitions'
@@ -714,35 +677,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * not the table. The pruned entry list is a PLANNING view;
     * mutations that republish absolute state use the full form.
     */
-  private def truthFor(admit: Option[String => Boolean]): Option[Truth] = {
-    val (snapOpt, dirty) = admit match {
-      case Some(a) => manifest.readStateFor(a)
-      case None => manifest.readState()
-    }
-    snapOpt.map { snap =>
-    val deadRels = snap.deadRels
-    if (dirty.isEmpty)
-      Truth(snap.gen, snap.entries, snap.schema, deadRels, Nil, snap.dead)
-    else {
-      // dirty: direct write()s appended to the legacy tree since the
-      // last publish — union a walk in, minus files the manifest
-      // already lists (a legacy rel can be IN the manifest: a store
-      // that never gen-compacted publishes legacy rels) and minus
-      // tombstones (superseded files still on disk until vacuum).
-      // The walk itself honors the partition pruning — recursing the
-      // whole tree and filtering after would pay O(table) listings on
-      // every windowed read of a dirty store.
-      val known = snap.entries.map(_.rel).toSet
-      val extras = admit.fold(manifest.walkLegacy())(
-          manifest.walkLegacyFor)
-        .filterNot(e => known(e.rel) || deadRels(e.rel))
-      // the recorded schema can't cover columns the dirty appends
-      // introduced — drop to footer inference until the next compact
-      Truth(snap.gen, snap.entries ++ extras, None, deadRels, dirty,
-        snap.dead)
-    }
-    }
-  }
+  private def truthFor(
+      admit: Option[String => Boolean]): Option[StoreManifest.Snapshot] =
+    admit.fold(truth())(manifest.readStateFor)
 
   /** Partition-admit function for a µs time window: the session-zone
     * calendar dates the window can touch (the same derivation the
@@ -999,7 +936,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       zorderOn: Option[(org.apache.spark.sql.Column,
         org.apache.spark.sql.Column)] = None,
       blockSize: Option[Long] = None,
-      crashAfterStep: Int = Int.MaxValue): Unit = bumpOnExit {
+      crashAfterStep: Int = Int.MaxValue): Unit = mutation {
     fence()
     val part0 = s"date=$date"
     // the rolling heal only needs ITS date's entries (plus the
@@ -1052,12 +989,12 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     if (crashAfterStep <= 1) return
     // COMMIT: prior entries outside the date kept verbatim — no walk —
     // plus the rewrite's walk (bounded by the files just written).
-    // The prior merged schema stays exact only when it was exact
-    // before (not dirty): the rewrite read with that schema pinned, so
-    // its files carry the full unified column set. The lease is
-    // RE-verified here (the rewrite may have run for minutes; a writer
-    // fenced mid-rewrite must not land a stale truth) and the publish
-    // CASes on the planning snapshot's generation.
+    // The prior merged schema stays exact when it was recorded: the
+    // rewrite read with that schema pinned, so its files carry the
+    // full unified column set. The lease is RE-verified here (the
+    // rewrite may have run for minutes; a writer fenced mid-rewrite
+    // must not land a stale truth) and the publish CASes on the
+    // planning snapshot's generation.
     beforeCommit()
     fence()
     val now = System.currentTimeMillis()
@@ -1105,9 +1042,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * 1 = rewrite tree fully written but UNPUBLISHED — readers still
     * see the pre-compaction state exactly (main + staging), the orphan
     * tree is invisible (underscore-hidden, referenced by nothing) and
-    * is vacuum's to reclaim; 2 = manifest generation published — the
-    * drain is fully visible, only the observed dirty markers' cleanup
-    * is outstanding (harmless: a dirty walk finds no extras).
+    * is vacuum's to reclaim; 2 = manifest generation published (the
+    * commit is the last step, so this is a complete run).
     */
   /** @param zorderOn optional pair of 16-bit-domain dimension columns
     *   (values clamped to [0, 65535]) to Morton-order rows by WITHIN
@@ -1157,7 +1093,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       zorderOn: Option[(org.apache.spark.sql.Column,
         org.apache.spark.sql.Column)] = None,
       blockSize: Option[Long] = None,
-      granularity: String = "minute"): Unit = bumpOnExit {
+      granularity: String = "minute"): Unit = mutation {
     val partCols = ParquetStore.partColsFor(granularity)
     fence()
     if (!exists) return
@@ -1242,12 +1178,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
         s""""wrote":${rewritten.size},""" +
         s""""retired":${mainEntries.size + stagedF.size}}"""))
-    if (crashAfterStep <= 2) return
-    // the legacy extras this pass folded are now in the manifest —
-    // clear exactly the markers observed at the snapshot (a marker
-    // dropped by a later write must survive; single-writer makes that
-    // impossible here, but the discipline is free)
-    manifest.clearDirty(t.map(_.dirtyNames).getOrElse(Nil))
   }
 
   /** Reclaim what the manifest-commit protocol deferred: tombstoned
@@ -1293,7 +1223,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     *   must not become the rollback hazard's own delete button.
     */
   def vacuum(graceMs: Long,
-      reclaimUnknown: Seq[String] = Nil): (Int, Int, Int) = bumpOnExit {
+      reclaimUnknown: Seq[String] = Nil): (Int, Int, Int) = mutation {
     fence()
     if (reclaimUnknown.nonEmpty) {
       // the classification is RE-VERIFIED twice, on two independent
@@ -1512,12 +1442,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * too MANY minute dirs needs `compact(granularity = "hour")`, a
     * different, whole-tree decision). Dates already compacted to hour/
     * day grain are skipped for the same reason — compactDate requires
-    * the minute layout. Costs one manifest GET when the store is
-    * compaction-owned; a dirty store (direct-write ingest) pays a
-    * legacy-tree walk until the next compaction folds the appends.
-    * ZERO data reads either way. Leaf dirs are LOGICAL (gen-tree
-    * prefixes stripped), so a date whose files straddle a rewrite tree
-    * and fresh legacy flushes is counted — and healed — as one date.
+    * the minute layout. Costs one manifest GET (a tree walk only for
+    * an un-manifested legacy store) and ZERO data reads. Leaf dirs are
+    * LOGICAL (gen-tree prefixes stripped), so a date whose files
+    * straddle several flush and rewrite trees is counted — and healed
+    * — as one date.
     */
   def planCompactions(maxFilesPerDate: Int = 8,
       minAvgBytes: Long = 4L * 1024 * 1024): Seq[String] = {
@@ -1545,7 +1474,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * hour layout without waiting for a data rewrite of that date.
     * Returns the dates re-keyed; no-op (and no commit) otherwise.
     */
-  def resplitHotDates(): Seq[String] = bumpOnExit {
+  def resplitHotDates(): Seq[String] = mutation {
     if (!exists) return Nil
     fence()
     manifest.resplitHot()
@@ -1603,7 +1532,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * listing-mode stores always have. Returns
     * (datePartitionsDropped, stagedFilesDropped).
     */
-  def expire(cutoffUs: Long): (Int, Int) = bumpOnExit {
+  def expire(cutoffUs: Long): (Int, Int) = mutation {
     fence()
     if (!exists) return (0, 0)
     // the cutoff's calendar day in the SESSION timezone — the same
@@ -1786,7 +1715,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     *
     * Schema contract when `schema` is None: the result's column set is
     * the WINDOW-LOCAL merged schema — inferred over exactly the files
-    * the window selects — on every path (manifest, dirty, listing), so
+    * the window selects — on every path (manifest, listing), so
     * an identical query answers with an identical shape regardless of
     * background maintenance state. Callers that pin hashes pass
     * `schema` explicitly, which every path honors identically.
@@ -1969,6 +1898,21 @@ object ParquetStore {
     * of the flush/compaction size policy, not a universal constant.
     */
   val DefaultBloomNdv: Long = 1L << 16
+
+  /** The schema an append records atop its parent's: the parent's
+    * columns in order, then the batch's new ones (both all-nullable).
+    * None when the batch re-types a column or names one in a different
+    * case, conflicts a footer merge would not resolve the same way.
+    */
+  private[store] def appendSchema(parent: StructType,
+      batch: StructType): Option[StructType] = {
+    val byName = parent.fields.map(f => f.name.toLowerCase -> f).toMap
+    val clash = batch.fields.exists(f => byName.get(f.name.toLowerCase)
+      .exists(p => p.name != f.name || p.dataType != f.dataType))
+    if (clash) None
+    else Some(StructType(parent.fields ++
+      batch.fields.filterNot(f => byName.contains(f.name.toLowerCase))))
+  }
 
   /** Partition columns for a compaction target granularity. */
   private[store] def partColsFor(granularity: String): Seq[String] =

@@ -78,10 +78,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * previous retained one, and a torn manifest file poisons exactly
   * the generations that reference it.
   *
-  * Direct minute-grained [[ParquetStore.write]]s do not republish;
-  * they drop a `dirty-*` marker instead (readers union a legacy walk
-  * until the next compaction folds the extras). The LSM-shaped ingest
-  * ([[ParquetStore.writeStaged]]) never touches the manifest at all.
+  * Appends ([[ParquetStore.write]]) commit through the same rename
+  * as rewrites; the LSM-shaped ingest ([[ParquetStore.writeStaged]])
+  * never touches the manifest at all. A `dirty-*` marker left in
+  * `_manifest` by an older binary's direct appends names rows no
+  * generation lists, so every read and commit refuses the store until
+  * it is compacted ([[listState]]).
   *
   * The underscore prefix hides `_manifest` from Spark's partition
   * discovery, like `_staging`.
@@ -107,69 +109,12 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   private def mdir = new Path(tableDir, "_manifest")
 
-  /** Whether any generation file exists (one listing; cheaper than a
-    * full [[read]] when only presence matters, e.g. the write path's
-    * dirty-marker decision).
-    */
-  def anyGenExists: Boolean =
-    StoreFs.list(fs, mdir).exists(_.getPath.getName.startsWith("gen-"))
-
-  /** Record that the legacy tree has been appended to since the last
-    * publish: readers must union a legacy walk in until a compaction
-    * folds the extras. One marker is enough — skip the create when one
-    * is already present (same listing answers both questions).
-    */
-  def markDirty(): Unit = {
-    val names = StoreFs.list(fs, mdir).map(_.getPath.getName)
-    if (names.exists(_.startsWith("gen-")) &&
-        !names.exists(_.startsWith("dirty-"))) {
-      fs.createNewFile(new Path(mdir,
-        s"dirty-${System.currentTimeMillis()}-" +
-          java.util.UUID.randomUUID().toString)): Unit
-    }
-  }
-
-  /** The dirty-marker file names currently present. */
-  def dirtyMarkers(): Seq[String] =
-    StoreFs.list(fs, mdir).map(_.getPath.getName)
-      .filter(_.startsWith("dirty-"))
-
-  /** Remove exactly the given markers (a compaction clears the ones it
-    * OBSERVED before folding; markers dropped later must survive).
-    */
-  def clearDirty(names: Seq[String]): Unit =
-    names.foreach(n => fs.delete(new Path(mdir, n), false): Unit)
-
   /** Walk the legacy partitioned tree (skipping `_`/`.`-prefixed
-    * subtrees: staging, gen trees, markers, the manifest itself) into
-    * entries NOW, without publishing — the dirty-mode union source and
-    * the fallback for metadata consumers when no generation exists.
+    * subtrees: staging, gen trees, the manifest itself) into entries
+    * NOW, without publishing — what a first commit folds in, and the
+    * fallback for metadata consumers when no generation exists.
     */
   def walkLegacy(): Seq[Entry] = walkEntries(new Path(tableDir))
-
-  /** [[walkLegacy]] restricted to the partitions `admit` passes: the
-    * walk recurses only into top-level `date=…` dirs the window
-    * admits (plus non-partition dirs and root files, keyed `""`), so
-    * a windowed read or per-date maintenance tick on a DIRTY store
-    * pays listings ∝ admitted partitions, not the whole tree — the
-    * same discipline the manifest side's pruned assembly has.
-    */
-  def walkLegacyFor(admit: String => Boolean): Seq[Entry] = {
-    val root = new Path(tableDir)
-    if (!fs.exists(root)) return Seq.empty
-    StoreFs.list(fs, root).flatMap { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_") || name.startsWith(".")) Nil
-      else if (st.isDirectory) {
-        val pk = if (name.startsWith("date=")) name else ""
-        if (admit(pk)) walkEntries(st.getPath) else Nil
-      } else if (name.endsWith(".parquet") && admit("")) {
-        val full = st.getPath.toUri.getPath
-        val rel = full.stripPrefix(root.toUri.getPath).stripPrefix("/")
-        Seq(Entry(rel, st.getLen, st.getModificationTime))
-      } else Nil
-    }
-  }
 
   /** Walk one subtree (a just-written `_gen-*` dir) into entries whose
     * rels are relative to the TABLE dir (so they carry the gen
@@ -550,21 +495,28 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   // ---- chain folding (snapshot layer) ----
 
-  /** One `_manifest` listing split into the two populations every
-    * read and commit needs: generation files and dirty markers. The
-    * manifest files live under `mf/` and are never listed on this
-    * path — refs carry name + size, so the listing stays
-    * O(generations) whatever the partition count.
+  /** The generation files of one `_manifest` listing — the state
+    * every read and commit starts from. The manifest files live under
+    * `mf/` and are never listed on this path — refs carry name + size,
+    * so the listing stays O(generations) whatever the partition count.
+    *
+    * The same listing shows any `dirty-*` marker an older binary's
+    * direct appends left behind: those appends sit in the legacy tree
+    * where no generation lists them, so planning from the manifest
+    * would silently drop their rows. Such a store is refused loudly,
+    * reads and commits alike, until an older binary's compact() folds
+    * the appends.
     */
-  private def listState(): (Map[String, FileStatus], Seq[String]) = {
+  private def listState(): Map[String, FileStatus] = {
     val all = StoreFs.list(fs, mdir)
-    val gens = all.filter(_.getPath.getName.startsWith("gen-"))
+    all.map(_.getPath.getName).find(_.startsWith("dirty-")).foreach(m =>
+      throw new IllegalStateException(s"$tableDir: leftover marker " +
+        s"_manifest/$m from an older binary's direct appends — their " +
+        "rows are in no generation; run compact() with a build at or " +
+        "before commit 658cacd to fold them, then reopen the store"))
+    all.filter(_.getPath.getName.startsWith("gen-"))
       .map(s => s.getPath.getName -> s).toMap
-    val dirty = all.map(_.getPath.getName).filter(_.startsWith("dirty-"))
-    (gens, dirty)
   }
-
-  private def genStatuses(): Map[String, FileStatus] = listState()._1
 
   /** One generation's chain-folded state at the MANIFEST level: the
     * live manifest refs plus the chain-absolute schema/tombstones.
@@ -706,7 +658,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * (vacuum's and retention's keep-set).
     */
   private[graft] def neededFor(heads: Seq[String]): Set[String] = {
-    val statuses = genStatuses()
+    val statuses = listState()
     heads.flatMap(chainNames(_, statuses)).toSet
   }
 
@@ -740,7 +692,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       dead: Seq[Dead], parent: Option[String],
       info: Option[String] = None): Unit = {
     val normSchema = schema.map(StoreManifest.allNullable)
-    val (gens, _) = listState()
+    val gens = listState()
     val parentSnap = parent.flatMap(p => assembleFull(p, gens))
     parentSnap match {
       case Some(ps) =>
@@ -799,7 +751,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       schema: Option[org.apache.spark.sql.types.StructType],
       parent: String, info: Option[String] = None): Unit = {
     val normSchema = schema.map(StoreManifest.allNullable)
-    val (gens, _) = listState()
+    val gens = listState()
     val ps = fold(parent, gens).getOrElse(throw new
       IllegalStateException(s"$tableDir: publishPatch parent " +
         s"$parent no longer folds — re-plan and retry"))
@@ -1238,7 +1190,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   private[graft] def vacuumOrphanManifests(graceMs: Long,
       now: Long = System.currentTimeMillis()): Int = {
-    val (gens, _) = listState()
+    val gens = listState()
     val needed = mfsReferencedBy(gens.values)
     val orphans = StoreFs.list(fs, mfdir).map(_.getPath.getName)
       .filter { n =>
@@ -1257,7 +1209,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   def readGen(name: String): Option[Snapshot] =
     if (!name.startsWith("gen-")) None
-    else assembleFull(name, genStatuses())
+    else assembleFull(name, listState())
 
   /** One generation's OWN operation-audit string WITHOUT folding its
     * chain: the info line is per-commit raw metadata, so a memoized
@@ -1267,7 +1219,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   def genInfo(name: String): Option[String] =
     if (!name.startsWith("gen-")) None
-    else genStatuses().get(name).flatMap(parseRaw).flatMap(infoOf)
+    else listState().get(name).flatMap(parseRaw).flatMap(infoOf)
 
   /** Every retained generation's own audit string, resolved from ONE
     * `_manifest` listing — the `?info=true` route renders all retained
@@ -1275,7 +1227,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * pay O(gens) directory listings (noticeable on object stores).
     */
   def genInfos(): Map[String, Option[String]] =
-    genStatuses().map { case (n, st) => n -> parseRaw(st).flatMap(infoOf) }
+    listState().map { case (n, st) => n -> parseRaw(st).flatMap(infoOf) }
 
   private def infoOf(r: RawGen): Option[String] = r match {
     case f: FullGen => f.info
@@ -1291,22 +1243,18 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * PREVIOUS retained generation (a stale-but-consistent snapshot)
     * rather than to half a snapshot; a delta whose chain lost a link,
     * and a generation whose partition manifest is torn, are rejected
-    * the same all-or-nothing way.
+    * the same all-or-nothing way. Resolved from ONE `_manifest`
+    * listing — the planning state every full read and mutation starts
+    * from; folding and assembling the newest head costs no further
+    * filesystem calls once the immutable-file memos are warm.
     */
-  def read(): Option[Snapshot] = readState()._1
-
-  /** [[read]] plus the current dirty markers, resolved from ONE
-    * `_manifest` listing — the planning state every read and mutation
-    * starts from. Folding and assembling the newest head costs no
-    * further filesystem calls once the immutable-file memos are warm.
-    */
-  def readState(): (Option[Snapshot], Seq[String]) = {
-    val (gens, dirty) = listState()
-    val heads = gens.keys.toSeq.sorted(Ordering[String].reverse)
-    (heads.iterator.flatMap(assembleFull(_, gens)).nextOption(), dirty)
+  def read(): Option[Snapshot] = {
+    val gens = listState()
+    gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
+      .flatMap(assembleFull(_, gens)).nextOption()
   }
 
-  /** [[readState]] restricted to the partitions `admit` passes (by
+  /** [[read]] restricted to the partitions `admit` passes (by
     * partition key — `date=…`, a hot-split date's `date=…/hour=…`
     * sub-key, or the catch-all `""`, which admit must always pass;
     * an admit that groups at date level must accept every key whose
@@ -1316,15 +1264,13 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * admits, flat as the table grows. The pruned snapshot is a
     * PLANNING view: publishing it as absolute truth would drop every
     * non-admitted partition, so mutations that republish must use the
-    * full [[readState]] (or patch-shaped commits).
+    * full [[read]] (or patch-shaped commits).
     */
-  def readStateFor(admit: String => Boolean)
-      : (Option[Snapshot], Seq[String]) = {
-    val (gens, dirty) = listState()
-    val heads = gens.keys.toSeq.sorted(Ordering[String].reverse)
-    (heads.iterator
+  def readStateFor(admit: String => Boolean): Option[Snapshot] = {
+    val gens = listState()
+    gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
       .flatMap(h => fold(h, gens).flatMap(assemble(_, admit)))
-      .nextOption(), dirty)
+      .nextOption()
   }
 
   /** Generation files this binary cannot INTERPRET that are not mere
@@ -1359,7 +1305,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * not), so no such line is ever mistaken for a capability.
     */
   private[graft] def futureFormatGens(): Seq[StoreManifest.UnknownGen] = {
-    val (gens, _) = listState()
+    val gens = listState()
     gens.toSeq.sortBy(_._1).flatMap { case (n, st) =>
       try classifyHeader(n, st.getPath, st.getLen)
       catch {
@@ -1512,7 +1458,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * not an orphan).
     */
   def readAll(): Seq[Snapshot] = {
-    val (gens, _) = listState()
+    val gens = listState()
     gens.keys.toSeq.sorted(Ordering[String].reverse)
       .flatMap(assembleFull(_, gens))
   }
@@ -1532,7 +1478,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * shared by every fold-level consumer.
     */
   private def newestFold(): Option[GenState] = {
-    val (gens, _) = listState()
+    val gens = listState()
     gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
       .flatMap(h => fold(h, gens)).nextOption()
   }

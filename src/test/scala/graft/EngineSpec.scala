@@ -86,9 +86,12 @@ class EngineSpec extends SparkSpec {
     assert(got.filter(col("flag").isNull).count() == 1)
     assert(got.filter(col("flag") === 42L).count() == 1)
 
-    // partitioned layout (hive dirs derived from row time)
+    // partitioned layout (hive dirs derived from row time) in the
+    // flush's generation tree, listed by the manifest
     val spanDir = new java.io.File(s"$root/span")
-    assert(spanDir.listFiles().exists(_.getName.startsWith("date=")))
+    assert(spanDir.listFiles().filter(_.getName.startsWith("_gen-"))
+      .exists(_.listFiles().exists(_.getName.startsWith("date="))))
+    assert(new ParquetStore(spark, root, "span", "start").manifestPresent)
     // log schema persisted with the dynamic column
     val persisted = SchemaRegistry.load(s"$root/schema/log_schema.json").get
     assert(persisted.fieldNames.contains("flag"))
@@ -212,6 +215,36 @@ class EngineSpec extends SparkSpec {
     assert(new java.io.File(s"$calmRoot/wal/log").exists())
   }
 
+  test("early flushes racing maintain ticks on one engine: no commit " +
+      "conflict, every row visible exactly once") {
+    // every flush commits a generation and every maintain tick commits
+    // heals and vacuums (grace 0: an unpublished flush tree would be
+    // an orphan to it); the store serializes its mutations, so neither
+    // side loses a commit after flush has drained the hot view
+    val root = tmpRoot()
+    val engine = new DuoEngine(spark, root, maxHotRows = 3L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val maintainer = new Thread(() =>
+      try while (!done.get) engine.maintain(maxFilesPerDate = 1,
+        minAvgBytes = 0L, vacuumGraceMs = 0L): Unit
+      catch { case e: Throwable => failures.add(e): Unit })
+    maintainer.start()
+    val batches = 10
+    try (0 until batches).foreach { b =>
+      // 4 rows ≥ maxHotRows: every append forces an early flush, and
+      // each batch spans the same few minutes, fragmenting them
+      engine.appendLogBatch((0 until 4).map(i =>
+        ("svc-0", t0 + (i * 60L + b) * 1000000L, "INFO", s"m$b-$i"))
+        .toDF("process_id", "time", "level", "message"))
+    } finally { done.set(true); maintainer.join() }
+    assert(failures.isEmpty, failures.toString)
+    val msgs = engine.logTable().select("message").as[String].collect()
+    assert(msgs.length == batches * 4 && msgs.distinct.length == msgs.length)
+    assert(msgs.toSet == (for (b <- 0 until batches; i <- 0 until 4)
+      yield s"m$b-$i").toSet)
+  }
+
   test("open spans survive batches until closed") {
     val engine = new DuoEngine(spark, tmpRoot(), memoryMode = true)
     val noLogs = Seq.empty[(String, Long, String, String)]
@@ -262,7 +295,9 @@ class EngineSpec extends SparkSpec {
     engine.flush()
     // both rows are in cold parquet, in two different date partitions
     assert(new java.io.File(s"$root/log").listFiles()
-      .count(_.getName.startsWith("date=")) == 2)
+      .filter(_.getName.startsWith("_gen-"))
+      .flatMap(_.listFiles().map(_.getName))
+      .count(_.startsWith("date=")) == 2)
 
     // default (unset range): only the recent partition is read
     val hits = engine.searchLogs(LogSearchParams(service = "svc"))
@@ -385,6 +420,10 @@ class EngineSpec extends SparkSpec {
     val store = new ParquetStore(spark, root, "log", "time")
     assert(store.expire(t0 + day)._1 == 1)
     assert(engine.logTable().columns.contains("tmp_col"))
+    // the flushes' older generations still carry tmp_col (time travel
+    // reaches them) until vacuum's grace prunes them
+    assert(engine.gcLogSchema().isEmpty)
+    store.vacuum(graceMs = 0L): Unit
     // gc proves tmp_col dead from the store truth and drops ONLY it
     assert(engine.gcLogSchema() == Seq("tmp_col"))
     val tbl = engine.logTable()
@@ -418,8 +457,7 @@ class EngineSpec extends SparkSpec {
       """{"process_id":"svc-0","time":1760000000100000,"level":"WARN","message":"b","target":"x","value":1.5}""")) == 0L)
     engine.flush()
     def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
-      else if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
     val schemas = walk(new java.io.File(s"$root/log"))
       .map(f => spark.read.parquet(f.getPath).schema.fieldNames.toSet)
@@ -680,8 +718,8 @@ class EngineSpec extends SparkSpec {
     assert(store.read(None, None).get.select("id").as[Long]
       .collect().toSet == Set(1L, 2L))
     assert(store.stagedFileCount == 0)
-    // crash AFTER the commit (manifest published, dirty-marker cleanup
-    // outstanding): the drain is already fully visible
+    // crash AFTER the commit (manifest published): the drain is
+    // already fully visible
     store.writeStaged(row(3L))
     store.compact(crashAfterStep = 2)
     assert(store.read(None, None).get.select("id").as[Long]
@@ -787,8 +825,7 @@ class EngineSpec extends SparkSpec {
     def batch(ids: Seq[Long], dayOff: Long) = ids
       .map(i => (s"svc-$i", day1 + dayOff * day + i * 1000000L, "INFO"))
       .toDF("process_id", "time", "level")
-    st.write(batch(Seq(1L, 2L), 0L))
-    st.compact() // gen A: day-1 rows
+    st.write(batch(Seq(1L, 2L), 0L)) // gen A: day-1 rows
     st.write(batch(Seq(3L, 4L, 5L), 1L)) // day-2 append
     val zone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone"))
@@ -798,7 +835,7 @@ class EngineSpec extends SparkSpec {
     st.compactDate(day2Str) // gen B: scoped fold of the increment
     val engine = new DuoEngine(spark, root)
     val gens = engine.generations("log")
-    assert(gens.size == 2)
+    assert(gens.size == 3) // A, the append, the fold
     def pids(df: org.apache.spark.sql.DataFrame) =
       df.select("process_id").as[String].collect().toSet
     // each generation answers ITS committed table through the engine
@@ -833,9 +870,7 @@ class EngineSpec extends SparkSpec {
     def spanRow(tid: Long, dayOff: Long) = Seq(
       Span(tid * 10, None, tid, "op", "svc-0", day1 + dayOff * day,
         Some(day1 + dayOff * day + 1000L), None)).toDF()
-    sst.write(spanRow(9001L, 0L))
-    sst.write(spanRow(9002L, 1L))
-    sst.compact() // span gen A: both traces
+    sst.write(spanRow(9001L, 0L).union(spanRow(9002L, 1L))) // span gen A
     sst.expire(day1 + day): Unit // span gen B: the day-1 trace retired
     val sgens = engine.generations("span")
     assert(sgens.size == 2)
@@ -900,16 +935,16 @@ class EngineSpec extends SparkSpec {
     def spanRow(tid: Long) = Seq(Span(tid * 10, None, tid, "op",
       "svc-0", day1 + tid, Some(day1 + tid + 1000L), None)).toDF()
     val tBefore = System.currentTimeMillis() - 1L
-    sst.write(spanRow(9001L)); sst.compact()
+    sst.write(spanRow(9001L))
     lst.write(Seq(("svc-0", day1 + 1L, "INFO"))
-      .toDF("process_id", "time", "level")); lst.compact()
+      .toDF("process_id", "time", "level"))
     Thread.sleep(3L)
     val t1 = System.currentTimeMillis()
     Thread.sleep(3L)
     // later commits land on ONLY the span table — the normal skew
     // (spans flush while logs idle) that makes independent per-table
     // pins inconsistent
-    sst.write(spanRow(9002L)); sst.compact()
+    sst.write(spanRow(9002L))
     val engine = new DuoEngine(spark, root)
     assert(engine.generations("span").size == 2 &&
       engine.generations("log").size == 1)

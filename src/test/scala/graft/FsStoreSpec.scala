@@ -154,20 +154,21 @@ class FsStoreSpec extends SparkSpec {
     store.writeStaged(batch(Seq(4L)))
     assert(store.manifestPresent, "staged land must not touch the manifest")
     assert(idsVia(store) == Set(1L, 2L, 3L, 4L))
-    // a direct partitioned write marks the manifest DIRTY instead of
-    // dropping it: reads union a legacy-tree walk in and stay correct,
-    // and the manifest keeps serving the gen-tree files
+    // a partitioned write commits its own generation: the manifest
+    // lists the new tree and keeps its recorded schema
     store.write(batch(Seq(5L)))
-    assert(store.manifestPresent,
-      "direct write must keep the manifest (dirty), not drop it")
+    assert(store.manifestPresent && store.manifestSchema.isDefined,
+      "write must commit through the manifest, schema kept")
+    assert(store.manifestFiles.get.count(r =>
+      logical(r).contains("minute=")) == 4)
     assert(idsVia(store) == Set(1L, 2L, 3L, 4L, 5L))
     assert(store.readPrefixes(t0, t0 + 6L * 60L * 1000000L)
       .get.select("id").as[Long].collect().toSet == Set(1L, 2L, 3L, 4L, 5L),
-      "prefix reads must see dirty legacy appends and staged rows")
+      "prefix reads must see committed appends and staged rows")
     // (the t0..4min window end-bumps into id 4's minute — staged rows
     // are minute-granular like the directory contract)
     assert(prefixIds() == Set(1L, 2L, 3L, 4L))
-    // the next drain folds the staged AND dirty appends and reindexes
+    // the next drain folds the staged rows and the appended tree
     store.compact()
     assert(store.manifestPresent)
     assert(idsVia(store) == Set(1L, 2L, 3L, 4L, 5L))
@@ -315,7 +316,7 @@ class FsStoreSpec extends SparkSpec {
     // date/hour parents are NEVER listed, and the scan itself opens
     // files by manifest size/offset
     assert(planLists <= 2, s"manifest-planned read listed $planLists×")
-    // a never-compacted store (direct writes only) plans by listing:
+    // a store in duo's native layout (no manifest) plans by listing:
     // one list per parent dir + Spark's file index lists each prefix
     // dir it is handed — the O(dirs) cost the manifest removes.
     // parallelPartitionDiscovery would push those listings to
@@ -327,7 +328,7 @@ class FsStoreSpec extends SparkSpec {
       val root2 = "lcount://" +
         java.nio.file.Files.createTempDirectory("lcountlegacy")
       val legacy = new ParquetStore(spark, root2, "span", "start")
-      legacy.write(rows)
+      ScaleProbe.writeNativeLayout(rows, s"$root2/span", "start")
       assert(!legacy.manifestPresent)
       assert(readAll(legacy) == 40L)
       CountingListFileSystem.lists.set(0)
@@ -1188,27 +1189,28 @@ class FsStoreSpec extends SparkSpec {
       .filter(_.getPath.getName.startsWith("gen-"))
       .map(_.getPath.getName.split('.').last).toSeq.sorted
     assert(exts() == Seq("list"))
-    // a date-scoped heal and a retention drop are both DELTAS
-    store.write(batch(Seq(34L), 1L)) // dirty append into day 2
+    // an append, a date-scoped heal and a retention drop are all DELTAS
+    store.write(batch(Seq(34L), 1L)) // append into day 2
     val zone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone"))
     val day2 = java.time.LocalDate.ofInstant(java.time.Instant
       .ofEpochSecond((t0 + day) / 1000000L), zone).toString
     store.compactDate(day2)
     store.expire(t0 + day) // drops day 1
-    assert(exts() == Seq("delta", "delta", "list"), exts().toString)
+    assert(exts() == Seq("delta", "delta", "delta", "list"),
+      exts().toString)
     val liveIds = Set(31L, 32L, 33L, 34L) ++ (61L to 80L)
     assert(store.read(None, None).get.select("id").as[Long]
       .collect().toSet == liveIds)
     // time travel across the chain: the checkpoint still answers the
-    // pre-expiry table, the mid delta the pre-expiry+heal one
+    // pre-append table, the heal's delta the pre-expiry+heal one
     val gens = store.generations()
     assert(store.readGeneration(gens.head).get.count() == 25)
-    assert(store.readGeneration(gens(1)).get.select("id").as[Long]
+    assert(store.readGeneration(gens(2)).get.select("id").as[Long]
       .collect().toSet == (liveIds ++ Set(1L, 2L)))
     // vacuum within grace: chain intact, everything still readable
     store.vacuum(graceMs = 7L * 86400L * 1000L): Unit
-    assert(store.generations().size == 3)
+    assert(store.generations().size == 4)
     assert(store.read(None, None).get.count() == liveIds.size)
     // vacuum past grace: generation files the newest head's CHAIN
     // folds through (its checkpoint root included) survive even when
@@ -1297,18 +1299,18 @@ class FsStoreSpec extends SparkSpec {
     def dayStr(off: Long): String = java.time.LocalDate.ofInstant(
       java.time.Instant.ofEpochSecond((t0 + off * day) / 1000000L),
       zone).toString
-    // bulky base: the date-scoped heals below must land as DELTAS
+    // bulky base: the appends below must land as DELTAS
     // (proportions drive the commit-form heuristic), which also keeps
     // gen A alive in the retained heads' chains
     store.writeStaged(batch((1L to 10L).toSeq, 0L))
     store.compact()
     val genA = store.generations().last
-    // three commits behind: one date-scoped heal per day, each a
-    // distinct auditable operation
+    // three commits behind: one append per day, each a distinct
+    // auditable operation
     Seq((Seq(24L, 25L), 1L), (Seq(26L, 27L), 2L), (Seq(28L, 29L), 3L))
       .foreach { case (ids, off) =>
-        store.write(batch(ids, off))
-        store.compactDate(dayStr(off))
+        store.write(batch(ids, off),
+          Some(s"""{"op":"append","date":"${dayStr(off)}"}"""))
       }
     assert(store.generations().size == 4,
       s"gens: ${store.generations()}")
@@ -1333,7 +1335,7 @@ class FsStoreSpec extends SparkSpec {
     assert(steps.flatMap(i => oids(i.added)).toSet == jumpIds,
       "the stepped union must equal the single-jump increment")
     steps.zip(Seq(1L, 2L, 3L)).foreach { case (inc, off) =>
-      assert(inc.info.exists(s => s.contains(""""op":"compactDate"""") &&
+      assert(inc.info.exists(s => s.contains(""""op":"append"""") &&
         s.contains(dayStr(off))),
         s"step to ${inc.toGen} must name its operation, got ${inc.info}")
     }
@@ -1369,7 +1371,7 @@ class FsStoreSpec extends SparkSpec {
     src.writeStaged(batch(Seq(4L, 5L), 1L))
     src.compact()
     val inc = feed.poll().get
-    sink.writeCommitted(inc.added.get,
+    sink.write(inc.added.get,
       Some(s"""{"op":"cdcConsume","consumer":"mover",""" +
         s""""toGen":"${inc.toGen}"}"""))
     assert(feed.consumeInto(sink).isEmpty,
@@ -1387,7 +1389,7 @@ class FsStoreSpec extends SparkSpec {
     // uniform committed appends keep the sink's recorded schema exact
     // — a pure-CDC sink plans from the manifest, no footer inference
     assert(sink.manifestSchema.isDefined,
-      "uniform writeCommitted appends must preserve the schema")
+      "uniform committed appends must preserve the schema")
     // transform applies on the landing path
     src.writeStaged(batch(Seq(7L), 3L))
     src.compact()
@@ -1470,7 +1472,7 @@ class FsStoreSpec extends SparkSpec {
       // and a window over one partition equals the model's slice —
       // date-level admits must accept the date's hour sub-keys
       val d = dates(i % dates.size)
-      val (win, _) = m.readStateFor(pk =>
+      val win = m.readStateFor(pk =>
         pk.isEmpty || StoreManifest.dateKeyOf(pk) == d)
       assert(win.get.entries ==
         model.values.toSeq.filter(_.rel.startsWith(d + "/"))
@@ -1524,7 +1526,7 @@ class FsStoreSpec extends SparkSpec {
     // assemble — the metadata win the split exists for
     val hourAdmit: String => Boolean = pk => pk.isEmpty ||
       pk == "date=2024-01-15" || pk == "date=2024-01-15/hour=01"
-    val (win, _) = m.readStateFor(hourAdmit)
+    val win = m.readStateFor(hourAdmit)
     assert(win.get.entries.map(_.rel) ==
       (hot.slice(4, 8).map(_.rel) ++ loose.map(_.rel)).sorted)
     // a pure append to the split date lands hour-keyed (prunable too)
@@ -1533,7 +1535,7 @@ class FsStoreSpec extends SparkSpec {
       deadMinus = Nil, schema = None, parent = m.read().get.gen)
     assert(m.mfRefs().map(_._2)
       .count(_ == "date=2024-01-15/hour=01") == 2)
-    val (win2, _) = m.readStateFor(hourAdmit)
+    val win2 = m.readStateFor(hourAdmit)
     assert(win2.get.entries.map(_.rel) ==
       (hot.slice(4, 8).map(_.rel) ++ Seq(add1.rel) ++
         loose.map(_.rel)).sorted)
@@ -1992,7 +1994,7 @@ class FsStoreSpec extends SparkSpec {
     // torn partition still answers — pruning is also availability
     val m2 = new StoreManifest(fsys, local.toString)
     assert(m2.read().isEmpty, "full read must reject the torn head")
-    val (pruned, _) = m2.readStateFor(pk =>
+    val pruned = m2.readStateFor(pk =>
       pk.isEmpty || pk == "date=2024-01-15")
     assert(pruned.exists(_.entries.map(_.rel) ==
       Seq("date=2024-01-15/a.parquet")),
@@ -2022,8 +2024,7 @@ class FsStoreSpec extends SparkSpec {
       zone).toString
     store.writeStaged(batch((1L to 10L).toSeq, 0L))
     store.compact() // gen A
-    store.write(batch(Seq(24L, 25L), 1L))
-    store.compactDate(dayStr(1L)) // gen B: the delta to tear
+    store.write(batch(Seq(24L, 25L), 1L)) // gen B: the delta to tear
     store.writeStaged(batch(Seq(26L, 27L), 2L))
     store.compact() // gen C: a CHECKPOINT (folds without B)
     val gens = store.generations()
@@ -2105,12 +2106,13 @@ class FsStoreSpec extends SparkSpec {
     def genIds(st: ParquetStore, g: String): Set[Long] =
       st.readGeneration(g).map(_.select("id").as[Long].collect().toSet)
         .getOrElse(Set.empty)
-    // lineage: A = {1,2,3} (day 1); B = A + {4,5} (day-2 compactDate);
-    // C = expire day 1 → {4,5} (the mid-history REMOVAL the
-    // append-only consumer retains and a mirror must net out)
+    // lineage: A = {1,2,3} (day 1); W = A + {4,5} (day-2 append);
+    // B = its compactDate fold; C = expire day 1 → {4,5} (the
+    // mid-history REMOVAL the append-only consumer retains and a
+    // mirror must net out). Step 1 spans W and B.
     src.writeStaged(batch(Seq(1L, 2L, 3L), 0L))
     src.compact() // gen A
-    src.write(batch(Seq(4L, 5L), 1L))
+    src.write(batch(Seq(4L, 5L), 1L)) // gen W
     val zone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone"))
     val day2 = java.time.LocalDate.ofInstant(java.time.Instant
@@ -2118,7 +2120,7 @@ class FsStoreSpec extends SparkSpec {
     src.compactDate(day2) // gen B
     src.expire(t0 + day): Unit // gen C: day-1 rows removed
     val gens = src.generations()
-    assert(gens.size >= 3)
+    assert(gens.size == 4)
     val feed = src.cdcFeed("mirror", keyCols = Seq("id"))
     // rebootstrap procedure: sink reloaded at the rewind point
     // transactionally, cursor committed there
@@ -2130,15 +2132,15 @@ class FsStoreSpec extends SparkSpec {
     // written but unpublished — nothing visible, cursor unmoved
     sink.beforeCommit = () => sys.error("crash-at-commit")
     intercept[RuntimeException] {
-      feed.consumeInto(sink, maxGenerations = 1, mirror = true)
+      feed.consumeInto(sink, maxGenerations = 2, mirror = true)
     }
     sink.beforeCommit = () => ()
     assert(ids(sink) == Set(1L, 2L, 3L), "the crashed step landed nothing")
     // replay lands step 1; sink == source@B
-    assert(feed.consumeInto(sink, maxGenerations = 1, mirror = true)
-      .contains(gens(1)))
+    assert(feed.consumeInto(sink, maxGenerations = 2, mirror = true)
+      .contains(gens(2)))
     assert(ids(sink) == Set(1L, 2L, 3L, 4L, 5L))
-    assert(ids(sink) == genIds(src, gens(1)))
+    assert(ids(sink) == genIds(src, gens(2)))
     // CRASH between step 2's sink commit and cursor advance: land the
     // polled increment with the consumer's exact audit line, do NOT
     // commit — the next run must heal forward without re-applying
@@ -2152,7 +2154,7 @@ class FsStoreSpec extends SparkSpec {
       "healed forward: the landed step must not re-apply")
     assert(sink.generations().size == sinkGens, "heal lands nothing")
     assert(ids(sink) == Set(4L, 5L))
-    assert(ids(sink) == genIds(src, gens(2)))
+    assert(ids(sink) == genIds(src, gens(3)))
     feed.reset()
     // SINGLE-JUMP transactionality: a second mirror bootstrapped at A
     // consumes A→C in ONE sink commit that applies adds {4,5} AND
@@ -2188,7 +2190,7 @@ class FsStoreSpec extends SparkSpec {
         .toDF("id", "start", "trace_id")
     // staged file → refused
     val s1 = new ParquetStore(spark, root, "m1", "start")
-    s1.writeCommitted(batch(Seq(1L, 2L)))
+    s1.write(batch(Seq(1L, 2L)))
     s1.writeStaged(batch(Seq(3L)))
     val gensBefore = s1.generations()
     val ex1 = intercept[IllegalArgumentException] {
@@ -2196,14 +2198,74 @@ class FsStoreSpec extends SparkSpec {
     }
     assert(ex1.getMessage.contains("commit-owned"))
     assert(s1.generations() == gensBefore, "refusal mutated nothing")
-    // dirty marker (direct write) → refused
+    // a dirty marker an older binary's direct write left → refused
     val s2 = new ParquetStore(spark, root, "m2", "start")
-    s2.writeCommitted(batch(Seq(1L, 2L)))
-    s2.write(batch(Seq(3L))) // direct write drops a dirty marker
-    val ex2 = intercept[IllegalArgumentException] {
+    s2.write(batch(Seq(1L, 2L)))
+    val marker = plantDirtyMarker(s"$root/m2")
+    val ex2 = intercept[IllegalStateException] {
       s2.applyMirror(None, Some(batch(Seq(1L))), Seq("id"))
     }
-    assert(ex2.getMessage.contains("commit-owned"))
+    assert(ex2.getMessage.contains(marker))
+  }
+
+  /** A `dirty-*` marker as an older binary's direct write left it. */
+  private def plantDirtyMarker(tableDir: String): String = {
+    val name = s"dirty-${System.currentTimeMillis()}-leftover"
+    val p = new org.apache.hadoop.fs.Path(s"$tableDir/_manifest/$name")
+    graft.store.StoreFs.fs(p).createNewFile(p): Unit
+    name
+  }
+
+  test("a leftover dirty marker makes reads and mutations throw, " +
+      "naming the marker, instead of dropping the rows it stands for") {
+    val root = newRoot()
+    val store = new ParquetStore(spark, root, "span", "start")
+    store.write(Seq((1L, t0, 10L)).toDF("id", "start", "trace_id"))
+    val marker = plantDirtyMarker(s"$root/span")
+    val fresh = new ParquetStore(spark, root, "span", "start")
+    for (op <- Seq[() => Any](
+        () => fresh.read(None, None),
+        () => fresh.read(Some(t0), Some(t0 + 1000L)),
+        () => store.write(Seq((2L, t0, 20L)).toDF("id", "start", "trace_id")),
+        () => store.compact())) {
+      val ex = intercept[IllegalStateException](op())
+      assert(ex.getMessage.contains(marker) &&
+        ex.getMessage.contains("compact()"), ex.getMessage)
+    }
+  }
+
+  test("drifted writes record the superset schema, and a read null-pads " +
+      "exactly as a footer-inferred read does") {
+    val root = newRoot()
+    val store = new ParquetStore(spark, root, "log", "time")
+    store.write(Seq((1L, t0, "a")).toDF("id", "time", "msg"))
+    store.write(Seq((2L, t0 + 60L * 1000000L, "b", 7L))
+      .toDF("id", "time", "msg", "extra"))
+    assert(store.manifestSchema.map(_.fieldNames.toSeq)
+      .contains(Seq("id", "time", "msg", "extra")))
+    val cols = Seq("id", "time", "msg", "extra").map(col)
+    val fromManifest = store.read(None, None).get.select(cols: _*)
+    val footers = spark.read.option("mergeSchema", "true")
+      .parquet(store.manifestFiles.get.map(r => s"$root/log/$r"): _*)
+      .select(cols: _*)
+    assert(fromManifest.collect().toSet == footers.collect().toSet)
+    assert(fromManifest.filter(col("extra").isNull).count() == 1L)
+    // a re-typed column is a conflict the record cannot settle
+    store.write(Seq((3L, t0, "c", "x")).toDF("id", "time", "msg", "extra"))
+    assert(store.manifestSchema.isEmpty)
+  }
+
+  test("applyMirror removes a key that arrived through write") {
+    val root = newRoot()
+    def batch(ids: Seq[Long]) =
+      ids.map(i => (i, t0 + i * 60L * 1000000L, i * 10L))
+        .toDF("id", "start", "trace_id")
+    val st = new ParquetStore(spark, root, "m", "start")
+    st.write(batch(Seq(1L, 2L)))
+    st.write(batch(Seq(3L)))
+    st.applyMirror(Some(batch(Seq(4L))), Some(batch(Seq(2L, 3L))), Seq("id"))
+    assert(st.read(None, None).get.select("id").as[Long].collect()
+      .toSet == Set(1L, 4L))
   }
 
   test("generationAsOf same-millisecond tie resolves by fold lineage, " +
@@ -2343,10 +2405,10 @@ class FsStoreSpec extends SparkSpec {
       assert(df.filter(col("env").isNull).count() == 2L,
         "pre-drift rows read the new column as null")
     }
-    // the drifted landing drops the RECORDED schema (conservative:
-    // footer inference until the next compact — the writeCommitted
-    // contract), it never drops the data
-    assert(sinkA.manifestSchema.isEmpty)
+    // the drifted append records the widened schema: the sink's
+    // columns, then the new one — what its files' footers merge to
+    assert(sinkA.manifestSchema.map(_.fieldNames.toSeq)
+      .contains(Seq("id", "start", "trace_id", "env")))
     feedA.reset(); feedM.reset()
   }
 

@@ -274,7 +274,7 @@ class HttpApiSpec extends SparkSpec {
       .toDF("process_id", "time", "level", "message"))
     engine.flush()
     val st = new graft.store.ParquetStore(spark, root, "log", "time")
-    st.compact() // gen A: both days committed
+    st.compact() // a re-layout commit over the flush's: both days
     Thread.sleep(5L) // distinct commit millis: the asofTs coordinate
                      // below must separate the two generations
     st.expire(t0 + day): Unit // gen B: day 1 retired
@@ -292,7 +292,7 @@ class HttpApiSpec extends SparkSpec {
       assert(scI == 200 && infoBody.contains("\"op\":\"compact\"") &&
         infoBody.contains("\"op\":\"expire\""), infoBody)
       val gens = engine.generations("log")
-      assert(gens.size == 2)
+      assert(gens.size == 3) // the flush, the compact, the expiry
       val win = s"start=${t0 - 1000000L}&end=${t0 + day + 1000000L}"
       // plain route: the current (post-expiry) truth
       val (_, cur) = get(port, s"/api/logs?service=svc&$win")
@@ -328,23 +328,24 @@ class HttpApiSpec extends SparkSpec {
         s"/api/traces?service=svc&spanAsof=${gens.head}")._1 == 400)
       assert(get(port, s"/api/traces?service=svc&spanAsof=${gens.head}" +
         s"&logAsof=${gens.head}&asofTs=$preExpiryTs")._1 == 400)
-      // CDC: expiry between the generations is a REMOVED diff — the
-      // retired day-1 row pages out; the insert side has no diff
+      // CDC: expiry between the compact and the expiry generations is
+      // a REMOVED diff — the retired day-1 row pages out; the insert
+      // side has no diff
       val (scR, removed) = get(port, s"/api/changes?table=log&" +
-        s"from=${gens.head}&to=${gens.last}&removed=true")
+        s"from=${gens(1)}&to=${gens.last}&removed=true")
       assert(scR == 200 && removed.contains("old-day") &&
         !removed.contains("new-day"), removed)
-      assert(get(port, s"/api/changes?table=log&from=${gens.head}" +
+      assert(get(port, s"/api/changes?table=log&from=${gens(1)}" +
         s"&to=${gens.last}")._1 == 404)
       assert(get(port, "/api/changes?table=log&from=x")._1 == 400)
       // a negative limit is ignored like an unparseable one
       val (scL, lim) = get(port, s"/api/changes?table=log&" +
-        s"from=${gens.head}&to=${gens.last}&removed=true&limit=-1")
+        s"from=${gens(1)}&to=${gens.last}&removed=true&limit=-1")
       assert(scL == 200 && lim.contains("old-day"), lim)
       // keyed mode rides the same route: the retired row is a TRUE
       // delete under the message key, so it still pages out
       val (scK, keyed) = get(port, s"/api/changes?table=log&" +
-        s"from=${gens.head}&to=${gens.last}&removed=true&keys=message")
+        s"from=${gens(1)}&to=${gens.last}&removed=true&keys=message")
       assert(scK == 200 && keyed.contains("old-day") &&
         !keyed.contains("new-day"), keyed)
     } finally api.stop()

@@ -398,4 +398,44 @@ class PlanShapeSpec extends SparkSpec {
     assert(keyScan.exists(_.contains("doc_id")),
       s"no key-only pruned scan in:\n$plan")
   }
+
+  test("a cold log read after a flush plans from the manifest: one " +
+      "generation, a recorded schema, one Spark job") {
+    // the flush commits the store's first generation with the batch
+    // schema, so a never-read window plans with no discovery listing
+    // and no footer-merge job: the search's own job is the only one
+    val root = java.nio.file.Files.createTempDirectory("coldplan").toString
+    val t0 = 1760000000000000L
+    val engine = new DuoEngine(spark, root)
+    engine.appendLogBatch((0 until 40).map(i =>
+      ("svc-0", t0 + i * 30000000L, "INFO", s"m$i", s"r${i % 3}"))
+      .toDF("process_id", "time", "level", "message", "region"))
+    engine.flush()
+    val store = new graft.store.ParquetStore(spark, root, "log", "time")
+    assert(store.generations().size == 1)
+    assert(store.manifestSchema.exists(_.fieldNames.contains("region")))
+    val group = "cold-log-plan"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      graft.util.StreamGate.quiesce(spark)
+      sc.setJobGroup(group, "cold log read")
+      val rows = try engine.searchLogs(
+          graft.query.LogQueries.LogSearchParams("svc-0",
+            startUs = Some(t0 + 300000000L),
+            endUs = Some(t0 + 600000000L))).collect()
+        finally sc.clearJobGroup()
+      graft.util.StreamGate.quiesce(spark)
+      assert(rows.length == 11)
+      assert(jobs.get == 1, s"${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
 }
