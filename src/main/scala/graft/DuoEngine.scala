@@ -196,9 +196,8 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * memory mode. Synchronized against the append paths (the monitor
     * is reentrant, so [[maybeEarlyFlush]]'s nested call is fine): a
     * WAL clear must never land between another thread's walAppend and
-    * view append. A [[maintain]] tick on another thread does not take
-    * this monitor; its commits and the flush's serialize on the
-    * store's own lock.
+    * view append. A [[maintain]] tick's rewrites never hold up a
+    * flush: a heal in flight commits over it.
     */
   def flush(): Unit = this.synchronized { if (!memoryMode) {
     val spans = spanMemory.drain()
@@ -218,12 +217,12 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * manifest-committed per-date rewrite; concurrent readers planned
     * before a heal stay green (snapshot isolation — superseded files
     * live until the vacuum grace passes).
-    * The flush appends a file per touched minute, so a long-running
+    * Each flush lands a file per touched minute, so a long-running
     * ingest inevitably fragments; a maintenance cadence calling this
-    * keeps read plans bounded without ever blocking the ingest path,
-    * and the planner's leaf-dir guard makes repeated calls converge
-    * (a healed date is never re-flagged). Returns table → dates
-    * healed. No-op in memory mode.
+    * keeps read plans bounded without holding up a flush (see
+    * [[flush]]), and the planner's leaf-dir guard makes repeated calls
+    * converge (a healed date is never re-flagged). Returns table →
+    * dates healed. No-op in memory mode.
     */
   /** @param vacuumGraceMs snapshot-isolation grace for the vacuum leg:
     *   files tombstoned longer ago than this are reclaimed. The
@@ -233,7 +232,8 @@ final class DuoEngine(val spark: SparkSession, root: String,
   def maintain(maxFilesPerDate: Int = 8,
       minAvgBytes: Long = 4L * 1024 * 1024,
       maxHeals: Int = 2,
-      vacuumGraceMs: Long = 30L * 60L * 1000L): Map[String, Seq[String]] =
+      vacuumGraceMs: Long = graft.store.StoreManifest.RetainMs)
+      : Map[String, Seq[String]] =
     if (memoryMode) Map.empty
     else try Seq("span" -> spanStore, "log" -> logStore).map { case (n, st) =>
       val dates = st.planCompactions(maxFilesPerDate, minAvgBytes)
@@ -472,13 +472,14 @@ final class DuoEngine(val spark: SparkSession, root: String,
 
   /** The COMMITTED log table as of one retained generation — the
     * operational question the storage engine's retained history
-    * answers in one call: "what did this table hold before
-    * yesterday's retention/compaction?". Deliberately excludes the
+    * answers in one call: "what did this table hold before the last
+    * retention/compaction?". Deliberately excludes the
     * hot memory view and staged flushes: version history covers
     * commits, and the un-drained ingest tail has no generation
     * coordinate. Conformed to the live registry schema like every
-    * engine log view. None when the generation is pruned/vacuumed —
-    * history reaches exactly as far as the store's vacuum grace.
+    * engine log view. None when the generation is pruned: history
+    * keeps the newest three and all younger than
+    * [[graft.store.StoreManifest.RetainMs]] (the default vacuum grace).
     */
   def logTableAsOf(gen: String): Option[DataFrame] =
     if (memoryMode) None
@@ -554,8 +555,8 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * (anti-join against the other generation's key set — see
     * [[graft.store.ParquetStore]]). Log-table frames are conformed to
     * the live registry like every other engine log view. None when a
-    * generation is pruned (history reaches exactly as far as the
-    * vacuum grace) or in memory mode.
+    * generation is pruned (history: see [[logTableAsOf]]) or in
+    * memory mode.
     */
   def changesBetween(table: String, from: String, to: String,
       keyCols: Seq[String] = Nil): Option[DataFrame] =

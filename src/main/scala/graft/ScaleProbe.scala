@@ -896,6 +896,16 @@ object ScaleProbe {
     }
   }
 
+  /** `rows` in duo's native un-manifested layout: minute dirs straight
+    * under `tableDir` and no manifest — a store in this state plans by
+    * listing until its first write or compaction commits a generation.
+    */
+  private[graft] def writeNativeLayout(rows: org.apache.spark.sql.DataFrame,
+      tableDir: String, timeCol: String): Unit =
+    graft.store.ParquetStore.withPartCols(rows, timeCol)
+      .write.mode("append").partitionBy("date", "hour", "minute")
+      .parquet(tableDir)
+
   /** The g12 LIST-elimination measurement at one tier: a compacted
     * (manifest-planned) store vs a never-compacted (legacy listing)
     * store over the SAME content — since round 16 the manifest is the
@@ -904,22 +914,6 @@ object ScaleProbe {
     * duo's native un-manifested layout: plain minute dirs that no
     * store mutation has touched.
     */
-  /** `rows` in duo's native un-manifested layout: minute dirs straight
-    * under `tableDir` and no manifest — a store in this state plans by
-    * listing until its first write or compaction commits a generation.
-    */
-  private[graft] def writeNativeLayout(rows: org.apache.spark.sql.DataFrame,
-      tableDir: String, timeCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, date_format,
-      timestamp_micros}
-    val ts = timestamp_micros(col(timeCol))
-    rows.withColumn("date", date_format(ts, "yyyy-MM-dd"))
-      .withColumn("hour", date_format(ts, "HH"))
-      .withColumn("minute", date_format(ts, "mm"))
-      .write.mode("append").partitionBy("date", "hour", "minute")
-      .parquet(tableDir)
-  }
-
   private def g12Probe(scale: String,
       ev: org.apache.spark.sql.DataFrame): Unit = {
     val spark = ev.sparkSession

@@ -21,6 +21,8 @@ import org.apache.spark.sql.types.StructType
   * same `inferPartitioning` the directory scan uses, so partition
   * pruning, types, and the resulting schema are identical to a
   * directory read — only the I/O to discover the files is gone.
+  * Files are keyed by their LOGICAL leaf dir (no `_gen-*` segment),
+  * so many trees' files parse against one `basePath` as one relation.
   * (Iceberg/Delta read planning at this store's scale; the reference
   * lists per prefix at query time, duo/src/partition/query.rs.)
   *
@@ -40,17 +42,18 @@ import org.apache.spark.sql.types.StructType
 final class ManifestFileIndex(
     spark: SparkSession,
     tableDir: Path,
-    statuses: Seq[FileStatus])
+    files: Seq[(Path, FileStatus)])
   extends PartitioningAwareFileIndex(
     spark, Map("basePath" -> tableDir.toString), None) {
 
   override def rootPaths: Seq[Path] = Seq(tableDir)
 
   override val leafFiles: LinkedHashMap[Path, FileStatus] =
-    LinkedHashMap(statuses.map(s => s.getPath -> s): _*)
+    LinkedHashMap(files.map { case (_, s) => s.getPath -> s }: _*)
 
+  /** Logical leaf dir → the files filed under it. */
   override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
-    statuses.groupBy(_.getPath.getParent).view.mapValues(_.toArray).toMap
+    files.groupMap(_._1)(_._2).view.mapValues(_.toArray).toMap
 
   private lazy val spec: PartitionSpec = inferPartitioning()
   override def partitionSpec(): PartitionSpec = spec
@@ -70,16 +73,22 @@ object ManifestFileIndex {
     * `dataSchema` skips footer inference when the caller already knows
     * the (merged) schema; otherwise schemas are merged from the
     * entries' footers — reads of the files themselves, still zero
-    * listings. Returns None for an empty selection (mirrors the
+    * listings. `logicalRel` maps a rel to the path its partition
+    * values parse from; all entries must share one partition depth.
+    * Returns None for an empty selection (mirrors the
     * "no files" read contract).
     */
   def relation(spark: SparkSession, tableDir: String,
       entries: Seq[StoreManifest.Entry],
-      dataSchema: Option[StructType]): Option[DataFrame] = {
+      dataSchema: Option[StructType],
+      logicalRel: String => String = identity): Option[DataFrame] = {
     if (entries.isEmpty) return None
-    val statuses = entries.map(e => new FileStatus(e.size, false, 1,
-      NominalBlockSize, e.mtime, new Path(s"$tableDir/${e.rel}")))
-    val index = new ManifestFileIndex(spark, new Path(tableDir), statuses)
+    val files = entries.map(e =>
+      new Path(s"$tableDir/${logicalRel(e.rel)}").getParent ->
+        new FileStatus(e.size, false, 1, NominalBlockSize, e.mtime,
+          new Path(s"$tableDir/${e.rel}")))
+    val statuses = files.map(_._2)
+    val index = new ManifestFileIndex(spark, new Path(tableDir), files)
     val fmt = new ParquetFileFormat()
     val opts = Map("mergeSchema" -> "true")
     // all-nullable mirrors DataSource.resolveRelation's asNullable, so

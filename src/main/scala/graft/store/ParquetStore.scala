@@ -27,14 +27,11 @@ import org.apache.spark.sql.types.StructType
   * the ROOT's scheme ([[StoreFs]]), so the same store code serves a
   * local path, an HDFS URI, or an `s3a://bucket/...` root.
   *
-  * One landing path: every partitioned append ([[write]], the flush
-  * landing) and every rewrite lands an immutable `_gen-*` tree and
-  * publishes a [[StoreManifest]] generation, so a store that has ever
-  * been written plans every read from its manifest and recorded
-  * schema. Listing mode remains only for a store no write has touched
-  * yet — duo's native layout, or one fed through [[writeStaged]]
-  * alone; the first [[write]] or [[compact]] folds its files into the
-  * first generation.
+  * One landing path: every append ([[write]]) and rewrite lands a
+  * `_gen-*` tree and publishes a [[StoreManifest]] generation, so a
+  * written store plans every read from its manifest and schema.
+  * Listing mode remains for duo's native layout and stores fed only
+  * through [[writeStaged]], until a [[write]] or [[compact]].
   *
   * Snapshot isolation (round-16; the reference has no analog — it
   * never rewrites files, duo/src/partition/writer.rs:55-59): layout
@@ -70,8 +67,8 @@ import org.apache.spark.sql.types.StructType
   * throws [[StoreManifest.ConcurrentCommitException]] when any other
   * generation is newest — so even a mutation that somehow passed both
   * lease checks cannot overwrite another writer's commit. Readers
-  * never fence. Within one process, the mutations of one store
-  * instance serialize on its monitor ([[mutation]]).
+  * never fence. In one process an instance's rewrites serialize on
+  * its monitor ([[mutation]]), appends do not ([[commitOver]]).
   *
   * At scale: minute-grained dirs are only sensible for recent data; the
   * same layout compacts upward (minute→hour→day files) without changing
@@ -144,7 +141,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   /** Retained manifest generations, oldest → newest — the snapshots
     * [[readGeneration]] can time-travel to. Retention is
-    * [[StoreManifest.KeepGens]] generations, pruned past the grace by
+    * [[StoreManifest.KeepGens]] generations plus every one younger
+    * than [[StoreManifest.RetainMs]], pruned past the grace by
     * [[vacuum]]; the newest IS the current table.
     */
   def generations(): Seq[String] = manifest.genNames()
@@ -222,8 +220,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * unversioned ingest tail — rows enter version history when a
     * drain commits them. None when the generation is pruned/corrupt or
     * names already-vacuumed files' tree shape (execution would then
-    * fail on the missing files — time travel reaches exactly as far
-    * as the vacuum grace, the documented isolation window).
+    * fail on the missing files — time travel reaches as far as
+    * retention ([[generations]]) and the vacuum grace allow).
     */
   def readGeneration(gen: String): Option[DataFrame] =
     manifest.readGen(gen).flatMap(snap =>
@@ -241,8 +239,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * generations rewrites every byte into a fresh tree and the diff
     * degenerates (correctly, but uselessly) to the full table — the
     * same caveat Delta's docs put on file-level CDF without change
-    * files. Both generations must still be retained (history reaches
-    * exactly as far as the vacuum grace); None otherwise, or when no
+    * files. Both generations must still be retained ([[generations]]);
+    * None otherwise, or when no
     * file was added.
     */
   def changesBetween(genA: String, genB: String): Option[DataFrame] =
@@ -372,24 +370,63 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     fenceLease()
   }
 
-  /** Wraps every public mutator body. Mutations of one instance run
-    * one at a time under its monitor: every commit plans from the
-    * newest generation and CASes on it, so two overlapping mutations
-    * (an engine's early flush on an ingest thread against its
-    * maintenance tick) would otherwise fail one of them with
-    * [[StoreManifest.ConcurrentCommitException]]. The epoch bump on
-    * EXIT pairs with the entry-side bump in [[fence]] (ADVICE r21): a
-    * concurrent reader that observes the post-entry epoch and plans
-    * BEFORE the mutation lands would otherwise memoize the
-    * pre-mutation plan under a key no later read distinguishes — the
-    * exit bump makes that key stale the moment the mutation completes
-    * (or aborts — a partial landing must not be memo-servable either).
-    * Early `return`s inside still run the finally.
+  /** Wraps every public mutator body but [[write]]'s: rewrites of
+    * one instance run one at a time under its monitor. The epoch bump
+    * on EXIT pairs with the entry-side bump in [[fence]] (ADVICE r21):
+    * a reader that plans between the two must not memoize the
+    * pre-mutation plan under a key no later read distinguishes, and
+    * an aborted partial landing must not be memo-servable either.
     */
-  private def mutation[A](body: => A): A =
-    synchronized { try body finally bumpEpoch() }
+  private def mutation[A](body: => A): A = synchronized {
+    commitLock.synchronized { rewrites += 1 }
+    try body finally {
+      commitLock.synchronized {
+        rewrites -= 1
+        if (rewrites == 0) appendsInRewrite.clear()
+      }
+      bumpEpoch()
+    }
+  }
 
-  private def fenceLease(): Unit = myLease match {
+  /** Every commit of this instance (lease re-verify, newest truth,
+    * publish) runs under this lock, which guards metadata work only.
+    * It also guards `rewrites` (mutators in flight, nested ones
+    * counted twice) and `appendsInRewrite` (appends committed while
+    * one ran: generation → landed entries and batch schema).
+    */
+  private val commitLock = new Object
+  private var rewrites = 0
+  private val appendsInRewrite = scala.collection.mutable.Map
+    .empty[String, (Seq[StoreManifest.Entry], StructType)]
+
+  /** Trees appends are landing: unreferenced yet, so vacuum skips them. */
+  private val landing =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Commit a rewrite planned from generation `planned`. Appends this
+    * instance committed since then added only their own trees, so the
+    * rewrite's change still applies over them: `publish` gets the
+    * newest generation as parent, the appended entries, and a widener
+    * adding their columns to a recorded schema. Any other newer
+    * generation is another writer's, and the CAS on `planned` fails.
+    */
+  private def commitOver[A](planned: Option[String])(
+      publish: (Option[String], Seq[StoreManifest.Entry],
+        Option[StructType] => Option[StructType]) => A): A =
+    commitLock.synchronized {
+      fence()
+      val newer =
+        if (appendsInRewrite.isEmpty) Nil
+        else manifest.genNames().filter(g => planned.forall(_ < g))
+      val mine = newer.flatMap(appendsInRewrite.get)
+      if (newer.isEmpty || mine.size < newer.size)
+        publish(planned, Nil, identity)
+      else publish(newer.lastOption, mine.flatMap(_._1), schema =>
+        mine.foldLeft(schema)((acc, m) =>
+          acc.flatMap(ParquetStore.appendSchema(_, m._2))))
+    }
+
+  private def fenceLease(): Unit = leaseLock.synchronized { myLease match {
     case None =>
       val existing = leaseNames().sorted
       val epoch = existing.lastOption
@@ -404,7 +441,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         .foreach(n => fs.delete(new Path(lockDir, n), false): Unit)
       verifyLease(name)
     case Some(name) => verifyLease(name)
-  }
+  } }
+  private val leaseLock = new Object // appends fence off the monitor
 
   private def verifyLease(name: String): Unit = {
     val names = leaseNames()
@@ -416,54 +454,52 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   // ---- writes ----
 
-  /** Append a batch THROUGH the manifest commit protocol — the one
-    * partitioned landing: the rows land in a fresh immutable `_gen-*`
-    * tree (partition columns derived from the row's µs time column,
-    * one file per touched minute dir — see [[landGenTree]]), and one
-    * generation publish makes them the table's truth, carrying the
-    * caller's `info` audit line. The rename that makes the rows
-    * VISIBLE is the same rename that durably records the audit line,
-    * which is what [[CdcFeed.consumeInto]] builds exactly-once
-    * delivery on: a consumer crashing between landing and
-    * cursor-advance detects the landed increment from the sink's own
-    * generation info and skips the replay. A crash before the publish
-    * leaves an orphan tree for [[vacuum]]. A first write into a store
-    * with no generation folds the legacy tree's files (duo's native
-    * layout) into the first generation.
-    *
-    * The recorded schema stays EXACT when it provably can: the parent's
-    * recorded columns plus the batch's new ones, which is the union the
-    * live files' footers merge to, so a drifting ingest still plans
-    * from the manifest schema and never pays per-file footer
-    * inference. A parent with no recorded schema, or a batch that
-    * re-types a column, records None (footer inference until the next
-    * compact), the same conservative contract as [[expire]]. A flush
-    * whose rows span a WIDE event-time range should land through
-    * [[writeStaged]] instead (flat append now, [[compact]] owns the
-    * layout).
+  /** Append a batch — the one partitioned landing: the rows land in
+    * a fresh `_gen-*` tree ([[landGenTree]]) and one generation
+    * publish, carrying the caller's `info` audit line, makes them the
+    * table's truth. That one rename is what [[CdcFeed.consumeInto]]
+    * builds exactly-once delivery on. A crash before it leaves an
+    * orphan tree for [[vacuum]]. The first write folds duo's native
+    * layout into the first generation, serialized like a
+    * [[mutation]]; later writes land with no lock held and take only
+    * the commit lock, so a running rewrite never stalls them (it
+    * commits over them, [[commitOver]]). The recorded schema stays
+    * exact: the parent's columns plus the batch's new ones, the union
+    * the footers merge to; a parent without one, or a re-typed
+    * column, records None (footer inference, [[expire]]'s contract).
+    * Rows spanning a WIDE event-time range belong in [[writeStaged]].
     */
-  def write(batch: DataFrame, info: Option[String] = None): Unit = mutation {
+  def write(batch: DataFrame, info: Option[String] = None): Unit =
+    if (truth().isEmpty) mutation(append(batch, info))
+    else try append(batch, info) finally bumpEpoch()
+
+  private def append(batch: DataFrame, info: Option[String]): Unit = {
     fence()
-    val t = truth()
     val batchSchema = StoreManifest.allNullable(batch.schema)
     val gen = newGenName()
-    landGenTree(batch, gen)
-    beforeCommit()
-    fence()
-    val landed = manifest.walkSubtree(gen)
-    t match {
-      case Some(snap) =>
-        manifest.publishPatch(adds = landed, drops = Nil,
-          deadPlus = Nil, deadMinus = Nil,
-          schema = snap.schema.flatMap(
-            ParquetStore.appendSchema(_, batchSchema)),
-          parent = snap.gen, info = info)
-      case None => // first commit ever: absolute, legacy files folded
-        val legacy = manifest.walkLegacy()
-        manifest.publish(legacy ++ landed,
-          if (legacy.isEmpty) Some(batchSchema) else None, Nil,
-          parent = None, info = info)
-    }
+    landing.add(gen): Unit
+    try {
+      landGenTree(batch, gen)
+      beforeCommit()
+      val landed = manifest.walkSubtree(gen)
+      commitLock.synchronized {
+        fence()
+        truth() match {
+          case Some(snap) =>
+            val name = manifest.publishPatch(adds = landed, drops = Nil,
+              deadPlus = Nil, deadMinus = Nil,
+              schema = snap.schema.flatMap(
+                ParquetStore.appendSchema(_, batchSchema)),
+              parent = snap.gen, info = info)
+            if (rewrites > 0) appendsInRewrite(name) = (landed, batchSchema)
+          case None => // first commit ever: absolute, legacy files folded
+            val legacy = manifest.walkLegacy()
+            manifest.publish(legacy ++ landed,
+              if (legacy.isEmpty) Some(batchSchema) else None, Nil,
+              parent = None, info = info): Unit
+        }
+      }
+    } finally landing.remove(gen): Unit
   }
 
   /** Apply one CDC increment to this store AS A MIRROR, in ONE
@@ -541,28 +577,30 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val gen = newGenName()
     toLand.foreach(landGenTree(_, gen))
     beforeCommit()
-    fence()
     val landed =
       if (toLand.isDefined) manifest.walkSubtree(gen) else Nil
     val now = System.currentTimeMillis()
     val landedSchema = toLand.map(r =>
       StoreManifest.allNullable(r.schema))
     t match {
-      case Some(snap) =>
+      case Some(snap) => commitOver(Some(snap.gen)) { (parent, _, widen) =>
         manifest.publishPatch(adds = landed,
           drops = affected.map(_.rel),
           deadPlus = affected.map(e => StoreManifest.Dead(e.rel, now)),
           deadMinus = Nil,
           // keep the recorded schema only when the landing provably
           // conforms (else footer inference — the drift contract)
-          schema = snap.schema.filter(s => landedSchema.forall(_ == s)),
-          parent = snap.gen, info = info)
+          schema = widen(
+            snap.schema.filter(s => landedSchema.forall(_ == s))),
+          parent = parent.get, info = info): Unit
+      }
       case None => // first commit ever: absolute
+        fence()
         val full = manifest.walkLegacy()
         val affectedSet = affected.map(_.rel).toSet
         manifest.publish(full.filterNot(e => affectedSet(e.rel)) ++ landed,
           None, affected.map(e => StoreManifest.Dead(e.rel, now)),
-          parent = None, info = info)
+          parent = None, info = info): Unit
     }
     } finally removedCached.foreach(_.unpersist(): Unit)
   }
@@ -584,19 +622,20 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val gen = newGenName()
     batch.foreach(landGenTree(_, gen))
     beforeCommit()
-    fence()
     val landed =
       if (batch.isDefined) manifest.walkSubtree(gen) else Nil
     val now = System.currentTimeMillis()
     val priorEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
     val priorStaged = stagedStatuses(t.map(_.deadRels).getOrElse(Set.empty))
-    manifest.publish(landed,
-      batch.map(b => StoreManifest.allNullable(b.schema)),
-      t.map(_.dead).getOrElse(Nil) ++
-        (priorEntries.map(_.rel) ++
-          priorStaged.map(s => s"_staging/${s.getPath.getName}"))
-          .map(StoreManifest.Dead(_, now)),
-      parent = t.map(_.gen), info = info)
+    commitOver(t.map(_.gen)) { (parent, appended, widen) =>
+      manifest.publish(landed ++ appended,
+        widen(batch.map(b => StoreManifest.allNullable(b.schema))),
+        t.map(_.dead).getOrElse(Nil) ++
+          (priorEntries.map(_.rel) ++
+            priorStaged.map(s => s"_staging/${s.getPath.getName}"))
+            .map(StoreManifest.Dead(_, now)),
+        parent = parent, info = info): Unit
+    }
   }
 
   /** Land `rows` in the immutable `_gen-*` tree `gen`: partition
@@ -608,21 +647,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * silently loses its pruning on one path.
     */
   private def landGenTree(rows: DataFrame, gen: String): Unit =
-    rows
-      .withColumn("__ts", timestamp_micros(col(timeCol)))
-      .withColumn("date", date_format(col("__ts"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("__ts"), "HH"))
-      .withColumn("minute", date_format(col("__ts"), "mm"))
-      .drop("__ts")
-      // co-locate each partition dir's rows in one task: without this
-      // every task writes every dir it touches, so a T-task flush
-      // spanning D minutes lands up to T×D files (measured: a
-      // 60-minute-spread flush from a 32-partition batch wrote ~1,900
-      // one-KB files). The partition count is EXPLICIT: a column-only
-      // repartition let AQE coalesce a small flush to ONE task that
-      // opened every touched dir's writer serially (measured on g13's
-      // 181-minute-spread flushes: 2-3.6 s single-task write stages,
-      // 31 of 32 cores idle). One-file-per-dir holds at any count.
+    ParquetStore.withPartCols(rows, timeCol)
+      // one task per partition dir, so a T-task flush over D minutes
+      // lands D files, not T×D (measured ~1,900 one-KB files without);
+      // the count is EXPLICIT because AQE otherwise coalesced a small
+      // flush into ONE serial task (g13: 2-3.6 s, 31 of 32 cores idle)
       .repartition(spark.sparkContext.defaultParallelism,
         col("date"), col("hour"), col("minute"))
       .write
@@ -743,20 +772,22 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     if (rel.startsWith("_gen-")) rel.take(rel.indexOf('/')) else ""
 
   /** Plan the given entries as a DataFrame with ZERO filesystem
-    * listings: one [[ManifestFileIndex]] per tree root (Spark's
-    * partition-path parser refuses mixed `date=…` depths below one
-    * basePath, so legacy and each `_gen-*` tree plan as their own
-    * relation), unioned by name. Partition columns, pruning and types
-    * are identical to a directory read per tree.
+    * listings: one [[ManifestFileIndex]] per partition depth, whatever
+    * tree each file lives in (the index parses partition values from
+    * the logical rel, so the legacy tree and every `_gen-*` tree of a
+    * depth plan as ONE relation — a window over a day of flush trees
+    * is one scan, not a union per flush). Spark's partition-path
+    * parser refuses mixed `date=…` depths in one relation, so a
+    * mixed-grain store unions one relation per depth by name.
+    * Partition columns, pruning and types are identical to a
+    * directory read.
     */
   private def relationFor(entries: Seq[StoreManifest.Entry],
       schema: Option[StructType]): Option[DataFrame] = {
     if (entries.isEmpty) return None
-    val byTree = entries.groupBy(e => treeRootOf(e.rel))
-    val parts = byTree.toSeq.sortBy(_._1).flatMap { case (tree, es) =>
-      val base = if (tree.isEmpty) dir else s"$dir/$tree"
-      val scoped = es.map(e => e.copy(rel = logicalRel(e.rel)))
-      ManifestFileIndex.relation(spark, base, scoped, schema)
+    val byDepth = entries.groupBy(e => logicalRel(e.rel).count(_ == '/'))
+    val parts = byDepth.toSeq.sortBy(_._1).flatMap { case (_, es) =>
+      ManifestFileIndex.relation(spark, dir, es, schema, logicalRel)
     }
     parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
@@ -957,12 +988,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // (planCompactions only flags minute-grain dates).
     val dataRows = relationFor(eD, t.flatMap(_.schema)).getOrElse(return)
       .drop("date", "hour", "minute")
-    val rows = dataRows
-      .withColumn("__ts", timestamp_micros(col(timeCol)))
-      .withColumn("date", date_format(col("__ts"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("__ts"), "HH"))
-      .withColumn("minute", date_format(col("__ts"), "mm"))
-      .drop("__ts")
+    val rows = ParquetStore.withPartCols(dataRows, timeCol)
     // `filesPerPartition` is a hash-partition count, so one dir's rows
     // land wholly in one task at ANY value — the file-per-dir layout
     // is count-independent. Raise it to the cluster's parallelism so
@@ -996,13 +1022,12 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // must not land a stale truth) and the publish CASes on the
     // planning snapshot's generation.
     beforeCommit()
-    fence()
     val now = System.currentTimeMillis()
     val rewritten = manifest.walkSubtree(gen)
     val info = Some(s"""{"op":"compactDate","date":"$date",""" +
       s""""wrote":${rewritten.size},"retired":${eD.size}}""")
     t match {
-      case Some(snap) =>
+      case Some(snap) => commitOver(Some(snap.gen)) { (parent, _, widen) =>
         // patch-shaped: this mutation KNOWS its delta (the one date it
         // rewrote) — O(date), not O(table), per commit
         manifest.publishPatch(
@@ -1010,8 +1035,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
           drops = eD.map(_.rel),
           deadPlus = eD.map(e => StoreManifest.Dead(e.rel, now)),
           deadMinus = Nil,
-          schema = snap.schema, parent = snap.gen, info = info)
+          schema = widen(snap.schema), parent = parent.get,
+          info = info): Unit
+      }
       case None => // first ever publish: absolute by construction
+        fence()
         val kept = mainEntries.filterNot(e =>
           logicalRel(e.rel).startsWith(part + "/"))
         // when the rewrite IS the whole table (no kept files), its
@@ -1025,7 +1053,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
             Some(StoreManifest.allNullable(dataRows.schema))
           else None,
           eD.map(e => StoreManifest.Dead(e.rel, now)),
-          parent = None, info = info)
+          parent = None, info = info): Unit
     }
   }
 
@@ -1121,20 +1149,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // TARGET granularity (the store invariant: dir values are pure
     // functions of timeCol) — one derivation path whatever mix of
     // granularities the input trees carried
-    val derived0 = all.get
-      .withColumn("__ts", timestamp_micros(col(timeCol)))
-      .withColumn("date", date_format(col("__ts"), "yyyy-MM-dd"))
-    val derived1 =
-      if (partCols.contains("hour"))
-        derived0.withColumn("hour", date_format(col("__ts"), "HH"))
-      else derived0
-    val derived =
-      (if (partCols.contains("minute"))
-        derived1.withColumn("minute", date_format(col("__ts"), "mm"))
-      else derived1).drop("__ts")
     // hash-partition count raised to cluster parallelism — layout-
     // neutral, write-parallel (see [[compactDate]])
-    val base = derived
+    val base = ParquetStore.withPartCols(all.get, timeCol, partCols)
       .repartition(
         math.max(filesPerPartition, spark.sparkContext.defaultParallelism),
         partCols.map(col): _*)
@@ -1166,18 +1183,19 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // missing the fencer's commits) and the publish CASes on the
     // planning snapshot's generation.
     beforeCommit()
-    fence()
     val now = System.currentTimeMillis()
     val rewritten = manifest.walkSubtree(gen)
-    manifest.publish(rewritten, Some(all.get.schema),
-      t.map(_.dead).getOrElse(Nil) ++
-        (mainEntries.map(_.rel) ++
-          stagedF.map(s => s"_staging/${s.getPath.getName}"))
-          .map(StoreManifest.Dead(_, now)),
-      parent = t.map(_.gen),
-      info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
-        s""""wrote":${rewritten.size},""" +
-        s""""retired":${mainEntries.size + stagedF.size}}"""))
+    commitOver(t.map(_.gen)) { (parent, appended, widen) =>
+      manifest.publish(rewritten ++ appended, widen(Some(all.get.schema)),
+        t.map(_.dead).getOrElse(Nil) ++
+          (mainEntries.map(_.rel) ++
+            stagedF.map(s => s"_staging/${s.getPath.getName}"))
+            .map(StoreManifest.Dead(_, now)),
+        parent = parent,
+        info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
+          s""""wrote":${rewritten.size},""" +
+          s""""retired":${mainEntries.size + stagedF.size}}""")): Unit
+    }
   }
 
   /** Reclaim what the manifest-commit protocol deferred: tombstoned
@@ -1324,16 +1342,20 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // lease re-verified and CAS'd on the snapshot read at step 1,
     // like every commit
     if (ripe.nonEmpty && futureGens.isEmpty) snap.foreach { s =>
-      val ripeSet = ripe.map(_.rel).toSet
-      fence()
       // patch-shaped: the reclaim's delta is exactly the ripe
       // tombstone list — no O(table) entry diff on a maintenance tick
-      manifest.publishPatch(adds = Nil, drops = Nil,
-        deadPlus = Nil, deadMinus = ripe.map(_.rel),
-        schema = s.schema, parent = s.gen,
-        info = Some(s"""{"op":"vacuum","reclaimed":${ripe.size}}"""))
+      commitOver(Some(s.gen)) { (parent, _, widen) =>
+        manifest.publishPatch(adds = Nil, drops = Nil,
+          deadPlus = Nil, deadMinus = ripe.map(_.rel),
+          schema = widen(s.schema), parent = parent.get,
+          info = Some(s"""{"op":"vacuum","reclaimed":${ripe.size}}""")
+        ): Unit
+      }
     }
     if (futureGens.nonEmpty) return (ripe.size, 0, 0)
+    // steps 3-4 decide what is unreferenced, so no append may commit
+    // between that decision and the deletes
+    commitLock.synchronized {
     // 3. prune retained generations past the grace window (newest kept
     // unconditionally — it IS the table) BEFORE the orphan scan, so a
     // tree referenced only by an out-of-grace generation is reclaimed
@@ -1363,11 +1385,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val orphans = ls(new Path(dir)).filter { s =>
       s.isDirectory && s.getPath.getName.startsWith("_gen-") &&
         !referenced(s.getPath.getName) &&
+        !landing.contains(s.getPath.getName) &&
         s.getModificationTime + graceMs <= now &&
         genNameMillis(s.getPath.getName).forall(_ + graceMs <= now)
     }
     orphans.foreach(s => rm(s.getPath))
     (ripe.size, orphans.size, pruned.size)
+    }
   }
 
   /** Delete many files, pooled when the batch is large. 32 threads:
@@ -1476,8 +1500,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   def resplitHotDates(): Seq[String] = mutation {
     if (!exists) return Nil
-    fence()
-    manifest.resplitHot()
+    commitLock.synchronized { fence(); manifest.resplitHot() }
   }
 
   /** Compaction as a POLICY, not a tool (the LSM background cadence):
@@ -1563,20 +1586,21 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
           fileMaxStat(s.getPath).exists(_ < dayFloorUs))
         if (droppedE.isEmpty && stagedDead.isEmpty) return (0, 0)
         val now = System.currentTimeMillis()
-        fence()
         // patch-shaped: the expiry's delta is exactly the dropped
         // dates' entries. schema=None keeps the documented
         // drifted-column contract (readers fall back to footer
         // inference after an expire), same as the absolute form.
-        manifest.publishPatch(adds = Nil,
-          drops = droppedE.map(_.rel),
-          deadPlus = (droppedE.map(_.rel) ++
-            stagedDead.map(s => s"_staging/${s.getPath.getName}"))
-            .map(StoreManifest.Dead(_, now)),
-          deadMinus = Nil,
-          schema = None, parent = t.gen,
-          info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
-            s""""retired":${droppedE.size + stagedDead.size}}"""))
+        commitOver(Some(t.gen)) { (parent, _, _) =>
+          manifest.publishPatch(adds = Nil,
+            drops = droppedE.map(_.rel),
+            deadPlus = (droppedE.map(_.rel) ++
+              stagedDead.map(s => s"_staging/${s.getPath.getName}"))
+              .map(StoreManifest.Dead(_, now)),
+            deadMinus = Nil,
+            schema = None, parent = parent.get,
+            info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
+              s""""retired":${droppedE.size + stagedDead.size}}""")): Unit
+        }
         (droppedE.map(e => logicalRel(e.rel).takeWhile(_ != '/'))
           .distinct.size, stagedDead.size)
       case None =>
@@ -1912,6 +1936,22 @@ object ParquetStore {
     if (clash) None
     else Some(StructType(parent.fields ++
       batch.fields.filterNot(f => byName.contains(f.name.toLowerCase))))
+  }
+
+  /** `rows` plus the partition columns `partCols` (a subset of
+    * date/hour/minute), derived from the row's µs `timeCol` in the
+    * session zone — the one definition of the hive layout that every
+    * landing and rewrite, and [[graft.ScaleProbe]]'s native-layout
+    * fixture, writes through. Dir values are pure functions of the
+    * time column, which is what lets reads prune on them.
+    */
+  private[graft] def withPartCols(rows: DataFrame, timeCol: String,
+      partCols: Seq[String] = partColsFor("minute")): DataFrame = {
+    val ts = timestamp_micros(col(timeCol))
+    val formats = Map("date" -> "yyyy-MM-dd", "hour" -> "HH",
+      "minute" -> "mm")
+    partCols.foldLeft(rows)((df, c) =>
+      df.withColumn(c, date_format(ts, formats(c))))
   }
 
   /** Partition columns for a compaction target granularity. */

@@ -70,7 +70,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * they are recorded as tombstones IN the new generation and reclaimed
   * later by [[ParquetStore.vacuum]] once a grace window has passed.
   * [[publish]] retains the newest [[StoreManifest.KeepGens]]
-  * generations PLUS every older file their delta chains fold through,
+  * generations and every one younger than [[StoreManifest.RetainMs]]
+  * PLUS every older file their delta chains fold through,
   * PLUS every manifest file a retained generation references;
   * unreferenced manifest files are pruned with the generations that
   * referenced them. Torn bodies are rejected whole at every level
@@ -91,7 +92,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   import StoreManifest.{CheckpointEvery, Dead, Entry, KeepGens, MfRef,
-    Snapshot, dateKeyOf, partKeyOf, subPartKeyOf}
+    RetainMs, Snapshot, dateKeyOf, partKeyOf, subPartKeyOf}
 
   /** Hot-date split threshold (see [[StoreManifest.HotSplitDefault]]);
     * instance-level so specs and probes can engage the split on small
@@ -106,6 +107,12 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * that race loud instead of a silent lost update.
     */
   private[graft] var beforeRename: () => Unit = () => ()
+
+  /** Test seam (specs only): the wall clock [[publish]]'s retention
+    * ages generations against ([[StoreManifest.RetainMs]]), so a spec
+    * can age a store's history without waiting it out.
+    */
+  private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
   private def mdir = new Path(tableDir, "_manifest")
 
@@ -675,7 +682,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   // ---- publish (commit layer) ----
 
-  /** Publish a new generation carrying the ABSOLUTE intended state:
+  /** Publish a new generation carrying the ABSOLUTE intended state
+    * and return its name:
     * the complete live-file list, the merged data schema when the
     * publisher knows it, and the cumulative tombstone list. The
     * manifest diffs that state against the parent snapshot and
@@ -683,14 +691,15 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * manifest-level DELTA when the diff is small and the chain short,
     * a CHECKPOINT otherwise — either way the temp-write + single-file
     * rename is the atomic commit point. Prior generations are
-    * retained (newest [[StoreManifest.KeepGens]] heads plus their
-    * chains and referenced manifests) so a corrupt latest degrades to
+    * retained (newest [[StoreManifest.KeepGens]] heads and those
+    * younger than [[StoreManifest.RetainMs]], plus their chains and
+    * referenced manifests) so a corrupt latest degrades to
     * the previous consistent snapshot instead of a tree walk.
     */
   def publish(entries: Seq[Entry],
       schema: Option[org.apache.spark.sql.types.StructType],
       dead: Seq[Dead], parent: Option[String],
-      info: Option[String] = None): Unit = {
+      info: Option[String] = None): String = {
     val normSchema = schema.map(StoreManifest.allNullable)
     val gens = listState()
     val parentSnap = parent.flatMap(p => assembleFull(p, gens))
@@ -731,7 +740,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     }
   }
 
-  /** Patch-shaped publish — O(delta) CPU and bytes per commit, the
+  /** Patch-shaped publish, returning the new generation's name —
+    * O(delta) CPU and bytes per commit, the
     * form the store's own mutations use: they KNOW their deltas (the
     * date they rewrote, the files they retired), so re-deriving the
     * patch by diffing two full entry lists is pure waste on the
@@ -749,7 +759,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   def publishPatch(adds: Seq[Entry], drops: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
-      parent: String, info: Option[String] = None): Unit = {
+      parent: String, info: Option[String] = None): String = {
     val normSchema = schema.map(StoreManifest.allNullable)
     val gens = listState()
     val ps = fold(parent, gens).getOrElse(throw new
@@ -798,7 +808,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         deadPlus = Nil, deadMinus = Nil, absDead = None,
         schema = ps.schema,
         info = Some(s"""{"op":"resplit","dates":${hot.size}}"""),
-        newSize = ps.approxSize, resplit = hot.toSet)
+        newSize = ps.approxSize, resplit = hot.toSet): Unit
     hot
   }
 
@@ -819,7 +829,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       absDead: Option[Seq[Dead]],
       schema: Option[org.apache.spark.sql.types.StructType],
       info: Option[String], newSize: Long,
-      resplit: Set[String] = Set.empty): Unit = {
+      resplit: Set[String] = Set.empty): String = {
     val patchLines = adds.size.toLong + drops.size + deadPlus.size +
       deadMinus.size
     // delta only atop a foldable parent, within the cadence, for a
@@ -1018,7 +1028,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * manifest files only pruned generations referenced).
     */
   private def commitBody(bodyLines: Iterator[String], ext: String,
-      parent: Option[String]): Unit = {
+      parent: Option[String]): String = {
     fs.mkdirs(mdir): Unit
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new Path(mdir, s".tmp-$uuid")
@@ -1130,15 +1140,20 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     // poisoning the newest head. A throttled LIST/DELETE costs
     // retained bytes until the next commit retries, never truth.
     try {
-      // retain the newest KeepGens generation HEADS plus every older
-      // file their delta chains fold through, then every manifest
-      // file a surviving generation references (readers take the
-      // newest FOLDABLE head, so a failed delete costs bytes, not
-      // truth). Age-based pruning beyond this is vacuum's job.
+      // retain the newest KeepGens generation HEADS and every head
+      // younger than RetainMs, plus every older file their delta
+      // chains fold through, then every manifest file a surviving
+      // generation references (readers take the newest FOLDABLE
+      // head, so a failed delete costs bytes, not truth). Age-based
+      // pruning beyond this is vacuum's job.
       val statuses = postList
         .filter(_.getPath.getName.startsWith("gen-"))
         .map(s => s.getPath.getName -> s).toMap
-      val heads = statuses.keys.toSeq.sorted.takeRight(KeepGens)
+      val sorted = statuses.keys.toSeq.sorted
+      val young = clock() - RetainMs
+      val heads = sorted.takeRight(KeepGens) ++ sorted.filter(n =>
+        n.stripPrefix("gen-").takeWhile(_.isDigit).toLongOption
+          .forall(_ > young))
       val keep = heads.flatMap(chainNames(_, statuses)).toSet
       statuses.keys.filterNot(keep).foreach(n =>
         fs.delete(new Path(mdir, n), false): Unit)
@@ -1160,6 +1175,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           .foreach(n => fs.delete(new Path(mfdir, n), false): Unit)
       }
     } catch { case scala.util.control.NonFatal(_) => () }
+    gen.getName
   }
 
   /** The operation-audit line, newline-scrubbed: the body is
@@ -1492,6 +1508,15 @@ object StoreManifest {
     * data files live until vacuum's grace passes).
     */
   val KeepGens: Int = 3
+
+  /** Age below which [[StoreManifest.publish]] never prunes a
+    * generation, however many newer ones exist. Every flush commits a
+    * generation, so a count bound alone would cut time travel and CDC
+    * to the last few flushes; this keeps them reaching back as far as
+    * the engine's default vacuum grace, and [[ParquetStore.vacuum]]'s
+    * own grace prunes past it.
+    */
+  val RetainMs: Long = 30L * 60L * 1000L
 
   /** Checkpoint cadence: a publish whose parent chain has already
     * grown this long folds the chain into a full `.list` checkpoint

@@ -245,6 +245,80 @@ class EngineSpec extends SparkSpec {
       yield s"m$b-$i").toSet)
   }
 
+  test("an append commits while a rewrite is in flight, and the " +
+      "rewrite commits over it: neither waits out nor fails the other") {
+    // the append lands on another thread from inside compactDate's
+    // commit seam, i.e. while the rewrite holds the store's monitor;
+    // it must finish there, and the heal must then re-parent onto it
+    val root = tmpRoot()
+    val st = new ParquetStore(spark, root, "log", "time")
+    def batch(ids: Seq[Int], extra: Boolean) = {
+      val df = ids.map(i => ("svc-0", t0 + i * 1000000L, "INFO", s"m$i"))
+        .toDF("process_id", "time", "level", "message")
+      if (extra) df.withColumn("region", lit("eu")) else df
+    }
+    st.write(batch(Seq(1, 2), extra = false))
+    st.write(batch(Seq(3), extra = false))
+    val date = java.time.LocalDate.ofInstant(
+      java.time.Instant.ofEpochSecond(t0 / 1000000L),
+      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+      .toString
+    val landedInFlight = new java.util.concurrent.atomic.AtomicBoolean
+    st.beforeCommit = () => {
+      st.beforeCommit = () => ()
+      val t = new Thread(() => st.write(batch(Seq(4, 5), extra = true)))
+      t.start()
+      t.join(120000L)
+      landedInFlight.set(!t.isAlive)
+    }
+    try st.compactDate(date) finally st.beforeCommit = () => ()
+    assert(landedInFlight.get, "the append waited for the rewrite")
+    val infos = st.generationInfos()
+    assert(infos(st.generations().last).exists(_.contains("compactDate")),
+      "the heal is the newest commit, over the append")
+    val msgs = st.read(None, None).get.select("message").as[String]
+      .collect()
+    assert(msgs.sorted.toSeq == (1 to 5).map(i => s"m$i"))
+    // the heal's recorded schema took the append's new column on
+    assert(st.manifestSchema.exists(_.fieldNames.contains("region")))
+    assert(st.read(None, None).get.where(col("region") === "eu")
+      .count() == 2)
+  }
+
+  test("flush-cadence history: after a heal and five more flushes the " +
+      "pre-heal generation still time-travels, diffs and feeds CDC") {
+    // every flush is a generation, and publish keeps every generation
+    // younger than StoreManifest.RetainMs, so history reaches back the
+    // vacuum grace, not the last few flushes
+    val root = tmpRoot()
+    val engine = new DuoEngine(spark, root)
+    def line(msg: String, offUs: Long) =
+      s"""{"process_id":"svc-0","time":${t0 + offUs},""" +
+        s""""level":"INFO","message":"$msg"}"""
+    def msgs(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("message").as[String].collect().toSet
+    engine.ingestJsonLogs(Seq(line("a-1", 0L))): Unit
+    engine.flush()
+    engine.ingestJsonLogs(Seq(line("a-2", 1000000L))): Unit
+    engine.flush()
+    val preHeal = engine.generations("log").last
+    val feed = engine.cdcFeed("log", "lagging", Seq("message"))
+    feed.commit(preHeal)
+    assert(engine.maintain(maxFilesPerDate = 1)("log").nonEmpty)
+    (1 to 5).foreach { i =>
+      engine.ingestJsonLogs(Seq(line(s"b-$i", (1L + i) * 1000000L))): Unit
+      engine.flush()
+    }
+    val gens = engine.generations("log")
+    assert(gens.contains(preHeal) && gens.size >= 8, gens)
+    assert(msgs(engine.logTableAsOf(preHeal).get) == Set("a-1", "a-2"))
+    val added = (1 to 5).map(i => s"b-$i").toSet
+    assert(msgs(engine.changesBetween("log", preHeal, gens.last,
+      Seq("message")).get) == added)
+    val inc = feed.poll().get
+    assert(!inc.resync && msgs(inc.added.get) == added, inc)
+  }
+
   test("open spans survive batches until closed") {
     val engine = new DuoEngine(spark, tmpRoot(), memoryMode = true)
     val noLogs = Seq.empty[(String, Long, String, String)]

@@ -868,22 +868,32 @@ class FsStoreSpec extends SparkSpec {
     val midGen = genFiles().apply(3).getPath.getName
     assert(m.readGen(midGen).get.entries.size == 5015)
     // cadence rollover: drive the chain past CheckpointEvery — the
-    // manifest folds it into a FRESH checkpoint on its own (and
-    // retention then prunes the old checkpoint's superseded chain,
-    // so the count stays small: assert on the name, not the count)
+    // manifest folds it into a FRESH checkpoint on its own
     val firstCkpt = genFiles().head.getPath.getName
-    (0 until StoreManifest.CheckpointEvery).foreach { k =>
-      entries = entries ++ Seq(StoreManifest.Entry(
-        s"date=2024-01-17/part-$k.parquet", 1L, 1700000200000L + k))
-      m.publish(entries, None, Nil, parent)
-      parent = m.read().map(_.gen)
-    }
-    val ckpts = genFiles().map(_.getPath.getName)
+    def rollChain(): Unit = (0 until StoreManifest.CheckpointEvery)
+      .foreach { k =>
+        entries = entries ++ Seq(StoreManifest.Entry(
+          s"date=2024-01-17/part-${entries.size}.parquet", 1L,
+          1700000200000L + k))
+        m.publish(entries, None, Nil, parent)
+        parent = m.read().map(_.gen)
+      }
+    rollChain()
+    def ckpts = genFiles().map(_.getPath.getName)
       .filter(_.endsWith(".list"))
+    assert(ckpts.exists(_ > firstCkpt),
+      s"the chain must have rolled into a NEW checkpoint: ${ckpts.toSeq}")
+    // every generation is younger than RetainMs, so the superseded
+    // chain is still history; once it has aged past RetainMs,
+    // retention prunes it down to the newest KeepGens heads' chains
+    assert(ckpts.contains(firstCkpt))
+    m.clock = () => System.currentTimeMillis() + 2 * StoreManifest.RetainMs
+    rollChain()
     assert(ckpts.nonEmpty && ckpts.forall(_ > firstCkpt),
-      s"the chain must have rolled into a NEW checkpoint: $ckpts")
+      s"aged superseded chains must be pruned: ${ckpts.toSeq}")
     assert(m.read().get.depth < StoreManifest.CheckpointEvery)
-    assert(m.read().get.entries.size == 5030 + StoreManifest.CheckpointEvery)
+    assert(m.read().get.entries.size ==
+      5030 + 2 * StoreManifest.CheckpointEvery)
     // retention keeps every chain link the retained heads fold
     // through: all KeepGens heads must still read
     val names = m.genNames()

@@ -438,4 +438,27 @@ class PlanShapeSpec extends SparkSpec {
       assert(jobs.get == 1, s"${jobs.get} jobs")
     } finally sc.removeSparkListener(listener)
   }
+
+  test("a window over many flush trees plans as one scan, not a " +
+      "union per tree") {
+    // every flush lands its own _gen-* tree; the manifest files each
+    // under its logical minute dir, so all trees of one partition
+    // depth share one relation
+    val root = java.nio.file.Files.createTempDirectory("treeplan").toString
+    val t0 = 1760000000000000L
+    val engine = new DuoEngine(spark, root)
+    (0 until 6).foreach { f =>
+      engine.appendLogBatch((0 until 4).map(i =>
+        ("svc-0", t0 + (i * 60L + f) * 1000000L, "INFO", s"m$f-$i"))
+        .toDF("process_id", "time", "level", "message"))
+      engine.flush()
+    }
+    val store = new graft.store.ParquetStore(spark, root, "log", "time")
+    assert(store.generations().size == 6)
+    val df = store.read(Some(t0), Some(t0 + 150L * 1000000L)).get
+    val plan = df.queryExecution.executedPlan.toString
+    assert("FileScan parquet".r.findAllMatchIn(plan).size == 1, plan)
+    assert(!plan.contains("Union"), plan)
+    assert(df.count() == 18)
+  }
 }
