@@ -219,8 +219,9 @@ class EngineSpec extends SparkSpec {
       "conflict, every row visible exactly once") {
     // every flush commits a generation and every maintain tick commits
     // heals and vacuums (grace 0: an unpublished flush tree would be
-    // an orphan to it); the store serializes its mutations, so neither
-    // side loses a commit after flush has drained the hot view
+    // an orphan to it, but vacuum skips trees still landing); a flush
+    // commits past a running heal and the heal commits over it, so
+    // neither side loses a commit after flush has drained the hot view
     val root = tmpRoot()
     val engine = new DuoEngine(spark, root, maxHotRows = 3L)
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
