@@ -138,9 +138,84 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jac"))
   }
 
+  /** The one banded candidate join every near-duplicate operator runs
+    * (d03, d04, d09, d18, s03, m06–m08): `rows` that agree on every
+    * `keys` column (a band and its key, a table and its bucket) become
+    * candidate pairs with `a.id < b.id`. The pair comes back as
+    * `<p>_a`, `<p>_b` for an `id` column named `<p>_id` (doc_id →
+    * doc_a/doc_b), followed by the caller's `carry` columns, which
+    * read the two sides as `a.` and `b.`. `verify` filters on the
+    * projected names, then the pairs dedupe. A pair that collides in
+    * several bands is verified once per band before that dedupe; every
+    * carried column is a function of the pair's two ids, so filtering
+    * first returns the same pair set, and the dedupe shuffle carries
+    * only the survivors.
+    *
+    * With `probes` (d09's multi-probe form) the join is asymmetric:
+    * each probe row (an id and one key it looks up) joins the index
+    * `rows` with `a.id =!= b.id`, so a pair is found when EITHER
+    * endpoint probes the other's bucket, and ids canonicalize to
+    * (least, greatest). `carry` must then be symmetric in a and b.
+    *
+    * Scale shape: candidate work is Σ bucket² per band, never n², and
+    * the only shuffles are two exchanges, both at an explicit
+    * `defaultParallelism` count: the join inputs on the key columns,
+    * and the verified pairs on the two ids (the dedupe). Each carries
+    * few BYTES (one short row per id and band, two ids per pair),
+    * while the compute explodes AFTER it, where AQE's byte-sized
+    * coalescer cannot see it: the Σ bucket² scoring after the first,
+    * the caller's verify join after the second. Coalesced, each ran in
+    * ONE task (measured at sf0.1: s14's scoring, a single 1.4-1.8 s
+    * task with 31 of 32 cores idle; d18's Jaccard verify, a single
+    * 2.5 s task on 4 cores). A user-specified count disables
+    * coalescing for exactly these shuffles; the output does not
+    * depend on the partitioning.
+    */
+  private[operators] def bandedPairs(rows: DataFrame, id: String,
+      keys: Seq[String], carry: Seq[Column] = Nil,
+      verify: Column = lit(true),
+      probes: Option[DataFrame] = None): DataFrame = {
+    def exchanged(df: DataFrame, on: Seq[String]) = df.repartition(
+      df.sparkSession.sparkContext.defaultParallelism, on.map(col): _*)
+    val index = exchanged(rows, keys)
+    val (a, b) = (col(s"a.$id"), col(s"b.$id"))
+    val sameKeys = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val pair = Seq("_a", "_b").map(id.stripSuffix("_id") + _)
+    val (pa, pb, joined) = probes match {
+      case None => (a, b, index.as("a").join(index.as("b"), sameKeys && a < b))
+      case Some(pr) => (least(a, b), greatest(a, b),
+        exchanged(pr, keys).as("a").join(index.as("b"), sameKeys && a =!= b))
+    }
+    val verified = joined.select(pa.as(pair(0)) +: pb.as(pair(1)) +: carry: _*)
+      .filter(verify)
+    exchanged(verified, pair).dropDuplicates(pair)
+  }
+
+  /** Exact Jaccard verify of (doc_a, doc_b) candidates over each doc's
+    * 60-bit hashed shingle SET (8-byte longs instead of ~20-char
+    * strings, so the verify exchange carries about half the bytes).
+    * Both engines hash with the same md5-prefix arithmetic, so results
+    * agree by construction even in the astronomically unlikely 60-bit
+    * collision case. `sh` is (doc_id, sh) as [[docShingles]] builds it.
+    */
+  private def verifyHashedJaccard(cands: DataFrame, sh: DataFrame,
+      tau: Double): DataFrame = {
+    val hs = sh.select(col("doc_id"), array_distinct(transform(col("sh"),
+      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("hs"))
+    cands
+      .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hsa")), "doc_a")
+      .join(hs.select(col("doc_id").as("doc_b"), col("hs").as("hsb")), "doc_b")
+      .withColumn("common", size(array_intersect(col("hsa"), col("hsb"))))
+      .withColumn("jac", col("common").cast("double") /
+        (size(col("hsa")) + size(col("hsb")) - col("common")))
+      .filter(col("jac") >= tau)
+      .select(col("doc_a"), col("doc_b"), col("jac"))
+  }
+
   /** MinHash + LSH near-dup pairs: k-entry minhash signature, banded
     * into `bands` keys of `r` rows; docs sharing any band key become
-    * candidates; candidates are verified with exact shingle Jaccard.
+    * candidates ([[bandedPairs]]); candidates are verified with exact
+    * shingle Jaccard ([[verifyHashedJaccard]]).
     *
     * The signature is built by [[graft.functions.Minhash16Agg]] — one
     * map-side-combining imperative aggregate per doc consuming one md5
@@ -163,28 +238,8 @@ object Dedup {
     // md5+minhash aggregation runs once per doc, not twice
     val bandRows = scopedCache(sigs.select(col("doc_id"),
       posexplode(bandKeys(col("sig"), bands, r)).as(Seq("band", "key"))))
-    val cands = bandRows.as("a").join(bandRows.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    // Verification joins on 60-bit hashed shingle SETS (8-byte longs)
-    // instead of the raw 3-gram strings — the candidate-join exchange
-    // then carries ~8 bytes per shingle instead of ~20-char strings; at
-    // 100 TB that halves-or-better the verify shuffle. Jaccard runs on
-    // the hashed sets on BOTH engines (the oracle hashes with the same
-    // md5-prefix arithmetic), so results agree by construction even in
-    // the astronomically-unlikely 60-bit collision case.
-    val hs = sh.select(col("doc_id"), array_distinct(transform(col("sh"),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("hs"))
-    cands
-      .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hsa")), "doc_a")
-      .join(hs.select(col("doc_id").as("doc_b"), col("hs").as("hsb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jac", col("common").cast("double") /
-        (size(col("hsa")) + size(col("hsb")) - col("common")))
-      .filter(col("jac") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
+    verifyHashedJaccard(
+      bandedPairs(bandRows, "doc_id", Seq("band", "key")), sh, tau)
   }
 
   /** Per-doc 64-bit SimHash carried as four 16-bit band values (the
@@ -212,14 +267,9 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs: 64-bit simhash per doc banded 4×16;
-    * candidates share at least one band (pigeonhole: guarantees full
-    * recall for hamming <= 3 — the standard near-dup radius); verified
-    * by exact popcount of the per-band XORs.
-    *
-    * Scale shape: each band has 65,536 buckets and near-dup corpora
-    * spread real docs across them, so the candidate join is Σ bucket²
-    * per band — no signature-space saturation (the round-1 16-bit
-    * variant saturated past ~65k docs).
+    * candidates share at least one band ([[bandedPairs]]; pigeonhole:
+    * guarantees full recall for hamming <= 3 — the standard near-dup
+    * radius); verified by exact popcount of the per-band XORs.
     */
   def simhashPairs(docs: DataFrame, maxHam: Int = 3): DataFrame = {
     val bandCols = (0 until 4).map(j => col(s"band$j"))
@@ -229,20 +279,13 @@ object Dedup {
     val rows = scopedCache(simhashDocs(docs)
       .select(col("doc_id") +: bandCols :+
         posexplode(array(bandCols: _*)).as(Seq("bpos", "bval")): _*))
-    val cands = rows.as("a").join(rows.as("b"),
-        col("a.bpos") === col("b.bpos") && col("a.bval") === col("b.bval") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
-        ((0 until 4).map(j => col(s"a.band$j").as(s"a$j")) ++
-         (0 until 4).map(j => col(s"b.band$j").as(s"b$j"))): _*)
-      .dropDuplicates("doc_a", "doc_b")
-    cands
-      .withColumn("hamming", (0 until 4).map(j =>
-        bit_count(col(s"a$j").bitwiseXOR(col(s"b$j")))).reduce(_ + _).cast("int"))
-      .filter(col("hamming") <= maxHam)
-      .select(col("doc_a"), col("doc_b"), col("hamming"),
-        format_string("%04x%04x%04x%04x",
-          col("a0"), col("a1"), col("a2"), col("a3")).as("simhash_a"))
+    def side(s: String) = (0 until 4).map(j => col(s"$s.band$j"))
+    bandedPairs(rows, "doc_id", Seq("bpos", "bval"),
+      carry = Seq(
+        side("a").zip(side("b")).map { case (x, y) =>
+          bit_count(x.bitwiseXOR(y)) }.reduce(_ + _).cast("int").as("hamming"),
+        format_string("%04x%04x%04x%04x", side("a"): _*).as("simhash_a")),
+      verify = col("hamming") <= maxHam)
   }
 
   /** Connected components over an undirected pair list by iterative
@@ -866,10 +909,11 @@ object Dedup {
     * same bound [[minhashLshPairs]] carries — so "exact" reads as
     * exact-up-to-the-shared-60-bit-set-hash. The per-doc rank window partitions by
     * doc_id (never SinglePartition); candidates join on prefix hashes
-    * only; the verify join ships 60-bit hashed shingle sets exactly
-    * like [[minhashLshPairs]]. The length filter (tau·max <= min)
-    * prunes cross-size candidates inside the join condition, before
-    * the exchange of the verify stage.
+    * only ([[bandedPairs]] keyed on (h1, h2)); the verify is
+    * [[minhashLshPairs]]' [[verifyHashedJaccard]]. The length filter
+    * (tau·max <= min) is the candidate join's verify predicate, so it
+    * prunes cross-size candidates before the pair dedupe and the
+    * verify exchange.
     */
   def prefixJaccardJoin(docs: DataFrame, tau: Double = PrefixGateTau,
       n: Int = 3): DataFrame = {
@@ -891,23 +935,10 @@ object Dedup {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= col("n_sh") - ceil(col("n_sh") * tau) + 1)
       .select(col("doc_id"), col("n_sh"), col("h1"), col("h2")))
-    val cands = prefix.as("a").join(prefix.as("b"),
-        col("a.h1") === col("b.h1") && col("a.h2") === col("b.h2") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          greatest(col("a.n_sh"), col("b.n_sh")) * tau <=
-            least(col("a.n_sh"), col("b.n_sh")))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val hs = sh.select(col("doc_id"), array_distinct(transform(col("sh"),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("hs"))
-    cands
-      .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hsa")), "doc_a")
-      .join(hs.select(col("doc_id").as("doc_b"), col("hs").as("hsb")), "doc_b")
-      .withColumn("common", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jac", col("common").cast("double") /
-        (size(col("hsa")) + size(col("hsb")) - col("common")))
-      .filter(col("jac") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
+    val cands = bandedPairs(prefix, "doc_id", Seq("h1", "h2"),
+      carry = Seq(col("a.n_sh").as("na"), col("b.n_sh").as("nb")),
+      verify = greatest(col("na"), col("nb")) * tau <= least(col("na"), col("nb")))
+    verifyHashedJaccard(cands, sh, tau)
   }
 
   /** d19 gate constant — single source of truth for plan + oracle. */
@@ -1184,43 +1215,10 @@ object Dedup {
       posexplode(array((0 until tables).map(t =>
         lshBucket(col("v"), planes, dim, t * planes)): _*))
         .as(Seq("tbl", "bucket")))
-    // Score INSIDE the bucket join and filter before the pair-dedup: a
-    // pair colliding in t tables is scored t times (map-side codegen
-    // arithmetic, ~dim flops a repeat), but the dropDuplicates shuffle
-    // then carries only surviving (id, id, cos) rows — 24 bytes each —
-    // instead of every candidate with two dim-wide double arrays.
-    // Measured at sf0.1 (2000 × dim-64, ~2M candidates): 11.9 s → ~3 s;
-    // at 100 TB the array-free dedup shuffle is the difference between
-    // a bounded exchange and re-shipping the corpus ×L.
-    //
-    // Explicit partition count on the bucket exchange (guide §2.6):
-    // the shuffle carries few BYTES (one row per (vector, table)), so
-    // AQE's byte-sized coalescing ran the whole Σ bucket² candidate
-    // scoring in ONE post-shuffle task (measured on s14 at sf0.1: a
-    // single 1.4-1.8 s task, 31 of 32 cores idle) — the compute
-    // explodes AFTER the exchange, where the coalescer cannot see it.
-    // A user-specified count disables coalescing for exactly this
-    // shuffle; (tbl, bucket) keys spread the groups across cores, and
-    // the join output is partitioning-independent (same keys, same
-    // rows, pair-dedup after).
-    val bkp = bk.repartition(
-      e.sparkSession.sparkContext.defaultParallelism,
-      col("tbl"), col("bucket"))
-    if (flips == 0) {
-      bkp.as("a").join(bkp.as("b"),
-          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          round(call_function("array_dot", col("a.v"), col("b.v")), 6).as("cos"))
-        .filter(col("cos") >= tau)
-        .dropDuplicates("vec_a", "vec_b")
-    } else {
-      // probe side: per (vector, table), the own bucket plus the
-      // probeFlips lowest-|margin| single-bit flips (margins ranked by
-      // (|projection|, plane index) — deterministic, like s15). The
-      // join is ASYMMETRIC (probe rows × one-bucket index rows), so a
-      // pair is found when EITHER endpoint probes the other's bucket —
-      // canonicalize with least/greatest before the pair-dedup.
+    // probe side: per (vector, table), the own bucket plus the
+    // probeFlips lowest-|margin| single-bit flips (margins ranked by
+    // (|projection|, plane index) — deterministic, like s15)
+    val probes = if (flips == 0) None else {
       val perTable = array((0 until tables).map { t =>
         struct(lit(t).as("tbl"),
           lshBucket(col("v"), planes, dim, t * planes).as("qb"),
@@ -1231,25 +1229,22 @@ object Dedup {
               lit(j).as("j"))
           }: _*).as("ms"))
       }: _*)
-      val probes = e
+      Some(e
         .select(col("vec_id"), col("v"), explode(perTable).as("ts"))
         .select(col("vec_id"), col("v"), col("ts.tbl").as("tbl"),
           explode(concat(array(col("ts.qb")),
             expr(s"transform(slice(array_sort(ts.ms), 1, $flips)," +
-              " s -> ts.qb ^ shiftleft(1, s.j))"))).as("bucket"))
-      probes.repartition(
-          e.sparkSession.sparkContext.defaultParallelism,
-          col("tbl"), col("bucket"))
-        .as("a").join(bkp.as("b"),
-          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(
-          least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
-          greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"),
-          round(call_function("array_dot", col("a.v"), col("b.v")), 6).as("cos"))
-        .filter(col("cos") >= tau)
-        .dropDuplicates("vec_a", "vec_b")
+              " s -> ts.qb ^ shiftleft(1, s.j))"))).as("bucket")))
     }
+    // cos is scored inside the bucket join, once per colliding table
+    // (~dim flops a repeat), so the pair dedupe ships 24-byte
+    // (id, id, cos) survivors instead of every candidate with two
+    // dim-wide arrays: measured at sf0.1 (2000 × dim-64, ~2M
+    // candidates) 11.9 s → ~3 s
+    bandedPairs(bk, "vec_id", Seq("tbl", "bucket"),
+      carry = Seq(round(call_function("array_dot", col("a.v"), col("b.v")), 6)
+        .as("cos")),
+      verify = col("cos") >= tau, probes = probes)
   }
 
   /** Intra-document repetition REMOVAL: within each document, repeated

@@ -610,10 +610,6 @@ object Multimodal {
     * candidates verified by popcount of the XOR. Byte-different
     * brightness variants land at hamming 0 — the pairs m05's exact
     * content hash can never produce.
-    *
-    * Scale shape: the banded self-join is Σ bucket² per 65,536-bucket
-    * band over 8-byte keys; the decode cost is map-side and the join
-    * input is 24 B/row — the blobs stay in the scan stage.
     */
   def perceptualNearDupPairs(spark: SparkSession, docs: DataFrame,
       maxHam: Int = 3,
@@ -623,21 +619,27 @@ object Multimodal {
     // no cross-family ham≤3 collisions — no resolution change needed
     val hashed = perceptualHashes(spark, docs,
       linearFamilies.getOrElse(PatFamilies), linearFamilies.isDefined)
+    hammingPairs(hashed, "dhash", bands = 4, width = 16, maxHam)
+  }
+
+  /** m06–m08's banded hamming join: `h` (a long) split into `bands`
+    * blocks of `width` bits, docs sharing any block become candidates
+    * ([[Dedup.bandedPairs]]), verified by popcount of the XOR.
+    * Returns (doc_a, doc_b, ham) with ham <= maxHam.
+    */
+  private def hammingPairs(hashed: DataFrame, h: String, bands: Int,
+      width: Int, maxHam: Int): DataFrame = {
+    // the band table feeds both sides of the self-join: scope-cache
+    // it so the map-side decode runs once per doc
     val rows = Dedup.scopedCache(hashed
-      .select(col("doc_id"), col("dhash"),
-        posexplode(array((0 until 4).map(j =>
-          shiftrightunsigned(col("dhash"), 16 * j)
-            .bitwiseAND(lit(0xffffL))): _*)).as(Seq("bpos", "bval"))))
-    rows.as("a").join(rows.as("b"),
-        col("a.bpos") === col("b.bpos") && col("a.bval") === col("b.bval") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.dhash").as("ha"), col("b.dhash").as("hb"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("ham",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-      .filter(col("ham") <= maxHam)
-      .select(col("doc_a"), col("doc_b"), col("ham"))
+      .select(col("doc_id"), col(h),
+        posexplode(array((0 until bands).map(j =>
+          shiftrightunsigned(col(h), width * j)
+            .bitwiseAND(lit((1L << width) - 1))): _*)).as(Seq("bpos", "bval"))))
+    Dedup.bandedPairs(rows, "doc_id", Seq("bpos", "bval"),
+      carry = Seq(bit_count(col(s"a.$h").bitwiseXOR(col(s"b.$h")))
+        .cast("int").as("ham")),
+      verify = col("ham") <= maxHam)
   }
 
   // ---- m07: perceptual audio near-dup (energy-gradient fingerprint) ----
@@ -878,9 +880,6 @@ object Multimodal {
     * perturbations always land inside), candidates verified by
     * popcount. Polarity-inverted copies collide at hamming 0 with
     * different bytes — pairs the exact m05 hash never finds.
-    *
-    * Scale shape: as m06 — Σ bucket² per 16-bucket band over 2-byte
-    * keys; decode is map-side, join input ~20 B/row.
     */
   def audioNearDupPairs(spark: SparkSession, docs: DataFrame,
       maxHam: Int = 3,
@@ -907,21 +906,7 @@ object Multimodal {
       families = linearFamilies.getOrElse(AudFamilies),
       envSteps = linearFamilies.map(_ => f),
       mixed = linearFamilies.isDefined)
-    val rows = Dedup.scopedCache(hashed
-      .select(col("doc_id"), col("afp"),
-        posexplode(array((0 until bands).map(j =>
-          shiftrightunsigned(col("afp"), width * j)
-            .bitwiseAND(lit((1L << width) - 1))): _*)).as(Seq("bpos", "bval"))))
-    rows.as("a").join(rows.as("b"),
-        col("a.bpos") === col("b.bpos") && col("a.bval") === col("b.bval") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.afp").as("ha"), col("b.afp").as("hb"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("ham",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-      .filter(col("ham") <= maxHam)
-      .select(col("doc_a"), col("doc_b"), col("ham"))
+    hammingPairs(hashed, "afp", bands, width, maxHam)
   }
 
   // ---- m08: perceptual video near-dup (temporal dHash signature) ----
@@ -1119,10 +1104,7 @@ object Multimodal {
     * (pigeonhole still gives full recall for hamming ≤ 3 across the
     * whole signature). Re-encoded copies collide at hamming 0 with
     * different bytes; single-frame perturbations land at hamming ≤ 2.
-    *
-    * Scale shape: as m06/m07 — Σ bucket² per 65,536-bucket band over
-    * 8-byte keys; decode is map-side, join input 24 B/row, and the
-    * resolution lever at a grown corpus is more sampled frames /
+    * The resolution lever at a grown corpus is more sampled frames /
     * cells per frame (the d09/m07 log-n rule).
     */
   def videoNearDupPairs(spark: SparkSession, docs: DataFrame,
@@ -1135,21 +1117,7 @@ object Multimodal {
     // growth is needed (the container profile's 4-frame cap stands)
     val hashed = videoSignatures(spark, docs,
       linearFamilies.getOrElse(VidFamilies), linearFamilies.isDefined)
-    val rows = Dedup.scopedCache(hashed
-      .select(col("doc_id"), col("vfp"),
-        posexplode(array((0 until VidFramesSampled).map(j =>
-          shiftrightunsigned(col("vfp"), 16 * j)
-            .bitwiseAND(lit(0xffffL))): _*)).as(Seq("bpos", "bval"))))
-    rows.as("a").join(rows.as("b"),
-        col("a.bpos") === col("b.bpos") && col("a.bval") === col("b.bval") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.vfp").as("ha"), col("b.vfp").as("hb"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("ham",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-      .filter(col("ham") <= maxHam)
-      .select(col("doc_a"), col("doc_b"), col("ham"))
+    hammingPairs(hashed, "vfp", VidFramesSampled, width = 16, maxHam)
   }
 
   val queries: Map[String, Q] = Map(

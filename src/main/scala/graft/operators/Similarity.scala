@@ -74,8 +74,9 @@ object Similarity {
       lshBucket(asDoubles(col("embedding")), nPlanes, dim).as("bucket"))
   }
 
-  /** Within-bucket candidate pairs scored with exact cosine, keeping
-    * pairs above tau — the LSH-accelerated near-neighbor join.
+  /** Within-bucket candidate pairs ([[Dedup.bandedPairs]] on the one
+    * bucket) scored with exact cosine, keeping pairs above tau — the
+    * LSH-accelerated near-neighbor join.
     */
   def lshCandidatePairs(embs: DataFrame, tau: Double, nPlanes: Int = 8,
       dim: Int = 64): DataFrame = {
@@ -83,12 +84,10 @@ object Similarity {
     val b = embs.select(col("vec_id"),
       asDoubles(col("embedding")).as("v"),
       lshBucket(asDoubles(col("embedding")), nPlanes, dim).as("bucket"))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        col("a.bucket").as("bucket"),
-        round(cosineFast("a.v", "b.v"), 6).as("cos"))
-      .filter(col("cos") >= tau)
+    Dedup.bandedPairs(b, "vec_id", Seq("bucket"),
+      carry = Seq(col("a.bucket").as("bucket"),
+        round(cosineFast("a.v", "b.v"), 6).as("cos")),
+      verify = col("cos") >= tau)
   }
 
   /** Lloyd's k-means trainer for IVF centroids (spherical variant:

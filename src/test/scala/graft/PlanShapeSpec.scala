@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Pipelines, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Pipelines, Similarity, TextAnalysis}
 
 /** Physical-plan shape assertions for the round-5 pipeline operators —
   * the properties that make them scale are visible in the plan, so pin
@@ -139,6 +139,55 @@ class PlanShapeSpec extends SparkSpec {
     // the rarest-first rank window partitions by doc_id, never globally
     assert(plan.contains("hashpartitioning(doc_id"),
       s"rank window not doc-keyed:\n$plan")
+  }
+
+  // The banded candidate joins all run Dedup.bandedPairs: the (band,
+  // key) rows and the verified pairs exchange at an explicit
+  // defaultParallelism count, which AQE's byte-sized coalescing cannot
+  // squeeze into one task ahead of the Σ bucket² scoring or the verify.
+  private def explicitExchange(cols: String*) = cols
+    .map(k => s"$k#\\d+L?")
+    .mkString("hashpartitioning\\(", ", ",
+      s", ${spark.sparkContext.defaultParallelism}\\), REPARTITION_BY_NUM").r
+
+  private def bandExchangeTest(gate: String, keys: String*)(
+      df: => org.apache.spark.sql.DataFrame): Unit =
+    test(s"$gate exchanges its (${keys.mkString(", ")}) rows at " +
+        "defaultParallelism, no cartesian") {
+      val plan = planOf(df)
+      assert(explicitExchange(keys: _*).findFirstIn(plan).nonEmpty,
+        s"no explicit (${keys.mkString(", ")}) exchange:\n$plan")
+      assert(!plan.contains("CartesianProduct"), s"cartesian:\n$plan")
+    }
+
+  private def sf0001(table: String) = {
+    val path = s"/root/testdata/sf0.001/$table.parquet"
+    assume(new java.io.File(path).exists())
+    spark.read.parquet(path)
+  }
+
+  bandExchangeTest("d03 minhash LSH", "band", "key")(
+    Dedup.minhashLshPairs(docs, 0.5))
+  bandExchangeTest("d04 simhash", "bpos", "bval")(Dedup.simhashPairs(docs))
+  bandExchangeTest("d09 embedding LSH", "tbl", "bucket")(
+    Dedup.embeddingPairsLsh(sf0001("embeddings"), 0.3, nTables = 8,
+      probeFlips = 0))
+  bandExchangeTest("d09 multi-probe embedding LSH", "tbl", "bucket")(
+    Dedup.embeddingPairsLsh(sf0001("embeddings"), 0.3, nTables = 4,
+      probeFlips = 2))
+  bandExchangeTest("d18 prefix join", "h1", "h2")(
+    Dedup.prefixJaccardJoin(docs, 0.5))
+  bandExchangeTest("s03 LSH pairs", "bucket")(
+    Similarity.lshCandidatePairs(sf0001("embeddings"), 0.3))
+  bandExchangeTest("m06 perceptual near-dup", "bpos", "bval")(
+    Multimodal.perceptualNearDupPairs(spark,
+      sf0001("documents").select("doc_id", "text")))
+
+  test("d18's verify reads an explicit pair exchange: the dedupe " +
+      "cannot coalesce the Jaccard verify into one task") {
+    val plan = planOf(Dedup.prefixJaccardJoin(docs, 0.5))
+    assert(explicitExchange("doc_a", "doc_b").findFirstIn(plan).nonEmpty,
+      s"no explicit pair exchange:\n$plan")
   }
 
   test("bm25 filters map-side, broadcasts stats, and takes top-k without a global sort") {
