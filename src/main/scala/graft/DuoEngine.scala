@@ -473,10 +473,9 @@ final class DuoEngine(val spark: SparkSession, root: String,
   /** The COMMITTED log table as of one retained generation — the
     * operational question the storage engine's retained history
     * answers in one call: "what did this table hold before the last
-    * retention/compaction?". Deliberately excludes the
-    * hot memory view and staged flushes: version history covers
-    * commits, and the un-drained ingest tail has no generation
-    * coordinate. Conformed to the live registry schema like every
+    * retention/compaction?". Deliberately excludes the hot memory
+    * view: version history covers commits, and un-flushed rows have
+    * no generation coordinate. Conformed to the live registry schema like every
     * engine log view. None when the generation is pruned: history
     * keeps the newest three and all younger than
     * [[graft.store.StoreManifest.RetainMs]] (the default vacuum grace).

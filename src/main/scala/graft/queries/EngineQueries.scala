@@ -384,9 +384,9 @@ object EngineQueries {
         // minute-partitioned [[graft.store.ParquetStore.write]] would
         // cut each flush into ~1,750 one-row files (measured: 3,504
         // files, 41 s of sink time and a 3,500-file listing on every
-        // query pass) — writeStaged lands each flush as ONE appended
-        // file, read() unions it in, and compact() owns the layout,
-        // the LSM split a real deployment's flush cadence uses
+        // query pass) — writeStaged lands each flush as ONE unpartitioned
+        // file committed like any append, and compact() owns the
+        // layout, the LSM split a real deployment's flush cadence uses
         // persist before the two actions: foreachBatch hands a plain
         // DataFrame, so isEmpty and writeStaged would otherwise each
         // re-execute the whole upstream stateful merge (guide §5
@@ -710,7 +710,7 @@ object EngineQueries {
 
   /** g07: the reference-shaped PREFIX-LISTING read path oracle-gated —
     * [[graft.store.TimePrefix]]'s minimal-prefix enumeration over the
-    * real hive tree plus the staged-flush union, the exact
+    * real hive tree plus the staged flush's files, the exact
     * ListingTable-over-prefixes plan the reference runs
     * (duo/src/partition/query.rs:38-60, duo/src/utils.rs:36-181).
     * Previously spec-only (the 9 reference rstest vectors + store
@@ -721,9 +721,9 @@ object EngineQueries {
     * compressed onto a fixed 3-hour window, as THREE flushes: two
     * through the partitioned [[graft.store.ParquetStore.write]] (so
     * minute dirs hold multiple files) and one through
-    * [[graft.store.ParquetStore.writeStaged]] (so the staging union —
-    * the round-13 read-API-agreement fix — is on the hashed path,
-    * not just spec'd). The query range starts and ends MID-MINUTE
+    * [[graft.store.ParquetStore.writeStaged]] (so the staged files'
+    * covered-minute filter — the round-13 read-API-agreement fix — is
+    * on the hashed path, not just spec'd). The query range starts and ends MID-MINUTE
     * with nonzero seconds, pinning the reference's directory-granular
     * contract: covered minutes = [floorMin(start), truncMin(end) +
     * 1), rows outside the µs range but inside covered minutes ARE
@@ -790,7 +790,7 @@ object EngineQueries {
     prefixReadQuery(s, g07Store(s, d), g07Logs(eventsAsLogs(s, d)).schema)
 
   /** Scale-probe entry: the whole g07 path (three flushes → prefix
-    * listing + staged union) over a caller-supplied events frame.
+    * listing + staged files) over a caller-supplied events frame.
     */
   private[graft] def prefixReadRun(s: SparkSession, ev: DataFrame): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("g07_probe")
@@ -1011,13 +1011,14 @@ object EngineQueries {
   /** g14: TIME TRAVEL under the oracle hash — the table AS OF a
     * pinned retained generation, answered through the ENGINE surface
     * ([[graft.DuoEngine.logTableAsOf]]). g10's five-day feed lands as
-    * two live staged flushes, then three committed generations follow:
-    * A = the full table drained at day grain, B = the same rows
-    * re-laid at hour grain (a pure re-layout commit), C = expiry of
-    * the first two days (the current truth, a strict subset). The gate
-    * then vacuums WITHIN the grace window (reclaiming nothing — the
-    * isolation contract), pins the OLDEST retained generation, and
-    * answers the full-table aggregate from it; the oracle is the
+    * two staged flushes (a generation each), then three more
+    * generations follow: A = the full table drained at day grain,
+    * B = the same rows re-laid at hour grain (a pure re-layout
+    * commit), C = expiry of the first two days (the current truth, a
+    * strict subset). The gate then vacuums WITHIN the grace window
+    * (reclaiming nothing — the isolation contract), pins generation A
+    * by its audit line, and answers the full-table aggregate from
+    * it; the oracle is the
     * PRE-expiry table, so a readGeneration that silently fell through
     * to the newest truth would fail the hash (the in-gate count check
     * makes that loud first). History reaching exactly as far as the
@@ -1047,8 +1048,12 @@ object EngineQueries {
     val gens = engine.generations("log")
     if (gens.size < 3) sys.error(
       s"g14: expected 3 retained generations, got ${gens.size}")
-    val asOf = engine.logTableAsOf(gens.head).getOrElse(
-      sys.error("g14: oldest retained generation unreadable"))
+    val infos = st.generationInfos()
+    val genA = gens.find(g => infos.get(g).flatten.exists(
+      _.startsWith("""{"op":"compact","granularity":"day","""))).getOrElse(
+      sys.error("g14: the day-grain compaction is not retained"))
+    val asOf = engine.logTableAsOf(genA).getOrElse(
+      sys.error("g14: generation A unreadable"))
     // time travel must reach a DIFFERENT truth than the current
     // table — otherwise this gate could not tell an as-of read from a
     // fallen-through read of the newest generation

@@ -40,7 +40,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Multiple independent consumers coexist (one cursor file each under
   * `_cdc/`); the underscore prefix hides the directory from Spark's
-  * partition discovery like `_staging`/`_manifest`.
+  * partition discovery like `_manifest` and the `_gen-*` trees.
   */
 final class CdcFeed private[store] (store: ParquetStore,
     fs: org.apache.hadoop.fs.FileSystem, tableDir: String,

@@ -83,12 +83,16 @@ object ManifestFileIndex {
       dataSchema: Option[StructType],
       logicalRel: String => String = identity): Option[DataFrame] = {
     if (entries.isEmpty) return None
+    // qualified like Spark's own listing index: an unpartitioned
+    // relation finds its files by the qualified root dir
+    val base = new Path(tableDir)
+    val root = StoreFs.fs(base).makeQualified(base)
     val files = entries.map(e =>
-      new Path(s"$tableDir/${logicalRel(e.rel)}").getParent ->
+      new Path(s"$root/${logicalRel(e.rel)}").getParent ->
         new FileStatus(e.size, false, 1, NominalBlockSize, e.mtime,
-          new Path(s"$tableDir/${e.rel}")))
+          new Path(s"$root/${e.rel}")))
     val statuses = files.map(_._2)
-    val index = new ManifestFileIndex(spark, new Path(tableDir), files)
+    val index = new ManifestFileIndex(spark, root, files)
     val fmt = new ParquetFileFormat()
     val opts = Map("mergeSchema" -> "true")
     // all-nullable mirrors DataSource.resolveRelation's asNullable, so

@@ -27,11 +27,11 @@ import org.apache.spark.sql.types.StructType
   * the ROOT's scheme ([[StoreFs]]), so the same store code serves a
   * local path, an HDFS URI, or an `s3a://bucket/...` root.
   *
-  * One landing path: every append ([[write]]) and rewrite lands a
-  * `_gen-*` tree and publishes a [[StoreManifest]] generation, so a
-  * written store plans every read from its manifest and schema.
-  * Listing mode remains for duo's native layout and stores fed only
-  * through [[writeStaged]], until a [[write]] or [[compact]].
+  * One landing path: every append ([[write]], [[writeStaged]]) and
+  * rewrite lands a `_gen-*` tree and publishes a [[StoreManifest]]
+  * generation, so a written store plans every read from its manifest
+  * and schema. Listing mode remains only for duo's native layout,
+  * until the first commit folds it in.
   *
   * Snapshot isolation (round-16; the reference has no analog — it
   * never rewrites files, duo/src/partition/writer.rs:55-59): layout
@@ -215,10 +215,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * capability the commit protocol gives for free: a generation's
     * entries still name on-disk files until vacuum's grace passes, so
     * planning from an older generation answers exactly the table that
-    * generation committed (partition pruning and schema included).
-    * Staged flushes are deliberately excluded: `_staging` is the
-    * unversioned ingest tail — rows enter version history when a
-    * drain commits them. None when the generation is pruned/corrupt or
+    * generation committed (partition pruning and schema included),
+    * staged landings ([[writeStaged]]) included: each is a commit of
+    * its own. None when the generation is pruned/corrupt or
     * names already-vacuumed files' tree shape (execution would then
     * fail on the missing files — time travel reaches as far as
     * retention ([[generations]]) and the vacuum grace allow).
@@ -470,16 +469,42 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * Rows spanning a WIDE event-time range belong in [[writeStaged]].
     */
   def write(batch: DataFrame, info: Option[String] = None): Unit =
-    if (truth().isEmpty) mutation(append(batch, info))
-    else try append(batch, info) finally bumpEpoch()
+    commitAppend(batch, info, landGenTree)
 
-  private def append(batch: DataFrame, info: Option[String]): Unit = {
+  /** Fast append for flushes whose EVENT-TIME spread would explode the
+    * hive layout into thousands of tiny partition files — a streamed
+    * ingest's cadenced flushes or a historical backfill (the w11
+    * measurement: 2 flushes of a 7-year-spread span feed through
+    * [[write]] = ~3,500 files and a 41 s sink). The batch lands
+    * unpartitioned at the root of a fresh `_gen-*` tree, with NO
+    * shuffle and no layout cost, and commits like a [[write]]: its
+    * files are manifest entries at logical depth 0, in the catch-all
+    * `""` partition every window admits. [[read]] filters them by the
+    * row time predicate alone (directory pruning is deferred), and
+    * [[compact]] folds them into the partitioned layout. This is the
+    * LSM-shaped ingest split every real columnar store uses: land fast
+    * now, organize in the background.
+    */
+  def writeStaged(batch: DataFrame): Unit =
+    commitAppend(batch, None, (rows, gen) => rows.write.mode("overwrite")
+      .option("parquet.bloom.filter.enabled#trace_id", "true")
+      .option("parquet.bloom.filter.expected.ndv#trace_id",
+        bloomNdv.toString)
+      .parquet(s"$dir/$gen"))
+
+  private def commitAppend(batch: DataFrame, info: Option[String],
+      land: (DataFrame, String) => Unit): Unit =
+    if (truth().isEmpty) mutation(append(batch, info, land))
+    else try append(batch, info, land) finally bumpEpoch()
+
+  private def append(batch: DataFrame, info: Option[String],
+      land: (DataFrame, String) => Unit): Unit = {
     fence()
     val batchSchema = StoreManifest.allNullable(batch.schema)
     val gen = newGenName()
     landing.add(gen): Unit
     try {
-      landGenTree(batch, gen)
+      land(batch, gen)
       beforeCommit()
       val landed = manifest.walkSubtree(gen)
       commitLock.synchronized {
@@ -512,18 +537,18 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * mid-history removals a single jump would net out).
     *
     * Partition-scoped, the [[compactDate]] discipline: only the sink
-    * date partitions the removed rows' own times touch are read,
-    * anti-joined (key set distinct'd and broadcast by AQE when small)
-    * and rewritten into the fresh `_gen-*` tree the adds land in —
-    * O(touched dates) data movement, never the table. The one
+    * date partitions the removed rows' own times touch, plus the
+    * unpartitioned [[writeStaged]] landings (any of their rows may
+    * carry a removed key), are read, anti-joined (key set distinct'd
+    * and broadcast by AQE when small) and rewritten into the fresh
+    * `_gen-*` tree the adds land in — O(touched dates + staged) data
+    * movement, never the table. The one
     * generation publish (drops = the touched partitions' prior files,
     * adds = the rewrite + appends, caller `info` recording which
     * increment landed) is the same rename atom every commit uses, so
     * the exactly-once handshake holds: a crash before it leaves an
     * orphan tree and a replayable increment, after it a healable
-    * cursor. Contract: the store must be commit-owned (no
-    * [[writeStaged]] landings — mirror removal rewrites manifested
-    * files only), and a consumer `transform` must preserve `keyCols`
+    * cursor. Contract: a consumer `transform` must preserve `keyCols`
     * and the time column (they are the row identity and the partition
     * coordinate the removal is applied in).
     */
@@ -531,16 +556,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       keyCols: Seq[String], info: Option[String] = None): Unit = mutation {
     require(keyCols.nonEmpty, "applyMirror needs row-identity keyCols")
     fence()
-    // commit-owned contract ENFORCED, not narrated (ADVICE r20):
-    // staged files are invisible to the manifest truth this rewrite
-    // plans from, so a removed key living in one would silently
-    // survive the mirror — the worst failure class. A mirror sink fed
-    // by anything other than manifest commits fails loudly here.
-    val stagedN = stagedFileCount
-    require(stagedN == 0,
-      s"applyMirror requires a commit-owned sink: $stagedN staged " +
-        s"file(s) under $dir — writeStaged() landings cannot " +
-        "participate in mirror removal")
     // the removed side is read TWICE (affected dates here, the
     // anti-join build below) and it is a generation-diff plan over
     // source files — persist so each mirror step scans those files
@@ -558,10 +573,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       affectedDates(StoreManifest.dateKeyOf(pk).stripPrefix("date="))
     val t = truthFor(Some(admits))
     val allEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
+    // a staged (depth-0) file has no date to scope by: any of its
+    // rows may carry a removed key, so it is rewritten with the dates
     val affected = allEntries.filter { e =>
       val l = logicalRel(e.rel)
       val i = l.indexOf('/')
-      i > 0 && affectedDates(l.substring(0, i).stripPrefix("date="))
+      if (i < 0) affectedDates.nonEmpty
+      else affectedDates(l.substring(0, i).stripPrefix("date="))
     }
     val survivors = removedCached.flatMap { r =>
       relationFor(affected, t.flatMap(_.schema)).map(
@@ -606,7 +624,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   }
 
   /** Replace the WHOLE table with `batch` in one manifest commit
-    * (None = truncate): every prior main and staged file is
+    * (None = truncate): every prior file is
     * tombstoned, the new rows (if any) land in a fresh `_gen-*` tree,
     * and the single generation publish flips the truth — the
     * transactional landing a mirror consumer's RESYNC takes
@@ -626,14 +644,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       if (batch.isDefined) manifest.walkSubtree(gen) else Nil
     val now = System.currentTimeMillis()
     val priorEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
-    val priorStaged = stagedStatuses(t.map(_.deadRels).getOrElse(Set.empty))
     commitOver(t.map(_.gen)) { (parent, appended, widen) =>
       manifest.publish(landed ++ appended,
         widen(batch.map(b => StoreManifest.allNullable(b.schema))),
         t.map(_.dead).getOrElse(Nil) ++
-          (priorEntries.map(_.rel) ++
-            priorStaged.map(s => s"_staging/${s.getPath.getName}"))
-            .map(StoreManifest.Dead(_, now)),
+          priorEntries.map(e => StoreManifest.Dead(e.rel, now)),
         parent = parent, info = info): Unit
     }
   }
@@ -664,31 +679,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   def exists: Boolean = fs.exists(new Path(dir))
 
-  private def stagingDir = s"$dir/_staging"
-
-  /** Fast append for flushes whose EVENT-TIME spread would explode the
-    * hive layout into thousands of tiny partition files — a streamed
-    * ingest's cadenced flushes or a historical backfill (the w11
-    * measurement: 2 flushes of a 7-year-spread span feed through
-    * [[write]] = ~3,500 files and a 41 s sink). The batch lands as
-    * plain unpartitioned files under `_staging` — an
-    * underscore-prefixed subtree, so the partitioned reader's
-    * discovery never sees it — with NO shuffle and no layout cost;
-    * [[read]] unions staged rows in (with the same time predicate —
-    * row-level pruning still applies, only directory pruning is
-    * deferred), and [[compact]] drains staging into the partitioned
-    * layout. This is the LSM-shaped ingest split every real columnar
-    * store uses: land fast now, organize in the background.
-    */
-  def writeStaged(batch: DataFrame): Unit = mutation {
-    fence()
-    batch.write.mode("append")
-      .option("parquet.bloom.filter.enabled#trace_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#trace_id",
-        bloomNdv.toString)
-      .parquet(stagingDir)
-  }
-
   // ---- truth resolution (what IS the table right now) ----
 
   /** The planning state one read or mutation works from: the newest
@@ -697,7 +687,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * listing mode (never written through [[write]] or compacted, or
     * catastrophic manifest loss).
     */
-  private def truth(): Option[StoreManifest.Snapshot] = manifest.read()
+  private def truth(): Option[StoreManifest.Snapshot] = truthFor(None)
 
   /** [[truth]] restricted to the partitions `admit` passes (see
     * [[StoreManifest.readStateFor]]): only admitted partitions'
@@ -707,8 +697,33 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * mutations that republish absolute state use the full form.
     */
   private def truthFor(
-      admit: Option[String => Boolean]): Option[StoreManifest.Snapshot] =
-    admit.fold(truth())(manifest.readStateFor)
+      admit: Option[String => Boolean]): Option[StoreManifest.Snapshot] = {
+    refuseLeftoverStaging()
+    admit.fold(manifest.read())(manifest.readStateFor)
+  }
+
+  /** An older binary's [[writeStaged]] appended plain files under
+    * `_staging`, which no generation lists, so planning from the
+    * manifest would silently drop their rows. Such a store is refused
+    * loudly, reads and commits alike, until an older binary's
+    * compact() folds them (files it tombstoned are already in the
+    * table and pass). Probed once per instance: one `exists`, plus a
+    * listing only when the directory is there.
+    */
+  @volatile private var stagingChecked = false
+  private def refuseLeftoverStaging(): Unit = if (!stagingChecked) {
+    val staging = new Path(dir, "_staging")
+    if (fs.exists(staging)) {
+      val dead = manifest.read().map(_.deadRels).getOrElse(Set.empty)
+      ls(staging).map(_.getPath.getName)
+        .find(n => n.endsWith(".parquet") && !dead(s"_staging/$n"))
+        .foreach(n => throw new IllegalStateException(s"$dir: leftover " +
+          s"_staging/$n from an older binary's writeStaged — its rows " +
+          "are in no generation; run compact() with a build at or " +
+          "before commit cc40fcd to fold them, then reopen the store"))
+    }
+    stagingChecked = true
+  }
 
   /** Partition-admit function for a µs time window: the session-zone
     * calendar dates the window can touch (the same derivation the
@@ -771,6 +786,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   private def treeRootOf(rel: String): String =
     if (rel.startsWith("_gen-")) rel.take(rel.indexOf('/')) else ""
 
+  /** Partition depth of a rel's logical path: 0 = a [[writeStaged]]
+    * file, 1 = date, 2 = hour, 3 = minute grain.
+    */
+  private def depthOf(rel: String): Int = logicalRel(rel).count(_ == '/')
+
   /** Plan the given entries as a DataFrame with ZERO filesystem
     * listings: one [[ManifestFileIndex]] per partition depth, whatever
     * tree each file lives in (the index parses partition values from
@@ -778,166 +798,133 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * depth plan as ONE relation — a window over a day of flush trees
     * is one scan, not a union per flush). Spark's partition-path
     * parser refuses mixed `date=…` depths in one relation, so a
-    * mixed-grain store unions one relation per depth by name.
+    * mixed-grain store unions one relation per depth by name, each
+    * first passed through `perDepth` (depth, relation) — the hook a
+    * read prunes every grain at its own granularity with.
     * Partition columns, pruning and types are identical to a
     * directory read.
     */
   private def relationFor(entries: Seq[StoreManifest.Entry],
-      schema: Option[StructType]): Option[DataFrame] = {
+      schema: Option[StructType],
+      perDepth: (Int, DataFrame) => DataFrame = (_, df) => df)
+      : Option[DataFrame] = {
     if (entries.isEmpty) return None
-    val byDepth = entries.groupBy(e => logicalRel(e.rel).count(_ == '/'))
-    val parts = byDepth.toSeq.sortBy(_._1).flatMap { case (_, es) =>
+    val byDepth = entries.groupBy(e => depthOf(e.rel))
+    val parts = byDepth.toSeq.sortBy(_._1).flatMap { case (d, es) =>
       ManifestFileIndex.relation(spark, dir, es, schema, logicalRel)
+        .map(perDepth(d, _))
     }
     parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** The legacy tree / the staging tree as DataFrames via Spark
-    * directory discovery, None when that side holds no data yet. Only
-    * the no-manifest mode plans this way. Schema inference doubles as
-    * the distributed "any files?" probe — a driver-side walk would not
-    * scale to a real store's file count.
+  /** The legacy tree as a DataFrame via Spark directory discovery,
+    * None when it holds no data yet. Only the no-manifest mode plans
+    * this way. Schema inference doubles as the distributed "any
+    * files?" probe — a driver-side walk would not scale to a real
+    * store's file count.
     */
   private def tryRead(path: String): Option[DataFrame] = {
     if (!fs.exists(new Path(path))) return None
     try Some(spark.read.option("mergeSchema", "true").parquet(path))
     catch {
       // "Unable to infer schema ... It must be specified manually" —
-      // the path exists but holds no parquet footers (a main tree
-      // whose only child is the fresh staging dir)
+      // the path exists but holds no parquet footers
       case _: org.apache.spark.sql.AnalysisException => None
     }
-  }
-
-  /** Staged parquet files still live (listing minus tombstones: a
-    * drained staged file stays on disk until vacuum, but is no longer
-    * part of the table).
-    */
-  private def stagedStatuses(deadRels: Set[String]): Seq[FileStatus] =
-    ls(new Path(stagingDir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-        !deadRels(s"_staging/${s.getPath.getName}"))
-
-  private def readStaged(deadRels: Set[String]): Option[DataFrame] = {
-    val files = stagedStatuses(deadRels)
-    if (files.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true")
-      .parquet(files.map(_.getPath.toString): _*))
   }
 
   /** Read with optional µs time-range pruning pushed onto the partition
     * columns; mergeSchema covers dynamic log-schema drift across files
     * (the reference's open FIXME at duo/src/partition/query.rs:72-75).
-    * Partition columns are dropped after pruning so the result matches
-    * the logical table schema.
+    * Each partition depth is pruned at its own grain before the union
+    * ([[relationFor]]), and partition columns are dropped after
+    * pruning so the result matches the logical table schema.
     */
   def read(startUs: Option[Long], endUs: Option[Long]): Option[DataFrame] = {
     if (!exists) return None
-    val rowPred: Option[org.apache.spark.sql.Column] = (startUs, endUs) match {
+    val window: (Int, DataFrame) => DataFrame = (depth, df) =>
+      prunedTo(depth, df, startUs, endUs).drop("date", "hour", "minute")
+    // windowed reads assemble only the dates the window admits — the
+    // manifest prune that keeps plan wall ∝ window as the table grows
+    truthFor(dateAdmitOf(startUs, endUs)) match {
+      case Some(tr) => relationFor(tr.entries, tr.schema, window)
+      case None =>
+        tryRead(dir).map { b =>
+          val d = Seq("date", "hour", "minute").count(b.columns.contains)
+          window(d, b)
+        }
+    }
+  }
+
+  /** `base`, one relation at partition depth `depth`, restricted to
+    * the µs window: a partition predicate at the relation's own grain
+    * (none for depth-0 staged files) plus the exact row predicate on
+    * the time column; both push down (partition pruning + parquet
+    * row-group stats). The partition predicate is conservative
+    * (boundary partitions kept whole) and the row filter is exact, so
+    * the grain changes the FILES READ, never the rows returned: a
+    * one-hour window over a year-deep minute store plans ~60 files
+    * instead of a whole day's 1,440.
+    */
+  private def prunedTo(depth: Int, base: DataFrame, startUs: Option[Long],
+      endUs: Option[Long]): DataFrame = {
+    val hasHour = depth >= 2
+    // minute-grain pruning additionally requires the session zone to
+    // have NO UTC-offset transition near the bound instant: in a DST
+    // fall-back hour the repeated local minutes are not monotone in
+    // event time (01:05 EST is AFTER 01:50 EDT), so a minute bound
+    // would prune same-hour partitions holding in-window rows. Near
+    // a transition the boundary HOUR is kept whole instead — ≤59
+    // extra files planned, rows unchanged (the row predicate is
+    // exact either way).
+    val hasMinute = depth >= 3
+    // bound values via the SAME date_format derivation the write path
+    // uses (session-timezone; foldable, so partition pruning still
+    // constant-folds them) — pure-UTC arithmetic here would silently
+    // prune rows on non-UTC sessions, where a row's partition day
+    // differs from its UTC day
+    def dayStr(us: Long) =
+      date_format(timestamp_micros(lit(us)), "yyyy-MM-dd")
+    def hourStr(us: Long) =
+      date_format(timestamp_micros(lit(us)), "HH").cast("int")
+    def minStr(us: Long) =
+      date_format(timestamp_micros(lit(us)), "mm").cast("int")
+    val zone = java.time.ZoneId.of(
+      spark.conf.get("spark.sql.session.timeZone"))
+    def minuteSafe(us: Long): Boolean = {
+      val rules = zone.getRules
+      rules.isFixedOffset || {
+        val inst = java.time.Instant.ofEpochSecond(
+          Math.floorDiv(us, 1000000L))
+        val next = rules.nextTransition(inst.minusSeconds(3600))
+        next == null || next.getInstant.isAfter(inst.plusSeconds(3600))
+      }
+    }
+    def prune(us: Long, lower: Boolean): org.apache.spark.sql.Column = {
+      val d = dayStr(us); val h = hourStr(us); val m = minStr(us)
+      val sameDay =
+        if (lower) col("date") > d else col("date") < d
+      if (hasMinute && minuteSafe(us)) sameDay || (col("date") === d &&
+        (if (lower) col("hour") > h ||
+            (col("hour") === h && col("minute") >= m)
+         else col("hour") < h ||
+            (col("hour") === h && col("minute") <= m)))
+      else if (hasHour) sameDay || (col("date") === d &&
+        (if (lower) col("hour") >= h else col("hour") <= h))
+      else if (lower) col("date") >= d
+      else col("date") <= d
+    }
+    val partPred =
+      if (depth == 0) None
+      else (startUs.map(prune(_, lower = true)) ++
+        endUs.map(prune(_, lower = false))).reduceOption(_ && _)
+    val rowPred = (startUs, endUs) match {
       case (Some(s), Some(e)) => Some(col(timeCol).between(s, e))
       case (Some(s), None) => Some(col(timeCol) >= s)
       case (None, Some(e)) => Some(col(timeCol) <= e)
       case _ => None
     }
-    // windowed reads assemble only the dates the window admits — the
-    // manifest prune that keeps plan wall ∝ window as the table grows
-    val t = truthFor(dateAdmitOf(startUs, endUs))
-    val (mainOpt, grainDepth) = t match {
-      case Some(tr) =>
-        // partition grain from the entries themselves (logical rel
-        // depth), so a mixed-grain union prunes at the COMMON grain
-        val depths = tr.entries.map(e => logicalRel(e.rel).count(_ == '/'))
-        (relationFor(tr.entries, tr.schema),
-          if (depths.isEmpty) 0 else depths.min)
-      case None =>
-        val base = tryRead(dir)
-        val d = base.map { b =>
-          if (b.columns.contains("minute")) 3
-          else if (b.columns.contains("hour")) 2
-          else if (b.columns.contains("date")) 1 else 0
-        }.getOrElse(0)
-        (base, d)
-    }
-    val main = mainOpt.map { base =>
-      // Partition predicate at the FINEST grain the tree exposes
-      // (minute → hour → date, probed from the layout so hour/day-
-      // compacted trees still prune at their own grain) + exact row
-      // predicate on the time column; both push down (partition
-      // pruning + parquet row-group stats). The predicate is
-      // conservative (boundary partitions kept whole) and the row
-      // filter is exact, so tightening the grain changes the FILES
-      // READ, never the rows returned: a one-hour window over a
-      // year-deep minute store plans ~60 files instead of a whole
-      // day's 1,440.
-      val hasHour = grainDepth >= 2 && base.columns.contains("hour")
-      // minute-grain pruning additionally requires the session zone to
-      // have NO UTC-offset transition near the bound instant: in a DST
-      // fall-back hour the repeated local minutes are not monotone in
-      // event time (01:05 EST is AFTER 01:50 EDT), so a minute bound
-      // would prune same-hour partitions holding in-window rows. Near
-      // a transition the boundary HOUR is kept whole instead — ≤59
-      // extra files planned, rows unchanged (the row predicate is
-      // exact either way).
-      val hasMinute = hasHour && grainDepth >= 3 &&
-        base.columns.contains("minute")
-      // bound values via the SAME date_format derivation the write path
-      // uses (session-timezone; foldable, so partition pruning still
-      // constant-folds them) — pure-UTC arithmetic here would silently
-      // prune rows on non-UTC sessions, where a row's partition day
-      // differs from its UTC day
-      def dayStr(us: Long) =
-        date_format(timestamp_micros(lit(us)), "yyyy-MM-dd")
-      def hourStr(us: Long) =
-        date_format(timestamp_micros(lit(us)), "HH").cast("int")
-      def minStr(us: Long) =
-        date_format(timestamp_micros(lit(us)), "mm").cast("int")
-      val zone = java.time.ZoneId.of(
-        spark.conf.get("spark.sql.session.timeZone"))
-      def minuteSafe(us: Long): Boolean = {
-        val rules = zone.getRules
-        rules.isFixedOffset || {
-          val inst = java.time.Instant.ofEpochSecond(
-            Math.floorDiv(us, 1000000L))
-          val next = rules.nextTransition(inst.minusSeconds(3600))
-          next == null || next.getInstant.isAfter(inst.plusSeconds(3600))
-        }
-      }
-      def prune(us: Long, lower: Boolean): org.apache.spark.sql.Column = {
-        val d = dayStr(us); val h = hourStr(us); val m = minStr(us)
-        val sameDay =
-          if (lower) col("date") > d else col("date") < d
-        if (hasMinute && minuteSafe(us)) sameDay || (col("date") === d &&
-          (if (lower) col("hour") > h ||
-              (col("hour") === h && col("minute") >= m)
-           else col("hour") < h ||
-              (col("hour") === h && col("minute") <= m)))
-        else if (hasHour) sameDay || (col("date") === d &&
-          (if (lower) col("hour") >= h else col("hour") <= h))
-        else if (lower) col("date") >= d
-        else col("date") <= d
-      }
-      val pruned = (startUs, endUs) match {
-        case (Some(s), Some(e)) =>
-          base.where(prune(s, lower = true) && prune(e, lower = false) &&
-            col(timeCol).between(s, e))
-        case (Some(s), None) =>
-          base.where(prune(s, lower = true) && col(timeCol) >= s)
-        case (None, Some(e)) =>
-          base.where(prune(e, lower = false) && col(timeCol) <= e)
-        case _ => base
-      }
-      pruned.drop("date", "hour", "minute")
-    }
-    // staged flushes: no directory pruning yet (that is compaction's
-    // job), but the row-level time predicate still pushes down onto
-    // the staged files' row-group stats
-    val staged = readStaged(t.map(_.deadRels).getOrElse(Set.empty))
-      .map(df => rowPred.fold(df)(df.where))
-    (main, staged) match {
-      case (Some(m), Some(st)) => Some(m.unionByName(st,
-        allowMissingColumns = true))
-      case (m, st) => m.orElse(st)
-    }
+    (partPred ++ rowPred).reduceOption(_ && _).fold(base)(base.where)
   }
 
   // ---- compaction (manifest-commit protocol) ----
@@ -955,8 +942,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * the manifest publish — prior entries minus the date's, plus the
     * rewrite's, tombstones extended — is the atomic commit. Old files
     * stay on disk for concurrent readers until [[vacuum]]. Never
-    * touches other dates or the `_staging` tree (draining staging is
-    * the whole-table pass's job).
+    * touches other dates or the [[writeStaged]] landings (folding
+    * those is the whole-table pass's job).
     *
     * `crashAfterStep` (tests only) aborts after the numbered step:
     * 1 = rewrite tree fully written but UNPUBLISHED (readers see the
@@ -1058,17 +1045,17 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   }
 
   /** Compact the small files the minute-grained ingest leaves behind:
-    * fold the whole main truth plus the staged flushes into one fresh
-    * `_gen-*` tree at the target granularity, committed by a manifest
-    * generation whose tombstones cover every superseded file (old main
-    * files AND the drained staged files — both stay on disk for
-    * concurrent readers until [[vacuum]]). Readers are unaffected
-    * (same hive layout per tree, same pruning); at scale this runs
+    * fold the whole truth, [[writeStaged]] landings included, into one
+    * fresh `_gen-*` tree at the target granularity, committed by a
+    * manifest generation whose tombstones cover every superseded file
+    * (they stay on disk for concurrent readers until [[vacuum]]).
+    * Readers are unaffected (same hive layout per tree, same
+    * pruning); at scale this runs
     * periodically over stores whose main tree is compaction-owned.
     *
     * `crashAfterStep` (tests only) aborts after the numbered step:
     * 1 = rewrite tree fully written but UNPUBLISHED — readers still
-    * see the pre-compaction state exactly (main + staging), the orphan
+    * see the pre-compaction state exactly, the orphan
     * tree is invisible (underscore-hidden, referenced by nothing) and
     * is vacuum's to reclaim; 2 = manifest generation published (the
     * commit is the last step, so this is a complete run).
@@ -1125,25 +1112,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val partCols = ParquetStore.partColsFor(granularity)
     fence()
     if (!exists) return
-    // SNAPSHOT: the staged file list and main truth are captured NOW;
-    // a flush landing in `_staging` after this listing is cleanly
-    // "late" — outside the rewrite, outside the tombstones, visible
-    // before and after the commit.
+    // SNAPSHOT: the truth is captured NOW; an append committing after
+    // it is cleanly "late" — outside the rewrite, carried over it by
+    // [[commitOver]], visible before and after the commit.
     val t = truth()
-    val deadRels = t.map(_.deadRels).getOrElse(Set.empty)
-    val stagedF = stagedStatuses(deadRels)
     val mainEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
-    val mainRows = relationFor(mainEntries, t.flatMap(_.schema))
+    val all = relationFor(mainEntries, t.flatMap(_.schema))
       .map(_.drop("date", "hour", "minute"))
-    val stagedRows =
-      if (stagedF.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(stagedF.map(_.getPath.toString): _*))
-    val all = (mainRows, stagedRows) match {
-      case (Some(m), Some(st)) =>
-        Some(m.unionByName(st, allowMissingColumns = true))
-      case (m, st) => m.orElse(st)
-    }
     if (all.isEmpty) return
     // partition columns re-derived from the row's own time at the
     // TARGET granularity (the store invariant: dir values are pure
@@ -1173,28 +1148,26 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       .partitionBy(partCols: _*)
       .parquet(s"$dir/$gen")
     if (crashAfterStep <= 1) return
-    // COMMIT: one manifest publish flips the table from (old main ∪
-    // staged) to the rewrite — entries walked from the files just
-    // written (bounded), schema exact (every file written from ONE
-    // DataFrame), tombstones = everything superseded plus the prior
-    // not-yet-vacuumed set carried forward. The lease is RE-verified
-    // at the commit point (a whole-table rewrite can run for minutes;
-    // a writer fenced mid-rewrite must fail here, not publish a truth
-    // missing the fencer's commits) and the publish CASes on the
-    // planning snapshot's generation.
+    // COMMIT: one manifest publish flips the table to the rewrite —
+    // entries walked from the files just written (bounded), schema
+    // exact (every file written from ONE DataFrame), tombstones =
+    // everything superseded plus the prior not-yet-vacuumed set
+    // carried forward. The lease is RE-verified at the commit point
+    // (a whole-table rewrite can run for minutes; a writer fenced
+    // mid-rewrite must fail here, not publish a truth missing the
+    // fencer's commits) and the publish CASes on the planning
+    // snapshot's generation.
     beforeCommit()
     val now = System.currentTimeMillis()
     val rewritten = manifest.walkSubtree(gen)
     commitOver(t.map(_.gen)) { (parent, appended, widen) =>
       manifest.publish(rewritten ++ appended, widen(Some(all.get.schema)),
         t.map(_.dead).getOrElse(Nil) ++
-          (mainEntries.map(_.rel) ++
-            stagedF.map(s => s"_staging/${s.getPath.getName}"))
-            .map(StoreManifest.Dead(_, now)),
+          mainEntries.map(e => StoreManifest.Dead(e.rel, now)),
         parent = parent,
         info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
           s""""wrote":${rewritten.size},""" +
-          s""""retired":${mainEntries.size + stagedF.size}}""")): Unit
+          s""""retired":${mainEntries.size}}""")): Unit
     }
   }
 
@@ -1434,25 +1407,26 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   private def genFileMillis(name: String): Option[Long] =
     name.stripPrefix("gen-").takeWhile(_.isDigit).toLongOption
 
-  /** Staged-but-uncompacted file count — the LSM depth signal the
-    * compaction policy triggers on. A driver-side listing of ONE flat
-    * directory (staged flushes write few files each) minus the
-    * already-drained tombstones, not a tree walk.
+  /** The live [[writeStaged]] files: depth-0 entries, read from the
+    * catch-all partition's manifests alone (no listing).
     */
-  def stagedFileCount: Int =
-    stagedStatuses(manifest.read().map(_.deadRels).getOrElse(Set.empty)).size
+  private def stagedEntries: Seq[StoreManifest.Entry] =
+    truthFor(Some(_.isEmpty)).map(_.entries.filter(e => depthOf(e.rel) == 0))
+      .getOrElse(Nil)
 
-  /** Oldest staged file's age in µs (None when staging is empty) — the
-    * policy's second trigger: a trickle ingest never reaches the count
-    * threshold but must still drain eventually.
+  /** Staged-but-uncompacted file count — the LSM depth signal the
+    * compaction policy triggers on.
+    */
+  def stagedFileCount: Int = stagedEntries.size
+
+  /** Oldest staged file's age in µs from its recorded mtime (None when
+    * nothing is staged) — the policy's second trigger: a trickle
+    * ingest never reaches the count threshold but must still drain
+    * eventually.
     */
   def stagedOldestAgeUs(nowUs: Long = System.currentTimeMillis() * 1000L)
-      : Option[Long] = {
-    val files = stagedStatuses(
-      manifest.read().map(_.deadRels).getOrElse(Set.empty))
-    if (files.isEmpty) None
-    else Some(nowUs - files.map(_.getModificationTime).min * 1000L)
-  }
+      : Option[Long] =
+    stagedEntries.map(_.mtime).minOption.map(nowUs - _ * 1000L)
 
   /** Small-file compaction PLANNING from pure metadata (the OPTIMIZE /
     * rewrite-planning half of Delta/Iceberg maintenance at this
@@ -1504,17 +1478,18 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   }
 
   /** Compaction as a POLICY, not a tool (the LSM background cadence):
-    * drain the staging tree into the partitioned layout when it is
-    * deep enough (`maxStagedFiles`) or old enough (`maxAgeUs`) — the
-    * two triggers every LSM store's background compactor runs on
-    * (depth amortizes write cost; age bounds how long directory
-    * pruning is deferred for staged rows). Returns whether a drain
-    * ran. Reads are identical before and after a drain (read() unions
-    * staging in; the policy spec pins equality), so cadence points —
-    * end of an ingest loop, a timer — never change what a reader
-    * SEES. Mutations on one store are serialized by the owning
-    * engine and fenced against other writers; concurrent READERS are
-    * safe across a drain (snapshot isolation — see the class doc).
+    * fold the [[writeStaged]] landings into the partitioned layout
+    * when they are deep enough (`maxStagedFiles`) or old enough
+    * (`maxAgeUs`) — the two triggers every LSM store's background
+    * compactor runs on (depth amortizes write cost; age bounds how
+    * long directory pruning is deferred for staged rows). Returns
+    * whether a drain ran. Reads are identical before and after a
+    * drain (staged files are table entries; the policy spec pins
+    * equality), so cadence points — end of an ingest loop, a timer —
+    * never change what a reader SEES. Mutations on one store are
+    * serialized by the owning engine and fenced against other
+    * writers; concurrent READERS are safe across a drain (snapshot
+    * isolation — see the class doc).
     */
   def maybeCompact(maxStagedFiles: Int = 64,
       maxAgeUs: Option[Long] = None,
@@ -1533,16 +1508,17 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * anywhere in duo/src): drop data older than `cutoffUs`, at the
     * granularities a 100 TB store can afford to delete at:
     *
-    *  - the MAIN truth drops whole `date=` partitions strictly before
-    *    the cutoff's session-zone date — the drop-old-days shape every
-    *    observability retention job runs (pure metadata; the cutoff's
-    *    own date is kept whole);
-    *  - the STAGING tree drops a file when its parquet footer says
-    *    max(timeCol) < the cutoff's day floor — file-granular, footer
-    *    stats only, still no data read. A file STRADDLING the boundary
-    *    is kept whole (conservative: retention may retain up to one
-    *    extra day/file; exact trimming is what the next [[compact]]
-    *    gives, since its rewrite re-derives dirs from surviving rows).
+    *  - partitioned files drop by whole `date=` partitions strictly
+    *    before the cutoff's session-zone date — the drop-old-days shape
+    *    every observability retention job runs (pure metadata; the
+    *    cutoff's own date is kept whole);
+    *  - a [[writeStaged]] (depth-0) file drops when its parquet
+    *    footer says max(timeCol) < the cutoff's day floor —
+    *    file-granular, footer stats only, still no data read. A file
+    *    STRADDLING the boundary is kept whole (conservative:
+    *    retention may retain up to one extra day/file; exact trimming
+    *    is what the next [[compact]] gives, since its rewrite
+    *    re-derives dirs from surviving rows).
     *
     * With a live manifest the drop is a pure manifest operation:
     * survivors republished, dropped files tombstoned (schema-free —
@@ -1551,9 +1527,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * readers infer from footers until the next compact re-publishes),
     * bytes reclaimed by [[vacuum]] after the grace window — so
     * concurrent readers planned before the expiry stay green. A
-    * never-compacted store (no manifest) deletes eagerly, as plain
-    * listing-mode stores always have. Returns
-    * (datePartitionsDropped, stagedFilesDropped).
+    * never-committed store (duo's native layout, no manifest) deletes
+    * its date dirs eagerly, as plain listing-mode stores always have.
+    * Returns (datePartitionsDropped, stagedFilesDropped).
     */
   def expire(cutoffUs: Long): (Int, Int) = mutation {
     fence()
@@ -1580,11 +1556,14 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
           val l = logicalRel(rel)
           l.take(math.max(l.indexOf('/'), 0)).stripPrefix("date=")
         }
-        val (droppedE, kept) = t.entries.partition(e =>
+        val droppedE = t.entries.filter(e =>
           dateOf(e.rel).nonEmpty && dateOf(e.rel) < cutoffDate.toString)
-        val stagedDead = stagedStatuses(t.deadRels).filter(s =>
-          fileMaxStat(s.getPath).exists(_ < dayFloorUs))
-        if (droppedE.isEmpty && stagedDead.isEmpty) return (0, 0)
+        // stats missing ⇒ unprovable ⇒ keep (loud is rowGroupRanges'
+        // job; retention must only ever delete what it can prove dead)
+        val stagedDead = t.entries.filter(e => depthOf(e.rel) == 0 &&
+          fileMaxStat(new Path(s"$dir/${e.rel}")).exists(_ < dayFloorUs))
+        val dropped = droppedE ++ stagedDead
+        if (dropped.isEmpty) return (0, 0)
         val now = System.currentTimeMillis()
         // patch-shaped: the expiry's delta is exactly the dropped
         // dates' entries. schema=None keeps the documented
@@ -1592,19 +1571,17 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         // inference after an expire), same as the absolute form.
         commitOver(Some(t.gen)) { (parent, _, _) =>
           manifest.publishPatch(adds = Nil,
-            drops = droppedE.map(_.rel),
-            deadPlus = (droppedE.map(_.rel) ++
-              stagedDead.map(s => s"_staging/${s.getPath.getName}"))
-              .map(StoreManifest.Dead(_, now)),
+            drops = dropped.map(_.rel),
+            deadPlus = dropped.map(e => StoreManifest.Dead(e.rel, now)),
             deadMinus = Nil,
             schema = None, parent = parent.get,
             info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
-              s""""retired":${droppedE.size + stagedDead.size}}""")): Unit
+              s""""retired":${dropped.size}}""")): Unit
         }
         (droppedE.map(e => logicalRel(e.rel).takeWhile(_ != '/'))
           .distinct.size, stagedDead.size)
       case None =>
-        // never-compacted store: eager deletes, the plain shape.
+        // never-committed store: eager deletes, the plain shape.
         // Idempotent — a crash mid-expiry leaves fewer dirs for the
         // next run.
         val expiredDirs = ls(new Path(dir))
@@ -1612,17 +1589,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
             s.getPath.getName.startsWith("date=") &&
             s.getPath.getName.stripPrefix("date=") < cutoffDate.toString)
         expiredDirs.foreach(s => rm(s.getPath))
-        val droppedFiles = ls(new Path(stagingDir))
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .count { s =>
-            // stats missing ⇒ unprovable ⇒ keep (loud is
-            // rowGroupRanges' job; retention must only ever delete
-            // what it can prove dead)
-            fileMaxStat(s.getPath).exists(_ < dayFloorUs) && {
-              fs.delete(s.getPath, false): Unit; true
-            }
-          }
-        (expiredDirs.size, droppedFiles)
+        (expiredDirs.size, 0)
     }
   }
 
@@ -1674,11 +1641,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * ([[readSpanRange]]'s skip measurement reads this). With a live
     * manifest the file list comes straight from it (ZERO listings —
     * footer opens are reads of the files themselves); a never-
-    * compacted store walks. Staged flushes are deliberately excluded:
-    * `_staging` is the un-organized tail whose layout [[compact]] has
-    * not built yet, so its stats are not part of any layout-pruning
-    * claim — measure skip ratios after the drain, the state the claim
-    * is about.
+    * committed store walks. [[writeStaged]] (depth-0) files are
+    * deliberately excluded: they are the un-organized tail whose
+    * layout [[compact]] has not built yet, so their stats are not part
+    * of any layout-pruning claim — measure skip ratios after the
+    * drain, the state the claim is about.
     */
   def rowGroupRanges(
       cols: Seq[String]): Seq[(String, Map[String, (Long, Long)])] = {
@@ -1686,6 +1653,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val conf = spark.sparkContext.hadoopConfiguration
     val files: Seq[Path] =
       truth().map(_.entries).getOrElse(manifest.walkLegacy())
+        .filter(e => depthOf(e.rel) > 0)
         .map(e => new Path(s"$dir/${e.rel}"))
     files.flatMap { fp =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -1715,17 +1683,14 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   /** Reference-shaped read path: enumerate minimal partition prefixes
     * with [[TimePrefix]] and read only those directories (the
     * ListingTable-over-prefixes plan, duo/src/partition/query.rs:38-60).
-    * Staged-but-not-yet-compacted flushes are unioned in (directory
-    * pruning for them is compaction's job) — without this the two
-    * read APIs would disagree on the table's contents between a
-    * [[writeStaged]] land and the next drain. The staged rows are
-    * filtered to EXACTLY the minute window the prefix set covers
-    * ([floorMin(start), truncMin(end) + bump-if-seconds), mirroring
-    * [[TimePrefix]]'s end-bump quirk) — prefix reads are
-    * directory-granular by contract (callers apply row predicates
-    * after, like the reference's ListingTable), so the staged side
-    * must be minute-granular too or the union's contents would
-    * depend on which side a row landed in.
+    * [[writeStaged]] (depth-0) files have no directory to prune by, so
+    * every one is read, filtered to EXACTLY the minute window the
+    * prefix set covers ([floorMin(start), truncMin(end) +
+    * bump-if-seconds), mirroring [[TimePrefix]]'s end-bump quirk) —
+    * prefix reads are directory-granular by contract (callers apply
+    * row predicates after, like the reference's ListingTable), so the
+    * staged files must be minute-granular too or the result would
+    * depend on which layout a row landed in.
     *
     * Listing discipline for object stores: with a manifest, the whole
     * plan (prefix existence, coarse fallback, file expansion) derives
@@ -1819,7 +1784,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         .toSeq
         .flatMap(parquetChildFiles)
     }.distinct
-    val main = t match {
+    t match {
       case Some(tr) =>
         // prefix → file expansion by binary search over the sorted
         // LOGICAL rel list: O(P log N + hits), not O(P·N) — a day
@@ -1838,12 +1803,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         }
         val expanded = present.flatMap(relsUnder) ++ fallbackRels
         val selected = expanded.distinct
-          .flatMap(entryByLogical.getOrElse(_, Nil))
-        relationFor(selected, schema).map { df0 =>
+          .flatMap(entryByLogical.getOrElse(_, Nil)) ++
+          tr.entries.filter(e => depthOf(e.rel) == 0)
+        relationFor(selected, schema, (depth, df0) => {
           val df = df0.drop("date", "hour", "minute")
-          if (fallbackRels.isEmpty) df
+          if (depth > 0 && fallbackRels.isEmpty) df
           else df.where(col(timeCol) >= loUs && col(timeCol) < hiUs)
-        }
+        })
       case None =>
         val mainInputs = (present ++ fallbackRels).map(r => s"$dir/$r")
         if (mainInputs.isEmpty) None else {
@@ -1855,13 +1821,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
           Some(if (fallbackRels.isEmpty) df
             else df.where(col(timeCol) >= loUs && col(timeCol) < hiUs))
         }
-    }
-    val staged = readStaged(t.map(_.deadRels).getOrElse(Set.empty))
-      .map(_.where(col(timeCol) >= loUs && col(timeCol) < hiUs))
-    (main, staged) match {
-      case (Some(m), Some(st)) =>
-        Some(m.unionByName(st, allowMissingColumns = true))
-      case (m, st) => m.orElse(st)
     }
   }
 }

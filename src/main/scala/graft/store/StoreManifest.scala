@@ -43,9 +43,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * assembly resolves duplicate rels newest-manifest-wins, and the
   * rollover merges each partition back to one file); a drop rewrites
   * only the affected partitions' manifests. Entries with no `date=…`
-  * leading segment (spec fixtures, `_staging` rels in tombstones)
-  * group under the catch-all partition key `""`, which every admit
-  * function must pass.
+  * leading segment ([[ParquetStore.writeStaged]]'s unpartitioned
+  * files, spec fixtures) group under the catch-all partition key
+  * `""`, which every admit function must pass.
   *
   * Format-compat contract: ONE format. Every generation is an
   * `mlist=` checkpoint or an `madd`/`mdel` delta over `mf-*` files,
@@ -79,15 +79,15 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * previous retained one, and a torn manifest file poisons exactly
   * the generations that reference it.
   *
-  * Appends ([[ParquetStore.write]]) commit through the same rename
-  * as rewrites; the LSM-shaped ingest ([[ParquetStore.writeStaged]])
-  * never touches the manifest at all. A `dirty-*` marker left in
-  * `_manifest` by an older binary's direct appends names rows no
-  * generation lists, so every read and commit refuses the store until
-  * it is compacted ([[listState]]).
+  * Appends ([[ParquetStore.write]], and the LSM-shaped
+  * [[ParquetStore.writeStaged]]) commit through the same rename as
+  * rewrites. A `dirty-*` marker left in `_manifest` by an older
+  * binary's direct appends names rows no generation lists, so every
+  * read and commit refuses the store until it is compacted
+  * ([[listState]]).
   *
   * The underscore prefix hides `_manifest` from Spark's partition
-  * discovery, like `_staging`.
+  * discovery, like the `_gen-*` trees.
   */
 final class StoreManifest(fs: FileSystem, tableDir: String) {
 
@@ -117,7 +117,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   private def mdir = new Path(tableDir, "_manifest")
 
   /** Walk the legacy partitioned tree (skipping `_`/`.`-prefixed
-    * subtrees: staging, gen trees, the manifest itself) into entries
+    * subtrees: gen trees, the manifest itself) into entries
     * NOW, without publishing — what a first commit folds in, and the
     * fallback for metadata consumers when no generation exists.
     */
@@ -1697,8 +1697,8 @@ object StoreManifest {
   /** The partition key a rel groups under: its leading `date=…` path
     * segment (a rewrite-tree `_gen-…` prefix is stripped first — a
     * tree is WHERE bytes live, not what partition they belong to), or `""`
-    * for anything else (root-level files, `_staging` rels). The admit
-    * functions [[StoreManifest.readStateFor]] takes receive exactly
+    * for anything else (root-level files, a staged tree's files). The
+    * admit functions [[StoreManifest.readStateFor]] takes receive exactly
     * these keys and must always pass `""`.
     */
   private[graft] def partKeyOf(rel: String): String = {

@@ -877,7 +877,8 @@ class EngineSpec extends SparkSpec {
     val genB = store.generations().last
     store.expire(day1 + day) // gen C: drops day-0 rows (id 3)
     val genC = store.generations().last
-    assert(store.generations() == Seq(genA, genB, genC).sorted)
+    // (each staged landing commits a generation of its own too)
+    assert(Seq(genA, genB, genC).forall(store.generations().contains))
     // each retained generation answers ITS table
     assert(idsOf(store.readGeneration(genA).get) == Set(1L, 2L))
     assert(idsOf(store.readGeneration(genB).get) == Set(1L, 2L, 3L))

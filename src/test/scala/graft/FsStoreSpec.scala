@@ -133,9 +133,11 @@ class FsStoreSpec extends SparkSpec {
     def logical(r: String): String =
       if (r.startsWith("_gen-")) r.substring(r.indexOf('/') + 1) else r
     store.writeStaged(batch(Seq(1L, 2L, 3L)))
-    assert(!store.manifestPresent, "no manifest before first compact")
+    // a staged landing commits: its files are depth-0 manifest entries
+    assert(store.manifestPresent, "a staged landing must commit")
+    assert(store.manifestFiles.get.forall(r => r.startsWith("_gen-") &&
+      !logical(r).contains('/')))
     store.compact()
-    assert(store.manifestPresent, "compact must publish the manifest")
     val mf = store.manifestFiles.get
     assert(mf.nonEmpty && mf.forall(r => r.startsWith("_gen-") &&
       logical(r).startsWith("date=") && r.endsWith(".parquet")),
@@ -143,16 +145,16 @@ class FsStoreSpec extends SparkSpec {
     assert(idsVia(store) == Set(1L, 2L, 3L))
     // the drained staged file is tombstoned, not deleted — on disk for
     // concurrent readers until vacuum, invisible to new plans
-    assert(store.manifestDead.get.exists(_.startsWith("_staging/")))
+    assert(store.manifestDead.get.exists(r => !logical(r).contains('/')))
     assert(store.stagedFileCount == 0)
     val win = (t0, t0 + 4L * 60L * 1000000L)
     def prefixIds() = store.readPrefixes(win._1, win._2)
       .get.select("id").as[Long].collect().toSet
     assert(prefixIds() == Set(1L, 2L, 3L))
-    // LSM: staged appends never touch the manifest, so it survives
-    // them and reads union the staged rows in
+    // LSM: a staged append commits its own generation and reads see
+    // its rows before any drain
     store.writeStaged(batch(Seq(4L)))
-    assert(store.manifestPresent, "staged land must not touch the manifest")
+    assert(store.stagedFileCount == 1)
     assert(idsVia(store) == Set(1L, 2L, 3L, 4L))
     // a partitioned write commits its own generation: the manifest
     // lists the new tree and keeps its recorded schema
@@ -249,12 +251,12 @@ class FsStoreSpec extends SparkSpec {
     val store = new ParquetStore(spark, root, "span", "start")
     val rows = Seq((1L, t0, 100L), (2L, t0 + 61L * 1000000L, 200L))
       .toDF("id", "start", "trace_id")
-    store.writeStaged(rows)
+    ScaleProbe.writeNativeLayout(rows, s"$root/span", "start")
     store.compact(crashAfterStep = 1) // dies before the commit
     assert(!store.manifestPresent,
       "a crashed compact must not publish a manifest")
     // the orphan rewrite tree is referenced by nothing: reads still
-    // answer from the pre-compaction state (the staged files)
+    // answer from the pre-compaction state (the native-layout files)
     assert(store.read(None, None).get.count() == 2)
     store.compact(granularity = "hour")
     assert(store.manifestPresent)
@@ -282,7 +284,7 @@ class FsStoreSpec extends SparkSpec {
     // corrupt EVERY generation (garbage schema JSON included — json4s
     // throws its own parse exceptions): the reader must reject them
     // all without crashing; the store degrades to listing mode, where
-    // the not-yet-vacuumed staged files still hold every row
+    // the not-yet-vacuumed native-layout files still hold every row
     fsys.listStatus(mdir).filter(_.getPath.getName.startsWith("gen-"))
       .foreach { g =>
         val o = fsys.create(g.getPath, true)
@@ -303,19 +305,17 @@ class FsStoreSpec extends SparkSpec {
     val rows = (1L to 40L).map(i => (i, t0 + i * 60L * 1000000L, i))
       .toDF("id", "start", "trace_id")
     store.writeStaged(rows)
-    store.compact() // publishes the manifest; ~40 minute dirs
-    store.vacuum(graceMs = 0L) // reclaim staging so its listing is gone
+    store.compact() // ~40 minute dirs
     def readAll(st: ParquetStore) =
       st.readPrefixes(t0, t0 + 41L * 60L * 1000000L).get.count()
     assert(readAll(store) == 40L) // warm: FS instance cache, session state
     CountingListFileSystem.lists.set(0)
     assert(readAll(store) == 40L)
     val planLists = CountingListFileSystem.lists.get
-    // the only permitted listings are the _manifest state lookup and
-    // the (empty) staging probe — the 40 minute dirs and their
-    // date/hour parents are NEVER listed, and the scan itself opens
-    // files by manifest size/offset
-    assert(planLists <= 2, s"manifest-planned read listed $planLists×")
+    // the only permitted listing is the _manifest state lookup — the
+    // 40 minute dirs and their date/hour parents are NEVER listed,
+    // and the scan itself opens files by manifest size/offset
+    assert(planLists <= 1, s"manifest-planned read listed $planLists×")
     // a store in duo's native layout (no manifest) plans by listing:
     // one list per parent dir + Spark's file index lists each prefix
     // dir it is handed — the O(dirs) cost the manifest removes.
@@ -338,6 +338,67 @@ class FsStoreSpec extends SparkSpec {
         s"expected O(dirs) listings without a manifest, got $listingLists")
     } finally spark.conf.unset(
       "spark.sql.sources.parallelPartitionDiscovery.threshold")
+  }
+
+  test("staged landings plan from the manifest: a window read and a " +
+      "prefix read list nothing but _manifest and run one Spark job") {
+    // before staged landings committed, each of these reads listed
+    // the staging dir, listed every staged file and ran a footer-merge
+    // job; now the only listing is the generation lookup every
+    // manifest read makes
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lcount.impl", classOf[CountingListFileSystem].getName)
+    val root = "lcount://" +
+      java.nio.file.Files.createTempDirectory("lcountstaged")
+    val store = new ParquetStore(spark, root, "span", "start")
+    def rows(ids: Seq[Long]) =
+      ids.map(i => (i, t0 + i * 60L * 1000000L, i))
+        .toDF("id", "start", "trace_id")
+    store.write(rows(1L to 10L))
+    store.writeStaged(rows(11L to 15L))
+    store.writeStaged(rows(16L to 20L))
+    assert(store.stagedFileCount >= 2)
+    // a prefix read infers a window-local schema unless its caller
+    // pins one; the table owner pins the recorded one, as g07 does
+    val schema = store.manifestSchema
+    assert(schema.isDefined)
+    val (lo, hi) = (t0 + 5L * 60L * 1000000L, t0 + 18L * 60L * 1000000L)
+    val group = "staged-plan"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    def measured(read: => org.apache.spark.sql.DataFrame)
+        : (Set[Long], Int, Seq[String]) = {
+      graft.util.StreamGate.quiesce(spark)
+      CountingListFileSystem.reset()
+      jobs.set(0)
+      sc.setJobGroup(group, "staged read")
+      val ids = try read.select("id").as[Long].collect().toSet
+        finally sc.clearJobGroup()
+      graft.util.StreamGate.quiesce(spark)
+      import scala.jdk.CollectionConverters._
+      (ids, jobs.get, CountingListFileSystem.paths.asScala.toSeq)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "read" -> (() => store.read(Some(lo), Some(hi)).get),
+        "readPrefixes" -> (() => store.readPrefixes(lo, hi, schema).get))
+      for ((name, read) <- reads) {
+        measured(read()) // warm: FS instance cache, session state
+        val (ids, nJobs, listed) = measured(read())
+        assert(ids == (5L to 18L).toSet, name)
+        assert(nJobs == 1, s"$name ran $nJobs jobs")
+        assert(listed.size == 1 && listed.forall(_.endsWith("/_manifest")),
+          s"$name listed ${listed.mkString(", ")}")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("incremental manifest maintenance: a per-date drain walks only " +
@@ -429,9 +490,12 @@ class FsStoreSpec extends SparkSpec {
     // inference over the 40 files — the bill the recorded schema removes
     val fsys = graft.store.StoreFs.fs(
       new org.apache.hadoop.fs.Path(s"$root/span"))
+    // the newest generation (the drain's checkpoint; the staged
+    // landing published the one before it)
     val gen = fsys.listStatus(
         new org.apache.hadoop.fs.Path(s"$root/span/_manifest"))
-      .filter(_.getPath.getName.startsWith("gen-")).head.getPath
+      .filter(_.getPath.getName.startsWith("gen-"))
+      .maxBy(_.getPath.getName).getPath
     val rawGen =
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(fsys.open(gen))
     // checkpoint bodies are gzip on disk since round 18 — decompress
@@ -1189,16 +1253,18 @@ class FsStoreSpec extends SparkSpec {
     // proportions matter: deltas land only when the patch is smaller
     // than the table (a mutation rewriting MOST files rightly
     // re-checkpoints), so the bulk (day 3) dwarfs the mutated dates
-    store.writeStaged(batch(Seq(1L, 2L), 0L)) // day 1: expire target
-    store.writeStaged(batch(Seq(31L, 32L, 33L), 1L)) // day 2: heal target
-    store.writeStaged(batch((61L to 80L).toSeq, 2L)) // day 3: bulk
+    store.writeStaged(
+      batch(Seq(1L, 2L), 0L) // day 1: expire target
+        .union(batch(Seq(31L, 32L, 33L), 1L)) // day 2: heal target
+        .union(batch((61L to 80L).toSeq, 2L)) // day 3: bulk
+        .coalesce(1))
     store.compact() // checkpoint: 25 minute files
     val mdir = new org.apache.hadoop.fs.Path(s"$root/span/_manifest")
     val fsys = graft.store.StoreFs.fs(mdir)
     def exts() = fsys.listStatus(mdir)
       .filter(_.getPath.getName.startsWith("gen-"))
       .map(_.getPath.getName.split('.').last).toSeq.sorted
-    assert(exts() == Seq("list"))
+    assert(exts() == Seq("list", "list")) // the staged landing, the drain
     // an append, a date-scoped heal and a retention drop are all DELTAS
     store.write(batch(Seq(34L), 1L)) // append into day 2
     val zone = java.time.ZoneId.of(
@@ -1207,20 +1273,20 @@ class FsStoreSpec extends SparkSpec {
       .ofEpochSecond((t0 + day) / 1000000L), zone).toString
     store.compactDate(day2)
     store.expire(t0 + day) // drops day 1
-    assert(exts() == Seq("delta", "delta", "delta", "list"),
+    assert(exts() == Seq("delta", "delta", "delta", "list", "list"),
       exts().toString)
     val liveIds = Set(31L, 32L, 33L, 34L) ++ (61L to 80L)
     assert(store.read(None, None).get.select("id").as[Long]
       .collect().toSet == liveIds)
-    // time travel across the chain: the checkpoint still answers the
+    // time travel across the chain: the checkpoints still answer the
     // pre-append table, the heal's delta the pre-expiry+heal one
     val gens = store.generations()
-    assert(store.readGeneration(gens.head).get.count() == 25)
-    assert(store.readGeneration(gens(2)).get.select("id").as[Long]
+    assert(store.readGeneration(gens(1)).get.count() == 25)
+    assert(store.readGeneration(gens(3)).get.select("id").as[Long]
       .collect().toSet == (liveIds ++ Set(1L, 2L)))
     // vacuum within grace: chain intact, everything still readable
     store.vacuum(graceMs = 7L * 86400L * 1000L): Unit
-    assert(store.generations().size == 4)
+    assert(store.generations().size == 5)
     assert(store.read(None, None).get.count() == liveIds.size)
     // vacuum past grace: generation files the newest head's CHAIN
     // folds through (its checkpoint root included) survive even when
@@ -1312,8 +1378,7 @@ class FsStoreSpec extends SparkSpec {
     // bulky base: the appends below must land as DELTAS
     // (proportions drive the commit-form heuristic), which also keeps
     // gen A alive in the retained heads' chains
-    store.writeStaged(batch((1L to 10L).toSeq, 0L))
-    store.compact()
+    store.write(batch((1L to 10L).toSeq, 0L))
     val genA = store.generations().last
     // three commits behind: one append per day, each a distinct
     // auditable operation
@@ -2032,13 +2097,12 @@ class FsStoreSpec extends SparkSpec {
     def dayStr(off: Long): String = java.time.LocalDate.ofInstant(
       java.time.Instant.ofEpochSecond((t0 + off * day) / 1000000L),
       zone).toString
-    store.writeStaged(batch((1L to 10L).toSeq, 0L))
-    store.compact() // gen A
+    store.write(batch((1L to 10L).toSeq, 0L)) // gen A
     store.write(batch(Seq(24L, 25L), 1L)) // gen B: the delta to tear
-    store.writeStaged(batch(Seq(26L, 27L), 2L))
+    store.writeStaged(batch(Seq(26L, 27L), 2L)) // a delta over B
     store.compact() // gen C: a CHECKPOINT (folds without B)
     val gens = store.generations()
-    assert(gens.size == 3)
+    assert(gens.size == 4)
     // tear B's generation FILE in place
     val fsys = graft.store.StoreFs.fs(
       new org.apache.hadoop.fs.Path(s"$root/span"))
@@ -2120,8 +2184,7 @@ class FsStoreSpec extends SparkSpec {
     // B = its compactDate fold; C = expire day 1 → {4,5} (the
     // mid-history REMOVAL the append-only consumer retains and a
     // mirror must net out). Step 1 spans W and B.
-    src.writeStaged(batch(Seq(1L, 2L, 3L), 0L))
-    src.compact() // gen A
+    src.write(batch(Seq(1L, 2L, 3L), 0L)) // gen A
     src.write(batch(Seq(4L, 5L), 1L)) // gen W
     val zone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone"))
@@ -2191,23 +2254,29 @@ class FsStoreSpec extends SparkSpec {
     feed2.reset()
   }
 
-  test("applyMirror refuses a sink that is not commit-owned: staged " +
-      "or dirty-marked direct-write files would silently keep removed " +
-      "keys alive, so the mirror fails loudly before any mutation") {
+  test("applyMirror removes a key landed through writeStaged: staged " +
+      "files are manifest entries, rewritten with the affected dates") {
     val root = newRoot()
     def batch(ids: Seq[Long]) =
       ids.map(i => (i, t0 + i * 60L * 1000000L, i * 10L))
         .toDF("id", "start", "trace_id")
-    // staged file → refused
     val s1 = new ParquetStore(spark, root, "m1", "start")
     s1.write(batch(Seq(1L, 2L)))
-    s1.writeStaged(batch(Seq(3L)))
-    val gensBefore = s1.generations()
-    val ex1 = intercept[IllegalArgumentException] {
-      s1.applyMirror(None, Some(batch(Seq(1L))), Seq("id"))
-    }
-    assert(ex1.getMessage.contains("commit-owned"))
-    assert(s1.generations() == gensBefore, "refusal mutated nothing")
+    s1.writeStaged(batch(Seq(3L, 4L)))
+    s1.applyMirror(None, Some(batch(Seq(1L, 3L))), Seq("id"))
+    assert(s1.read(None, None).get.select("id").as[Long].collect().toSet ==
+      Set(2L, 4L))
+    // the surviving staged row was rewritten into the partitioned tree
+    assert(s1.stagedFileCount == 0)
+  }
+
+  test("applyMirror refuses a dirty-marked sink: direct-write files " +
+      "would silently keep removed keys alive, so the mirror fails " +
+      "loudly before any mutation") {
+    val root = newRoot()
+    def batch(ids: Seq[Long]) =
+      ids.map(i => (i, t0 + i * 60L * 1000000L, i * 10L))
+        .toDF("id", "start", "trace_id")
     // a dirty marker an older binary's direct write left → refused
     val s2 = new ParquetStore(spark, root, "m2", "start")
     s2.write(batch(Seq(1L, 2L)))
@@ -2242,6 +2311,43 @@ class FsStoreSpec extends SparkSpec {
       assert(ex.getMessage.contains(marker) &&
         ex.getMessage.contains("compact()"), ex.getMessage)
     }
+  }
+
+  test("a leftover _staging file from an older binary makes reads and " +
+      "mutations throw, naming it; files compact() tombstoned pass") {
+    val root = newRoot()
+    val store = new ParquetStore(spark, root, "span", "start")
+    store.write(Seq((1L, t0, 10L)).toDF("id", "start", "trace_id"))
+    // plant a staged file the way an older binary's writeStaged did
+    val staged = s"$root/span/_staging"
+    Seq((2L, t0, 20L)).toDF("id", "start", "trace_id").coalesce(1)
+      .write.parquet(staged)
+    val fresh = new ParquetStore(spark, root, "span", "start")
+    for (op <- Seq[() => Any](
+        () => fresh.read(None, None),
+        () => fresh.readPrefixes(t0, t0 + 60000000L),
+        () => fresh.write(Seq((3L, t0, 30L)).toDF("id", "start", "trace_id")),
+        () => fresh.compact())) {
+      val ex = intercept[IllegalStateException](op())
+      assert(ex.getMessage.contains("_staging/part-") &&
+        ex.getMessage.contains("compact()"), ex.getMessage)
+    }
+    // the instance that probed before the plant keeps its memo: the
+    // check runs once per instance, never once per read
+    assert(store.read(None, None).get.count() == 1L)
+    // once an older binary's compact() has tombstoned the file, it is
+    // part of the table's history and no longer refused
+    val name = new java.io.File(java.net.URI.create(staged).getPath)
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).head
+    val fsys = graft.store.StoreFs.fs(new org.apache.hadoop.fs.Path(root))
+    val m = new graft.store.StoreManifest(fsys, s"$root/span")
+    m.publishPatch(adds = Nil, drops = Nil,
+      deadPlus = Seq(graft.store.StoreManifest.Dead(s"_staging/$name",
+        System.currentTimeMillis())),
+      deadMinus = Nil, schema = store.manifestSchema,
+      parent = store.generations().last)
+    assert(new ParquetStore(spark, root, "span", "start")
+      .read(None, None).get.count() == 1L)
   }
 
   test("drifted writes record the superset schema, and a read null-pads " +

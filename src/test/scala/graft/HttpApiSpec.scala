@@ -376,8 +376,7 @@ class HttpApiSpec extends SparkSpec {
       val walLog = java.nio.file.Paths.get(root, "wal", "log")
       def flushed(): Boolean = java.nio.file.Files.exists(logDir) && {
         val s = java.nio.file.Files.walk(logDir)
-        try s.anyMatch(p => p.toString.endsWith(".parquet") &&
-          !p.toString.contains("_staging"))
+        try s.anyMatch(p => p.toString.endsWith(".parquet"))
         // a file the write's commit moved away during the walk: the
         // flush is still in flight, look again on the next poll
         catch { case _: java.io.UncheckedIOException => false }

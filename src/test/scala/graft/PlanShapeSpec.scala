@@ -510,4 +510,26 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("Union"), plan)
     assert(df.count() == 18)
   }
+
+  test("a mixed-grain store prunes each depth at its own grain: the " +
+      "minute flushes after an hour compaction keep minute pruning") {
+    val root = java.nio.file.Files.createTempDirectory("mixplan").toString
+    val t0 = 1760000000000000L
+    val st = new graft.store.ParquetStore(spark, root, "log", "time")
+    def rows(from: Int, until: Int) = (from until until).map(i =>
+      (i.toLong, t0 + i * 60L * 1000000L)).toDF("id", "time")
+    st.write(rows(0, 180))
+    st.compact(granularity = "hour") // depth 2
+    st.write(rows(180, 240)) // minute flushes on top: depth 3
+    val df = st.read(Some(t0 + 200L * 60L * 1000000L),
+      Some(t0 + 205L * 60L * 1000000L)).get
+    // each scan's partition filters name its own finest column
+    val grains = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        val cols = s.partitionFilters.flatMap(_.references.map(_.name)).toSet
+        Seq("minute", "hour", "date").find(cols).getOrElse("none")
+    }
+    assert(grains.sorted == Seq("hour", "minute"), grains.toString)
+    assert(df.count() == 6)
+  }
 }
