@@ -664,6 +664,13 @@ object ScaleProbe {
     }
   }
 
+  /** The schema the driver-side manifest probes record over their
+    * synthetic entries (every generation records one; these probes
+    * plan no data read).
+    */
+  private val EntryFixtureSchema =
+    new org.apache.spark.sql.types.StructType().add("time", "long")
+
   /** The hot-date split measured at the residual's own scale: EVERY
     * file in ONE date — the pathological concentration the round-19
     * residual named (a date-granular manifest a window touching that
@@ -700,7 +707,7 @@ object ScaleProbe {
       val entries = (0 until files).map(i => StoreManifest.Entry(
         f"date=2024-06-01/hour=${i % 24}%02d/minute=${i / 24 % 60}%02d/" +
           f"part-$i%08d.parquet", 1234567L, 1700000000000L + i))
-      m.publish(entries, None, Nil, None)
+      m.publish(entries, EntryFixtureSchema, Nil, None)
       val mfCount = m.mfRefs().size
       // one-hour window on a COLD planner (fresh instance = new
       // driver): date admitted, hour refined — exactly what
@@ -800,7 +807,7 @@ object ScaleProbe {
       // the checkpoint: the once-per-CheckpointEvery O(touched) cost
       // (here everything is touched — it is the FIRST publish)
       val tc = System.nanoTime()
-      m.publish(entries, None, Nil, None)
+      m.publish(entries, EntryFixtureSchema, Nil, None)
       val ckptMs = (System.nanoTime() - tc) / 1e6
       var parent = m.read().map(_.gen)
       val ckptBytes = metaBytes()
@@ -824,8 +831,8 @@ object ScaleProbe {
         val before = metaBytes()
         val t0 = System.nanoTime()
         m.publishPatch(adds = newFiles, drops = Nil,
-          deadPlus = Nil, deadMinus = Nil, schema = None,
-          parent = parent.get)
+          deadPlus = Nil, deadMinus = Nil, schema = EntryFixtureSchema,
+          parent = parent)
         val dt = System.nanoTime() - t0
         val snap = m.read().get
         // commit footprint = growth of the whole _manifest dir
@@ -846,7 +853,7 @@ object ScaleProbe {
         val before = metaBytes()
         val t0 = System.nanoTime()
         m.publishPatch(adds = newFiles, drops = Nil, deadPlus = Nil,
-          deadMinus = Nil, schema = None, parent = parent.get)
+          deadMinus = Nil, schema = EntryFixtureSchema, parent = parent)
         val dt = System.nanoTime() - t0
         val snap = m.read().get
         val bytes = math.max(0L, metaBytes() - before)

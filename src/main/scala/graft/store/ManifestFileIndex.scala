@@ -69,18 +69,16 @@ object ManifestFileIndex {
     */
   private val NominalBlockSize = 128L * 1024 * 1024
 
-  /** The given manifest entries as a DataFrame, planned listing-free.
-    * `dataSchema` skips footer inference when the caller already knows
-    * the (merged) schema; otherwise schemas are merged from the
-    * entries' footers — reads of the files themselves, still zero
-    * listings. `logicalRel` maps a rel to the path its partition
+  /** The given manifest entries as a DataFrame over `dataSchema` (the
+    * generation's recorded schema), planned with no listing and no
+    * footer read. `logicalRel` maps a rel to the path its partition
     * values parse from; all entries must share one partition depth.
     * Returns None for an empty selection (mirrors the
     * "no files" read contract).
     */
   def relation(spark: SparkSession, tableDir: String,
       entries: Seq[StoreManifest.Entry],
-      dataSchema: Option[StructType],
+      dataSchema: StructType,
       logicalRel: String => String = identity): Option[DataFrame] = {
     if (entries.isEmpty) return None
     // qualified like Spark's own listing index: an unpartitioned
@@ -91,17 +89,13 @@ object ManifestFileIndex {
       new Path(s"$root/${logicalRel(e.rel)}").getParent ->
         new FileStatus(e.size, false, 1, NominalBlockSize, e.mtime,
           new Path(s"$root/${e.rel}")))
-    val statuses = files.map(_._2)
     val index = new ManifestFileIndex(spark, root, files)
-    val fmt = new ParquetFileFormat()
-    val opts = Map("mergeSchema" -> "true")
     // all-nullable mirrors DataSource.resolveRelation's asNullable, so
     // a caller-pinned schema reads exactly as through spark.read.schema
-    dataSchema.orElse(fmt.inferSchema(spark, opts, statuses)).map { ds =>
-      val rel = HadoopFsRelation(index, index.partitionSchema,
-        StoreManifest.allNullable(ds), None, fmt, opts)(spark)
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .baseRelationToDataFrame(rel)
-    }
+    val rel = HadoopFsRelation(index, index.partitionSchema,
+      StoreManifest.allNullable(dataSchema), None, new ParquetFileFormat(),
+      Map.empty)(spark)
+    Some(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(rel))
   }
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -29,9 +29,11 @@ import org.apache.spark.sql.types.StructType
   *
   * One landing path: every append ([[write]], [[writeStaged]]) and
   * rewrite lands a `_gen-*` tree and publishes a [[StoreManifest]]
-  * generation, so a written store plans every read from its manifest
-  * and schema. Listing mode remains only for duo's native layout,
-  * until the first commit folds it in.
+  * generation, and every generation records the table's schema, so a
+  * written store plans every read from its manifest and that schema —
+  * no footer inference. Listing mode remains only for duo's native
+  * layout, until the first commit folds it in: that commit infers the
+  * layout's schema once and records it.
   *
   * Snapshot isolation (round-16; the reference has no analog — it
   * never rewrites files, duo/src/partition/writer.rs:55-59): layout
@@ -117,10 +119,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   private[graft] def manifestFiles: Option[Seq[String]] =
     manifest.read().map(_.entries.map(_.rel))
 
-  /** The manifest's recorded merged data schema (specs). */
-  private[graft] def manifestSchema
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifest.read().flatMap(_.schema)
+  /** The newest generation's recorded schema; None before the first
+    * commit (specs).
+    */
+  private[graft] def manifestSchema: Option[StructType] =
+    manifest.read().map(_.schema)
 
   /** The manifest's tombstoned-but-not-yet-vacuumed rels (specs). */
   private[graft] def manifestDead: Option[Seq[String]] =
@@ -172,8 +175,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * diffs with. Distinct from "has rows": an empty table's
     * generation is readable.
     */
-  def generationReadable(gen: String): Boolean =
-    manifest.readGen(gen).isDefined
+  def generationReadable(gen: String): Boolean = manifest.readable(gen)
 
   /** The newest retained READABLE generation committed at or before
     * `tsMillis` — generation names embed their commit wall-clock
@@ -224,8 +226,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   def readGeneration(gen: String): Option[DataFrame] =
     manifest.readGen(gen).flatMap(snap =>
-      relationFor(snap.entries, snap.schema)
-        .map(_.drop("date", "hour", "minute")))
+      relationFor(snap.entries, snap.schema))
 
   /** Generation-diff incremental read (CDC): the rows in files `genB`
     * references that `genA` does not — the incremental-consumer shape
@@ -249,7 +250,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       have = a.entries.map(_.rel).toSet
       added = b.entries.filterNot(e => have(e.rel))
       df <- relationFor(added, b.schema)
-    } yield df.drop("date", "hour", "minute")
+    } yield df
 
   /** The delete side of [[changesBetween]]: the rows in files `genA`
     * references that `genB` no longer does — what a downstream
@@ -271,7 +272,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       kept = b.entries.map(_.rel).toSet
       removed = a.entries.filterNot(e => kept(e.rel))
       df <- relationFor(removed, a.schema)
-    } yield df.drop("date", "hour", "minute")
+    } yield df
 
   /** ROW-exact CDC (round 18, closing the file-granular caveat): the
     * rows whose `keyCols` exist in `genB` but nowhere in `genA` — true
@@ -320,15 +321,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   private def plannedOrEmpty(subset: Seq[StoreManifest.Entry],
       all: Seq[StoreManifest.Entry],
-      schema: Option[StructType]): Option[DataFrame] =
+      schema: StructType): Option[DataFrame] =
     relationFor(subset, schema)
-      .map(_.drop("date", "hour", "minute"))
-      .orElse(relationFor(all, schema)
-        .map(_.drop("date", "hour", "minute").limit(0)))
+      .orElse(relationFor(all, schema).map(_.limit(0)))
 
   private def antiOnKeys(df: DataFrame,
       otherEntries: Seq[StoreManifest.Entry],
-      otherSchema: Option[StructType], keyCols: Seq[String]): DataFrame =
+      otherSchema: StructType, keyCols: Seq[String]): DataFrame =
     relationFor(otherEntries, otherSchema) match {
       case Some(other) =>
         // key columns only (column-pruned scan) + distinct: the anti
@@ -411,7 +410,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   private def commitOver[A](planned: Option[String])(
       publish: (Option[String], Seq[StoreManifest.Entry],
-        Option[StructType] => Option[StructType]) => A): A =
+        StructType => StructType) => A): A =
     commitLock.synchronized {
       fence()
       val newer =
@@ -422,7 +421,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         publish(planned, Nil, identity)
       else publish(newer.lastOption, mine.flatMap(_._1), schema =>
         mine.foldLeft(schema)((acc, m) =>
-          acc.flatMap(ParquetStore.appendSchema(_, m._2))))
+          ParquetStore.appendSchema(acc, m._2)))
     }
 
   private def fenceLease(): Unit = leaseLock.synchronized { myLease match {
@@ -464,8 +463,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * the commit lock, so a running rewrite never stalls them (it
     * commits over them, [[commitOver]]). The recorded schema stays
     * exact: the parent's columns plus the batch's new ones, the union
-    * the footers merge to; a parent without one, or a re-typed
-    * column, records None (footer inference, [[expire]]'s contract).
+    * the footers merge to. A batch that re-types or re-cases a
+    * recorded column throws [[ParquetStore.SchemaConflictException]]
+    * before the publish; its landed tree is an orphan for [[vacuum]].
     * Rows spanning a WIDE event-time range belong in [[writeStaged]].
     */
   def write(batch: DataFrame, info: Option[String] = None): Unit =
@@ -486,11 +486,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * now, organize in the background.
     */
   def writeStaged(batch: DataFrame): Unit =
-    commitAppend(batch, None, (rows, gen) => rows.write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#trace_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#trace_id",
-        bloomNdv.toString)
-      .parquet(s"$dir/$gen"))
+    commitAppend(batch, None, (rows, gen) =>
+      bloomWriter(rows).parquet(s"$dir/$gen"))
 
   private def commitAppend(batch: DataFrame, info: Option[String],
       land: (DataFrame, String) => Unit): Unit =
@@ -509,20 +506,12 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       val landed = manifest.walkSubtree(gen)
       commitLock.synchronized {
         fence()
-        truth() match {
-          case Some(snap) =>
-            val name = manifest.publishPatch(adds = landed, drops = Nil,
-              deadPlus = Nil, deadMinus = Nil,
-              schema = snap.schema.flatMap(
-                ParquetStore.appendSchema(_, batchSchema)),
-              parent = snap.gen, info = info)
-            if (rewrites > 0) appendsInRewrite(name) = (landed, batchSchema)
-          case None => // first commit ever: absolute, legacy files folded
-            val legacy = manifest.walkLegacy()
-            manifest.publish(legacy ++ landed,
-              if (legacy.isEmpty) Some(batchSchema) else None, Nil,
-              parent = None, info = info): Unit
-        }
+        val base = baseFor(None)
+        val name = manifest.publishPatch(adds = landed, drops = Nil,
+          deadPlus = Nil, deadMinus = Nil,
+          schema = ParquetStore.appendSchema(base.schema, batchSchema),
+          parent = base.parent, info = info)
+        if (rewrites > 0) appendsInRewrite(name) = (landed, batchSchema)
       }
     } finally landing.remove(gen): Unit
   }
@@ -571,21 +560,19 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       .getOrElse(Set.empty)
     def admits(pk: String): Boolean = pk.isEmpty ||
       affectedDates(StoreManifest.dateKeyOf(pk).stripPrefix("date="))
-    val t = truthFor(Some(admits))
-    val allEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
+    val t = baseFor(Some(admits))
     // a staged (depth-0) file has no date to scope by: any of its
     // rows may carry a removed key, so it is rewritten with the dates
-    val affected = allEntries.filter { e =>
+    val affected = t.entries.filter { e =>
       val l = logicalRel(e.rel)
       val i = l.indexOf('/')
       if (i < 0) affectedDates.nonEmpty
       else affectedDates(l.substring(0, i).stripPrefix("date="))
     }
     val survivors = removedCached.flatMap { r =>
-      relationFor(affected, t.flatMap(_.schema)).map(
-        _.drop("date", "hour", "minute")
-          .join(r.select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_anti"))
+      relationFor(affected, t.schema).map(
+        _.join(r.select(keyCols.map(col): _*).distinct(),
+          keyCols, "left_anti"))
     }
     val toLand: Option[DataFrame] = (survivors, adds) match {
       case (Some(sv), Some(ad)) =>
@@ -598,27 +585,16 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val landed =
       if (toLand.isDefined) manifest.walkSubtree(gen) else Nil
     val now = System.currentTimeMillis()
-    val landedSchema = toLand.map(r =>
-      StoreManifest.allNullable(r.schema))
-    t match {
-      case Some(snap) => commitOver(Some(snap.gen)) { (parent, _, widen) =>
-        manifest.publishPatch(adds = landed,
-          drops = affected.map(_.rel),
-          deadPlus = affected.map(e => StoreManifest.Dead(e.rel, now)),
-          deadMinus = Nil,
-          // keep the recorded schema only when the landing provably
-          // conforms (else footer inference — the drift contract)
-          schema = widen(
-            snap.schema.filter(s => landedSchema.forall(_ == s))),
-          parent = parent.get, info = info): Unit
-      }
-      case None => // first commit ever: absolute
-        fence()
-        val full = manifest.walkLegacy()
-        val affectedSet = affected.map(_.rel).toSet
-        manifest.publish(full.filterNot(e => affectedSet(e.rel)) ++ landed,
-          None, affected.map(e => StoreManifest.Dead(e.rel, now)),
-          parent = None, info = info): Unit
+    // the recorded columns, then any the adds bring (the survivors
+    // were read with the recorded schema)
+    val schema = toLand.fold(t.schema)(r => ParquetStore.appendSchema(
+      t.schema, StoreManifest.allNullable(r.schema)))
+    commitOver(t.parent) { (parent, _, widen) =>
+      manifest.publishPatch(adds = landed,
+        drops = affected.map(_.rel),
+        deadPlus = affected.map(e => StoreManifest.Dead(e.rel, now)),
+        deadMinus = Nil, schema = widen(schema),
+        parent = parent, info = info): Unit
     }
     } finally removedCached.foreach(_.unpersist(): Unit)
   }
@@ -636,46 +612,50 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   def replaceCommitted(batch: Option[DataFrame],
       info: Option[String] = None): Unit = mutation {
     fence()
-    val t = truth()
+    val t = baseFor(None)
     val gen = newGenName()
     batch.foreach(landGenTree(_, gen))
     beforeCommit()
     val landed =
       if (batch.isDefined) manifest.walkSubtree(gen) else Nil
     val now = System.currentTimeMillis()
-    val priorEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
-    commitOver(t.map(_.gen)) { (parent, appended, widen) =>
+    commitOver(t.parent) { (parent, appended, widen) =>
+      // a truncate keeps the recorded schema; a reload records its own
       manifest.publish(landed ++ appended,
-        widen(batch.map(b => StoreManifest.allNullable(b.schema))),
-        t.map(_.dead).getOrElse(Nil) ++
-          priorEntries.map(e => StoreManifest.Dead(e.rel, now)),
+        widen(batch.fold(t.schema)(b =>
+          StoreManifest.allNullable(b.schema))),
+        t.dead ++ t.entries.map(e => StoreManifest.Dead(e.rel, now)),
         parent = parent, info = info): Unit
     }
   }
 
   /** Land `rows` in the immutable `_gen-*` tree `gen`: partition
     * columns derived from the row's own time, one file per touched
-    * minute dir, trace_id bloom — the shared landing block of every
+    * minute dir — the shared landing block of every partitioned
     * appending commit ([[write]] / [[applyMirror]] /
-    * [[replaceCommitted]]); a change here (bloom knobs, partition
-    * scheme) must reach all three or an unbounded trace lookup
-    * silently loses its pruning on one path.
+    * [[replaceCommitted]]).
     */
   private def landGenTree(rows: DataFrame, gen: String): Unit =
-    ParquetStore.withPartCols(rows, timeCol)
+    bloomWriter(ParquetStore.withPartCols(rows, timeCol)
       // one task per partition dir, so a T-task flush over D minutes
       // lands D files, not T×D (measured ~1,900 one-KB files without);
       // the count is EXPLICIT because AQE otherwise coalesced a small
       // flush into ONE serial task (g13: 2-3.6 s, 31 of 32 cores idle)
       .repartition(spark.sparkContext.defaultParallelism,
-        col("date"), col("hour"), col("minute"))
-      .write
-      .mode("overwrite")
+        col("date"), col("hour"), col("minute")))
+      .partitionBy("date", "hour", "minute")
+      .parquet(s"$dir/$gen")
+
+  /** The one writer every landing and rewrite goes through: it
+    * overwrites its fresh `_gen-*` target and writes the trace_id
+    * bloom filter sized by `bloomNdv`, so no path loses trace-lookup
+    * pruning.
+    */
+  private def bloomWriter(rows: DataFrame): DataFrameWriter[Row] =
+    rows.write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#trace_id", "true")
       .option("parquet.bloom.filter.expected.ndv#trace_id",
         bloomNdv.toString)
-      .partitionBy("date", "hour", "minute")
-      .parquet(s"$dir/$gen")
 
   def exists: Boolean = fs.exists(new Path(dir))
 
@@ -701,6 +681,25 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     refuseLeftoverStaging()
     admit.fold(manifest.read())(manifest.readStateFor)
   }
+
+  /** What a mutation plans from and commits over: the newest
+    * generation ([[truthFor]]), or for a never-committed store its
+    * legacy walk and the schema listing mode reads it with, inferred
+    * here once. The commit records that schema, and its patch with
+    * `parent = None` checkpoints over the walk.
+    */
+  private def baseFor(admit: Option[String => Boolean]): ParquetStore.Base =
+    truthFor(admit) match {
+      case Some(t) =>
+        ParquetStore.Base(Some(t.gen), t.entries, t.schema, t.dead)
+      case None =>
+        val legacy = manifest.walkLegacy()
+        ParquetStore.Base(None, legacy,
+          if (legacy.isEmpty) new StructType()
+          else tryRead(dir).fold(new StructType())(df =>
+            StoreManifest.allNullable(ParquetStore.logical(df).schema)),
+          Nil)
+    }
 
   /** An older binary's [[writeStaged]] appended plain files under
     * `_staging`, which no generation lists, so planning from the
@@ -791,8 +790,10 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   private def depthOf(rel: String): Int = logicalRel(rel).count(_ == '/')
 
-  /** Plan the given entries as a DataFrame with ZERO filesystem
-    * listings: one [[ManifestFileIndex]] per partition depth, whatever
+  /** Plan the given entries as the logical table with ZERO
+    * filesystem listings and no footer reads: one
+    * [[ManifestFileIndex]] per partition depth over the recorded
+    * `schema`, whatever
     * tree each file lives in (the index parses partition values from
     * the logical rel, so the legacy tree and every `_gen-*` tree of a
     * depth plan as ONE relation — a window over a day of flush trees
@@ -800,28 +801,26 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * parser refuses mixed `date=…` depths in one relation, so a
     * mixed-grain store unions one relation per depth by name, each
     * first passed through `perDepth` (depth, relation) — the hook a
-    * read prunes every grain at its own granularity with.
-    * Partition columns, pruning and types are identical to a
-    * directory read.
+    * read prunes every grain at its own granularity with — and then
+    * stripped of its partition columns. None for no entries.
     */
   private def relationFor(entries: Seq[StoreManifest.Entry],
-      schema: Option[StructType],
+      schema: StructType,
       perDepth: (Int, DataFrame) => DataFrame = (_, df) => df)
-      : Option[DataFrame] = {
-    if (entries.isEmpty) return None
-    val byDepth = entries.groupBy(e => depthOf(e.rel))
-    val parts = byDepth.toSeq.sortBy(_._1).flatMap { case (d, es) =>
-      ManifestFileIndex.relation(spark, dir, es, schema, logicalRel)
-        .map(perDepth(d, _))
-    }
-    parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
-  }
+      : Option[DataFrame] =
+    entries.groupBy(e => depthOf(e.rel)).toSeq.sortBy(_._1)
+      .flatMap { case (d, es) =>
+        ManifestFileIndex.relation(spark, dir, es, schema, logicalRel)
+          .map(df => ParquetStore.logical(perDepth(d, df)))
+      }
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
 
   /** The legacy tree as a DataFrame via Spark directory discovery,
-    * None when it holds no data yet. Only the no-manifest mode plans
-    * this way. Schema inference doubles as the distributed "any
-    * files?" probe — a driver-side walk would not scale to a real
-    * store's file count.
+    * None when it holds no data yet. Only listing mode plans this
+    * way, and a never-committed store's first commit infers its
+    * schema from it ([[baseFor]]). Schema inference doubles as the
+    * distributed "any files?" probe — a driver-side walk would not
+    * scale to a real store's file count.
     */
   private def tryRead(path: String): Option[DataFrame] = {
     if (!fs.exists(new Path(path))) return None
@@ -834,16 +833,19 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   }
 
   /** Read with optional µs time-range pruning pushed onto the partition
-    * columns; mergeSchema covers dynamic log-schema drift across files
-    * (the reference's open FIXME at duo/src/partition/query.rs:72-75).
-    * Each partition depth is pruned at its own grain before the union
-    * ([[relationFor]]), and partition columns are dropped after
-    * pruning so the result matches the logical table schema.
+    * columns. Dynamic log-schema drift across files (the reference's
+    * open FIXME at duo/src/partition/query.rs:72-75) is settled by the
+    * generation's recorded schema, the union every commit widens;
+    * older files read the columns they lack as null. Only listing mode
+    * (no generation yet) merges footers. Each partition depth is
+    * pruned at its own grain before the union ([[relationFor]]), and
+    * partition columns are dropped after pruning so the result
+    * matches the logical table schema.
     */
   def read(startUs: Option[Long], endUs: Option[Long]): Option[DataFrame] = {
     if (!exists) return None
-    val window: (Int, DataFrame) => DataFrame = (depth, df) =>
-      prunedTo(depth, df, startUs, endUs).drop("date", "hour", "minute")
+    val window: (Int, DataFrame) => DataFrame =
+      prunedTo(_, _, startUs, endUs)
     // windowed reads assemble only the dates the window admits — the
     // manifest prune that keeps plan wall ∝ window as the table grows
     truthFor(dateAdmitOf(startUs, endUs)) match {
@@ -851,7 +853,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       case None =>
         tryRead(dir).map { b =>
           val d = Seq("date", "hour", "minute").count(b.columns.contains)
-          window(d, b)
+          ParquetStore.logical(window(d, b))
         }
     }
   }
@@ -962,19 +964,16 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // the rest of the table, so the other partitions' manifests are
     // never read: per-date maintenance is O(date) metadata end to end
     // (a hot-split date's hour sub-keys all group under this date)
-    val t = truthFor(Some(pk =>
+    val t = baseFor(Some(pk =>
       pk.isEmpty || StoreManifest.dateKeyOf(pk) == part0))
-    val mainEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
-    val part = part0
-    val eD = mainEntries.filter(e => logicalRel(e.rel).startsWith(part + "/"))
+    val eD = t.entries.filter(e => logicalRel(e.rel).startsWith(part0 + "/"))
     if (eD.isEmpty) return
     // partition columns re-derived from the row's own time (the store
     // invariant: dir values are pure functions of timeCol in the
     // session zone) — one derivation path whatever trees the input
     // files lived in. compactDate targets the minute layout
     // (planCompactions only flags minute-grain dates).
-    val dataRows = relationFor(eD, t.flatMap(_.schema)).getOrElse(return)
-      .drop("date", "hour", "minute")
+    val dataRows = relationFor(eD, t.schema).getOrElse(return)
     val rows = ParquetStore.withPartCols(dataRows, timeCol)
     // `filesPerPartition` is a hash-partition count, so one dir's rows
     // land wholly in one task at ANY value — the file-per-dir layout
@@ -991,10 +990,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         graft.operators.Pipelines.zorderKey(x, y))
     }
     val gen = newGenName()
-    val writer = sorted.write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#trace_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#trace_id",
-        bloomNdv.toString)
+    val writer = bloomWriter(sorted)
     blockSize.fold(writer)(b => writer
         .option("parquet.block.size", b.toString))
       .partitionBy("date", "hour", "minute")
@@ -1002,45 +998,27 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     if (crashAfterStep <= 1) return
     // COMMIT: prior entries outside the date kept verbatim — no walk —
     // plus the rewrite's walk (bounded by the files just written).
-    // The prior merged schema stays exact when it was recorded: the
-    // rewrite read with that schema pinned, so its files carry the
-    // full unified column set. The lease is RE-verified here (the
-    // rewrite may have run for minutes; a writer fenced mid-rewrite
-    // must not land a stale truth) and the publish CASes on the
-    // planning snapshot's generation.
+    // The recorded schema stays exact: the rewrite read with it
+    // pinned, so its files carry the full unified column set (a
+    // never-committed store's patch folds its legacy walk and records
+    // the inferred schema the rewrite read with). The lease is
+    // RE-verified here (the rewrite may have run for minutes; a writer
+    // fenced mid-rewrite must not land a stale truth) and the publish
+    // CASes on the planning snapshot's generation.
     beforeCommit()
     val now = System.currentTimeMillis()
     val rewritten = manifest.walkSubtree(gen)
     val info = Some(s"""{"op":"compactDate","date":"$date",""" +
       s""""wrote":${rewritten.size},"retired":${eD.size}}""")
-    t match {
-      case Some(snap) => commitOver(Some(snap.gen)) { (parent, _, widen) =>
-        // patch-shaped: this mutation KNOWS its delta (the one date it
-        // rewrote) — O(date), not O(table), per commit
-        manifest.publishPatch(
-          adds = rewritten,
-          drops = eD.map(_.rel),
-          deadPlus = eD.map(e => StoreManifest.Dead(e.rel, now)),
-          deadMinus = Nil,
-          schema = widen(snap.schema), parent = parent.get,
-          info = info): Unit
-      }
-      case None => // first ever publish: absolute by construction
-        fence()
-        val kept = mainEntries.filterNot(e =>
-          logicalRel(e.rel).startsWith(part + "/"))
-        // when the rewrite IS the whole table (no kept files), its
-        // unified schema is exact — record it so later reads and
-        // rewrites plan from the manifest instead of re-running the
-        // distributed footer-merge inference every call (guide §6;
-        // measured on g13's maintenance cadence: one 32-task
-        // inferSchema job per read/heal without this)
-        manifest.publish(kept ++ rewritten,
-          if (kept.isEmpty)
-            Some(StoreManifest.allNullable(dataRows.schema))
-          else None,
-          eD.map(e => StoreManifest.Dead(e.rel, now)),
-          parent = None, info = info): Unit
+    commitOver(t.parent) { (parent, _, widen) =>
+      // patch-shaped: this mutation KNOWS its delta (the one date it
+      // rewrote) — O(date), not O(table), per commit
+      manifest.publishPatch(
+        adds = rewritten,
+        drops = eD.map(_.rel),
+        deadPlus = eD.map(e => StoreManifest.Dead(e.rel, now)),
+        deadMinus = Nil,
+        schema = widen(t.schema), parent = parent, info = info): Unit
     }
   }
 
@@ -1115,10 +1093,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // SNAPSHOT: the truth is captured NOW; an append committing after
     // it is cleanly "late" — outside the rewrite, carried over it by
     // [[commitOver]], visible before and after the commit.
-    val t = truth()
-    val mainEntries = t.map(_.entries).getOrElse(manifest.walkLegacy())
-    val all = relationFor(mainEntries, t.flatMap(_.schema))
-      .map(_.drop("date", "hour", "minute"))
+    val t = baseFor(None)
+    val all = relationFor(t.entries, t.schema)
     if (all.isEmpty) return
     // partition columns re-derived from the row's own time at the
     // TARGET granularity (the store invariant: dir values are pure
@@ -1135,14 +1111,10 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // dynamic partition keys, unstably) is already satisfied and the
     // z-order survives into the files
     val gen = newGenName()
-    val writer = zorderOn.fold(base) { case (x, y) =>
+    val writer = bloomWriter(zorderOn.fold(base) { case (x, y) =>
       base.sortWithinPartitions(
         partCols.map(col) :+ graft.operators.Pipelines.zorderKey(x, y): _*)
-    }
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#trace_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#trace_id",
-        bloomNdv.toString)
+    })
     blockSize.fold(writer)(b => writer
         .option("parquet.block.size", b.toString))
       .partitionBy(partCols: _*)
@@ -1150,7 +1122,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     if (crashAfterStep <= 1) return
     // COMMIT: one manifest publish flips the table to the rewrite —
     // entries walked from the files just written (bounded), schema
-    // exact (every file written from ONE DataFrame), tombstones =
+    // the one the rewrite read with, tombstones =
     // everything superseded plus the prior not-yet-vacuumed set
     // carried forward. The lease is RE-verified at the commit point
     // (a whole-table rewrite can run for minutes; a writer fenced
@@ -1160,14 +1132,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     beforeCommit()
     val now = System.currentTimeMillis()
     val rewritten = manifest.walkSubtree(gen)
-    commitOver(t.map(_.gen)) { (parent, appended, widen) =>
-      manifest.publish(rewritten ++ appended, widen(Some(all.get.schema)),
-        t.map(_.dead).getOrElse(Nil) ++
-          mainEntries.map(e => StoreManifest.Dead(e.rel, now)),
+    commitOver(t.parent) { (parent, appended, widen) =>
+      manifest.publish(rewritten ++ appended, widen(t.schema),
+        t.dead ++ t.entries.map(e => StoreManifest.Dead(e.rel, now)),
         parent = parent,
         info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
           s""""wrote":${rewritten.size},""" +
-          s""""retired":${mainEntries.size}}""")): Unit
+          s""""retired":${t.entries.size}}""")): Unit
     }
   }
 
@@ -1258,7 +1229,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       leaseNames().filter(_ < mine)
         .foreach(n => fs.delete(new Path(lockDir, n), false): Unit)
     }
-    val snap = manifest.read()
+    val head = manifest.newestDead()
     // 1. ripe tombstones → delete the files (idempotent: missing = ok).
     // Parallel beyond a small batch: on an object store each delete is
     // a ~tens-of-ms round trip, and a compaction-heavy table whose
@@ -1267,7 +1238,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // throughput (Delta's vacuum distributes deletes for the same
     // reason; driver-side threads suffice here because a delete is
     // all-latency-no-data and FileSystem clients are thread-safe).
-    val ripe = snap.map(_.dead.filter(_.millis + graceMs <= now))
+    val ripe = head.map(_._2.filter(_.millis + graceMs <= now))
       .getOrElse(Nil)
     deleteBatch(ripe.map(d => new Path(s"$dir/${d.rel}")))
     // drop now-empty partition dirs the tombstones vacated (legacy
@@ -1312,17 +1283,20 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
           "vacuum(reclaimUnknown = ...)")
     // 2. republish with the reclaimed tombstones pruned (entries and
     // schema unchanged) so the dead list never grows unboundedly —
-    // lease re-verified and CAS'd on the snapshot read at step 1,
-    // like every commit
-    if (ripe.nonEmpty && futureGens.isEmpty) snap.foreach { s =>
+    // lease re-verified and CAS'd on the generation read at step 1,
+    // like every commit. A generation an older build left without a
+    // schema has none to record, so its list stays (re-deleting a
+    // reclaimed file is a no-op)
+    if (ripe.nonEmpty && futureGens.isEmpty) head.foreach { case (g, _) =>
       // patch-shaped: the reclaim's delta is exactly the ripe
       // tombstone list — no O(table) entry diff on a maintenance tick
-      commitOver(Some(s.gen)) { (parent, _, widen) =>
-        manifest.publishPatch(adds = Nil, drops = Nil,
-          deadPlus = Nil, deadMinus = ripe.map(_.rel),
-          schema = widen(s.schema), parent = parent.get,
-          info = Some(s"""{"op":"vacuum","reclaimed":${ripe.size}}""")
-        ): Unit
+      if (manifest.recordsSchema(g)) commitOver(Some(g)) {
+        (parent, _, widen) =>
+          manifest.publishPatch(adds = Nil, drops = Nil,
+            deadPlus = Nil, deadMinus = ripe.map(_.rel),
+            schema = widen(manifest.readGen(g).get.schema), parent = parent,
+            info = Some(s"""{"op":"vacuum","reclaimed":${ripe.size}}""")
+          ): Unit
       }
     }
     if (futureGens.nonEmpty) return (ripe.size, 0, 0)
@@ -1352,9 +1326,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // rewrites, or trees whose last live file a prior vacuum
     // reclaimed. Every retained generation counts: an older gen is
     // exactly what a corrupt-latest reader falls back to.
-    val referenced: Set[String] = manifest.readAll().flatMap(s =>
-      (s.entries.map(e => treeRootOf(e.rel)) ++
-        s.dead.map(d => treeRootOf(d.rel))).filter(_.nonEmpty)).toSet
+    val referenced: Set[String] =
+      manifest.referencedRels().map(treeRootOf).filter(_.nonEmpty).toSet
     val orphans = ls(new Path(dir)).filter { s =>
       s.isDirectory && s.getPath.getName.startsWith("_gen-") &&
         !referenced(s.getPath.getName) &&
@@ -1520,15 +1493,15 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     *    is what the next [[compact]] gives, since its rewrite
     *    re-derives dirs from surviving rows).
     *
-    * With a live manifest the drop is a pure manifest operation:
-    * survivors republished, dropped files tombstoned (schema-free —
-    * dropping a date can retire the only files carrying a drifted
-    * column, and a stale schema would resurrect it as all-null;
-    * readers infer from footers until the next compact re-publishes),
-    * bytes reclaimed by [[vacuum]] after the grace window — so
-    * concurrent readers planned before the expiry stay green. A
-    * never-committed store (duo's native layout, no manifest) deletes
-    * its date dirs eagerly, as plain listing-mode stores always have.
+    * The drop is a pure manifest operation: survivors republished,
+    * dropped files tombstoned, bytes reclaimed by [[vacuum]] after the
+    * grace window — so concurrent readers planned before the expiry
+    * stay green. The recorded schema is kept: dropping a date can
+    * retire the only files carrying a drifted column, which then reads
+    * as all-null (the resurrect-as-null contract [[SchemaRegistry]]
+    * keeps; its `gc` is the explicit trim). A never-committed store
+    * (duo's native layout) commits its expiry as its first
+    * generation, like any mutation.
     * Returns (datePartitionsDropped, stagedFilesDropped).
     */
   def expire(cutoffUs: Long): (Int, Int) = mutation {
@@ -1548,49 +1521,34 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // retention only needs the EXPIRED dates' entries (the patch's
     // drops) — surviving partitions' manifests are never read, so a
     // retention tick is O(expired dates), not O(table)
-    truthFor(Some(pk => pk.isEmpty || StoreManifest.dateKeyOf(pk)
-        .stripPrefix("date=") < cutoffDate.toString)) match {
-      case Some(t) =>
-        // ISO dates compare chronologically as strings
-        def dateOf(rel: String): String = {
-          val l = logicalRel(rel)
-          l.take(math.max(l.indexOf('/'), 0)).stripPrefix("date=")
-        }
-        val droppedE = t.entries.filter(e =>
-          dateOf(e.rel).nonEmpty && dateOf(e.rel) < cutoffDate.toString)
-        // stats missing ⇒ unprovable ⇒ keep (loud is rowGroupRanges'
-        // job; retention must only ever delete what it can prove dead)
-        val stagedDead = t.entries.filter(e => depthOf(e.rel) == 0 &&
-          fileMaxStat(new Path(s"$dir/${e.rel}")).exists(_ < dayFloorUs))
-        val dropped = droppedE ++ stagedDead
-        if (dropped.isEmpty) return (0, 0)
-        val now = System.currentTimeMillis()
-        // patch-shaped: the expiry's delta is exactly the dropped
-        // dates' entries. schema=None keeps the documented
-        // drifted-column contract (readers fall back to footer
-        // inference after an expire), same as the absolute form.
-        commitOver(Some(t.gen)) { (parent, _, _) =>
-          manifest.publishPatch(adds = Nil,
-            drops = dropped.map(_.rel),
-            deadPlus = dropped.map(e => StoreManifest.Dead(e.rel, now)),
-            deadMinus = Nil,
-            schema = None, parent = parent.get,
-            info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
-              s""""retired":${dropped.size}}""")): Unit
-        }
-        (droppedE.map(e => logicalRel(e.rel).takeWhile(_ != '/'))
-          .distinct.size, stagedDead.size)
-      case None =>
-        // never-committed store: eager deletes, the plain shape.
-        // Idempotent — a crash mid-expiry leaves fewer dirs for the
-        // next run.
-        val expiredDirs = ls(new Path(dir))
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("date=") &&
-            s.getPath.getName.stripPrefix("date=") < cutoffDate.toString)
-        expiredDirs.foreach(s => rm(s.getPath))
-        (expiredDirs.size, 0)
+    val t = baseFor(Some(pk => pk.isEmpty || StoreManifest.dateKeyOf(pk)
+      .stripPrefix("date=") < cutoffDate.toString))
+    // ISO dates compare chronologically as strings
+    def dateOf(rel: String): String = {
+      val l = logicalRel(rel)
+      l.take(math.max(l.indexOf('/'), 0)).stripPrefix("date=")
     }
+    val droppedE = t.entries.filter(e =>
+      dateOf(e.rel).nonEmpty && dateOf(e.rel) < cutoffDate.toString)
+    // stats missing ⇒ unprovable ⇒ keep (loud is rowGroupRanges'
+    // job; retention must only ever delete what it can prove dead)
+    val stagedDead = t.entries.filter(e => depthOf(e.rel) == 0 &&
+      fileMaxStat(new Path(s"$dir/${e.rel}")).exists(_ < dayFloorUs))
+    val dropped = droppedE ++ stagedDead
+    if (dropped.isEmpty) return (0, 0)
+    val now = System.currentTimeMillis()
+    // patch-shaped: the expiry's delta is exactly the dropped dates'
+    // entries
+    commitOver(t.parent) { (parent, _, widen) =>
+      manifest.publishPatch(adds = Nil,
+        drops = dropped.map(_.rel),
+        deadPlus = dropped.map(e => StoreManifest.Dead(e.rel, now)),
+        deadMinus = Nil, schema = widen(t.schema), parent = parent,
+        info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
+          s""""retired":${dropped.size}}""")): Unit
+    }
+    (droppedE.map(e => logicalRel(e.rel).takeWhile(_ != '/'))
+      .distinct.size, stagedDead.size)
   }
 
   /** max(timeCol) across one parquet file's row groups, from footer
@@ -1702,12 +1660,10 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * tree lists each date dir once. Cost is bounded by DIRECTORIES
     * TOUCHED, never by window width.
     *
-    * Schema contract when `schema` is None: the result's column set is
-    * the WINDOW-LOCAL merged schema — inferred over exactly the files
-    * the window selects — on every path (manifest, listing), so
-    * an identical query answers with an identical shape regardless of
-    * background maintenance state. Callers that pin hashes pass
-    * `schema` explicitly, which every path honors identically.
+    * Schema: `schema` when given, which every path honors
+    * identically; otherwise the generation's recorded schema, with no
+    * footer read. Only listing mode (no generation yet) merges the
+    * selected files' footers.
     */
   def readPrefixes(startUs: Long, endUs: Long,
       schema: Option[StructType] = None): Option[DataFrame] = {
@@ -1805,19 +1761,16 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         val selected = expanded.distinct
           .flatMap(entryByLogical.getOrElse(_, Nil)) ++
           tr.entries.filter(e => depthOf(e.rel) == 0)
-        relationFor(selected, schema, (depth, df0) => {
-          val df = df0.drop("date", "hour", "minute")
+        relationFor(selected, schema.getOrElse(tr.schema), (depth, df) =>
           if (depth > 0 && fallbackRels.isEmpty) df
-          else df.where(col(timeCol) >= loUs && col(timeCol) < hiUs)
-        })
+          else df.where(col(timeCol) >= loUs && col(timeCol) < hiUs))
       case None =>
         val mainInputs = (present ++ fallbackRels).map(r => s"$dir/$r")
         if (mainInputs.isEmpty) None else {
           val reader = spark.read.option("mergeSchema", "true")
             .option("basePath", dir)
           val withSchema = schema.map(reader.schema).getOrElse(reader)
-          val df = withSchema.parquet(mainInputs: _*)
-            .drop("date", "hour", "minute")
+          val df = ParquetStore.logical(withSchema.parquet(mainInputs: _*))
           Some(if (fallbackRels.isEmpty) df
             else df.where(col(timeCol) >= loUs && col(timeCol) < hiUs))
         }
@@ -1884,18 +1837,40 @@ object ParquetStore {
 
   /** The schema an append records atop its parent's: the parent's
     * columns in order, then the batch's new ones (both all-nullable).
-    * None when the batch re-types a column or names one in a different
-    * case, conflicts a footer merge would not resolve the same way.
+    * Throws [[SchemaConflictException]] when the batch re-types a
+    * column or names one in a different case — the conflicts Arrow's
+    * `Schema::try_merge` rejects (duo/src/schema.rs:78-89), and a
+    * footer merge would not resolve the same way.
     */
   private[store] def appendSchema(parent: StructType,
-      batch: StructType): Option[StructType] = {
+      batch: StructType): StructType = {
     val byName = parent.fields.map(f => f.name.toLowerCase -> f).toMap
-    val clash = batch.fields.exists(f => byName.get(f.name.toLowerCase)
-      .exists(p => p.name != f.name || p.dataType != f.dataType))
-    if (clash) None
-    else Some(StructType(parent.fields ++
-      batch.fields.filterNot(f => byName.contains(f.name.toLowerCase))))
+    batch.fields.foreach(f => byName.get(f.name.toLowerCase)
+      .filter(p => p.name != f.name || p.dataType != f.dataType)
+      .foreach(p => throw new SchemaConflictException(
+        s"column ${f.name} ${f.dataType.simpleString} conflicts with " +
+          s"the recorded ${p.name} ${p.dataType.simpleString}")))
+    StructType(parent.fields ++
+      batch.fields.filterNot(f => byName.contains(f.name.toLowerCase)))
   }
+
+  /** A commit whose rows re-type or re-case a recorded column: the
+    * table's schema cannot record both, so the commit is refused
+    * before its publish.
+    */
+  final class SchemaConflictException(msg: String)
+    extends IllegalArgumentException(msg)
+
+  /** A mutation's planning state ([[ParquetStore.baseFor]]); `parent`
+    * None for a never-committed store.
+    */
+  private final case class Base(parent: Option[String],
+      entries: Seq[StoreManifest.Entry], schema: StructType,
+      dead: Seq[StoreManifest.Dead])
+
+  /** `df` without the partition columns: the logical table. */
+  private def logical(df: DataFrame): DataFrame =
+    df.drop("date", "hour", "minute")
 
   /** `rows` plus the partition columns `partCols` (a subset of
     * date/hour/minute), derived from the row's µs `timeCol` in the

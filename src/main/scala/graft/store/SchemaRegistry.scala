@@ -13,7 +13,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * first-writer-wins types; cross-batch/file alignment =
   * unionByName(allowMissingColumns). The reference's open FIXME (reading
   * old parquet with the current schema, duo/src/partition/query.rs:72-75)
-  * is resolved here by mergeSchema reads + name-based union.
+  * is resolved in the store: every [[ParquetStore]] generation records
+  * the same kind of monotone union, and reads plan old files with it
+  * (missing columns read as null) — only duo's native un-manifested
+  * layout is still read with a `mergeSchema` footer merge.
   */
 object SchemaRegistry {
 

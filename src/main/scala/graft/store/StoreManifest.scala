@@ -153,10 +153,10 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   /** One parsed generation FILE, before chain folding. A checkpoint
     * carries the absolute state as `manifests` refs; a delta carries
     * one commit's manifest-set patch (`mAdds`/`mDels`) plus its
-    * required parent pointer. Both carry the ABSOLUTE schema state (a
-    * publisher that no longer knows the exact schema writes none, and
-    * readers must drop to footer inference — expire's drifted-column
-    * contract).
+    * required parent pointer. Both carry the ABSOLUTE schema, so a
+    * generation's schema is its own file's. Every commit records one;
+    * `schema` is None only in a generation a build at or before commit
+    * 1ac9815 published, which planning refuses ([[snapshotOf]]).
     */
   private sealed trait RawGen
   private final case class FullGen(parent: Option[String],
@@ -526,14 +526,12 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   }
 
   /** One generation's chain-folded state at the MANIFEST level: the
-    * live manifest refs plus the chain-absolute schema/tombstones.
-    * Cheap (O(partitions), no entry assembly) — what commits plan
-    * from.
+    * live manifest refs plus the chain-absolute tombstones (the schema
+    * is the head file's own, [[schemaOf]]). Cheap (O(partitions), no
+    * entry assembly) — what commits plan from.
     */
   private final case class GenState(gen: String, parent: Option[String],
-      mfs: Seq[MfRef],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dead: Seq[Dead], depth: Int, info: Option[String]) {
+      mfs: Seq[MfRef], dead: Seq[Dead], depth: Int, info: Option[String]) {
     def approxSize: Long = mfs.map(_.n).sum
   }
 
@@ -580,27 +578,25 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       .from(fg.manifests.map(r => r.name -> r))
     val deadMap = scala.collection.mutable.LinkedHashMap
       .from(fg.dead.map(d => d.rel -> d))
-    var schema = fg.schema
     chain.dropRight(1).reverseIterator.foreach {
       case (_, d: DeltaGen) =>
         d.mDels.foreach(mfMap.remove(_): Unit)
         d.mAdds.foreach(r => mfMap(r.name) = r)
         d.deadMinus.foreach(deadMap.remove(_): Unit)
         d.deadPlus.foreach(x => deadMap(x.rel) = x)
-        schema = d.schema // ABSOLUTE per commit, like a checkpoint's
       case _ => // unreachable: only the chain tail is a FullGen
     }
     val (parent, headInfo) = chain.head._2 match {
       case d: DeltaGen => (Some(d.parent), d.info)
       case f: FullGen => (f.parent, f.info)
     }
-    Some(GenState(name, parent, mfMap.values.toSeq, schema,
+    Some(GenState(name, parent, mfMap.values.toSeq,
       deadMap.values.toSeq, depth = chain.size - 1, info = headInfo))
   }
 
-  /** Assemble a folded state into its absolute entry-level
-    * [[Snapshot]], reading only the manifests `admit` passes (by
-    * partition key; the catch-all `""` must always pass). Duplicate
+  /** Assemble a folded state into its absolute entry list, reading
+    * only the manifests `admit` passes (by partition key; the
+    * catch-all `""` must always pass). Duplicate
     * rels across one partition's accumulated manifests resolve
     * newest-manifest-wins. None when any ADMITTED manifest is
     * missing or torn: half a snapshot must read as no snapshot (an
@@ -608,7 +604,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * does not poison the window's answer).
     */
   private def assemble(st: GenState,
-      admit: String => Boolean): Option[Snapshot] = {
+      admit: String => Boolean): Option[Seq[Entry]] = {
     val map = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
     st.mfs.filter(r => admit(r.partKey)).foreach { r =>
       parseMf(r) match {
@@ -616,10 +612,27 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         case Some((_, es)) => es.foreach(e => map(e.rel) = e)
       }
     }
-    Some(Snapshot(st.gen, st.parent,
-      map.values.toSeq.sortBy(_.rel), st.schema, st.dead,
-      depth = st.depth, info = st.info))
+    Some(map.values.toSeq.sortBy(_.rel))
   }
+
+  /** The [[Snapshot]] reads and mutations plan from: a folded state,
+    * its entries and the schema its head file records. A generation
+    * that folds but records none was published by a build at or
+    * before commit 1ac9815; planning from it throws rather than fall
+    * back silently to an older generation.
+    */
+  private def snapshotOf(st: GenState, entries: Seq[Entry],
+      statuses: Map[String, FileStatus]): Snapshot =
+    Snapshot(st.gen, st.parent, entries, schemaOf(st.gen, statuses),
+      st.dead, depth = st.depth, info = st.info)
+
+  private def schemaOf(gen: String, statuses: Map[String, FileStatus])
+      : org.apache.spark.sql.types.StructType =
+    statuses.get(gen).flatMap(parseRaw).flatMap(rawSchemaOf)
+      .getOrElse(throw new StoreManifest.MissingSchemaException(
+      s"$tableDir: generation $gen records no schema — a build at or " +
+        "before commit 1ac9815 published it; run compact() with such " +
+        "a build to record one, then reopen the store"))
 
   /** Full-assembly memo, head-keyed: the planning read before a
     * mutation and the mutation's own parent fold share one assembly
@@ -628,17 +641,19 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * immutable and outlive the head's retention, so the memo is valid
     * for the head file's lifetime.
     */
-  private val snapMemo = new CappedMemo[(String, Long, Long), Snapshot](
-    16, _.entries.size.toLong) // full snapshots are the heavy items
+  private val snapMemo =
+    new CappedMemo[(String, Long, Long), (GenState, Seq[Entry])](
+      16, _._2.size.toLong) // full snapshots are the heavy items
 
-  private def assembleFull(name: String,
-      statuses: Map[String, FileStatus]): Option[Snapshot] =
+  private def assembleFull(name: String, statuses: Map[String, FileStatus])
+      : Option[(GenState, Seq[Entry])] =
     statuses.get(name) match {
       case None => None
       case Some(st) =>
         snapMemo.getOrCompute(
           (name, st.getLen, st.getModificationTime))(
-          fold(name, statuses).flatMap(assemble(_, _ => true)))
+          fold(name, statuses).flatMap(g =>
+            assemble(g, _ => true).map(g -> _)))
     }
 
   /** The file names `name`'s fold reads, itself included (delta chain
@@ -684,8 +699,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   /** Publish a new generation carrying the ABSOLUTE intended state
     * and return its name:
-    * the complete live-file list, the merged data schema when the
-    * publisher knows it, and the cumulative tombstone list. The
+    * the complete live-file list, the merged data schema, and the
+    * cumulative tombstone list. The
     * manifest diffs that state against the parent snapshot and
     * commits the diff through [[publishPatch]]'s machinery — a
     * manifest-level DELTA when the diff is small and the chain short,
@@ -697,14 +712,13 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * the previous consistent snapshot instead of a tree walk.
     */
   def publish(entries: Seq[Entry],
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       dead: Seq[Dead], parent: Option[String],
       info: Option[String] = None): String = {
-    val normSchema = schema.map(StoreManifest.allNullable)
+    val normSchema = StoreManifest.allNullable(schema)
     val gens = listState()
-    val parentSnap = parent.flatMap(p => assembleFull(p, gens))
-    parentSnap match {
-      case Some(ps) =>
+    parent.flatMap(p => assembleFull(p, gens)) match {
+      case Some((pst, pEntries)) =>
         // entry-level diff against the parent snapshot, full-Entry
         // comparison: a rel whose size/mtime changed (a re-walked
         // legacy file) re-publishes as drop+add so folds carry the
@@ -716,17 +730,17 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           es.foreach(e => m.put(e.rel, e))
           m
         }
-        val pByRel = byRel(ps.entries)
+        val pByRel = byRel(pEntries)
         val nByRel = byRel(entries)
         val adds = entries.filter(e => pByRel.get(e.rel) != e)
-        val drops = ps.entries.collect {
+        val drops = pEntries.collect {
           case e if nByRel.get(e.rel) != e => e.rel }
-        val pDead = ps.dead.map(d => d.rel -> d).toMap
+        val pDead = pst.dead.map(d => d.rel -> d).toMap
         val nDead = dead.map(d => d.rel -> d).toMap
         val deadPlus = dead.filter(d => !pDead.get(d.rel).contains(d))
-        val deadMinus = ps.dead.collect {
+        val deadMinus = pst.dead.collect {
           case d if !nDead.get(d.rel).contains(d) => d.rel }
-        commitTwoLevel(fold(parent.get, gens), parent, adds, drops,
+        commitTwoLevel(Some(pst), parent, adds, drops,
           deadPlus, deadMinus, Some(dead), normSchema, info,
           newSize = entries.size.toLong)
       case None =>
@@ -755,24 +769,31 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * Throws IllegalStateException when the parent no longer folds or
     * a touched partition's manifest is unreadable (the caller's
     * planning snapshot is gone — re-plan, like a CAS failure).
+    * `parent = None` is a never-committed store's first commit: the
+    * patch applies over [[walkLegacy]], published as one checkpoint.
     */
   def publishPatch(adds: Seq[Entry], drops: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      parent: String, info: Option[String] = None): String = {
-    val normSchema = schema.map(StoreManifest.allNullable)
-    val gens = listState()
-    val ps = fold(parent, gens).getOrElse(throw new
-      IllegalStateException(s"$tableDir: publishPatch parent " +
-        s"$parent no longer folds — re-plan and retry"))
-    // approximate resulting size for the delta-vs-checkpoint
-    // heuristic (duplicate rels across accumulated manifests skew it,
-    // but the choice is cosmetic — both forms fold identically)
-    val approxNewSize = ps.approxSize + adds.size - drops.size
-    commitTwoLevel(Some(ps), Some(parent), adds, drops, deadPlus,
-      deadMinus, absDead = None, schema = normSchema, info = info,
-      newSize = approxNewSize)
-  }
+      schema: org.apache.spark.sql.types.StructType,
+      parent: Option[String], info: Option[String] = None): String =
+    parent match {
+      case None =>
+        val dropped = drops.toSet
+        publish(walkLegacy().filterNot(e => dropped(e.rel)) ++ adds,
+          schema, deadPlus, parent = None, info = info)
+      case Some(p) =>
+        val ps = fold(p, listState()).getOrElse(throw new
+          IllegalStateException(s"$tableDir: publishPatch parent " +
+            s"$p no longer folds — re-plan and retry"))
+        // approximate resulting size for the delta-vs-checkpoint
+        // heuristic (duplicate rels across accumulated manifests skew
+        // it, but the choice is cosmetic — both forms fold identically)
+        val approxNewSize = ps.approxSize + adds.size - drops.size
+        commitTwoLevel(Some(ps), parent, adds, drops, deadPlus,
+          deadMinus, absDead = None,
+          schema = StoreManifest.allNullable(schema), info = info,
+          newSize = approxNewSize)
+    }
 
   /** Metadata-only granularity heal: re-key each hot UNSPLIT date's
     * manifests by hour — a date whose giant single manifest predates
@@ -793,7 +814,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * Same CAS + rename atom as every publish; the caller fences.
     */
   private[graft] def resplitHot(): Seq[String] = {
-    val ps = newestFold().getOrElse(return Nil)
+    val gens = listState()
+    val ps = newestFold(gens).getOrElse(return Nil)
     val parent = ps.gen
     val hot = ps.mfs.groupBy(r => StoreManifest.dateKeyOf(r.partKey))
       .collect { case (part, refs) if part.nonEmpty &&
@@ -806,7 +828,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     if (hot.nonEmpty)
       commitTwoLevel(Some(ps), Some(parent), adds = Nil, drops = Nil,
         deadPlus = Nil, deadMinus = Nil, absDead = None,
-        schema = ps.schema,
+        schema = schemaOf(parent, gens),
         info = Some(s"""{"op":"resplit","dates":${hot.size}}"""),
         newSize = ps.approxSize, resplit = hot.toSet): Unit
     hot
@@ -827,7 +849,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       adds: Seq[Entry], drops: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
       absDead: Option[Seq[Dead]],
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       info: Option[String], newSize: Long,
       resplit: Set[String] = Set.empty): String = {
     val patchLines = adds.size.toLong + drops.size + deadPlus.size +
@@ -923,8 +945,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
             }
           }
         val lines = s"parent\t${parentName.get}" +:
-          (schema.toSeq.map(s => s"schema\t${s.json}") ++
-            infoLineOf(info) ++
+          (s"schema\t${schema.json}" +: (infoLineOf(info) ++
             (if (mAdds.exists(_.partKey.contains('/')))
               Seq(s"protocol\t${StoreManifest.HourSplitProtocol}")
             else Nil) ++
@@ -934,7 +955,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
             mDels.sorted.map(n => s"mdel\t$n") ++
             mAdds.map(r =>
               s"madd\t${r.name}\t${r.partKey}\t${r.n}\t${r.size}")
-              .sorted)
+              .sorted))
         (s"delta=${lines.size}" +: lines).iterator
       } else {
         // checkpoint: final per-partition manifest set. Untouched
@@ -1001,7 +1022,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           .map(r => s"m\t${r.name}\t${r.partKey}\t${r.n}\t${r.size}")
         Iterator(s"mlist=${mLines.size}") ++
           parentName.toSeq.map(p => s"parent\t$p") ++
-          schema.toSeq.map(s => s"schema\t${s.json}") ++
+          Iterator(s"schema\t${schema.json}") ++
           infoLineOf(info) ++
           (if (finalRefs.exists(_.partKey.contains('/')))
             Iterator(s"protocol\t${StoreManifest.HourSplitProtocol}")
@@ -1225,7 +1246,18 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   def readGen(name: String): Option[Snapshot] =
     if (!name.startsWith("gen-")) None
-    else assembleFull(name, listState())
+    else {
+      val gens = listState()
+      assembleFull(name, gens).map { case (st, es) =>
+        snapshotOf(st, es, gens)
+      }
+    }
+
+  /** Whether generation `name` folds whole — named, uncorrupt, full
+    * chain, every manifest readable — whatever schema it records.
+    */
+  def readable(name: String): Boolean =
+    name.startsWith("gen-") && assembleFull(name, listState()).isDefined
 
   /** One generation's OWN operation-audit string WITHOUT folding its
     * chain: the info line is per-commit raw metadata, so a memoized
@@ -1250,6 +1282,18 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     case d: DeltaGen => d.info
   }
 
+  private def rawSchemaOf(r: RawGen)
+      : Option[org.apache.spark.sql.types.StructType] = r match {
+    case f: FullGen => f.schema
+    case d: DeltaGen => d.schema
+  }
+
+  /** Whether generation `name` records its schema: false only for one
+    * a build at or before commit 1ac9815 published.
+    */
+  def recordsSchema(name: String): Boolean =
+    listState().get(name).flatMap(parseRaw).flatMap(rawSchemaOf).isDefined
+
   /** The newest READABLE generation's snapshot, or None when no
     * generation folds whole — the caller then treats the store as
     * never-compacted (legacy listing mode). A torn write can't be
@@ -1266,9 +1310,20 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     */
   def read(): Option[Snapshot] = {
     val gens = listState()
+    newestAssembled(gens).map { case (st, es) => snapshotOf(st, es, gens) }
+  }
+
+  private def newestAssembled(gens: Map[String, FileStatus])
+      : Option[(GenState, Seq[Entry])] =
     gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
       .flatMap(assembleFull(_, gens)).nextOption()
-  }
+
+  /** The newest readable generation's name and tombstones — what
+    * vacuum reclaims. No schema is needed, so a store an older build
+    * left without one still reclaims its files.
+    */
+  def newestDead(): Option[(String, Seq[Dead])] =
+    newestAssembled(listState()).map { case (st, _) => (st.gen, st.dead) }
 
   /** [[read]] restricted to the partitions `admit` passes (by
     * partition key — `date=…`, a hot-split date's `date=…/hour=…`
@@ -1285,7 +1340,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   def readStateFor(admit: String => Boolean): Option[Snapshot] = {
     val gens = listState()
     gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
-      .flatMap(h => fold(h, gens).flatMap(assemble(_, admit)))
+      .flatMap(h => fold(h, gens).flatMap(st =>
+        assemble(st, admit).map(snapshotOf(st, _, gens))))
       .nextOption()
   }
 
@@ -1469,35 +1525,36 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     }
   }
 
-  /** Every retained readable generation, newest first (vacuum's
-    * reference set: a tree referenced by ANY retained generation is
-    * not an orphan).
+  /** Every rel, live or tombstoned, of any retained readable
+    * generation — vacuum's reference set: a tree referenced by ANY
+    * retained generation is not an orphan. Schema-free, like
+    * [[newestDead]].
     */
-  def readAll(): Seq[Snapshot] = {
+  def referencedRels(): Seq[String] = {
     val gens = listState()
-    gens.keys.toSeq.sorted(Ordering[String].reverse)
-      .flatMap(assembleFull(_, gens))
+    gens.keys.toSeq.flatMap(assembleFull(_, gens)).flatMap {
+      case (st, es) => es.map(_.rel) ++ st.dead.map(_.rel)
+    }
   }
 
   /** Whether a readable manifest generation is present (specs/gates). */
-  def present: Boolean = read().isDefined
+  def present: Boolean = newestAssembled(listState()).isDefined
 
   /** The newest foldable generation's manifest refs as (name,
     * partKey) — spec/probe introspection for hot-split shape and
     * checkpoint reuse-by-name assertions.
     */
   private[graft] def mfRefs(): Seq[(String, String)] =
-    newestFold().map(_.mfs.map(r => (r.name, r.partKey))).getOrElse(Nil)
+    newestFold(listState()).map(_.mfs.map(r => (r.name, r.partKey)))
+      .getOrElse(Nil)
 
   /** The newest FOLDABLE generation's manifest-level state — the one
     * head-selection policy (newest first, skip unreadable heads)
     * shared by every fold-level consumer.
     */
-  private def newestFold(): Option[GenState] = {
-    val gens = listState()
+  private def newestFold(gens: Map[String, FileStatus]): Option[GenState] =
     gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
       .flatMap(h => fold(h, gens)).nextOption()
-  }
 }
 
 object StoreManifest {
@@ -1714,7 +1771,7 @@ object StoreManifest {
     * name, the parent generation it committed over (None = first
     * ever), the live-file list (complete, or window-pruned when it
     * came from [[StoreManifest.readStateFor]]), the merged data
-    * schema when the publishing operation knew it, the cumulative
+    * schema every read of it plans with, the cumulative
     * not-yet-vacuumed tombstones, and the delta-chain depth since the
     * last checkpoint (0 = this generation IS a checkpoint). The
     * recorded parent makes each generation's lineage auditable and is
@@ -1725,7 +1782,7 @@ object StoreManifest {
     */
   final case class Snapshot(gen: String, parent: Option[String],
       entries: Seq[Entry],
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       dead: Seq[Dead], depth: Int = 0,
       info: Option[String] = None) {
     def deadRels: Set[String] = dead.map(_.rel).toSet
@@ -1739,6 +1796,14 @@ object StoreManifest {
     * generation and retry.
     */
   final class ConcurrentCommitException(msg: String)
+    extends IllegalStateException(msg)
+
+  /** A read or mutation planned from a generation that records no
+    * schema — one a build at or before commit 1ac9815 published. Such
+    * a store is refused, never read from an older generation; the
+    * message names the fix.
+    */
+  final class MissingSchemaException(msg: String)
     extends IllegalStateException(msg)
 
   /** StructType.asNullable is private[spark]; same recursive relax —

@@ -669,19 +669,35 @@ class EngineSpec extends SparkSpec {
     // store, a 26-row flush file carried ~1 KB of column data and
     // ~1.05 MB of trace_id bloom bitset. The store now sizes the hint
     // (DefaultBloomNdv) — a 2^16 bloom is ~80 KB; this pins that the
-    // option actually reaches the writer on both write paths.
+    // option actually reaches the writer on every write path.
     val root = tmpRoot()
     val store = new ParquetStore(spark, root, "span", "start")
     val t0 = 1760000000000000L
-    store.writeStaged(Seq((1L, t0, 7L)).toDF("id", "start", "trace_id"))
-    store.write(Seq((2L, t0, 8L)).toDF("id", "start", "trace_id"))
+    def rows(ids: Long*) = ids.map(i => (i, t0 + i * 60L * 1000000L, i))
+      .toDF("id", "start", "trace_id")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
       else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-    val fs = files(new java.io.File(s"$root/span"))
-    assert(fs.size >= 2)
-    assert(fs.forall(_.length < 200 * 1024),
-      fs.map(f => s"${f.getName}=${f.length}").mkString(", "))
+    // superseded files stay on disk until vacuum, so each step's own
+    // output is what appeared during it
+    def landsSized(op: String)(run: => Unit): Unit = {
+      val before = files(new java.io.File(s"$root/span")).toSet
+      run
+      val landed = files(new java.io.File(s"$root/span")).filterNot(before)
+      assert(landed.nonEmpty && landed.forall(_.length < 200 * 1024),
+        s"$op: " +
+          landed.map(f => s"${f.getName}=${f.length}").mkString(", "))
+    }
+    val date = java.time.LocalDate.ofInstant(
+      java.time.Instant.ofEpochSecond(t0 / 1000000L),
+      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+    landsSized("writeStaged")(store.writeStaged(rows(1L)))
+    landsSized("write")(store.write(rows(2L)))
+    landsSized("compactDate")(store.compactDate(date.toString))
+    landsSized("applyMirror")(
+      store.applyMirror(Some(rows(3L)), Some(rows(2L)), Seq("id")))
+    landsSized("replaceCommitted")(store.replaceCommitted(Some(rows(4L))))
+    landsSized("compact")(store.compact())
   }
 
   test("coarse-granularity drain: reads identical, leaf dirs collapse") {

@@ -79,6 +79,12 @@ object CountingListFileSystem {
 class FsStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The schema raw-manifest fixtures record: every generation records
+    * one, and these fixtures' entries are never read as data.
+    */
+  private val fx = new org.apache.spark.sql.types.StructType()
+    .add("id", "long")
+
   private def newRoot(): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.rawtest.impl", classOf[RawTestFileSystem].getName)
@@ -87,6 +93,30 @@ class FsStoreSpec extends SparkSpec {
   }
 
   private val t0 = 1760000000000000L // µs epoch
+
+  /** `run`'s result and the Spark jobs it started on this thread —
+    * plan-time footer inference included — counted with a listener.
+    */
+  private def withJobCount[A](run: => A): (A, Int) = {
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    graft.util.StreamGate.quiesce(spark)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val a = try run finally sc.clearJobGroup()
+      graft.util.StreamGate.quiesce(spark)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("store lifecycle end-to-end on a non-file FileSystem scheme: " +
       "land → read → drain → prefix read → recover") {
@@ -190,23 +220,23 @@ class FsStoreSpec extends SparkSpec {
     val m = new graft.store.StoreManifest(fs, tableDir)
     def e(rel: String) = graft.store.StoreManifest.Entry(rel, 1L, 1L)
     // first-ever publish expects NO generation…
-    m.publish(Seq(e("a.parquet")), None, Nil, parent = None)
+    m.publish(Seq(e("a.parquet")), fx, Nil, parent = None)
     val g1 = m.genNames().last
     // …and a second first-ever publish (two writers both planning from
     // an empty store) is rejected
     intercept[graft.store.StoreManifest.ConcurrentCommitException] {
-      m.publish(Seq(e("b.parquet")), None, Nil, parent = None)
+      m.publish(Seq(e("b.parquet")), fx, Nil, parent = None)
     }
     // a chained commit names its planning generation and lands;
     // lineage is recorded in the generation body
-    m.publish(Seq(e("a.parquet"), e("b.parquet")), None, Nil,
+    m.publish(Seq(e("a.parquet"), e("b.parquet")), fx, Nil,
       parent = Some(g1))
     val g2 = m.genNames().last
     assert(m.read().get.parent.contains(g1))
     // a commit still naming g1 — planned before g2 landed — is
     // rejected: landing it would drop b.parquet from the newest truth
     intercept[graft.store.StoreManifest.ConcurrentCommitException] {
-      m.publish(Seq(e("a.parquet"), e("c.parquet")), None, Nil,
+      m.publish(Seq(e("a.parquet"), e("c.parquet")), fx, Nil,
         parent = Some(g1))
     }
     // the rejected publishes left no generation and no temp debris;
@@ -227,11 +257,11 @@ class FsStoreSpec extends SparkSpec {
     m.beforeRename = () => if (!raced) {
       raced = true
       m.publish(Seq(e("a.parquet"), e("b.parquet"), e("d.parquet")),
-        None, Nil, parent = Some(g2))
+        fx, Nil, parent = Some(g2))
     }
     try intercept[graft.store.StoreManifest.ConcurrentCommitException] {
       m.publish(Seq(e("a.parquet"), e("b.parquet"), e("x.parquet")),
-        None, Nil, parent = Some(g2))
+        fx, Nil, parent = Some(g2))
     } finally m.beforeRename = () => ()
     // the in-window winner's commit is the newest truth and the
     // loser's generation is gone from the retained set
@@ -240,8 +270,7 @@ class FsStoreSpec extends SparkSpec {
     assert(snap.entries.map(_.rel).sorted ==
       Seq("a.parquet", "b.parquet", "d.parquet"))
     assert(m.genNames().size == 3) // g1, g2, winner — loser rolled back
-    assert(m.readAll().forall(s =>
-      !s.entries.exists(_.rel == "x.parquet")))
+    assert(!m.referencedRels().contains("x.parquet"))
   }
 
   test("manifest: an unpublished rewrite is invisible; a torn " +
@@ -358,47 +387,84 @@ class FsStoreSpec extends SparkSpec {
     store.writeStaged(rows(11L to 15L))
     store.writeStaged(rows(16L to 20L))
     assert(store.stagedFileCount >= 2)
-    // a prefix read infers a window-local schema unless its caller
-    // pins one; the table owner pins the recorded one, as g07 does
+    // the caller-pinned form g07 uses; the no-schema form plans from
+    // the same recorded schema ("no manifested read infers a schema")
     val schema = store.manifestSchema
     assert(schema.isDefined)
     val (lo, hi) = (t0 + 5L * 60L * 1000000L, t0 + 18L * 60L * 1000000L)
-    val group = "staged-plan"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
     def measured(read: => org.apache.spark.sql.DataFrame)
         : (Set[Long], Int, Seq[String]) = {
-      graft.util.StreamGate.quiesce(spark)
       CountingListFileSystem.reset()
-      jobs.set(0)
-      sc.setJobGroup(group, "staged read")
-      val ids = try read.select("id").as[Long].collect().toSet
-        finally sc.clearJobGroup()
-      graft.util.StreamGate.quiesce(spark)
+      val (ids, jobs) =
+        withJobCount(read.select("id").as[Long].collect().toSet)
       import scala.jdk.CollectionConverters._
-      (ids, jobs.get, CountingListFileSystem.paths.asScala.toSeq)
+      (ids, jobs, CountingListFileSystem.paths.asScala.toSeq)
     }
-    sc.addSparkListener(listener)
-    try {
+    val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "read" -> (() => store.read(Some(lo), Some(hi)).get),
+      "readPrefixes" -> (() => store.readPrefixes(lo, hi, schema).get))
+    for ((name, read) <- reads) {
+      measured(read()) // warm: FS instance cache, session state
+      val (ids, nJobs, listed) = measured(read())
+      assert(ids == (5L to 18L).toSet, name)
+      assert(nJobs == 1, s"$name ran $nJobs jobs")
+      assert(listed.size == 1 && listed.forall(_.endsWith("/_manifest")),
+        s"$name listed ${listed.mkString(", ")}")
+    }
+  }
+
+  test("no manifested read infers a schema: every commit over duo's " +
+      "native layout records one, and each read plans from it") {
+    // one store per commit kind that must record the schema: a read
+    // of a generation without one would need a footer-merge job per
+    // partition depth before its scan
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lcount.impl", classOf[CountingListFileSystem].getName)
+    val day = 24L * 3600L * 1000000L
+    def rows(ids: Seq[Long]) = ids.map(i =>
+        (i, t0 + (i % 3L) * day + i * 60L * 1000000L, i))
+      .toDF("id", "start", "trace_id")
+    val zone = java.time.ZoneId.of(
+      spark.conf.get("spark.sql.session.timeZone"))
+    val date0 = java.time.LocalDate.ofInstant(
+      java.time.Instant.ofEpochSecond(t0 / 1000000L), zone).toString
+    val commits = Seq[(String, ParquetStore => Unit)](
+      "first write" -> (_.write(rows(Seq(10L)))),
+      "first compactDate" -> (_.compactDate(date0)),
+      "expire" -> (st => st.expire(t0 + day): Unit),
+      "drifted applyMirror" -> (_.applyMirror(
+        Some(Seq((11L, t0 + 11L * 60L * 1000000L, 11L, "prod"))
+          .toDF("id", "start", "trace_id", "env")),
+        Some(rows(Seq(3L))), Seq("id"))),
+      "replaceCommitted(None), then a write" -> { st =>
+        st.replaceCommitted(None); st.write(rows(Seq(12L)))
+      })
+    for ((name, commit) <- commits) {
+      val root = "lcount://" +
+        java.nio.file.Files.createTempDirectory("lcountnoinfer")
+      ScaleProbe.writeNativeLayout(rows(1L to 9L), s"$root/span", "start")
+      val store = new ParquetStore(spark, root, "span", "start")
+      commit(store)
+      assert(store.manifestSchema.isDefined, s"$name recorded no schema")
+      val head = store.generations().last
+      // a later append makes a generation pair to diff
+      store.write(rows(Seq(13L)))
+      val next = store.generations().last
       val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "read" -> (() => store.read(Some(lo), Some(hi)).get),
-        "readPrefixes" -> (() => store.readPrefixes(lo, hi, schema).get))
-      for ((name, read) <- reads) {
-        measured(read()) // warm: FS instance cache, session state
-        val (ids, nJobs, listed) = measured(read())
-        assert(ids == (5L to 18L).toSet, name)
-        assert(nJobs == 1, s"$name ran $nJobs jobs")
-        assert(listed.size == 1 && listed.forall(_.endsWith("/_manifest")),
-          s"$name listed ${listed.mkString(", ")}")
+        "read" -> (() => store.read(Some(t0), Some(t0 + 3L * day)).get),
+        "readPrefixes" -> (() => store.readPrefixes(t0, t0 + 3L * day).get),
+        "readGeneration" -> (() => store.readGeneration(head).get),
+        "changesBetween" -> (() => store.changesBetween(head, next).get))
+      for ((read, plan) <- reads) {
+        plan().count(): Unit // warm: FS instance cache, session state
+        CountingListFileSystem.reset()
+        val df = plan()
+        val planOpens = CountingListFileSystem.opens.get
+        val (_, jobs) = withJobCount(plan().collect())
+        assert(jobs == 1 && planOpens <= 1 && df.columns.contains("id"),
+          s"$name: $read ran $jobs jobs, opened $planOpens files to plan")
       }
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("incremental manifest maintenance: a per-date drain walks only " +
@@ -486,8 +552,9 @@ class FsStoreSpec extends SparkSpec {
       Set("id", "start", "trace_id"))
     assert(df.count() == 40L)
     // strip the schema line (the mlist= header counts manifest refs
-    // only, so the generation stays valid): planning now pays footer
-    // inference over the 40 files — the bill the recorded schema removes
+    // only, so the generation stays valid) — the shape a build at or
+    // before 1ac9815 published: planning from it is refused loudly,
+    // never answered by footer inference or by the older generation
     val fsys = graft.store.StoreFs.fs(
       new org.apache.hadoop.fs.Path(s"$root/span"))
     // the newest generation (the drain's checkpoint; the staged
@@ -509,11 +576,25 @@ class FsStoreSpec extends SparkSpec {
       .mkString("", "\n", "\n")
     val out = fsys.create(gen, true)
     out.write(stripped.getBytes("UTF-8")); out.close()
-    assert(store.manifestSchema.isEmpty && store.manifestPresent)
-    CountingListFileSystem.reset()
-    assert(store.read(None, None).get.count() == 40L)
-    assert(CountingListFileSystem.opens.get > 40,
-      "without the recorded schema, planning must re-read footers")
+    assert(store.manifestPresent)
+    val refused = Seq[(String, () => Any)](
+      "read" -> (() => store.read(None, None)),
+      "readPrefixes" -> (() => store.readPrefixes(t0, t0 + 41L * 60000000L)),
+      "readGeneration" -> (() => store.readGeneration(gen.getName)),
+      "compact" -> (() => store.compact()))
+    for ((name, op) <- refused) {
+      val e = intercept[graft.store.StoreManifest.MissingSchemaException](
+        op())
+      assert(e.getMessage.contains(gen.getName) &&
+        e.getMessage.contains("compact()"), s"$name: ${e.getMessage}")
+    }
+    // the store's metadata surface and vacuum keep working
+    assert(store.generations().last == gen.getName)
+    assert(store.generationReadable(gen.getName))
+    assert(store.generationInfos().contains(gen.getName))
+    assert(store.vacuumStandDowns().isEmpty)
+    store.vacuum(graceMs = 0L): Unit
+    assert(store.generations().last == gen.getName)
   }
 
   test("rowGroupRanges plans from the manifest: footer-stats " +
@@ -903,7 +984,7 @@ class FsStoreSpec extends SparkSpec {
     // each append's commit must NOT
     val base = (0 until 5000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/part-$i%05d.parquet", 1000L + i, 1700000000000L + i))
-    m.publish(base, None, Nil, parent = None)
+    m.publish(base, fx, Nil, parent = None)
     assert(genFiles().last.getPath.getName.endsWith(".list"),
       "first publish must be a checkpoint")
     val checkpointBytes = metaBytes()
@@ -915,7 +996,7 @@ class FsStoreSpec extends SparkSpec {
       val before = metaBytes()
       entries = entries ++ (0 until 5).map(i => StoreManifest.Entry(
         f"date=2024-01-16/part-$k%02d-$i.parquet", 999L, 1700000100000L + k))
-      m.publish(entries, None, Nil, parent)
+      m.publish(entries, fx, Nil, parent)
       val newest = genFiles().last
       parent = Some(newest.getPath.getName)
       assert(newest.getPath.getName.endsWith(".delta"),
@@ -939,7 +1020,7 @@ class FsStoreSpec extends SparkSpec {
         entries = entries ++ Seq(StoreManifest.Entry(
           s"date=2024-01-17/part-${entries.size}.parquet", 1L,
           1700000200000L + k))
-        m.publish(entries, None, Nil, parent)
+        m.publish(entries, fx, Nil, parent)
         parent = m.read().map(_.gen)
       }
     rollChain()
@@ -967,7 +1048,7 @@ class FsStoreSpec extends SparkSpec {
     // its parent's state — never half a patch
     entries = entries ++ Seq(StoreManifest.Entry(
       "date=2024-01-18/part-x.parquet", 1L, 1700000300000L))
-    m.publish(entries, None, Nil, m.read().map(_.gen))
+    m.publish(entries, fx, Nil, m.read().map(_.gen))
     val newest = genFiles().last
     assert(newest.getPath.getName.endsWith(".delta"))
     val beforeTear = m.read().get.entries.size
@@ -1110,13 +1191,13 @@ class FsStoreSpec extends SparkSpec {
       .maxBy(_.getPath.getName).getPath.getName
     val base = (0 until 1000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/part-$i%04d.parquet", 100L + i, 1L))
-    m.publish(base, None, Nil, None)
+    m.publish(base, fx, Nil, None)
     // a small patch lands as a delta and folds exactly
     m.publishPatch(
       adds = Seq(StoreManifest.Entry("date=2024-01-16/a.parquet", 1L, 2L)),
       drops = Seq(base.head.rel),
       deadPlus = Seq(StoreManifest.Dead(base.head.rel, 5L)),
-      deadMinus = Nil, schema = None, parent = m.read().get.gen,
+      deadMinus = Nil, schema = fx, parent = m.read().map(_.gen),
       info = Some("""{"op":"spec"}"""))
     assert(newest().endsWith(".delta"))
     val snap = m.read().get
@@ -1127,12 +1208,12 @@ class FsStoreSpec extends SparkSpec {
       snap.info.contains("""{"op":"spec"}"""))
     // tombstone reclaim (vacuum's shape) is a delta too
     m.publishPatch(Nil, Nil, Nil, deadMinus = Seq(base.head.rel),
-      schema = None, parent = snap.gen)
+      schema = fx, parent = Some(snap.gen))
     assert(newest().endsWith(".delta") && m.read().get.dead.isEmpty)
     // a patch that rivals the table's size rolls a checkpoint instead
     m.publishPatch(Nil, drops = base.drop(1).map(_.rel),
-      deadPlus = Nil, deadMinus = Nil, schema = None,
-      parent = m.read().get.gen)
+      deadPlus = Nil, deadMinus = Nil, schema = fx,
+      parent = m.read().map(_.gen))
     assert(newest().endsWith(".list"),
       "an outsized patch must write a checkpoint")
     assert(m.read().get.entries.map(_.rel) ==
@@ -1141,7 +1222,7 @@ class FsStoreSpec extends SparkSpec {
     var parent = m.read().get.gen
     (0 until StoreManifest.CheckpointEvery + 1).foreach { k =>
       m.publishPatch(Seq(StoreManifest.Entry(s"date=2024-01-17/p$k.parquet",
-        1L, 1L)), Nil, Nil, Nil, None, parent)
+        1L, 1L)), Nil, Nil, Nil, fx, Some(parent))
       parent = m.read().get.gen
     }
     assert(m.genNames().count(_.endsWith(".list")) >= 2 ||
@@ -1151,7 +1232,7 @@ class FsStoreSpec extends SparkSpec {
     // a stale parent is rejected whole, nothing lands
     val before = m.genNames()
     intercept[StoreManifest.ConcurrentCommitException] {
-      m.publishPatch(Nil, Nil, Nil, Nil, None, before.head)
+      m.publishPatch(Nil, Nil, Nil, Nil, fx, before.headOption)
     }
     assert(m.genNames() == before)
   }
@@ -1198,7 +1279,7 @@ class FsStoreSpec extends SparkSpec {
     val entries = (0 until 2000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/hour=${i / 100}%02d/part-$i%05d.parquet",
       1000L + i, 1700000000000L + i))
-    m.publish(entries, None, Nil, parent = None)
+    m.publish(entries, fx, Nil, parent = None)
     val ckpt = fsys.listStatus(mdir)
       .filter(_.getPath.getName.endsWith(".list")).maxBy(_.getPath.getName)
     // on-disk form: gzip magic, and far below the plain body's size
@@ -1510,13 +1591,13 @@ class FsStoreSpec extends SparkSpec {
     }
     val init = dates.flatMap(p => (0 until 5).map(_ => mk(p)))
     init.foreach(e => model(e.rel) = e)
-    m.publish(init, None, Nil, parent = None)
+    m.publish(init, fx, Nil, parent = None)
     (0 until 30).foreach { i =>
       val parent = m.read().get.gen
       if (i % 7 == 6) {
         // absolute republish of the whole intended state (the
         // publish() diff path over whatever mf accumulation exists)
-        m.publish(model.values.toSeq, None, Nil, Some(parent))
+        m.publish(model.values.toSeq, fx, Nil, Some(parent))
       } else if (i % 3 == 2 && model.nonEmpty) {
         // partition rewrite: drop 1-2 random rels, add one — the
         // mdel + madd arm, plus newest-wins dedupe
@@ -1526,15 +1607,15 @@ class FsStoreSpec extends SparkSpec {
         victims.foreach(model.remove(_): Unit)
         model(add.rel) = add
         m.publishPatch(adds = Seq(add), drops = victims,
-          deadPlus = Nil, deadMinus = Nil, schema = None,
-          parent = parent)
+          deadPlus = Nil, deadMinus = Nil, schema = fx,
+          parent = Some(parent))
       } else {
         // accumulating append: 1-3 files into 1-2 partitions
         val adds = (0 until 1 + rnd.nextInt(3))
           .map(_ => mk(dates(rnd.nextInt(dates.size))))
         adds.foreach(e => model(e.rel) = e)
         m.publishPatch(adds = adds, drops = Nil, deadPlus = Nil,
-          deadMinus = Nil, schema = None, parent = parent)
+          deadMinus = Nil, schema = fx, parent = Some(parent))
       }
       // the fold must equal the model after EVERY commit — across
       // delta accumulation, rollover checkpoints (CheckpointEvery
@@ -1575,7 +1656,7 @@ class FsStoreSpec extends SparkSpec {
     val cold = (0 until 3).map(i =>
       e(s"date=2024-01-16/hour=05/minute=00/q$i.parquet"))
     val loose = Seq(e("loose.parquet"))
-    m.publish(hot ++ cold ++ loose, None, Nil, parent = None)
+    m.publish(hot ++ cold ++ loose, fx, Nil, parent = None)
     // shape: the hot date split into its 3 hours; the cold date and
     // the catch-all kept single keys — and the full fold is complete
     assert(m.mfRefs().map(_._2).sorted == Seq("",
@@ -1607,7 +1688,7 @@ class FsStoreSpec extends SparkSpec {
     // a pure append to the split date lands hour-keyed (prunable too)
     val add1 = e("date=2024-01-15/hour=01/minute=30/extra.parquet")
     m.publishPatch(adds = Seq(add1), drops = Nil, deadPlus = Nil,
-      deadMinus = Nil, schema = None, parent = m.read().get.gen)
+      deadMinus = Nil, schema = fx, parent = m.read().map(_.gen))
     assert(m.mfRefs().map(_._2)
       .count(_ == "date=2024-01-15/hour=01") == 2)
     val win2 = m.readStateFor(hourAdmit)
@@ -1619,8 +1700,8 @@ class FsStoreSpec extends SparkSpec {
     // an append to the UNSPLIT date stays date-keyed
     m.publishPatch(
       adds = Seq(e("date=2024-01-16/hour=06/minute=00/q3.parquet")),
-      drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = None,
-      parent = m.read().get.gen)
+      drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
+      parent = m.read().map(_.gen))
     assert(m.mfRefs().map(_._2).count(_ == "date=2024-01-16") == 2)
     // …while a date-keyed-only delta stays byte-compatible (no marker)
     assert(!genBody(m.read().get.gen).contains("protocol\t"))
@@ -1632,8 +1713,8 @@ class FsStoreSpec extends SparkSpec {
     val beforeByKey = dateRefs().groupBy(_._2)
     val r0 = e("date=2024-01-15/hour=00/minute=00/r0.parquet")
     m.publishPatch(adds = Seq(r0), drops = hot.take(2).map(_.rel),
-      deadPlus = Nil, deadMinus = Nil, schema = None,
-      parent = m.read().get.gen)
+      deadPlus = Nil, deadMinus = Nil, schema = fx,
+      parent = m.read().map(_.gen))
     val afterByKey = dateRefs().groupBy(_._2)
     assert(afterByKey("date=2024-01-15/hour=00").map(_._1).toSet
       .intersect(beforeByKey("date=2024-01-15/hour=00").map(_._1).toSet)
@@ -1657,8 +1738,8 @@ class FsStoreSpec extends SparkSpec {
       while (!ckpt) {
         m.publishPatch(adds =
           Seq(e(s"date=2024-01-16/hour=07/minute=00/c$k.parquet")),
-          drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = None,
-          parent = m.read().get.gen)
+          drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
+          parent = m.read().map(_.gen))
         k += 1
         ckpt = m.read().get.gen.endsWith(".list")
       }
@@ -1704,11 +1785,11 @@ class FsStoreSpec extends SparkSpec {
     val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
     val m = new StoreManifest(fsys, local.toString)
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    m.publish(Seq(e("date=2024-01-15/a.parquet")), None, Nil,
+    m.publish(Seq(e("date=2024-01-15/a.parquet")), fx, Nil,
       parent = None)
     m.publishPatch(adds = Seq(e("date=2024-01-15/b.parquet")),
-      drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = None,
-      parent = m.read().get.gen)
+      drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
+      parent = m.read().map(_.gen))
     val gen2 = m.read().get.gen
     assert(gen2.endsWith(".delta"))
     val p = new org.apache.hadoop.fs.Path(local.toString,
@@ -1768,7 +1849,7 @@ class FsStoreSpec extends SparkSpec {
       e(f"date=2024-01-15/hour=${i / 4}%02d/minute=00/p$i.parquet"))
     val cold = (0 until 2).map(i =>
       e(s"date=2024-01-16/hour=05/minute=00/q$i.parquet"))
-    m.publish(hot ++ cold, None, Nil, parent = None)
+    m.publish(hot ++ cold, fx, Nil, parent = None)
     assert(m.mfRefs().map(_._2).sorted ==
       Seq("date=2024-01-15", "date=2024-01-16"))
     val coldName = m.mfRefs().find(_._2 == "date=2024-01-16").get._1
@@ -1798,7 +1879,7 @@ class FsStoreSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("resplitforeign").toString)
     m2.hotSplitFiles = 4
     m2.publish((0 until 8).map(i =>
-      e(s"date=2024-02-01/region=r$i/f$i.parquet")), None, Nil, None)
+      e(s"date=2024-02-01/region=r$i/f$i.parquet")), fx, Nil, None)
     // first publish groups by date (writeMfs splits only on usable
     // sub-keys — all fall back here, one group, one manifest)
     assert(m2.mfRefs().map(_._2) == Seq("date=2024-02-01"))
@@ -1821,7 +1902,7 @@ class FsStoreSpec extends SparkSpec {
       e(f"date=2024-03-01/hour=${i / 4}%02d/minute=00/h$i.parquet"))
     val hourless = (0 until 8).map(i =>
       e(s"date=2024-03-01/region=r$i/f$i.parquet"))
-    m.publish(houred ++ hourless, None, Nil, parent = None)
+    m.publish(houred ++ hourless, fx, Nil, parent = None)
     m.hotSplitFiles = 6
     // pass 1: re-keys into hour manifests + a date-keyed residual
     assert(m.resplitHot() == Seq("date=2024-03-01"))
@@ -1899,7 +1980,7 @@ class FsStoreSpec extends SparkSpec {
     m.publish(Seq(e(r, 1L),
       e("date=2024-05-01/hour=00/minute=01/x.parquet", 1L),
       e("date=2024-05-01/hour=01/minute=00/y.parquet", 1L)),
-      None, Nil, parent = None)
+      fx, Nil, parent = None)
     assert(m.mfRefs().map(_._2) == Seq("date=2024-05-01"))
     // a bare re-add of R with a new size (publish() diffs a changed
     // entry exactly this way) inside an append big enough to split:
@@ -1908,7 +1989,7 @@ class FsStoreSpec extends SparkSpec {
     val adds = e(r, 2L) +: (0 until 4).map(i =>
       e(s"date=2024-05-01/hour=01/minute=1$i/a$i.parquet", 1L))
     m.publishPatch(adds = adds, drops = Nil, deadPlus = Nil,
-      deadMinus = Nil, schema = None, parent = m.read().get.gen)
+      deadMinus = Nil, schema = fx, parent = m.read().map(_.gen))
     assert(m.read().get.entries.find(_.rel == r).map(_.size)
       .contains(2L))
     // a rewrite touching ONLY the other hour hits the date-keyed
@@ -1916,8 +1997,8 @@ class FsStoreSpec extends SparkSpec {
     // re-emitted over the fresh copy
     m.publishPatch(adds = Nil,
       drops = Seq("date=2024-05-01/hour=01/minute=00/y.parquet"),
-      deadPlus = Nil, deadMinus = Nil, schema = None,
-      parent = m.read().get.gen)
+      deadPlus = Nil, deadMinus = Nil, schema = fx,
+      parent = m.read().map(_.gen))
     assert(m.read().get.entries.find(_.rel == r).map(_.size)
       .contains(2L),
       "the stale duplicate must not shadow the fresh entry")
@@ -1936,7 +2017,7 @@ class FsStoreSpec extends SparkSpec {
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
     val hot = (0 until 8).map(i =>
       e(f"date=2024-04-01/hour=${i / 4}%02d/minute=00/p$i.parquet"))
-    m.publish(hot, None, Nil, parent = None)
+    m.publish(hot, fx, Nil, parent = None)
     m.hotSplitFiles = 4
     def mfCount(): Int = StoreFs.list(fsys,
       new org.apache.hadoop.fs.Path(local.toString, "_manifest/mf")).size
@@ -1963,8 +2044,8 @@ class FsStoreSpec extends SparkSpec {
       () => if (!fired) { fired = true
         val other = new StoreManifest(fsys, local.toString)
         other.publishPatch(adds = Seq(competitor), drops = Nil,
-          deadPlus = Nil, deadMinus = Nil, schema = None,
-          parent = other.read().get.gen)
+          deadPlus = Nil, deadMinus = Nil, schema = fx,
+          parent = other.read().map(_.gen))
       }
     }
     intercept[StoreManifest.ConcurrentCommitException](m.resplitHot())
@@ -2043,7 +2124,7 @@ class FsStoreSpec extends SparkSpec {
     val m = new StoreManifest(fsys, local.toString)
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
     m.publish(Seq(e("date=2024-01-15/a.parquet"),
-      e("date=2024-01-16/b.parquet")), None, Nil, parent = None)
+      e("date=2024-01-16/b.parquet")), fx, Nil, parent = None)
     assert(m.read().get.entries.size == 2)
     // locate day-16's manifest and tear it IN PLACE (half the bytes:
     // the ref-recorded length check rejects it)
@@ -2344,8 +2425,8 @@ class FsStoreSpec extends SparkSpec {
     m.publishPatch(adds = Nil, drops = Nil,
       deadPlus = Seq(graft.store.StoreManifest.Dead(s"_staging/$name",
         System.currentTimeMillis())),
-      deadMinus = Nil, schema = store.manifestSchema,
-      parent = store.generations().last)
+      deadMinus = Nil, schema = store.manifestSchema.get,
+      parent = store.generations().lastOption)
     assert(new ParquetStore(spark, root, "span", "start")
       .read(None, None).get.count() == 1L)
   }
@@ -2366,9 +2447,14 @@ class FsStoreSpec extends SparkSpec {
       .select(cols: _*)
     assert(fromManifest.collect().toSet == footers.collect().toSet)
     assert(fromManifest.filter(col("extra").isNull).count() == 1L)
-    // a re-typed column is a conflict the record cannot settle
-    store.write(Seq((3L, t0, "c", "x")).toDF("id", "time", "msg", "extra"))
-    assert(store.manifestSchema.isEmpty)
+    // a re-typed column is a conflict the record cannot settle: the
+    // write throws before its publish and the table is unchanged
+    val head = store.generations().last
+    intercept[ParquetStore.SchemaConflictException] {
+      store.write(Seq((3L, t0, "c", "x")).toDF("id", "time", "msg", "extra"))
+    }
+    assert(store.generations().last == head)
+    assert(store.read(None, None).get.count() == 2L)
   }
 
   test("applyMirror removes a key that arrived through write") {
@@ -2521,10 +2607,12 @@ class FsStoreSpec extends SparkSpec {
       assert(df.filter(col("env").isNull).count() == 2L,
         "pre-drift rows read the new column as null")
     }
-    // the drifted append records the widened schema: the sink's
-    // columns, then the new one — what its files' footers merge to
-    assert(sinkA.manifestSchema.map(_.fieldNames.toSeq)
-      .contains(Seq("id", "start", "trace_id", "env")))
+    // the drifted append and the drifted mirror step both record the
+    // widened schema: the sink's columns, then the new one — what its
+    // files' footers merge to
+    for (sink <- Seq(sinkA, sinkM))
+      assert(sink.manifestSchema.map(_.fieldNames.toSeq)
+        .contains(Seq("id", "start", "trace_id", "env")))
     feedA.reset(); feedM.reset()
   }
 
@@ -2716,7 +2804,7 @@ class FsStoreSpec extends SparkSpec {
     val d = "date=2024-01-01"
     // checkpoint: one date-keyed manifest holding a.parquet@size1
     m.publish(Seq(e(s"$d/hour=00/minute=00/a.parquet", 1L),
-      e(s"$d/hour=00/minute=01/b.parquet", 1L)), None, Nil, parent = None)
+      e(s"$d/hour=00/minute=01/b.parquet", 1L)), fx, Nil, parent = None)
     // threshold-crossing pure APPEND that re-adds a.parquet with a
     // new size: the append splits into hour manifests carrying the
     // fresh copy while the stale copy stays in the date-keyed one —
@@ -2727,7 +2815,7 @@ class FsStoreSpec extends SparkSpec {
       e(s"$d/hour=01/minute=00/x.parquet", 1L),
       e(s"$d/hour=01/minute=01/y.parquet", 1L)),
       drops = Nil, deadPlus = Nil, deadMinus = Nil,
-      schema = None, parent = m.genNames().last)
+      schema = fx, parent = m.genNames().lastOption)
     val refsMid = m.mfRefs().map(_._2).filter(_.startsWith(d))
     assert(refsMid.contains(d) && refsMid.exists(_.contains("/hour=")),
       s"fixture must be mixed: $refsMid")
@@ -2740,7 +2828,7 @@ class FsStoreSpec extends SparkSpec {
       m.publishPatch(adds = Seq(
         e(s"date=2024-02-02/hour=00/minute=0$i/z$i.parquet", 1L)),
         drops = Nil, deadPlus = Nil, deadMinus = Nil,
-        schema = None, parent = m.genNames().last)
+        schema = fx, parent = m.genNames().lastOption)
     }
     val snap = m.read().get
     assert(snap.depth == 0, "the cadence must have rolled a checkpoint")
