@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * Args: `<root> <iterations> <reportPath> [mode [date]]`. Mode
   * `compact` (default): each iteration attempts one whole-table
   * compact. Mode `maintenance`: each iteration runs the maintenance
-  * ops themselves — `compactDate(date)`, `resplitHotDates()`, then
-  * `vacuum` with a short grace — racing them against whatever the
+  * ops themselves — `compactDate(date)`, then `vacuum` with a short
+  * grace — racing them against whatever the
   * parent process is doing to the same table (the round-20 extension:
   * maintenance must fence or CAS-reject loudly like any mutation,
   * never interleave silently). The JSON report counts clean commits,
@@ -57,7 +57,6 @@ object ContendProbe {
       while (i < iters) {
         if (mode == "maintenance") {
           date.foreach(d => attempt(store.compactDate(d)))
-          attempt(store.resplitHotDates(): Unit)
           // a real maintenance grace (never 0 against a live writer:
           // the orphan sweep must not eat a concurrent in-flight tree)
           attempt(store.vacuum(graceMs = 60000L): Unit)

@@ -223,8 +223,8 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * [[flush]]), and the planner's leaf-dir guard makes repeated calls
     * converge (a healed date is never re-flagged). Returns table →
     * dates healed. No-op in memory mode.
-    */
-  /** @param vacuumGraceMs snapshot-isolation grace for the vacuum leg:
+    *
+    * @param vacuumGraceMs snapshot-isolation grace for the vacuum leg:
     *   files tombstoned longer ago than this are reclaimed. The
     *   default (30 min) comfortably exceeds any interactive query's
     *   runtime; a deployment sizes it to its slowest reader.
@@ -239,16 +239,11 @@ final class DuoEngine(val spark: SparkSession, root: String,
       val dates = st.planCompactions(maxFilesPerDate, minAvgBytes)
         .take(maxHeals)
       dates.foreach(d => st.compactDate(d))
-      // granularity heal: a date that concentrated files past the hot
-      // threshold before ever being rewritten adopts the hour-split
-      // manifest layout — one metadata commit, no data movement; its
-      // dates count as healed in the returned map
-      val resplit = st.resplitHotDates()
       // reclaim what previous mutations deferred (tombstoned files,
       // orphan rewrite trees, aged manifest generations) — the other
       // half of the maintenance cadence; a no-op when nothing is ripe
       st.vacuum(vacuumGraceMs): Unit
-      n -> (dates ++ resplit.map(_.stripPrefix("date=")))
+      n -> dates
     }.toMap finally invalidateColdReads()
 
   /** Opt-in background cadences — the reference binary's timer loops

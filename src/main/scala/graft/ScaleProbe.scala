@@ -541,8 +541,6 @@ object ScaleProbe {
     }
     if (only.isEmpty || only.exists("manifest_publish_cost".startsWith))
       publishCostProbe()
-    if (only.isEmpty || only.exists("hot_date_split".startsWith))
-      hotDateProbe()
     if (only.isEmpty || only.exists("mirror_step".startsWith))
       mirrorProbe(spark)
     if (tiers.contains("100x")) run100x()
@@ -671,88 +669,6 @@ object ScaleProbe {
   private val EntryFixtureSchema =
     new org.apache.spark.sql.types.StructType().add("time", "long")
 
-  /** The hot-date split measured at the residual's own scale: EVERY
-    * file in ONE date — the pathological concentration the round-19
-    * residual named (a date-granular manifest a window touching that
-    * date reads whole). Each tier builds the same table twice — split
-    * engaged (default threshold) vs disabled — and cold-plans a
-    * one-hour window on each. The claims: the split hot date stores
-    * ~24 hour manifests; the hour plan's entries are ~1/24 of the
-    * date's; its wall beats the unsplit single-manifest parse and
-    * stays ~flat as the date grows another decade (hour manifests
-    * grow, but parse ∝ admitted entries, not the date).
-    */
-  private def hotDateProbe(): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.store.{StoreFs, StoreManifest}
-    val tiers = sys.env.get("SPARK_GRAFT_HOTDATE_TIERS")
-      .map(_.split(",").toSeq.flatMap(_.trim.toIntOption))
-      .filter(_.nonEmpty)
-      .getOrElse(Seq(200 * 1000))
-    // discarded warmup tier: the first publish+plan in a JVM pays
-    // classloading+JIT that would otherwise pollute the first row
-    for (n <- -1000 +: tiers; mode <- Seq("split", "unsplit")) {
-      val warmup = n < 0
-      val files = math.abs(n)
-      val local = java.nio.file.Files
-        .createTempDirectory(s"hotdate_${mode}_$files")
-      graft.util.StreamGate.deferDelete(local)
-      val fs = StoreFs.fs(new Path(local.toString))
-      val m = new StoreManifest(fs, local.toString)
-      // "split" must MEAN split at every tier: clamp the threshold to
-      // the tier size so a below-default tier doesn't silently
-      // measure the unsplit layout under a split label
-      if (mode == "unsplit") m.hotSplitFiles = Int.MaxValue
-      else m.hotSplitFiles = math.min(m.hotSplitFiles, math.max(files, 1))
-      val entries = (0 until files).map(i => StoreManifest.Entry(
-        f"date=2024-06-01/hour=${i % 24}%02d/minute=${i / 24 % 60}%02d/" +
-          f"part-$i%08d.parquet", 1234567L, 1700000000000L + i))
-      m.publish(entries, EntryFixtureSchema, Nil, None)
-      val mfCount = m.mfRefs().size
-      // one-hour window on a COLD planner (fresh instance = new
-      // driver): date admitted, hour refined — exactly what
-      // dateAdmitOf emits for an in-hour time range
-      val hourAdmit: String => Boolean = pk => pk.isEmpty ||
-        pk == "date=2024-06-01" || pk == "date=2024-06-01/hour=03"
-      val cold = new StoreManifest(fs, local.toString)
-      val t0 = System.nanoTime()
-      val hourEntries = cold.readStateFor(hourAdmit)
-        .map(_.entries.size).getOrElse(0)
-      val hourColdMs = (System.nanoTime() - t0) / 1e6
-      val warmMs = (0 until 3).map { _ =>
-        val t = System.nanoTime()
-        cold.readStateFor(hourAdmit): Unit
-        (System.nanoTime() - t) / 1e6
-      }.min
-      val t1 = System.nanoTime()
-      val fullEntries = new StoreManifest(fs, local.toString)
-        .read().map(_.entries.size).getOrElse(0)
-      val fullColdMs = (System.nanoTime() - t1) / 1e6
-      // the unsplit table then ADOPTS the layout by the metadata-only
-      // heal — the one-commit migration wall a pre-split deployment
-      // pays once per hot date, no data movement
-      val resplitMs = if (mode == "unsplit" && !warmup) {
-        m.hotSplitFiles = math.min(100 * 1000, files)
-        val t2 = System.nanoTime()
-        val dates = m.resplitHot()
-        val ms = (System.nanoTime() - t2) / 1e6
-        require(dates.nonEmpty &&
-            m.mfRefs().size >= math.min(files, 24),
-          "resplit must have adopted the hour layout")
-        ms
-      } else -1.0
-      if (warmup) () else
-      println(f"""{"query":"hot_date_split","files":$files,"mode":"$mode",""" +
-        (if (resplitMs >= 0) f""""resplit_adopt_ms":$resplitMs%.2f,"""
-         else "") +
-        f""""manifests":$mfCount,"hour_entries":$hourEntries,""" +
-        f""""hour_plan_cold_ms":$hourColdMs%.2f,""" +
-        f""""hour_plan_warm_ms":$warmMs%.2f,""" +
-        f""""full_entries":$fullEntries,""" +
-        f""""full_plan_cold_ms":$fullColdMs%.2f}""")
-    }
-  }
-
   /** The commit protocol's metadata write amplification, measured —
     * round 19 closes VERDICT r18 #1 with the TWO-LEVEL layout
     * (per-date manifest files + a manifest-list per generation, the
@@ -872,7 +788,7 @@ object ScaleProbe {
       val fullColdMs = (System.nanoTime() - tf) / 1e6
       val windowAdmit: String => Boolean = {
         val d0 = dateOf(0)
-        pk => pk.isEmpty || StoreManifest.dateKeyOf(pk) == s"date=$d0"
+        pk => pk.isEmpty || pk == s"date=$d0"
       }
       val coldWin = new StoreManifest(fs, local.toString)
       val tw = System.nanoTime()

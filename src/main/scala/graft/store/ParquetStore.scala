@@ -80,6 +80,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     timeCol: String,
     bloomNdv: Long = ParquetStore.DefaultBloomNdv) {
 
+  import StoreManifest.logicalRel
+
   private def dir = s"$root/$table"
 
   /** One FileSystem handle per store, resolved from the root's scheme
@@ -128,19 +130,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   /** The manifest's tombstoned-but-not-yet-vacuumed rels (specs). */
   private[graft] def manifestDead: Option[Seq[String]] =
     manifest.read().map(_.dead.map(_.rel))
-
-  /** The newest generation's (manifest name, partition key) refs
-    * (specs/probes: hot-split shape and reuse-by-name assertions).
-    */
-  private[graft] def manifestRefs: Seq[(String, String)] =
-    manifest.mfRefs()
-
-  /** Hot-date split threshold seam (specs/probes — see
-    * [[StoreManifest.HotSplitDefault]]).
-    */
-  private[graft] def hotSplitFiles_=(n: Int): Unit =
-    manifest.hotSplitFiles = n
-  private[graft] def hotSplitFiles: Int = manifest.hotSplitFiles
 
   /** Retained manifest generations, oldest → newest — the snapshots
     * [[readGeneration]] can time-travel to. Retention is
@@ -559,7 +548,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
         .as("d")).distinct().collect().map(_.getString(0)).toSet)
       .getOrElse(Set.empty)
     def admits(pk: String): Boolean = pk.isEmpty ||
-      affectedDates(StoreManifest.dateKeyOf(pk).stripPrefix("date="))
+      affectedDates(pk.stripPrefix("date="))
     val t = baseFor(Some(admits))
     // a staged (depth-0) file has no date to scope by: any of its
     // rows may carry a removed key, so it is rewritten with the dates
@@ -729,12 +718,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * write path's date_format uses for the dir names), boundary dates
     * kept whole — conservative at day granularity, so tightening only
     * changes the MANIFESTS READ, never the rows returned (the row
-    * predicate stays exact). A hot-date HOUR sub-key
-    * (`date=…/hour=…`, [[StoreManifest.subPartKeyOf]]) additionally
-    * refines the window's boundary dates to whole hours — the split's
-    * entire point: a one-hour query on a split date plans ~1/24 of
-    * its metadata. The catch-all `""` partition always passes. None
-    * (= no pruning) for an unbounded read.
+    * predicate stays exact). Manifests are keyed by date alone, so
+    * the admit compares dates only. The catch-all `""` partition
+    * always passes. None (= no pruning) for an unbounded read.
     */
   private def dateAdmitOf(startUs: Option[Long],
       endUs: Option[Long]): Option[String => Boolean] =
@@ -742,25 +728,15 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     else {
       val zone = java.time.ZoneId.of(
         spark.conf.get("spark.sql.session.timeZone"))
-      def dayHourOf(us: Long): (String, String) = {
-        val zdt = java.time.Instant
-          .ofEpochSecond(Math.floorDiv(us, 1000000L)).atZone(zone)
-        (zdt.toLocalDate.toString, f"${zdt.getHour}%02d")
-      }
-      val lo = startUs.map(dayHourOf)
-      val hi = endUs.map(dayHourOf)
-      // ISO dates and zero-padded hours compare chronologically as
-      // strings; an hour-less key checks its date only (kept whole)
+      def dayOf(us: Long): String = java.time.LocalDate.ofInstant(
+        java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L)),
+        zone).toString
+      val lo = startUs.map(dayOf)
+      val hi = endUs.map(dayOf)
+      // ISO dates compare chronologically as strings
       Some(pk => pk.isEmpty || {
-        val slash = pk.indexOf('/')
-        val d = (if (slash > 0) pk.substring(0, slash) else pk)
-          .stripPrefix("date=")
-        val h = if (slash > 0)
-          Some(pk.substring(slash + 1).stripPrefix("hour=")) else None
-        lo.forall { case (ld, lh) =>
-          ld < d || (ld == d && h.forall(lh <= _)) } &&
-        hi.forall { case (hd, hh) =>
-          d < hd || (d == hd && h.forall(_ <= hh)) }
+        val d = pk.stripPrefix("date=")
+        lo.forall(_ <= d) && hi.forall(d <= _)
       })
     }
 
@@ -772,15 +748,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * the stale commit.
     */
   private[graft] var beforeCommit: () => Unit = () => ()
-
-  /** rel → rel without its leading `_gen-…` tree segment: the LOGICAL
-    * path (`date=…/hour=…/minute=…/file`), the coordinate space
-    * prefixes, planning, and grain checks operate in. A rewrite tree
-    * is an implementation detail of WHERE a partition's bytes live.
-    */
-  private def logicalRel(rel: String): String =
-    if (rel.startsWith("_gen-")) rel.substring(rel.indexOf('/') + 1)
-    else rel
 
   private def treeRootOf(rel: String): String =
     if (rel.startsWith("_gen-")) rel.take(rel.indexOf('/')) else ""
@@ -963,9 +930,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // catch-all) — the patch-shaped commit below never republishes
     // the rest of the table, so the other partitions' manifests are
     // never read: per-date maintenance is O(date) metadata end to end
-    // (a hot-split date's hour sub-keys all group under this date)
-    val t = baseFor(Some(pk =>
-      pk.isEmpty || StoreManifest.dateKeyOf(pk) == part0))
+    val t = baseFor(Some(pk => pk.isEmpty || pk == part0))
     val eD = t.entries.filter(e => logicalRel(e.rel).startsWith(part0 + "/"))
     if (eD.isEmpty) return
     // partition columns re-derived from the row's own time (the store
@@ -1037,8 +1002,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * tree is invisible (underscore-hidden, referenced by nothing) and
     * is vacuum's to reclaim; 2 = manifest generation published (the
     * commit is the last step, so this is a complete run).
-    */
-  /** @param zorderOn optional pair of 16-bit-domain dimension columns
+    *
+    * @param zorderOn optional pair of 16-bit-domain dimension columns
     *   (values clamped to [0, 65535]) to Morton-order rows by WITHIN
     *   each rewritten partition. Both dims must vary over COMPARABLE
     *   bit-ranges inside one storage partition — an absolute
@@ -1056,15 +1021,13 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     *   once, so parquet row-group pruning serves either predicate —
     *   the [[graft.operators.Pipelines.zorderKey]] layout applied to
     *   the engine's own storage (rectangle guarantee proven at p18).
-    */
-  /** @param blockSize optional parquet row-group target size in bytes
+    * @param blockSize optional parquet row-group target size in bytes
     *   for the rewrite — the granularity knob for min/max-stats
     *   pruning (smaller groups = tighter per-group boxes = more
     *   skippable metadata; production tunes this against footer
     *   overhead). Specs/probes set it low so a small fixture still
     *   splits into enough row groups to MEASURE skipping.
-    */
-  /** @param granularity target DIRECTORY granularity of the rewritten
+    * @param granularity target DIRECTORY granularity of the rewritten
     *   tree: "minute" (the reference's ingest layout), "hour", or
     *   "day". The minute layout is an INGEST-TIME choice, not a read
     *   contract — pruning is on column predicates, and [[TimePrefix]]
@@ -1142,17 +1105,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     }
   }
 
-  /** Reclaim what the manifest-commit protocol deferred: tombstoned
-    * files whose mutation is at least `graceMs` old, `_gen-*` trees no
-    * retained generation references (crashed rewrites, or fully-
-    * superseded trees emptied by tombstone reclaim), and retained
-    * manifest generations beyond the newest that are older than the
-    * grace window. The grace window IS the snapshot-isolation
-    * guarantee: a reader holds its planned `FileStatus`es safely for
-    * up to `graceMs` after the mutation that superseded them.
-    * Idempotent; crash at any point leaves strictly less to reclaim.
-    * Returns (tombstonedFilesDeleted, orphanTreesDeleted, gensPruned).
-    */
   /** The generation files currently standing vacuum's destructive
     * sweeps down, as (name, reason, reclaimable) — the operator
     * observability surface of the future-format gate (empty ⇔ sweeps
@@ -1171,7 +1123,18 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     manifest.futureFormatGens().map(u => (u.name, u.reason,
       u.reclaimable && !generationReadable(u.name)))
 
-  /** @param reclaimUnknown generation file names the OPERATOR
+  /** Reclaim what the manifest-commit protocol deferred: tombstoned
+    * files whose mutation is at least `graceMs` old, `_gen-*` trees no
+    * retained generation references (crashed rewrites, or fully-
+    * superseded trees emptied by tombstone reclaim), and retained
+    * manifest generations beyond the newest that are older than the
+    * grace window. The grace window IS the snapshot-isolation
+    * guarantee: a reader holds its planned `FileStatus`es safely for
+    * up to `graceMs` after the mutation that superseded them.
+    * Idempotent; crash at any point leaves strictly less to reclaim.
+    * Returns (tombstonedFilesDeleted, orphanTreesDeleted, gensPruned).
+    *
+    * @param reclaimUnknown generation file names the OPERATOR
     *   acknowledges as dead debris (from [[vacuumStandDowns]]): they
     *   are deleted before the gate is evaluated, so a permanently-torn
     *   artifact cannot disable reclaim forever. Every named file must
@@ -1437,19 +1400,6 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       .toSeq.sortBy { case (d, n) => (-n, d) }.map(_._1)
   }
 
-  /** Metadata-only granularity heal (maintenance): split any hot
-    * UNSPLIT date's giant manifest into hour sub-keys — one manifest
-    * commit, zero data movement (see
-    * [[StoreManifest.resplitHot]]). Lets a table that concentrated
-    * files before the threshold (or under an older binary) adopt the
-    * hour layout without waiting for a data rewrite of that date.
-    * Returns the dates re-keyed; no-op (and no commit) otherwise.
-    */
-  def resplitHotDates(): Seq[String] = mutation {
-    if (!exists) return Nil
-    commitLock.synchronized { fence(); manifest.resplitHot() }
-  }
-
   /** Compaction as a POLICY, not a tool (the LSM background cadence):
     * fold the [[writeStaged]] landings into the partitioned layout
     * when they are deep enough (`maxStagedFiles`) or old enough
@@ -1521,8 +1471,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     // retention only needs the EXPIRED dates' entries (the patch's
     // drops) — surviving partitions' manifests are never read, so a
     // retention tick is O(expired dates), not O(table)
-    val t = baseFor(Some(pk => pk.isEmpty || StoreManifest.dateKeyOf(pk)
-      .stripPrefix("date=") < cutoffDate.toString))
+    val t = baseFor(Some(pk => pk.isEmpty ||
+      pk.stripPrefix("date=") < cutoffDate.toString))
     // ISO dates compare chronologically as strings
     def dateOf(rel: String): String = {
       val l = logicalRel(rel)

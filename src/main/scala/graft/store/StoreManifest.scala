@@ -54,10 +54,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * file-level `add`/`del` deltas, which this binary no longer reads —
   * is an unknown body form: reads skip it (falling back to the next
   * foldable generation or to listing mode) and vacuum stands down
-  * while it is present (fail closed, never acknowledgeable). Future
-  * formats announce themselves per body with a `protocol` capability
-  * line ([[StoreManifest.SupportedProtocols]]), rejected whole by a
-  * reader that lacks the capability.
+  * while it is present (fail closed, never acknowledgeable). Every
+  * manifest ref is keyed `date=…` or `""`: one manifest per date once
+  * merged, whatever the date's size. Future formats announce
+  * themselves per body with a `protocol` capability line
+  * ([[StoreManifest.SupportedProtocols]], empty in this binary),
+  * rejected whole by a reader that lacks the capability.
   *
   * Snapshot-isolation contract (round-16, unchanged): the manifest
   * generation IS the commit point for every layout mutation. Rewrites
@@ -91,14 +93,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   */
 final class StoreManifest(fs: FileSystem, tableDir: String) {
 
-  import StoreManifest.{CheckpointEvery, Dead, Entry, KeepGens, MfRef,
-    RetainMs, Snapshot, dateKeyOf, partKeyOf, subPartKeyOf}
-
-  /** Hot-date split threshold (see [[StoreManifest.HotSplitDefault]]);
-    * instance-level so specs and probes can engage the split on small
-    * fixtures without a 10⁵-file build.
-    */
-  private[graft] var hotSplitFiles: Int = StoreManifest.HotSplitDefault
+  import StoreManifest.{CheckpointEvery, Dead, DeltaGen, Entry, FullGen,
+    GenState, KeepGens, MfRef, RawGen, RetainMs, Snapshot, partKeyOf}
 
   /** Test seam (specs only): runs after [[publish]]'s expected-parent
     * pre-check passes, immediately before its rename — the only way a
@@ -149,25 +145,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
   }
 
   // ---- raw generation bodies (parse layer) ----
-
-  /** One parsed generation FILE, before chain folding. A checkpoint
-    * carries the absolute state as `manifests` refs; a delta carries
-    * one commit's manifest-set patch (`mAdds`/`mDels`) plus its
-    * required parent pointer. Both carry the ABSOLUTE schema, so a
-    * generation's schema is its own file's. Every commit records one;
-    * `schema` is None only in a generation a build at or before commit
-    * 1ac9815 published, which planning refuses ([[snapshotOf]]).
-    */
-  private sealed trait RawGen
-  private final case class FullGen(parent: Option[String],
-      manifests: Seq[MfRef],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dead: Seq[Dead], info: Option[String]) extends RawGen
-  private final case class DeltaGen(parent: String,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      mAdds: Seq[MfRef], mDels: Seq[String],
-      deadPlus: Seq[Dead], deadMinus: Seq[String],
-      info: Option[String]) extends RawGen
 
   /** Clear-on-cap memo for derived views of IMMUTABLE files (written
     * once via temp+rename, never modified): a value keyed by
@@ -296,8 +273,10 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * loud degrade for free: their body parsers reject unknown lines
     * (count mismatch / malformed), and the expected-parent CAS makes
     * any mutation they then plan from the stale fallback fail loudly.
-    * Emitted ONLY when needed, so stores that never split carry
-    * byte-identical bodies.
+    * This binary emits no capability and interprets none
+    * ([[StoreManifest.SupportedProtocols]] is empty), so every
+    * `protocol` line rejects its generation — the fail-closed gate a
+    * future format relies on.
     */
   private def parseProtocol(rest: Seq[String]): Option[Seq[String]] =
     rest.headOption.filter(_.startsWith("protocol\t")) match {
@@ -487,19 +466,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     MfRef(name, partKey, sorted.size.toLong, counted.count)
   }
 
-  /** Write one DATE partition's final entry set: a single manifest
-    * normally; above [[hotSplitFiles]] entries, one manifest per hour
-    * sub-key (entries without an `hour=` segment keep the date key) —
-    * the hot-date split, engaged only where a partition's manifests
-    * are being (re)written anyway, so it costs no extra rewrite.
-    */
-  private def writeMfs(part: String, entries: Seq[Entry],
-      forceSplit: Boolean = false): Seq[MfRef] =
-    if (part.isEmpty || (!forceSplit && entries.size < hotSplitFiles))
-      Seq(writeMf(part, entries))
-    else entries.groupBy(e => subPartKeyOf(e.rel)).toSeq.sortBy(_._1)
-      .map { case (sub, es) => writeMf(sub, es) }
-
   // ---- chain folding (snapshot layer) ----
 
   /** The generation files of one `_manifest` listing — the state
@@ -523,16 +489,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         "before commit 658cacd to fold them, then reopen the store"))
     all.filter(_.getPath.getName.startsWith("gen-"))
       .map(s => s.getPath.getName -> s).toMap
-  }
-
-  /** One generation's chain-folded state at the MANIFEST level: the
-    * live manifest refs plus the chain-absolute tombstones (the schema
-    * is the head file's own, [[schemaOf]]). Cheap (O(partitions), no
-    * entry assembly) — what commits plan from.
-    */
-  private final case class GenState(gen: String, parent: Option[String],
-      mfs: Seq[MfRef], dead: Seq[Dead], depth: Int, info: Option[String]) {
-    def approxSize: Long = mfs.map(_.n).sum
   }
 
   /** Head-keyed fold memo, (name, size, mtime) like every other memo:
@@ -795,45 +751,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           newSize = approxNewSize)
     }
 
-  /** Metadata-only granularity heal: re-key each hot UNSPLIT date's
-    * manifests by hour — a date whose giant single manifest predates
-    * the split threshold (or was written by an older binary, or under
-    * a larger `SPARK_GRAFT_MF_SPLIT`) adopts the hour layout through
-    * ONE manifest-set commit with ZERO data movement; dates already
-    * split, under the threshold, or merely accumulated (those merge
-    * and threshold-split at the next rollover anyway) are untouched.
-    * A candidate must actually RE-KEY: a hot manifest whose entries
-    * all fall back to the date key (no usable `hour=` segment —
-    * foreign layouts) is skipped, so the heal converges instead of
-    * rewriting the same bytes every tick, and a mixed date converges
-    * after one pass (its hour-less residual manifest re-parses as
-    * all-date-keyed). The parse this check pays is memoized and is
-    * the same one the commit itself would pay. Plans from fold-level
-    * state (O(partitions), no entry assembly) off the newest head.
-    * Returns the dates re-keyed (empty = nothing hot, no commit).
-    * Same CAS + rename atom as every publish; the caller fences.
-    */
-  private[graft] def resplitHot(): Seq[String] = {
-    val gens = listState()
-    val ps = newestFold(gens).getOrElse(return Nil)
-    val parent = ps.gen
-    val hot = ps.mfs.groupBy(r => StoreManifest.dateKeyOf(r.partKey))
-      .collect { case (part, refs) if part.nonEmpty &&
-          refs.exists(r => r.partKey == part &&
-            r.n >= hotSplitFiles &&
-            parseMf(r).exists(_._2.exists(e =>
-              StoreManifest.subPartKeyOf(e.rel) != part))) =>
-        part
-      }.toSeq.sorted
-    if (hot.nonEmpty)
-      commitTwoLevel(Some(ps), Some(parent), adds = Nil, drops = Nil,
-        deadPlus = Nil, deadMinus = Nil, absDead = None,
-        schema = schemaOf(parent, gens),
-        info = Some(s"""{"op":"resplit","dates":${hot.size}}"""),
-        newSize = ps.approxSize, resplit = hot.toSet): Unit
-    hot
-  }
-
   /** The shared two-level commit: decide delta vs checkpoint, write
     * the touched partitions' manifest files, then commit the
     * generation body through the CAS + rename atom. Any failure after
@@ -850,8 +767,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       deadPlus: Seq[Dead], deadMinus: Seq[String],
       absDead: Option[Seq[Dead]],
       schema: org.apache.spark.sql.types.StructType,
-      info: Option[String], newSize: Long,
-      resplit: Set[String] = Set.empty): String = {
+      info: Option[String], newSize: Long): String = {
     val patchLines = adds.size.toLong + drops.size + deadPlus.size +
       deadMinus.size
     // delta only atop a foldable parent, within the cadence, for a
@@ -863,8 +779,10 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     val dropsByPart = drops.groupBy(partKeyOf)
       .view.mapValues(_.toSet).toMap
     val newMfs = scala.collection.mutable.ArrayBuffer.empty[MfRef]
-    def readPartition(refs: Seq[MfRef])
-        : scala.collection.mutable.LinkedHashMap[String, Entry] = {
+    // a partition's manifests read in fold order (later manifests win
+    // a duplicate rel, as in assemble), patched, and re-emitted as one
+    // fresh manifest; None when no entry survives
+    def rewrite(part: String, refs: Seq[MfRef]): Option[MfRef] = {
       val cur = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
       refs.foreach { r =>
         val parsed = parseMf(r).getOrElse(
@@ -872,83 +790,35 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
             s"manifest ${r.name} unreadable — re-plan and retry"))
         parsed._2.foreach(e => cur(e.rel) = e)
       }
-      cur
+      dropsByPart.getOrElse(part, Set.empty).foreach(cur.remove(_): Unit)
+      addsByPart.getOrElse(part, Nil).foreach(e => cur(e.rel) = e)
+      if (cur.isEmpty) None
+      else {
+        val r = writeMf(part, cur.values.toSeq)
+        newMfs += r
+        Some(r)
+      }
     }
     try {
       val bodyLines: Iterator[String] = if (isDelta) {
-        val ps = parentState.get
-        val mfsByDate = ps.mfs.groupBy(r => dateKeyOf(r.partKey))
+        val mfsByPart = parentState.get.mfs.groupBy(_.partKey)
         val mDels = scala.collection.mutable.ArrayBuffer.empty[String]
         val mAdds = scala.collection.mutable.ArrayBuffer.empty[MfRef]
-        (addsByPart.keySet ++ dropsByPart.keySet ++ resplit).toSeq.sorted
+        (addsByPart.keySet ++ dropsByPart.keySet).toSeq.sorted
           .foreach { part =>
-            val pAdds = addsByPart.getOrElse(part, Nil)
-            val pDrops = dropsByPart.getOrElse(part, Set.empty)
-            val refs = mfsByDate.getOrElse(part, Nil)
-            if (pDrops.isEmpty && !resplit(part)) {
-              // pure append: small manifests with just the adds — the
-              // O(delta) cadence path. A split date's appends follow
-              // its form (hour sub-keys) so hour-window plans can
-              // prune them too; an unsplit date appends one manifest —
-              // unless the append alone crosses the hot threshold, in
-              // which case it splits right here (a giant first append
-              // must not park a never-resplit manifest).
-              if (pAdds.nonEmpty) {
-                val rs = writeMfs(part, pAdds,
-                  forceSplit = refs.exists(_.partKey != part))
-                newMfs ++= rs; mAdds ++= rs
-              }
+            if (!dropsByPart.contains(part)) {
+              // pure append: one small manifest with just the adds —
+              // the O(delta) cadence path
+              val r = writeMf(part, addsByPart(part))
+              newMfs += r; mAdds += r
             } else {
-              // partition rewrite: retire the manifests the patch can
-              // touch and re-emit their survivors (plus adds) fresh —
-              // where a date crossing the hot threshold splits. A
-              // sub-keyed manifest holds ONLY its own hour's rels
-              // (writeMfs/append grouping invariant — sub-keys are a
-              // pure function of the rel), so on a split date only the
-              // TOUCHED hours' manifests rewrite: per-hour maintenance
-              // of a hot date is O(touched hours), not O(date). A
-              // date-keyed manifest can hold any of the date's rels
-              // and always rewrites.
-              val touchedSubs = (pAdds.view.map(e => subPartKeyOf(e.rel))
-                ++ pDrops.view.map(subPartKeyOf)).toSet
-              // a resplit part rewrites ALL its manifests (the point
-              // is re-keying them)
-              val (hit0, kept0) = refs.partition(r => resplit(part) ||
-                r.partKey == part || touchedSubs(r.partKey))
-              // a hit DATE-keyed manifest may carry stale duplicates
-              // of rels whose fresh copies live in kept hour
-              // manifests (re-adds without drops are legal: publish()
-              // diffs a changed entry as a bare add) — re-emitting
-              // its survivors in a NEWER manifest would invert
-              // assemble's newest-wins, so the rewrite widens to the
-              // whole partition then (the merge dedups in fold order;
-              // later manifests win, matching the documented
-              // resolution). Pure split dates — the steady state —
-              // keep the O(touched hours) surgical path.
-              val (hit, kept) =
-                if (kept0.nonEmpty && hit0.exists(_.partKey == part))
-                  (refs, Seq.empty[MfRef])
-                else (hit0, kept0)
-              val cur = readPartition(hit)
-              pDrops.foreach(cur.remove(_): Unit)
-              pAdds.foreach(e => cur(e.rel) = e)
-              mDels ++= hit.map(_.name)
-              if (cur.nonEmpty) {
-                // kept non-empty ⇔ untouched hour manifests survive
-                // (the partition above puts every date-keyed ref in
-                // `hit`) — the rewritten subset must stay sub-keyed
-                // then, whatever its size, so the invariant holds
-                val rs = writeMfs(part, cur.values.toSeq,
-                  forceSplit = kept.nonEmpty)
-                newMfs ++= rs; mAdds ++= rs
-              }
+              val refs = mfsByPart.getOrElse(part, Nil)
+              mDels ++= refs.map(_.name)
+              mAdds ++= rewrite(part, refs)
             }
           }
         val lines = s"parent\t${parentName.get}" +:
           (s"schema\t${schema.json}" +: (infoLineOf(info) ++
-            (if (mAdds.exists(_.partKey.contains('/')))
-              Seq(s"protocol\t${StoreManifest.HourSplitProtocol}")
-            else Nil) ++
             deadMinus.sorted.map(r => s"dead-\t$r") ++
             deadPlus.map(d => s"dead+\t${d.rel}\t${d.millis}")
               .sorted ++
@@ -964,51 +834,24 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
         // fresh file — rollover bytes ∝ partitions touched since the
         // last checkpoint, never the table.
         val finalRefs = scala.collection.mutable.ArrayBuffer.empty[MfRef]
-        val touched = addsByPart.keySet ++ dropsByPart.keySet ++ resplit
+        val touched = addsByPart.keySet ++ dropsByPart.keySet
         parentState match {
           case Some(ps) =>
-            val byPart = ps.mfs.groupBy(r => dateKeyOf(r.partKey))
+            val byPart = ps.mfs.groupBy(_.partKey)
             (byPart.keySet ++ touched).toSeq.sorted.foreach { part =>
               val refs = byPart.getOrElse(part, Nil)
-              // canonical = one manifest per (sub-)key: a single
-              // date-keyed file, or a split date whose hour manifests
-              // are distinct. Reused BY NAME; anything accumulated
-              // (same key twice: parent + appends) merges fresh. A
-              // date-keyed ref MIXED with hour-keyed ones is NOT
-              // canonical even when the keys are distinct: the two
-              // can share rels (a threshold-crossing append re-adds a
-              // changed entry the date manifest still carries), and a
-              // reused checkpoint resolves duplicates by mf-NAME
-              // order — wall-clock timestamps a same-millisecond tie
-              // or clock step can invert, resurrecting the stale
-              // entry the delta fold order resolved correctly. Merge
-              // such partitions fresh (the merge dedups in fold
-              // order); pure hour-split sets can't share rels
-              // (sub-keys are a pure function of the rel).
-              val canonical =
-                refs.map(_.partKey).distinct.size == refs.size &&
-                  (refs.size <= 1 || refs.forall(_.partKey != part))
-              if (!touched(part) && refs.nonEmpty && canonical)
-                finalRefs ++= refs
-              else {
-                val cur = readPartition(refs)
-                dropsByPart.getOrElse(part, Set.empty)
-                  .foreach(cur.remove(_): Unit)
-                addsByPart.getOrElse(part, Nil)
-                  .foreach(e => cur(e.rel) = e)
-                if (cur.nonEmpty) {
-                  val rs = writeMfs(part, cur.values.toSeq)
-                  newMfs ++= rs; finalRefs ++= rs
-                }
-              }
+              // an untouched partition with one manifest is reused BY
+              // NAME; anything accumulated (parent + appends) merges
+              // fresh in fold order
+              if (!touched(part) && refs.size == 1) finalRefs ++= refs
+              else finalRefs ++= rewrite(part, refs)
             }
           case None => // first publish (or absolute re-publish over
                        // an unreadable parent): all partitions fresh
-            adds.groupBy(e => partKeyOf(e.rel)).toSeq.sortBy(_._1)
-              .foreach { case (part, es) =>
-                val rs = writeMfs(part, es)
-                newMfs ++= rs; finalRefs ++= rs
-              }
+            addsByPart.toSeq.sortBy(_._1).foreach { case (part, es) =>
+              val r = writeMf(part, es)
+              newMfs += r; finalRefs += r
+            }
         }
         val deadFinal: Seq[Dead] = absDead.getOrElse {
           val m = scala.collection.mutable.LinkedHashMap
@@ -1024,9 +867,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
           parentName.toSeq.map(p => s"parent\t$p") ++
           Iterator(s"schema\t${schema.json}") ++
           infoLineOf(info) ++
-          (if (finalRefs.exists(_.partKey.contains('/')))
-            Iterator(s"protocol\t${StoreManifest.HourSplitProtocol}")
-          else Iterator.empty) ++
           deadFinal.map(d => s"dead\t${d.rel}\t${d.millis}").sorted ++
           mLines
       }
@@ -1326,10 +1166,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     newestAssembled(listState()).map { case (st, _) => (st.gen, st.dead) }
 
   /** [[read]] restricted to the partitions `admit` passes (by
-    * partition key — `date=…`, a hot-split date's `date=…/hour=…`
-    * sub-key, or the catch-all `""`, which admit must always pass;
-    * an admit that groups at date level must accept every key whose
-    * [[StoreManifest.dateKeyOf]] matches): the snapshot's entries cover ONLY admitted
+    * partition key — `date=…`, or the catch-all `""`, which admit must
+    * always pass): the snapshot's entries cover ONLY admitted
     * partitions, and only their manifest files are read — the plan
     * wall of a windowed query scales with the partitions the window
     * admits, flat as the table grows. The pruned snapshot is a
@@ -1539,22 +1377,6 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   /** Whether a readable manifest generation is present (specs/gates). */
   def present: Boolean = newestAssembled(listState()).isDefined
-
-  /** The newest foldable generation's manifest refs as (name,
-    * partKey) — spec/probe introspection for hot-split shape and
-    * checkpoint reuse-by-name assertions.
-    */
-  private[graft] def mfRefs(): Seq[(String, String)] =
-    newestFold(listState()).map(_.mfs.map(r => (r.name, r.partKey)))
-      .getOrElse(Nil)
-
-  /** The newest FOLDABLE generation's manifest-level state — the one
-    * head-selection policy (newest first, skip unreadable heads)
-    * shared by every fold-level consumer.
-    */
-  private def newestFold(gens: Map[String, FileStatus]): Option[GenState] =
-    gens.keys.toSeq.sorted(Ordering[String].reverse).iterator
-      .flatMap(h => fold(h, gens)).nextOption()
 }
 
 object StoreManifest {
@@ -1619,30 +1441,15 @@ object StoreManifest {
     */
   private[store] val MfGzipAbove: Int = 256
 
-  /** Files-per-date threshold above which a freshly-written date
-    * partition's manifest splits into HOUR-keyed manifests
-    * (`date=…/hour=…`), so a window plan on a pathologically hot date
-    * reads ~1/24 of its metadata instead of the whole date. Sized
-    * where the single-manifest parse wall becomes the plan's dominant
-    * term (~10⁵ entries ≈ 60 ms; SCALE.md round-19 residual) — the
-    * 1,000-files/date shape observability tables actually have never
-    * crosses it, so normal tables keep one manifest per date. The
-    * split engages only when a partition's manifest is (re)written —
-    * merge at checkpoint, rewrite or first publish — never
-    * by re-keying untouched manifests. `SPARK_GRAFT_MF_SPLIT`
-    * overrides for probes.
+  /** Every reader capability THIS binary can interpret (see
+    * `parseProtocol`): none. A generation that names any capability is
+    * refused whole — among them the `protocol hour-split` generations
+    * builds at or before commit 2b2ecd7 published for a date whose
+    * manifest reached 10⁵ entries (their hot-date hour split, since
+    * deleted): reads fall back past them and vacuum stands down while
+    * one is retained.
     */
-  private[store] val HotSplitDefault: Int =
-    sys.env.get("SPARK_GRAFT_MF_SPLIT").flatMap(_.toIntOption)
-      .getOrElse(100 * 1000)
-
-  /** Reader-capability name a generation with hour sub-keyed
-    * manifests declares (see `parseProtocol`); the set is every
-    * capability THIS binary can interpret.
-    */
-  private[store] val HourSplitProtocol: String = "hour-split"
-  private[store] val SupportedProtocols: Set[String] =
-    Set(HourSplitProtocol)
+  private[store] val SupportedProtocols: Set[String] = Set.empty
 
   /** One generation this binary cannot vouch for (vacuum's stand-down
     * set): the file name, WHY it classified — the observability half
@@ -1667,51 +1474,6 @@ object StoreManifest {
     */
   private[store] val ClassifyMaxBytes: Long = 64L * 1024 * 1024
 
-  /** rel → rel without its leading `_gen-…` rewrite-tree segment: the
-    * logical path both key derivations below parse, factored out so
-    * they cannot diverge (the surgical-rewrite argument depends on
-    * [[partKeyOf]] and [[subPartKeyOf]] agreeing on the date).
-    */
-  private def stripTree(rel: String): String =
-    if (rel.startsWith("_gen-")) rel.substring(rel.indexOf('/') + 1)
-    else rel
-
-  /** The finer storage key a hot date's manifests carry: the leading
-    * `date=…/hour=…` segments when both exist, else [[partKeyOf]]'s
-    * key. A pure function of the rel, so one rel can never live under
-    * two sub-keys. The hour value is NORMALIZED to two digits
-    * (`hour=3` → `hour=03` — Spark's partitionBy on a numeric hour
-    * column writes unpadded) so the admit functions' string compare
-    * is chronological; a non-numeric hour falls back to the date key
-    * (no refinement, never a wrong one).
-    */
-  private[graft] def subPartKeyOf(rel: String): String = {
-    val l = stripTree(rel)
-    val i = l.indexOf('/')
-    if (i > 0 && l.startsWith("date=")) {
-      val j = l.indexOf('/', i + 1)
-      val hour =
-        if (j > 0 && l.substring(i + 1, j).startsWith("hour="))
-          l.substring(i + 6, j).toIntOption.filter(h => h >= 0 && h < 24)
-        else None
-      hour match {
-        case Some(h) => f"${l.substring(0, i)}/hour=$h%02d"
-        case None => l.substring(0, i)
-      }
-    } else ""
-  }
-
-  /** A manifest partKey's DATE-level group: the leading segment of an
-    * hour sub-key, identity for date-only keys and the catch-all.
-    * Commit-side grouping and per-date admit functions operate at
-    * this level so a split date's manifests keep behaving as one
-    * partition.
-    */
-  private[graft] def dateKeyOf(partKey: String): String = {
-    val i = partKey.indexOf('/')
-    if (i > 0) partKey.substring(0, i) else partKey
-  }
-
   /** One data file: path relative to the table dir (a leading
     * `_gen-…` segment names the rewrite tree it lives in), plus the
     * size and mtime a read plan needs to construct the `FileStatus`
@@ -1727,8 +1489,8 @@ object StoreManifest {
 
   /** One partition-manifest reference as a generation body carries
     * it: the immutable file name under `_manifest/mf/`, the partition
-    * key its entries share (`date=…`; `date=…/hour=…` when a hot date
-    * split, [[subPartKeyOf]]; or `""` for the catch-all), its
+    * key its entries share ([[partKeyOf]]: `date=…`, or `""` for the
+    * catch-all), its
     * entry count (pruning and size heuristics — duplicates across a
     * partition's accumulated manifests make it an upper bound), and
     * its exact byte size (planning GETs by name with no listing or
@@ -1736,6 +1498,35 @@ object StoreManifest {
     */
   private[graft] final case class MfRef(name: String, partKey: String,
       n: Long, size: Long)
+
+  /** One parsed generation FILE, before chain folding. A checkpoint
+    * carries the absolute state as `manifests` refs; a delta carries
+    * one commit's manifest-set patch (`mAdds`/`mDels`) plus its
+    * required parent pointer. Both carry the ABSOLUTE schema, so a
+    * generation's schema is its own file's. Every commit records one;
+    * `schema` is None only in a generation a build at or before commit
+    * 1ac9815 published, which planning refuses.
+    */
+  private sealed trait RawGen
+  private final case class FullGen(parent: Option[String],
+      manifests: Seq[MfRef],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      dead: Seq[Dead], info: Option[String]) extends RawGen
+  private final case class DeltaGen(parent: String,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      mAdds: Seq[MfRef], mDels: Seq[String],
+      deadPlus: Seq[Dead], deadMinus: Seq[String],
+      info: Option[String]) extends RawGen
+
+  /** One generation's chain-folded state at the MANIFEST level: the
+    * live manifest refs plus the chain-absolute tombstones (the schema
+    * is the head file's own). Cheap (O(partitions), no entry
+    * assembly) — what commits plan from.
+    */
+  private final case class GenState(gen: String, parent: Option[String],
+      mfs: Seq[MfRef], dead: Seq[Dead], depth: Int, info: Option[String]) {
+    def approxSize: Long = mfs.map(_.n).sum
+  }
 
   /** Byte counter for manifest writes: the ref records the exact
     * on-disk size without a post-write stat round trip.
@@ -1759,13 +1550,23 @@ object StoreManifest {
     * these keys and must always pass `""`.
     */
   private[graft] def partKeyOf(rel: String): String = {
-    val l = stripTree(rel)
+    val l = logicalRel(rel)
     val i = l.indexOf('/')
     if (i > 0) {
       val seg = l.substring(0, i)
       if (seg.startsWith("date=")) seg else ""
     } else ""
   }
+
+  /** rel → rel without its leading `_gen-…` tree segment: the LOGICAL
+    * path (`date=…/hour=…/minute=…/file`), the coordinate space
+    * partition keys, prefixes, planning and grain checks operate in. A
+    * rewrite tree is an implementation detail of WHERE a partition's
+    * bytes live.
+    */
+  private[store] def logicalRel(rel: String): String =
+    if (rel.startsWith("_gen-")) rel.substring(rel.indexOf('/') + 1)
+    else rel
 
   /** One manifest generation's FOLDED, ASSEMBLED state: its own file
     * name, the parent generation it committed over (None = first

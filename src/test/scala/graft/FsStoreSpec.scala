@@ -271,6 +271,22 @@ class FsStoreSpec extends SparkSpec {
       Seq("a.parquet", "b.parquet", "d.parquet"))
     assert(m.genNames().size == 3) // g1, g2, winner — loser rolled back
     assert(!m.referencedRels().contains("x.parquet"))
+    // a crash at the rename itself: the truth stays whole and the
+    // partition manifests the failed commit wrote are deleted eagerly
+    def mfNames(): Set[String] = graft.store.StoreFs.list(fs,
+      new org.apache.hadoop.fs.Path(tableDir, "_manifest/mf"))
+      .map(_.getPath.getName).toSet
+    val mfsBefore = mfNames()
+    m.beforeRename = () => throw new RuntimeException("crash-at-rename")
+    val crash = try intercept[RuntimeException] {
+      m.publishPatch(adds = Seq(e("date=2024-01-15/y.parquet")),
+        drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
+        parent = Some(snap.gen))
+    } finally m.beforeRename = () => ()
+    assert(crash.getMessage == "crash-at-rename")
+    assert(mfNames() == mfsBefore,
+      "the crashed commit's manifests must be cleaned up eagerly")
+    assert(m.read().get.gen == snap.gen)
   }
 
   test("manifest: an unpublished rewrite is invisible; a torn " +
@@ -1265,8 +1281,18 @@ class FsStoreSpec extends SparkSpec {
     // a pre-audit generation (no info line — the old on-disk form, or
     // any third-party publisher that omits it) reads as None
     val snap = m.read().get
+    val feed = store.cdcFeed("audit-consumer", keyCols = Seq("id"))
+    feed.commit(snap.gen)
     m.publish(snap.entries, snap.schema, snap.dead, Some(snap.gen))
     assert(store.generationInfo(store.generations().last).isEmpty)
+    // that republish changed no entry: a caught-up consumer receives
+    // it as a plain zero-row increment, not a resync
+    val inc = feed.poll().get
+    assert(!inc.resync, "a commit that moves no row must not resync")
+    assert(inc.added.forall(_.isEmpty) && inc.removed.forall(_.isEmpty),
+      "no entry changed, so both sides must be empty")
+    feed.commit(inc.toGen)
+    assert(feed.poll().isEmpty)
   }
 
   test("checkpoint bodies are gzip on disk, read back exactly; plain " +
@@ -1564,20 +1590,13 @@ class FsStoreSpec extends SparkSpec {
   }
 
   test("two-level folds equal a reference model under a mixed mutation " +
-      "sequence: accumulating appends, partition rewrites, absolute " +
-      "republish, rollover merges and retention all agree — with and " +
-      "without the hot-date hour split engaged") {
+      "sequence: accumulating appends, bare re-adds, partition " +
+      "rewrites, absolute republish, rollover merges and retention all " +
+      "agree") {
     import graft.store.{StoreFs, StoreManifest}
-    // run the same seeded sequence twice: once with the split never
-    // engaging (the pre-split layout) and once with a threshold so low
-    // every merge/rewrite splits by hour — folds must agree with the
-    // model identically, since the split only changes WHERE entries
-    // are stored, never what a fold returns
-    for (split <- Seq(Int.MaxValue, 4)) {
     val local = java.nio.file.Files.createTempDirectory("mixedseq")
     val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
     val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = split
     val rnd = new scala.util.Random(42)
     val dates = (15 to 19).map(d => s"date=2024-01-$d")
     val model = scala.collection.mutable.LinkedHashMap.empty[
@@ -1610,9 +1629,17 @@ class FsStoreSpec extends SparkSpec {
           deadPlus = Nil, deadMinus = Nil, schema = fx,
           parent = Some(parent))
       } else {
-        // accumulating append: 1-3 files into 1-2 partitions
+        // accumulating append: 1-3 files into 1-2 partitions; every
+        // fourth commit also re-adds a live rel with a new size and no
+        // drop, so the stale copy stays in an older manifest of its
+        // date — assembly, the next rewrite of that date and the
+        // rollover merge must all resolve it newest-manifest-wins
+        val readd = if (i % 4 == 3) {
+          val old = model.values.toSeq(rnd.nextInt(model.size))
+          Seq(old.copy(size = old.size + 1000L))
+        } else Nil
         val adds = (0 until 1 + rnd.nextInt(3))
-          .map(_ => mk(dates(rnd.nextInt(dates.size))))
+          .map(_ => mk(dates(rnd.nextInt(dates.size)))) ++ readd
         adds.foreach(e => model(e.rel) = e)
         m.publishPatch(adds = adds, drops = Nil, deadPlus = Nil,
           deadMinus = Nil, schema = fx, parent = Some(parent))
@@ -1623,167 +1650,28 @@ class FsStoreSpec extends SparkSpec {
       // retention pruning
       val snap = m.read().get
       assert(snap.entries == model.values.toSeq.sortBy(_.rel),
-        s"fold diverged from the model at commit $i (${snap.gen}, " +
-          s"split=$split)")
-      // and a window over one partition equals the model's slice —
-      // date-level admits must accept the date's hour sub-keys
+        s"fold diverged from the model at commit $i (${snap.gen})")
+      // and a window over one partition equals the model's slice
       val d = dates(i % dates.size)
-      val win = m.readStateFor(pk =>
-        pk.isEmpty || StoreManifest.dateKeyOf(pk) == d)
+      val win = m.readStateFor(pk => pk.isEmpty || pk == d)
       assert(win.get.entries ==
         model.values.toSeq.filter(_.rel.startsWith(d + "/"))
           .sortBy(_.rel),
-        s"window $d diverged at commit $i (split=$split)")
+        s"window $d diverged at commit $i")
     }
     // every retained generation still folds whole at the end
     m.genNames().foreach(g => assert(m.readGen(g).isDefined,
-      s"retained $g must fold (split=$split)"))
-    }
+      s"retained $g must fold"))
   }
 
-  test("hot-date hour split: a date crossing the threshold stores as " +
-      "hour-keyed manifests, hour windows assemble only their hour, " +
-      "appends follow the split, rewrites retire it whole, and " +
-      "rollover checkpoints reuse split manifests by name") {
+  test("an unknown protocol capability rejects the generation whole: " +
+      "a future format's generation and an older build's hot-date " +
+      "split generation both fall back to the previous generation " +
+      "(stale, not wrong reads) and stand vacuum down, non-reclaimable") {
     import graft.store.{StoreFs, StoreManifest}
-    val local = java.nio.file.Files.createTempDirectory("hotsplit")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = 6
-    def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    val hot = (0 until 12).map(i =>
-      e(f"date=2024-01-15/hour=${i / 4}%02d/minute=00/p$i.parquet"))
-    val cold = (0 until 3).map(i =>
-      e(s"date=2024-01-16/hour=05/minute=00/q$i.parquet"))
-    val loose = Seq(e("loose.parquet"))
-    m.publish(hot ++ cold ++ loose, fx, Nil, parent = None)
-    // shape: the hot date split into its 3 hours; the cold date and
-    // the catch-all kept single keys — and the full fold is complete
-    assert(m.mfRefs().map(_._2).sorted == Seq("",
-      "date=2024-01-15/hour=00", "date=2024-01-15/hour=01",
-      "date=2024-01-15/hour=02", "date=2024-01-16"))
-    assert(m.read().get.entries.size == 16)
-    // generations referencing sub-keys declare the capability (the
-    // mixed-version gate); ones that don't stay byte-compatible
-    def genBody(name: String): String = {
-      val gp = new org.apache.hadoop.fs.Path(local.toString,
-        s"_manifest/$name")
-      val gin = fsys.open(gp)
-      val raw = try gin.readAllBytes() finally gin.close()
-      if (raw.length >= 2 && (raw(0) & 0xff) == 0x1f &&
-          (raw(1) & 0xff) == 0x8b) {
-        val gz = new java.util.zip.GZIPInputStream(
-          new java.io.ByteArrayInputStream(raw))
-        try new String(gz.readAllBytes(), "UTF-8") finally gz.close()
-      } else new String(raw, "UTF-8")
-    }
-    assert(genBody(m.read().get.gen).contains("protocol\thour-split"))
-    // hour-window pruning: only that hour's entries (+ catch-all)
-    // assemble — the metadata win the split exists for
-    val hourAdmit: String => Boolean = pk => pk.isEmpty ||
-      pk == "date=2024-01-15" || pk == "date=2024-01-15/hour=01"
-    val win = m.readStateFor(hourAdmit)
-    assert(win.get.entries.map(_.rel) ==
-      (hot.slice(4, 8).map(_.rel) ++ loose.map(_.rel)).sorted)
-    // a pure append to the split date lands hour-keyed (prunable too)
-    val add1 = e("date=2024-01-15/hour=01/minute=30/extra.parquet")
-    m.publishPatch(adds = Seq(add1), drops = Nil, deadPlus = Nil,
-      deadMinus = Nil, schema = fx, parent = m.read().map(_.gen))
-    assert(m.mfRefs().map(_._2)
-      .count(_ == "date=2024-01-15/hour=01") == 2)
-    val win2 = m.readStateFor(hourAdmit)
-    assert(win2.get.entries.map(_.rel) ==
-      (hot.slice(4, 8).map(_.rel) ++ Seq(add1.rel) ++
-        loose.map(_.rel)).sorted)
-    // the hour-keyed append's delta itself declares the capability…
-    assert(genBody(m.read().get.gen).contains("protocol\thour-split"))
-    // an append to the UNSPLIT date stays date-keyed
-    m.publishPatch(
-      adds = Seq(e("date=2024-01-16/hour=06/minute=00/q3.parquet")),
-      drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
-      parent = m.read().map(_.gen))
-    assert(m.mfRefs().map(_._2).count(_ == "date=2024-01-16") == 2)
-    // …while a date-keyed-only delta stays byte-compatible (no marker)
-    assert(!genBody(m.read().get.gen).contains("protocol\t"))
-    // a rewrite touching ONE hour of the split date is surgical:
-    // only that hour's manifest retires (per-hour maintenance is
-    // O(touched hours)); the other hours' manifests survive by name
-    def dateRefs() = m.mfRefs().filter(r =>
-      StoreManifest.dateKeyOf(r._2) == "date=2024-01-15")
-    val beforeByKey = dateRefs().groupBy(_._2)
-    val r0 = e("date=2024-01-15/hour=00/minute=00/r0.parquet")
-    m.publishPatch(adds = Seq(r0), drops = hot.take(2).map(_.rel),
-      deadPlus = Nil, deadMinus = Nil, schema = fx,
-      parent = m.read().map(_.gen))
-    val afterByKey = dateRefs().groupBy(_._2)
-    assert(afterByKey("date=2024-01-15/hour=00").map(_._1).toSet
-      .intersect(beforeByKey("date=2024-01-15/hour=00").map(_._1).toSet)
-      .isEmpty, "the touched hour's manifest must be rewritten")
-    assert(afterByKey("date=2024-01-15/hour=01") ==
-      beforeByKey("date=2024-01-15/hour=01") &&
-      afterByKey("date=2024-01-15/hour=02") ==
-        beforeByKey("date=2024-01-15/hour=02"),
-      "untouched hours of a split date must keep their manifests")
-    val wantRels = (hot.drop(2) ++ Seq(add1, r0) ++ cold ++
-      Seq(e("date=2024-01-16/hour=06/minute=00/q3.parquet")) ++ loose)
-      .map(_.rel).sorted
-    assert(m.read().get.entries.map(_.rel) == wantRels)
-    // drive cold-date commits across TWO rollover checkpoints: the
-    // first merges the split date's accumulated hour=01 pair back to
-    // one manifest per hour (canonical); the second — the date now
-    // untouched AND canonical — must REUSE those manifests by name
-    var k = 0
-    def driveToCheckpoint(): Unit = {
-      var ckpt = false
-      while (!ckpt) {
-        m.publishPatch(adds =
-          Seq(e(s"date=2024-01-16/hour=07/minute=00/c$k.parquet")),
-          drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
-          parent = m.read().map(_.gen))
-        k += 1
-        ckpt = m.read().get.gen.endsWith(".list")
-      }
-    }
-    driveToCheckpoint()
-    val canonical = dateRefs()
-    assert(canonical.map(_._2).sorted == Seq("date=2024-01-15/hour=00",
-      "date=2024-01-15/hour=01", "date=2024-01-15/hour=02"),
-      "the rollover must merge the split date back to one manifest " +
-        "per hour")
-    driveToCheckpoint()
-    assert(dateRefs() == canonical,
-      "an untouched canonical split date must ride through a rollover " +
-        "with its manifests reused by name")
-    // the accumulated cold date crossed the threshold at its rollover
-    // merge — it split too, and the fold still matches
-    assert(m.mfRefs().map(_._2)
-      .count(_.startsWith("date=2024-01-16/hour=")) >= 2)
-    assert(m.read().get.entries.size == wantRels.size + k)
-  }
-
-  test("hour sub-keys normalize unpadded hours; generations carrying " +
-      "sub-keys declare the capability, and an unknown capability " +
-      "rejects the generation whole (stale fallback, not wrong reads)") {
-    import graft.store.{StoreFs, StoreManifest}
-    // normalization: Spark's partitionBy on a numeric hour column
-    // writes hour=3 — the sub-key must pad it or the admit functions'
-    // string compare would silently reject in-window hours
-    assert(StoreManifest.subPartKeyOf(
-      "date=2024-01-15/hour=3/x.parquet") == "date=2024-01-15/hour=03")
-    assert(StoreManifest.subPartKeyOf(
-      "_gen-5/date=2024-01-15/hour=23/x.parquet") ==
-      "date=2024-01-15/hour=23")
-    // a non-numeric hour refines nothing (date key, never a wrong key)
-    assert(StoreManifest.subPartKeyOf(
-      "date=2024-01-15/hour=xx/x.parquet") == "date=2024-01-15")
-    // an UNKNOWN protocol capability (a future format this binary
-    // cannot interpret) must poison the generation, not be skipped:
-    // the reader falls back to the previous generation — exactly what
-    // a pre-hour-split binary reading a split store gets via its
-    // count/malformed checks
-    val local = java.nio.file.Files.createTempDirectory("protogate")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
+    val root = newRoot()
+    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(root))
+    val m = new StoreManifest(fsys, s"$root/span")
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
     m.publish(Seq(e("date=2024-01-15/a.parquet")), fx, Nil,
       parent = None)
@@ -1792,127 +1680,33 @@ class FsStoreSpec extends SparkSpec {
       parent = m.read().map(_.gen))
     val gen2 = m.read().get.gen
     assert(gen2.endsWith(".delta"))
-    val p = new org.apache.hadoop.fs.Path(local.toString,
-      s"_manifest/$gen2")
+    val p = new org.apache.hadoop.fs.Path(s"$root/span/_manifest/$gen2")
     val in = fsys.open(p)
     val body = try new String(in.readAllBytes(), "UTF-8")
     finally in.close()
-    val lines = body.split("\n", -1).toBuffer
-    lines(0) = s"delta=${lines.head.stripPrefix("delta=").toInt + 1}"
-    lines.insert(2, "protocol\tfrom-the-future")
-    val o = fsys.create(p, true)
-    o.write(lines.mkString("\n").getBytes("UTF-8")); o.close()
-    val m2 = new StoreManifest(fsys, local.toString)
-    assert(m2.read().get.entries.map(_.rel) ==
-      Seq("date=2024-01-15/a.parquet"),
-      "an unknown capability must reject the generation whole and " +
-        "fall back to the previous one")
-  }
-
-  test("hot-split store end-to-end: a one-hour windowed search over " +
-      "a split date returns the same rows as before the split") {
-    val root = newRoot()
-    val store = new ParquetStore(spark, root, "span", "start")
-    val hourUs = 3600L * 1000000L
-    // 12 spans across 3 hours of one UTC date (t0 is mid-day)
-    def batch(ids: Seq[Long]) =
-      ids.map(i => (i, t0 + (i % 3) * hourUs + (i % 60) * 60L * 1000000L,
-        i * 10L)).toDF("id", "start", "trace_id")
-    store.write(batch(1L to 12L))
-    store.hotSplitFiles = 4
-    store.compact()
-    assert(store.manifestRefs.exists(_._2.contains("/hour=")),
-      "the date must have split at compaction")
-    // a one-hour window: rows equal the unsplit semantics (hour 1 of
-    // the three — ids ≡ 1 mod 3), via both read APIs
-    val lo = t0 + hourUs
-    val hi = t0 + 2L * hourUs - 1L
-    val want = (1L to 12L).filter(i => i % 3 == 1).toSet
-    assert(store.read(Some(lo), Some(hi)).get.select("id").as[Long]
-      .collect().toSet == want)
-    assert(store.readPrefixes(lo, hi).get.select("id").as[Long]
-      .collect().toSet == want)
-    // unbounded and date-wide reads still see everything
-    assert(store.read(None, None).get.count() == 12)
-  }
-
-  test("metadata-only re-split: one commit re-keys a pre-existing " +
-      "giant date manifest by hour, untouched dates keep their " +
-      "manifests by name, the fold is unchanged, and it is idempotent") {
-    import graft.store.{StoreFs, StoreManifest}
-    val local = java.nio.file.Files.createTempDirectory("resplit")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = Int.MaxValue // build the pre-split world
-    def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    val hot = (0 until 12).map(i =>
-      e(f"date=2024-01-15/hour=${i / 4}%02d/minute=00/p$i.parquet"))
-    val cold = (0 until 2).map(i =>
-      e(s"date=2024-01-16/hour=05/minute=00/q$i.parquet"))
-    m.publish(hot ++ cold, fx, Nil, parent = None)
-    assert(m.mfRefs().map(_._2).sorted ==
-      Seq("date=2024-01-15", "date=2024-01-16"))
-    val coldName = m.mfRefs().find(_._2 == "date=2024-01-16").get._1
-    // the threshold drops (config change / newer binary): ONE commit
-    // adopts the hour layout, no data rewrite
-    m.hotSplitFiles = 6
-    assert(m.resplitHot() == Seq("date=2024-01-15"))
-    val refs = m.mfRefs()
-    assert(refs.map(_._2).sorted == Seq("date=2024-01-15/hour=00",
-      "date=2024-01-15/hour=01", "date=2024-01-15/hour=02",
-      "date=2024-01-16"))
-    assert(refs.find(_._2 == "date=2024-01-16").get._1 == coldName,
-      "dates that are not hot must keep their manifests by name")
-    val snap = m.read().get
-    assert(snap.entries == (hot ++ cold).sortBy(_.rel),
-      "a re-split changes WHERE entries are stored, never the fold")
-    assert(snap.gen.endsWith(".delta"))
-    assert(snap.info.contains("""{"op":"resplit","dates":1}"""))
-    // idempotent: nothing hot remains → no commit at all
-    assert(m.resplitHot().isEmpty)
-    assert(m.read().get.gen == snap.gen)
-    // a hot date whose rels have NO usable hour segment (a foreign
-    // layout subPartKeyOf deliberately falls back on) is never a
-    // candidate: re-keying would change nothing, so re-splitting it
-    // every tick would be pure churn — the heal must converge
-    val m2 = new StoreManifest(fsys,
-      java.nio.file.Files.createTempDirectory("resplitforeign").toString)
-    m2.hotSplitFiles = 4
-    m2.publish((0 until 8).map(i =>
-      e(s"date=2024-02-01/region=r$i/f$i.parquet")), fx, Nil, None)
-    // first publish groups by date (writeMfs splits only on usable
-    // sub-keys — all fall back here, one group, one manifest)
-    assert(m2.mfRefs().map(_._2) == Seq("date=2024-02-01"))
-    val g2 = m2.read().get.gen
-    assert(m2.resplitHot().isEmpty,
-      "an un-re-keyable hot date must not be a resplit candidate")
-    assert(m2.read().get.gen == g2, "…and must cost no commit")
-  }
-
-  test("mixed hot date converges in one resplit pass, and a CDC " +
-      "consumer sees the resplit as a zero-row increment, not a resync") {
-    import graft.store.{StoreFs, StoreManifest}
-    val local = java.nio.file.Files.createTempDirectory("resplitmixed")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = Int.MaxValue
-    def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    // a MIXED hot date: hour-keyed rels plus hour-less foreign rels
-    val houred = (0 until 8).map(i =>
-      e(f"date=2024-03-01/hour=${i / 4}%02d/minute=00/h$i.parquet"))
-    val hourless = (0 until 8).map(i =>
-      e(s"date=2024-03-01/region=r$i/f$i.parquet"))
-    m.publish(houred ++ hourless, fx, Nil, parent = None)
-    m.hotSplitFiles = 6
-    // pass 1: re-keys into hour manifests + a date-keyed residual
-    assert(m.resplitHot() == Seq("date=2024-03-01"))
-    assert(m.mfRefs().map(_._2).sorted == Seq("date=2024-03-01",
-      "date=2024-03-01/hour=00", "date=2024-03-01/hour=01"))
-    // pass 2: the ≥-threshold residual is all-hourless — converged
-    val gen = m.read().get.gen
-    assert(m.resplitHot().isEmpty, "the residual must not re-trigger")
-    assert(m.read().get.gen == gen)
-    assert(m.read().get.entries == (houred ++ hourless).sortBy(_.rel))
+    // the first stands for a format this binary has never seen; the
+    // second is what builds at or before commit 2b2ecd7 wrote for a
+    // date of 10⁵ manifest entries — the protocol line goes after the
+    // parent/schema/info headers, where writers put it
+    for (cap <- Seq("from-the-future", "hour-split")) {
+      val lines = body.split("\n", -1).toBuffer
+      lines(0) = s"delta=${lines.head.stripPrefix("delta=").toInt + 1}"
+      lines.insert(lines.indexWhere(l => !Seq("delta=", "parent\t",
+        "schema\t", "info\t").exists(l.startsWith)), s"protocol\t$cap")
+      val o = fsys.create(p, true)
+      o.write(lines.mkString("\n").getBytes("UTF-8")); o.close()
+      val m2 = new StoreManifest(fsys, s"$root/span")
+      assert(m2.read().get.entries.map(_.rel) ==
+        Seq("date=2024-01-15/a.parquet"),
+        s"capability $cap must reject the generation whole and fall " +
+          "back to the previous one")
+      val standDowns =
+        new ParquetStore(spark, root, "span", "start").vacuumStandDowns()
+      assert(standDowns.exists { case (n, reason, reclaimable) =>
+          n == gen2 && reason.contains(cap) && !reclaimable },
+        s"capability $cap must stand vacuum down, non-reclaimable: " +
+          s"$standDowns")
+    }
   }
 
   test("vacuum stands down when a FUTURE-format generation is present: " +
@@ -1964,155 +1758,6 @@ class FsStoreSpec extends SparkSpec {
     assert(pruned3 >= 1 && !fsys.exists(torn),
       "torn known-form debris stays prunable")
     assert(store.read(None, None).get.count() == 4)
-  }
-
-  test("a re-added rel's fresh entry survives a later surgical " +
-      "rewrite of a different hour: the split never inverts " +
-      "newest-manifest-wins") {
-    import graft.store.{StoreFs, StoreManifest}
-    val local = java.nio.file.Files.createTempDirectory("dupadd")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = 4
-    def e(rel: String, size: Long) = StoreManifest.Entry(rel, size, 1L)
-    val r = "date=2024-05-01/hour=00/minute=00/r.parquet"
-    // 3 files: below the threshold, ONE date-keyed manifest holds R@1
-    m.publish(Seq(e(r, 1L),
-      e("date=2024-05-01/hour=00/minute=01/x.parquet", 1L),
-      e("date=2024-05-01/hour=01/minute=00/y.parquet", 1L)),
-      fx, Nil, parent = None)
-    assert(m.mfRefs().map(_._2) == Seq("date=2024-05-01"))
-    // a bare re-add of R with a new size (publish() diffs a changed
-    // entry exactly this way) inside an append big enough to split:
-    // the fresh R@2 now lives in an hour manifest; the stale R@1
-    // stays in the date-keyed one — newest-wins must return R@2
-    val adds = e(r, 2L) +: (0 until 4).map(i =>
-      e(s"date=2024-05-01/hour=01/minute=1$i/a$i.parquet", 1L))
-    m.publishPatch(adds = adds, drops = Nil, deadPlus = Nil,
-      deadMinus = Nil, schema = fx, parent = m.read().map(_.gen))
-    assert(m.read().get.entries.find(_.rel == r).map(_.size)
-      .contains(2L))
-    // a rewrite touching ONLY the other hour hits the date-keyed
-    // manifest (it can hold any hour) — its stale R@1 must not be
-    // re-emitted over the fresh copy
-    m.publishPatch(adds = Nil,
-      drops = Seq("date=2024-05-01/hour=01/minute=00/y.parquet"),
-      deadPlus = Nil, deadMinus = Nil, schema = fx,
-      parent = m.read().map(_.gen))
-    assert(m.read().get.entries.find(_.rel == r).map(_.size)
-      .contains(2L),
-      "the stale duplicate must not shadow the fresh entry")
-    assert(!m.read().get.entries.exists(
-      _.rel == "date=2024-05-01/hour=01/minute=00/y.parquet"))
-  }
-
-  test("resplit crash- and race-atomicity: a failure before the rename " +
-      "leaves the old layout whole and no orphan manifests; a lost CAS " +
-      "race rolls back loudly and a retry heals") {
-    import graft.store.{StoreFs, StoreManifest}
-    val local = java.nio.file.Files.createTempDirectory("resplitcrash")
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(local.toString))
-    val m = new StoreManifest(fsys, local.toString)
-    m.hotSplitFiles = Int.MaxValue
-    def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    val hot = (0 until 8).map(i =>
-      e(f"date=2024-04-01/hour=${i / 4}%02d/minute=00/p$i.parquet"))
-    m.publish(hot, fx, Nil, parent = None)
-    m.hotSplitFiles = 4
-    def mfCount(): Int = StoreFs.list(fsys,
-      new org.apache.hadoop.fs.Path(local.toString, "_manifest/mf")).size
-    val mfsBefore = mfCount()
-    // crash immediately before the commit's rename: the written split
-    // manifests are unreferenced and must be eagerly deleted; readers
-    // keep the old single-manifest truth
-    m.beforeRename = () => throw new RuntimeException("crash-at-rename")
-    val ex = intercept[RuntimeException](m.resplitHot())
-    assert(ex.getMessage == "crash-at-rename")
-    m.beforeRename = () => ()
-    assert(m.mfRefs().map(_._2) == Seq("date=2024-04-01"),
-      "the old layout must still be the truth after the crash")
-    assert(mfCount() == mfsBefore,
-      "the crashed commit's split manifests must be cleaned up eagerly")
-    // lost CAS race: a competitor commits inside the pre-check→rename
-    // window; the resplit must roll its generation back and throw,
-    // with the competitor's commit as the surviving truth
-    val competitor = e("date=2024-04-02/hour=00/minute=00/c.parquet")
-    // one-shot seam: fire only for the resplit's own commit (the
-    // competitor publishes through a SEPARATE instance whose seam is
-    // the default no-op)
-    m.beforeRename = { var fired = false
-      () => if (!fired) { fired = true
-        val other = new StoreManifest(fsys, local.toString)
-        other.publishPatch(adds = Seq(competitor), drops = Nil,
-          deadPlus = Nil, deadMinus = Nil, schema = fx,
-          parent = other.read().map(_.gen))
-      }
-    }
-    intercept[StoreManifest.ConcurrentCommitException](m.resplitHot())
-    m.beforeRename = () => ()
-    assert(m.read().get.entries.map(_.rel).contains(competitor.rel),
-      "the race winner's commit must be the surviving truth")
-    assert(m.mfRefs().map(_._2).count(_.startsWith("date=2024-04-01")) == 1,
-      "the loser's split manifests must not be referenced")
-    // the retry (next maintenance tick) heals cleanly
-    assert(m.resplitHot() == Seq("date=2024-04-01"))
-    assert(m.mfRefs().map(_._2).sorted == Seq("date=2024-04-01/hour=00",
-      "date=2024-04-01/hour=01", "date=2024-04-02"))
-    assert(m.read().get.entries.map(_.rel).sorted ==
-      (hot.map(_.rel) :+ competitor.rel).sorted)
-  }
-
-  test("resplit through a live store's CDC feed: a caught-up consumer " +
-      "receives the re-layout as a plain zero-row increment") {
-    val root = newRoot()
-    val store = new ParquetStore(spark, root, "span", "start")
-    val hourUs = 3600L * 1000000L
-    def batch(ids: Seq[Long]) =
-      ids.map(i => (i, t0 + (i % 3) * hourUs + (i % 60) * 60L * 1000000L,
-        i * 10L)).toDF("id", "start", "trace_id")
-    store.write(batch(1L to 12L))
-    store.compact()
-    val feed = store.cdcFeed("resplit-consumer", keyCols = Seq("id"))
-    val first = feed.poll().get // flagged first-poll resync
-    assert(first.resync)
-    feed.commit(first.toGen)
-    assert(feed.poll().isEmpty, "caught up before the resplit")
-    store.hotSplitFiles = 4
-    assert(store.resplitHotDates().nonEmpty)
-    val inc = feed.poll().get
-    assert(!inc.resync,
-      "a metadata-only re-layout must not force a resync")
-    assert(inc.added.forall(_.isEmpty) && inc.removed.forall(_.isEmpty),
-      "no entry changed, so both sides must be empty")
-    assert(inc.info.exists(_.contains("\"op\":\"resplit\"")),
-      "the increment must attribute the commit to the resplit")
-    feed.commit(inc.toGen)
-    assert(feed.poll().isEmpty)
-  }
-
-  test("resplitHotDates on a live store: hour-keyed manifests appear, " +
-      "data rels stay byte-identical (zero movement), reads unchanged") {
-    val root = newRoot()
-    val store = new ParquetStore(spark, root, "span", "start")
-    val hourUs = 3600L * 1000000L
-    def batch(ids: Seq[Long]) =
-      ids.map(i => (i, t0 + (i % 3) * hourUs + (i % 60) * 60L * 1000000L,
-        i * 10L)).toDF("id", "start", "trace_id")
-    store.write(batch(1L to 12L))
-    store.compact() // default threshold: the date stays unsplit
-    assert(!store.manifestRefs.exists(_._2.contains("/hour=")))
-    val relsBefore = store.manifestFiles.get.sorted
-    store.hotSplitFiles = 4
-    assert(store.resplitHotDates().nonEmpty)
-    assert(store.manifestRefs.exists(_._2.contains("/hour=")))
-    assert(store.manifestFiles.get.sorted == relsBefore,
-      "metadata-only: the data rels must be untouched")
-    assert(store.resplitHotDates().isEmpty, "idempotent at store level")
-    val lo = t0 + hourUs
-    val hi = t0 + 2L * hourUs - 1L
-    assert(store.read(Some(lo), Some(hi)).get.select("id").as[Long]
-      .collect().toSet == (1L to 12L).filter(_ % 3 == 1).toSet)
-    assert(store.read(None, None).get.count() == 12)
   }
 
   test("a transiently unreadable partition manifest is NOT cached as " +
@@ -2791,111 +2436,8 @@ class FsStoreSpec extends SparkSpec {
     assert(store.vacuumStandDowns().isEmpty)
   }
 
-  test("checkpoint reuse never mixes a stale date-keyed manifest with " +
-      "fresh hour-keyed ones: the partition merges fresh in fold " +
-      "order, so a re-added rel's newest copy wins regardless of " +
-      "mf-name timestamps") {
-    import graft.store.{StoreFs, StoreManifest}
-    val root = newRoot()
-    val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(root))
-    val m = new StoreManifest(fsys, s"$root/t")
-    m.hotSplitFiles = 4
-    def e(rel: String, sz: Long) = StoreManifest.Entry(rel, sz, 1L)
-    val d = "date=2024-01-01"
-    // checkpoint: one date-keyed manifest holding a.parquet@size1
-    m.publish(Seq(e(s"$d/hour=00/minute=00/a.parquet", 1L),
-      e(s"$d/hour=00/minute=01/b.parquet", 1L)), fx, Nil, parent = None)
-    // threshold-crossing pure APPEND that re-adds a.parquet with a
-    // new size: the append splits into hour manifests carrying the
-    // fresh copy while the stale copy stays in the date-keyed one —
-    // the mixed state the reuse rule must refuse
-    m.publishPatch(adds = Seq(
-      e(s"$d/hour=00/minute=00/a.parquet", 2L),
-      e(s"$d/hour=00/minute=02/c.parquet", 1L),
-      e(s"$d/hour=01/minute=00/x.parquet", 1L),
-      e(s"$d/hour=01/minute=01/y.parquet", 1L)),
-      drops = Nil, deadPlus = Nil, deadMinus = Nil,
-      schema = fx, parent = m.genNames().lastOption)
-    val refsMid = m.mfRefs().map(_._2).filter(_.startsWith(d))
-    assert(refsMid.contains(d) && refsMid.exists(_.contains("/hour=")),
-      s"fixture must be mixed: $refsMid")
-    // fold-order resolution is already right mid-chain
-    assert(m.read().get.entries
-      .find(_.rel == s"$d/hour=00/minute=00/a.parquet").get.size == 2L)
-    // roll a checkpoint with the partition UNTOUCHED (other-partition
-    // patches up to the cadence): reuse must refuse the mixed set
-    (0 until 9).foreach { i =>
-      m.publishPatch(adds = Seq(
-        e(s"date=2024-02-02/hour=00/minute=0$i/z$i.parquet", 1L)),
-        drops = Nil, deadPlus = Nil, deadMinus = Nil,
-        schema = fx, parent = m.genNames().lastOption)
-    }
-    val snap = m.read().get
-    assert(snap.depth == 0, "the cadence must have rolled a checkpoint")
-    val refsAfter = m.mfRefs().map(_._2).filter(_.startsWith(d))
-    assert(!(refsAfter.contains(d) && refsAfter.exists(_ != d)),
-      s"a checkpoint must not reuse a mixed partition: $refsAfter")
-    assert(snap.entries
-      .find(_.rel == s"$d/hour=00/minute=00/a.parquet").get.size == 2L,
-      "the fresh copy survives the rollover merge")
-    assert(snap.entries.count(_.rel.startsWith(d + "/")) == 5)
-  }
-
-  test("the maintenance cadence adopts the hot-date hour split " +
-      "MID-INGEST: a lowered threshold re-keys the live date in one " +
-      "metadata commit while staged flushes keep landing and reads " +
-      "stay green throughout") {
-    val root = newRoot()
-    val store = new ParquetStore(spark, root, "span", "start")
-    def batch(ids: Seq[Long]) = ids.map(i =>
-      (i, t0 + (i / 5L) * 3600000000L + (i % 5L) * 60L * 1000000L,
-        i * 10L)).toDF("id", "start", "trace_id")
-    def ids(): Set[Long] = store.read(None, None).get
-      .select("id").as[Long].collect().toSet
-    val all = (0L until 15L).toSet
-    // phase 1 — default threshold: staged flushes drain to ONE
-    // date-keyed manifest (8 minute files, nowhere near 10⁵)
-    store.writeStaged(batch((0L until 8L).toSeq))
-    assert(store.maybeCompact(maxStagedFiles = 1))
-    assert(store.resplitHotDates().isEmpty,
-      "under the default threshold nothing is hot")
-    val refs0 = store.manifestRefs.filter(_._2.nonEmpty)
-    assert(refs0.nonEmpty && refs0.forall(!_._2.contains("/")),
-      s"unsplit date-keyed start: $refs0")
-    // rollout lowers the knob (SPARK_GRAFT_MF_SPLIT in a deployment;
-    // the instance seam here) while ingest keeps flowing
-    store.hotSplitFiles = 6
-    store.writeStaged(batch((8L until 15L).toSeq))
-    assert(ids() == all, "staged tail reads green pre-adoption")
-    // cadence tick — the maintain() body in order: heal (nothing to
-    // heal), drain policy (not deep enough), RESPLIT (adopts the hour
-    // layout: one metadata commit, zero data movement, staged tail
-    // untouched), vacuum
-    val gensBefore = store.generations().size
-    assert(store.planCompactions().isEmpty)
-    assert(!store.maybeCompact(maxStagedFiles = 64))
-    val resplit = store.resplitHotDates()
-    assert(resplit.nonEmpty, "the cadence performs the adoption")
-    store.vacuum(graceMs = 3600000L): Unit
-    assert(store.generations().size == gensBefore + 1)
-    assert(store.generationInfo(store.generations().last)
-      .exists(_.contains("resplit")))
-    val refs1 = store.manifestRefs.filter(_._2.nonEmpty)
-    assert(refs1.forall(_._2.contains("/hour=")),
-      s"hour-keyed after adoption: $refs1")
-    assert(ids() == all, "reads green mid-adoption, staged included")
-    // a one-hour window prunes to its hour and answers exactly its rows
-    assert(store.read(Some(t0), Some(t0 + 3599L * 1000000L)).get
-      .select("id").as[Long].collect().toSet == all.filter(_ / 5L == 0L))
-    // the next drain keeps the split (the threshold holds at rewrite)
-    assert(store.maybeCompact(maxStagedFiles = 1))
-    assert(ids() == all)
-    assert(store.manifestRefs.filter(_._2.nonEmpty)
-      .forall(_._2.contains("/hour=")))
-  }
-
   test("cross-process maintenance races: a child process runs " +
-      "compactDate/resplitHotDates/vacuum against a table the parent " +
+      "compactDate/vacuum against a table the parent " +
       "keeps mutating — every interleaving lands cleanly or rejects " +
       "loudly, zero rows lost, every retained generation folds after") {
     import scala.jdk.CollectionConverters._
@@ -2952,7 +2494,7 @@ class FsStoreSpec extends SparkSpec {
     // attempted op
     val report = java.nio.file.Files.readString(out)
     val counts = """-?\d+""".r.findAllIn(report).map(_.toInt).toSeq
-    assert(counts.size == 3 && counts.sum == iters * 3,
+    assert(counts.size == 3 && counts.sum == iters * 2,
       s"every maintenance op must land or reject loudly: $report")
     // post-storm: the table is whole — zero lost rows, every retained
     // generation folds, the manifest is live
