@@ -47,7 +47,7 @@ object ContendProbe {
           case _: graft.store.StoreManifest.ConcurrentCommitException =>
             cas += 1
           case e: IllegalStateException
-              // publishPatch's parent-gone / manifest-unreadable
+              // publish's parent-gone / manifest-unreadable
               // re-plan signal — the documented loud rejection when
               // another writer's commit raced this planning snapshot
               if e.getMessage != null &&

@@ -194,7 +194,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * manifest generation ([[graft.store.ParquetStore.write]]), then
     * drop the replay log (duo/src/grpc/server.rs:89-120). No-op in
     * memory mode. Synchronized against the append paths (the monitor
-    * is reentrant, so [[maybeEarlyFlush]]'s nested call is fine): a
+    * is reentrant, so `maybeEarlyFlush`'s nested call is fine): a
     * WAL clear must never land between another thread's walAppend and
     * view append. A [[maintain]] tick's rewrites never hold up a
     * flush: a heal in flight commits over it.
@@ -309,7 +309,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * ([[flush]], [[maintain]], the direct-landing branch of
     * [[ingestJsonLogDir]]) invalidates below, and the key carries the
     * store's process-wide mutation epoch
-    * ([[graft.store.ParquetStore.mutationEpoch]]), so ANY in-process
+    * (`graft.store.ParquetStore.mutationEpoch`), so ANY in-process
     * mutator of the same table root — this engine or a store handle
     * beside it — invalidates without an I/O round trip. Cross-process
     * writers are outside the contract (the engine's hot view + WAL are
@@ -526,7 +526,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
     } yield r
 
   /** Log search AS OF a retained log-store generation — the log-side
-    * twin of [[searchTracesAsOf]]. The search window applies as a row
+    * twin of `searchTracesAsOf`. The search window applies as a row
     * predicate inside the pinned generation.
     */
   def searchLogsAsOf(p: LogQueries.LogSearchParams,
@@ -556,9 +556,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
       keyCols: Seq[String] = Nil): Option[DataFrame] =
     if (memoryMode) None
     else {
-      val st = storeOf(table)
-      val df = if (keyCols.isEmpty) st.changesBetween(from, to)
-      else st.changesBetween(from, to, keyCols)
+      val df = storeOf(table).changesBetween(from, to, keyCols)
       if (table == "log") df.map(SchemaRegistry.conform(_, logSchema))
       else df
     }
@@ -570,15 +568,13 @@ final class DuoEngine(val spark: SparkSession, root: String,
       keyCols: Seq[String] = Nil): Option[DataFrame] =
     if (memoryMode) None
     else {
-      val st = storeOf(table)
-      val df = if (keyCols.isEmpty) st.removedBetween(from, to)
-      else st.removedBetween(from, to, keyCols)
+      val df = storeOf(table).removedBetween(from, to, keyCols)
       if (table == "log") df.map(SchemaRegistry.conform(_, logSchema))
       else df
     }
 
   /** Log-registry GC — the operator-invoked maintenance call for
-    * long-lived stores ([[SchemaRegistry.gc]]): drop registry columns
+    * long-lived stores ([[graft.store.SchemaRegistry.gc]]): drop registry columns
     * that NO retained data observably carries. Liveness is a NON-NULL
     * count, not footer presence, because [[flush]] lands the hot
     * view's union schema — every file written after a column appeared
@@ -728,7 +724,7 @@ final class DuoEngine(val spark: SparkSession, root: String,
     * Spark's distributed JSON reader (executor-parallel inference pass,
     * duo/src/arrow.rs:70-91 analog), then the SAME registry merge +
     * normalization as the line path — one code path for the semantics
-    * ([[normalizeInferredLogs]]), two feeds.
+    * (`normalizeInferredLogs`), two feeds.
     *
     * `direct = true` (default) lands the normalized batch straight in
     * the partitioned cold store after widening the registry: a backfill

@@ -723,7 +723,7 @@ object ScaleProbe {
       // the checkpoint: the once-per-CheckpointEvery O(touched) cost
       // (here everything is touched — it is the FIRST publish)
       val tc = System.nanoTime()
-      m.publish(entries, EntryFixtureSchema, Nil, None)
+      m.publish(entries, Nil, Nil, Nil, EntryFixtureSchema, None)
       val ckptMs = (System.nanoTime() - tc) / 1e6
       var parent = m.read().map(_.gen)
       val ckptBytes = metaBytes()
@@ -746,7 +746,7 @@ object ScaleProbe {
           1700000100000L + k))
         val before = metaBytes()
         val t0 = System.nanoTime()
-        m.publishPatch(adds = newFiles, drops = Nil,
+        m.publish(adds = newFiles, drops = Nil,
           deadPlus = Nil, deadMinus = Nil, schema = EntryFixtureSchema,
           parent = parent)
         val dt = System.nanoTime() - t0
@@ -768,7 +768,7 @@ object ScaleProbe {
           1234567L, 1700000200000L))
         val before = metaBytes()
         val t0 = System.nanoTime()
-        m.publishPatch(adds = newFiles, drops = Nil, deadPlus = Nil,
+        m.publish(adds = newFiles, drops = Nil, deadPlus = Nil,
           deadMinus = Nil, schema = EntryFixtureSchema, parent = parent)
         val dt = System.nanoTime() - t0
         val snap = m.read().get

@@ -35,7 +35,7 @@ import graft.query.{LogQueries, TraceQueries}
   *   - `GET /stats` → `{"process": {id: process}, "logs": n,
   *     "spans": m}` (mod.rs:96-105), the counts being the rows held
   *     in the hot memory views
-  *   - `POST /api/ingest/logs` — EXTENSION (see [[ingestLogs]]): the
+  *   - `POST /api/ingest/logs` — EXTENSION (see `ingestLogs`): the
   *     raw-JSON log ingest edge over HTTP, since the reference's gRPC
   *     transport needs dependencies this library cannot take
   *   - `GET /api/generations/:table[?info=true]` — EXTENSION: retained
@@ -46,7 +46,7 @@ import graft.query.{LogQueries, TraceQueries}
   *     wall-clock coordinate (each table pinned to its newest
   *     generation ≤ T — consistent across tables by construction);
   *     `GET /api/changes?table&from&to[&keys][&removed]
-  *     [&limit]` serves the generation-diff CDC (see [[changes]])
+  *     [&limit]` serves the generation-diff CDC (see `changes`)
   *
   * Query-parameter leniency mirrors deser.rs: `limit`/`skip` ignore
   * unparseable values (option_ignore_error; the reference parses a
@@ -293,17 +293,7 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
   private def rowJson(cols: Seq[String],
       r: org.apache.spark.sql.Row): JValue =
     JObject(cols.zipWithIndex.map { case (name, i) =>
-      name -> (if (r.isNullAt(i)) JNull
-      else r.get(i) match {
-        case l: java.lang.Long if unsignedCols(name) =>
-          unsignedJson(l.longValue())
-        case s: String => JString(s)
-        case l: java.lang.Long => JLong(l)
-        case i2: java.lang.Integer => JInt(BigInt(i2.intValue()))
-        case d: java.lang.Double => JDouble(d)
-        case b: java.lang.Boolean => JBool(b)
-        case other => JString(String.valueOf(other))
-      })
+      name -> cellJson(name, r.get(i))
     }.toList)
 
   private def traceById(ex: HttpExchange, raw: String): Unit =
@@ -463,24 +453,28 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
     */
   private val unsignedCols = Set("trace_id", "span_id")
 
-  private def unsignedJson(l: Long): JValue =
-    if (l >= 0L) JLong(l)
-    else JInt(BigInt(java.lang.Long.toUnsignedString(l)))
+  /** One Spark cell of column `name` as JSON: null as null, u64 ids
+    * (`unsignedCols`) unsigned, the primitive types as themselves
+    * and anything else as its string form.
+    */
+  private def cellJson(name: String, value: Any): JValue = value match {
+    case null => JNull
+    case l: java.lang.Long if unsignedCols(name) =>
+      if (l >= 0L) JLong(l)
+      else JInt(BigInt(java.lang.Long.toUnsignedString(l)))
+    case s: String => JString(s)
+    case l: java.lang.Long => JLong(l)
+    case i: java.lang.Integer => JInt(BigInt(i.intValue()))
+    case d: java.lang.Double => JDouble(d)
+    case b: java.lang.Boolean => JBool(b)
+    case other => JString(other.toString)
+  }
 
   private def logJson(cols: Seq[String],
       r: org.apache.spark.sql.Row): JValue = {
     def v(name: String): JValue =
-      if (!cols.contains(name) || r.isNullAt(cols.indexOf(name))) JNull
-      else r.get(cols.indexOf(name)) match {
-        case l: java.lang.Long if unsignedCols(name) =>
-          unsignedJson(l.longValue())
-        case s: String => JString(s)
-        case l: java.lang.Long => JLong(l)
-        case i: java.lang.Integer => JInt(BigInt(i.intValue()))
-        case d: java.lang.Double => JDouble(d)
-        case b: java.lang.Boolean => JBool(b)
-        case other => JString(other.toString)
-      }
+      if (!cols.contains(name)) JNull
+      else cellJson(name, r.get(cols.indexOf(name)))
     val base = logBaseOrder.map(n => n -> v(n))
     val dynamic = cols.filterNot(logBaseOrder.contains)
       .flatMap(n => v(n) match {
@@ -506,17 +500,7 @@ final class HttpApi(engine: DuoEngine, port: Int = 0,
           case Some(df) =>
             val cols = df.columns.toSeq
             val items = df.collect().toSeq.map { r =>
-              val value = r.get(cols.indexOf("value")) match {
-                case l: java.lang.Long if unsignedCols(field) =>
-                  unsignedJson(l.longValue())
-                case s: String => JString(s)
-                case l: java.lang.Long => JLong(l)
-                case i: java.lang.Integer => JInt(BigInt(i.intValue()))
-                case d: java.lang.Double => JDouble(d)
-                case b: java.lang.Boolean => JBool(b)
-                case other => JString(String.valueOf(other))
-              }
-              JObject("value" -> value,
+              JObject("value" -> cellJson(field, r.get(cols.indexOf("value"))),
                 "count" -> JLong(r.getAs[Long]("count")))
             }
             json(ex, 200,

@@ -196,7 +196,7 @@ object Dedup {
     * strings, so the verify exchange carries about half the bytes).
     * Both engines hash with the same md5-prefix arithmetic, so results
     * agree by construction even in the astronomically unlikely 60-bit
-    * collision case. `sh` is (doc_id, sh) as [[docShingles]] builds it.
+    * collision case. `sh` is (doc_id, sh) as `docShingles` builds it.
     */
   private def verifyHashedJaccard(cands: DataFrame, sh: DataFrame,
       tau: Double): DataFrame = {
@@ -214,8 +214,8 @@ object Dedup {
 
   /** MinHash + LSH near-dup pairs: k-entry minhash signature, banded
     * into `bands` keys of `r` rows; docs sharing any band key become
-    * candidates ([[bandedPairs]]); candidates are verified with exact
-    * shingle Jaccard ([[verifyHashedJaccard]]).
+    * candidates (`bandedPairs`); candidates are verified with exact
+    * shingle Jaccard (`verifyHashedJaccard`).
     *
     * The signature is built by [[graft.functions.Minhash16Agg]] — one
     * map-side-combining imperative aggregate per doc consuming one md5
@@ -267,7 +267,7 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs: 64-bit simhash per doc banded 4×16;
-    * candidates share at least one band ([[bandedPairs]]; pigeonhole:
+    * candidates share at least one band (`bandedPairs`; pigeonhole:
     * guarantees full recall for hamming <= 3 — the standard near-dup
     * radius); verified by exact popcount of the per-band XORs.
     */
@@ -909,8 +909,8 @@ object Dedup {
     * same bound [[minhashLshPairs]] carries — so "exact" reads as
     * exact-up-to-the-shared-60-bit-set-hash. The per-doc rank window partitions by
     * doc_id (never SinglePartition); candidates join on prefix hashes
-    * only ([[bandedPairs]] keyed on (h1, h2)); the verify is
-    * [[minhashLshPairs]]' [[verifyHashedJaccard]]. The length filter
+    * only (`bandedPairs` keyed on (h1, h2)); the verify is
+    * [[minhashLshPairs]]' `verifyHashedJaccard`. The length filter
     * (tau·max <= min) is the candidate join's verify predicate, so it
     * prunes cross-size candidates before the pair dedupe and the
     * verify exchange.
@@ -1453,7 +1453,7 @@ object Dedup {
       minhashClusters(Tables.documents(s, d), tau).localCheckpoint(true))
 
   /** d15's memoized semantic-cluster artifact (same treatment as
-    * [[gateClusters]]; planes pinned for oracle staticness, see the
+    * `gateClusters`; planes pinned for oracle staticness, see the
     * gate entry).
     */
   private def gateSemClusters(s: SparkSession, d: String): DataFrame =
@@ -1669,7 +1669,7 @@ object Dedup {
   private[operators] val ccCtes: String = ccCtesOn("documents")
 
   /** Content-defined segmentation CTEs (yields `segs(doc_id, seg_idx,
-    * seg)`), mirroring [[cdcSegments]]; shared by the d14/d16 oracles.
+    * seg)`), mirroring `cdcSegments`; shared by the d14/d16 oracles.
     */
   private def cdcSegCtes: String = {
     val hv = hexValSql("substr(md5(tok), 1, 1)")

@@ -624,7 +624,7 @@ object Multimodal {
 
   /** m06–m08's banded hamming join: `h` (a long) split into `bands`
     * blocks of `width` bits, docs sharing any block become candidates
-    * ([[Dedup.bandedPairs]]), verified by popcount of the XOR.
+    * (`Dedup.bandedPairs`), verified by popcount of the XOR.
     * Returns (doc_a, doc_b, ham) with ham <= maxHam.
     */
   private def hammingPairs(hashed: DataFrame, h: String, bands: Int,

@@ -544,7 +544,7 @@ object Pipelines {
     clusterQualityKeeper(docs, Dedup.minhashClusters(docs, tau))
 
   /** Production form over a PRECOMPUTED cluster table (doc_id,
-    * cluster, cluster_size) — see [[leakageSafeSplit]]'s overload;
+    * cluster, cluster_size) — see the two-argument `leakageSafeSplit`;
     * `docs` still supplies the text for the quality ranking.
     */
   def clusterQualityKeeper(docs: DataFrame, clusters: DataFrame): DataFrame = {
@@ -1048,7 +1048,7 @@ object Pipelines {
       |       ELSE 'es' END AS lang_pred
       | FROM c)""".stripMargin
 
-  /** DuckDB replay of [[spread16]]: the same four shift/OR/mask steps
+  /** DuckDB replay of `spread16`: the same four shift/OR/mask steps
     * in integer SQL.
     */
   private def spreadSql(v: String): String = {

@@ -74,7 +74,7 @@ object Similarity {
       lshBucket(asDoubles(col("embedding")), nPlanes, dim).as("bucket"))
   }
 
-  /** Within-bucket candidate pairs ([[Dedup.bandedPairs]] on the one
+  /** Within-bucket candidate pairs (`Dedup.bandedPairs` on the one
     * bucket) scored with exact cosine, keeping pairs above tau — the
     * LSH-accelerated near-neighbor join.
     */
@@ -209,7 +209,7 @@ object Similarity {
     books
   }
 
-  /** Reference formulation of [[pqCodebooks]]: one [[lloyd]] chain per
+  /** Reference formulation of [[pqCodebooks]]: one `lloyd` chain per
     * block, m×iters jobs. Kept only as the equality witness for the
     * joint trainer's spec — identical output by construction.
     */
@@ -235,7 +235,7 @@ object Similarity {
     * row's assignment reads only its OWN block's codebook (selected
     * from the broadcast literal by `b`), and the fixed-point update
     * sums group by (b, cell, pos) — no arithmetic crosses blocks, and
-    * per block the math is [[lloyd]]'s exactly (same driver-computed
+    * per block the math is `lloyd`'s exactly (same driver-computed
     * ‖c‖²/2 literals, same 9-dp rounding, same ties-to-lowest-code,
     * same nano-unit integer sums), so the result is bit-identical to
     * the per-block form; the spec pins that equality.
@@ -471,7 +471,7 @@ object Similarity {
   /** The probe side of an IVF search over an ASSIGNED postings table
     * (vec_id, v, cell): queries pick their `nProbe` nearest cells,
     * score only those cells' vectors, rank per query. The postings
-    * may come from [[ivfAssign]] run inline (ivfTopK) or from an
+    * may come from `ivfAssign` run inline (ivfTopK) or from an
     * incrementally-maintained landed index (w16) — the results are
     * identical by construction, which w16's oracle pins by hash.
     */
@@ -501,7 +501,7 @@ object Similarity {
   /** w16: streaming ANN index MAINTENANCE — the continuous-ingestion
     * path a production vector index runs. The embeddings corpus
     * arrives as three file-source micro-batches; each batch is
-    * assigned to its trained IVF cell in-stream ([[ivfAssign]] — a
+    * assigned to its trained IVF cell in-stream (`ivfAssign` — a
     * pure projection, so the stream needs no state or watermark) and
     * APPENDED to the postings store by the parquet sink: the index is
     * built incrementally, batch by batch, never rebuilt. The s04
@@ -923,7 +923,7 @@ object Similarity {
       |e AS (SELECT vec_id, list_transform(v0, x -> x / nrm) AS v FROM en)""".stripMargin
 
   /** Unrolled fixed-iteration Lloyd chain over `eRel`(vec_id, v),
-    * mirroring [[lloyd]] step for step: init = the k lowest-id vectors;
+    * mirroring `lloyd` step for step: init = the k lowest-id vectors;
     * each iteration assigns by 9-dp-rounded score (ties to the lowest
     * cell), sums nano-unit BIGINT components (exact integers — the
     * fixed-point trick that makes the trainer engine- and
@@ -963,7 +963,7 @@ object Similarity {
   }
 
   /** Per-block PQ training + encode CTEs over `e`: `pe$b` sliced
-    * blocks, one euclidean [[lloydCtes]] chain per block, `enc$b`
+    * blocks, one euclidean `lloydCtes` chain per block, `enc$b`
     * nearest-code argmax, composed into `encp`(vec_id, v, c0..c{m-1}).
     * Mirrors [[pqCodebooks]] + [[pqEncode]].
     */
@@ -988,7 +988,7 @@ object Similarity {
 
   /** ADC scoring + top-k tail over a `cand`(query_id, qv, vec_id,
     * c0..c{m-1}) relation: per-block centroid lookup by code, then the
-    * left-assoc dot-product sum chain (matches [[adcScore]]'s fold
+    * left-assoc dot-product sum chain (matches `adcScore`'s fold
     * order), rank, and the rank<=k cut.
     */
   private def adcRankCtes(m: Int, iters: Int, dim: Int): String = {

@@ -276,9 +276,10 @@ object Sketches {
     * like DDSketch's can round either way at boundaries). Buckets
     * merge by count addition; quantiles come from the cumulative
     * histogram with all-integer linear interpolation inside the hit
-    * bucket — rank k = ceil(q·n/100) via (q·n+99) div 100, estimate
-    * = 2^(b-1) + (k−cum_prev)·2^(b-1) div cnt cents. Relative error
-    * is bounded by the bucket width (≤2×, much tighter interpolated
+    * bucket — rank k = ceil(q·n/100) via (q·n+99) div 100,
+    * estimate = 2^(b-1) + (k−cum_prev)·2^(b-1) div cnt cents.
+    * Relative error is bounded by the bucket width (≤2×, much tighter
+    * interpolated
     * — the accuracy spec measures it). The histogram is at most ~50
     * rows per group regardless of data size; the quantile extraction
     * windows over THAT table, never the corpus.
@@ -603,7 +604,7 @@ object Sketches {
     "w14_rollup_stream" -> (rollupStreamGate _))
 
   /** DuckDB replays of the sketch pipelines — same md5 decodes (via
-    * [[Dedup.hexValSql]]'s char arithmetic), same integer folds, same
+    * `Dedup.hexValSql`'s char arithmetic), same integer folds, same
     * final double expressions verbatim.
     */
   val oracle: Map[String, String] = {

@@ -697,7 +697,7 @@ object TextAnalysis {
   }
 
   /** Per-corpus memoized BPE merges (same artifact pattern as
-    * [[gateVocab]]; plain driver-side data, session-independent).
+    * `gateVocab`; plain driver-side data, session-independent).
     * `lastGateMerges` tracks the most recent training so [[oracle]] can
     * interpolate the merge list into t14's replay SQL: Verify runs the
     * queries (training the merges for its sfDir) before it dumps
@@ -731,7 +731,7 @@ object TextAnalysis {
     * repeats and the p12 packing gate reuse one training run. Safe —
     * derivation is deterministic, and the key carries the size so
     * changing the constant invalidates naturally. Unlike
-    * [[Dedup.gateClusters]]'s frame memo, this stores a plain
+    * `Dedup.gateClusters`'s frame memo, this stores a plain
     * driver-side Seq (collected), so entries survive a session
     * stop/restart and need no session key.
     */
@@ -1504,7 +1504,7 @@ object TextAnalysis {
     "fr" -> "\\b(le|et|les|des|est)\\b",
     "es" -> "\\b(el|y|los|las|es)\\b")
 
-  /** Oracle CTE chain mirroring [[subwordVocab]] + [[subwordPieces]],
+  /** Oracle CTE chain mirroring [[subwordVocab]] + `subwordPieces`,
     * generated from the same Subword* constants: vocab from substring
     * frequencies, then a recursive-CTE replay of the greedy
     * longest-match fold over the distinct-word table (one terminal row
@@ -1512,7 +1512,7 @@ object TextAnalysis {
     * word table. Must sit under WITH RECURSIVE. Shared by t11 and p12.
     */
   /** The greedy-match-length CASE, generated from the same constants
-    * as [[subwordPieces]]' fold (longest piece first, 1-char fallback).
+    * as `subwordPieces`' fold (longest piece first, 1-char fallback).
     */
   private def subwordCaseSql: String =
     (SubwordMaxPiece to SubwordMinPiece by -1).map(l =>
@@ -1562,7 +1562,7 @@ object TextAnalysis {
        |docw2 AS (SELECT doc_id, CAST(i AS INT) AS pos, t[i] AS word FROM dw)""".stripMargin
 
   /** t14's replay oracle, generated from the TRAINED merge list (the
-    * corpus artifact [[gateMerges]] memoizes): the list is interpolated
+    * corpus artifact `gateMerges` memoizes): the list is interpolated
     * as a literal rank table and BPE application re-derived inside
     * DuckDB — per distinct word, start from characters and repeatedly
     * merge the LEFTMOST occurrence of the lowest-rank adjacent pair.

@@ -1130,7 +1130,7 @@ object EngineQueries {
     * the file-granular forms document ("a compaction between the
     * generations surfaces every moved row as removed+added") made a
     * first-class, hash-pinned answer
-    * ([[graft.store.ParquetStore.changesBetween(genA:String,genB:String,keyCols:Seq[String])*]]).
+    * ([[graft.store.ParquetStore.changesBetween]]).
     * Lineage: gen A commits the landed corpus (even doc ids); gen B
     * is a PURE RE-LAYOUT (whole-table compact to hour grain — every
     * row moves files, zero rows change); gen C folds a genuinely new

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   * than corrupting a replay.
   *
   * IO goes through the Hadoop FileSystem of the WAL path's scheme
-  * ([[StoreFs]]), like the rest of the store (S5) — a snapshot file is
+  * (`StoreFs`), like the rest of the store (S5) — a snapshot file is
   * one flush interval of rows, so reading it whole through the FS
   * stream (Arrow's seekable byte-array channel) costs what the replay
   * already materializes.

@@ -135,12 +135,8 @@ final class CdcFeed private[store] (store: ParquetStore,
           if (stepped == newest || store.generationReadable(stepped))
             stepped
           else newest
-        val added =
-          if (keyCols.nonEmpty) store.changesBetween(c, target, keyCols)
-          else store.changesBetween(c, target)
-        val removed =
-          if (keyCols.nonEmpty) store.removedBetween(c, target, keyCols)
-          else store.removedBetween(c, target)
+        val added = store.changesBetween(c, target, keyCols)
+        val removed = store.removedBetween(c, target, keyCols)
         // post-check BOTH ends: if retention pruned a generation
         // while the diffs were being planned, one side may have
         // quietly come back None-for-the-wrong-reason — a half
@@ -267,7 +263,7 @@ final class CdcFeed private[store] (store: ParquetStore,
           throw new IllegalStateException(
             s"$tableDir: consumer '$consumer' needs a resync (cursor " +
               "outran by retention) but the sink already holds " +
-              "appended increments — reload the sink manually, " +
+              "earlier increments — reload the sink manually, " +
               "reset() the consumer, and re-bootstrap (or consume " +
               "with mirror = true, which reloads transactionally)")
         if (mirror) {
@@ -295,7 +291,7 @@ final class CdcFeed private[store] (store: ParquetStore,
   /** The newest increment this consumer has LANDED in `sink`, read
     * back from the sink's own generation audit lines — the durable
     * half of the exactly-once handshake. String-prefix parsing is
-    * sound here because [[consumeInfoOf]] wrote the exact bytes
+    * sound here because `consumeInfoOf` wrote the exact bytes
     * (consumer names are `[A-Za-z0-9_-]+` by construction).
     */
   private def landedToGen(sink: ParquetStore): Option[String] = {

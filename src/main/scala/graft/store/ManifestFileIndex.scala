@@ -83,12 +83,9 @@ object ManifestFileIndex {
     if (entries.isEmpty) return None
     // qualified like Spark's own listing index: an unpartitioned
     // relation finds its files by the qualified root dir
-    val base = new Path(tableDir)
-    val root = StoreFs.fs(base).makeQualified(base)
+    val root = rootOf(tableDir)
     val files = entries.map(e =>
-      new Path(s"$root/${logicalRel(e.rel)}").getParent ->
-        new FileStatus(e.size, false, 1, NominalBlockSize, e.mtime,
-          new Path(s"$root/${e.rel}")))
+      new Path(s"$root/${logicalRel(e.rel)}").getParent -> statusOf(root, e))
     val index = new ManifestFileIndex(spark, root, files)
     // all-nullable mirrors DataSource.resolveRelation's asNullable, so
     // a caller-pinned schema reads exactly as through spark.read.schema
@@ -98,4 +95,29 @@ object ManifestFileIndex {
     Some(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .baseRelationToDataFrame(rel))
   }
+
+  /** The data schema a `mergeSchema` directory read infers for
+    * `entries` (their footers merged in rel order, partition columns
+    * not included), inferred from the entries alone: the walk that
+    * found them already holds every status Spark needs, so inference
+    * lists nothing. None for no entries.
+    */
+  def footerSchema(spark: SparkSession, tableDir: String,
+      entries: Seq[StoreManifest.Entry]): Option[StructType] =
+    if (entries.isEmpty) None
+    else {
+      val root = rootOf(tableDir)
+      new ParquetFileFormat().inferSchema(spark,
+        Map("mergeSchema" -> "true"),
+        entries.sortBy(_.rel).map(statusOf(root, _)))
+    }
+
+  private def rootOf(tableDir: String): Path = {
+    val base = new Path(tableDir)
+    StoreFs.fs(base).makeQualified(base)
+  }
+
+  private def statusOf(root: Path, e: StoreManifest.Entry): FileStatus =
+    new FileStatus(e.size, false, 1, NominalBlockSize, e.mtime,
+      new Path(s"$root/${e.rel}"))
 }

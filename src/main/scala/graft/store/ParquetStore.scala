@@ -1,7 +1,8 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   * Storage portability (S5, duo/src/config.rs:69-132): every metadata
   * operation — existence probes, listings, marker files, manifest
   * publishes — runs on `org.apache.hadoop.fs.FileSystem` resolved from
-  * the ROOT's scheme ([[StoreFs]]), so the same store code serves a
+  * the ROOT's scheme (`StoreFs`), so the same store code serves a
   * local path, an HDFS URI, or an `s3a://bucket/...` root.
   *
   * One landing path: every append ([[write]], [[writeStaged]]) and
@@ -70,7 +71,7 @@ import org.apache.spark.sql.types.StructType
   * generation is newest — so even a mutation that somehow passed both
   * lease checks cannot overwrite another writer's commit. Readers
   * never fence. In one process an instance's rewrites serialize on
-  * its monitor ([[mutation]]), appends do not ([[commitOver]]).
+  * its monitor (`mutation`), appends do not (`commitOver`).
   *
   * At scale: minute-grained dirs are only sensible for recent data; the
   * same layout compacts upward (minute→hour→day files) without changing
@@ -221,53 +222,20 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * references that `genA` does not — the incremental-consumer shape
     * Delta/Iceberg deployments feed downstream jobs with, derived here
     * entirely from the two retained manifests (no extra change files).
-    * File-granular, so it is EXACT when the mutations between the two
-    * generations only added data in new files — appends landed and
-    * folded by a date-scoped [[compactDate]], the rolling form
-    * maintenance takes at scale; a whole-table [[compact]] between the
-    * generations rewrites every byte into a fresh tree and the diff
-    * degenerates (correctly, but uselessly) to the full table — the
-    * same caveat Delta's docs put on file-level CDF without change
-    * files. Both generations must still be retained ([[generations]]);
-    * None otherwise, or when no
-    * file was added.
-    */
-  def changesBetween(genA: String, genB: String): Option[DataFrame] =
-    for {
-      a <- manifest.readGen(genA)
-      b <- manifest.readGen(genB)
-      have = a.entries.map(_.rel).toSet
-      added = b.entries.filterNot(e => have(e.rel))
-      df <- relationFor(added, b.schema)
-    } yield df
-
-  /** The delete side of [[changesBetween]]: the rows in files `genA`
-    * references that `genB` no longer does — what a downstream
-    * consumer must INVALIDATE when retention ([[expire]]) ran between
-    * the generations. Plannable only while the removed files are
-    * still on disk (they are tombstoned, not deleted, until vacuum's
-    * grace passes — the same window that bounds time travel), and
-    * file-granular with the same rewrite caveat as the insert side:
-    * a compaction between the generations moves rows across files and
-    * surfaces them here as removed (and in changesBetween as added) —
-    * spurious-but-consistent churn, the caveat Delta's docs put on
-    * file-level CDF. None when a generation is pruned or nothing was
-    * removed.
-    */
-  def removedBetween(genA: String, genB: String): Option[DataFrame] =
-    for {
-      a <- manifest.readGen(genA)
-      b <- manifest.readGen(genB)
-      kept = b.entries.map(_.rel).toSet
-      removed = a.entries.filterNot(e => kept(e.rel))
-      df <- relationFor(removed, a.schema)
-    } yield df
-
-  /** ROW-exact CDC (round 18, closing the file-granular caveat): the
-    * rows whose `keyCols` exist in `genB` but nowhere in `genA` — true
-    * inserts under ANY lineage, including a whole-table [[compact]]
-    * between the generations that moves every row to fresh files. The
-    * file-granular prefilter keeps it cheap: a row in a file BOTH
+    * With no `keyCols` it is file-granular, so it is EXACT when the
+    * mutations between the two generations only added data in new
+    * files — appends landed and folded by a date-scoped
+    * [[compactDate]], the rolling form maintenance takes at scale; a
+    * whole-table [[compact]] between the generations rewrites every
+    * byte into a fresh tree and the diff degenerates (correctly, but
+    * uselessly) to the full table — the same caveat Delta's docs put
+    * on file-level CDF without change files. None then when no file
+    * was added.
+    *
+    * `keyCols` nonEmpty makes it ROW-exact (round 18, closing that
+    * caveat): the rows whose `keyCols` exist in `genB` but nowhere in
+    * `genA` — true inserts under ANY lineage, compactions included.
+    * The file-granular prefilter keeps it cheap: a row in a file BOTH
     * generations reference is trivially in both tables (files are
     * immutable), so only genB's ADDED files need scanning; each
     * candidate is then anti-joined against genA's full key set —
@@ -275,56 +243,57 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * AQE when small, shuffled on the key otherwise. Cost scales with
     * (rows in added files) + (genA's key cardinality), never the full
     * cross of both snapshots. Some(empty frame) when the lineage was
-    * pure re-layout (the compaction-churn case the file-granular form
-    * mis-reports); None only when a generation is pruned/unreadable
-    * or genB plans empty.
+    * pure re-layout.
+    *
+    * Either way both generations must still be retained
+    * ([[generations]]); None otherwise, or when genB plans empty.
     */
   def changesBetween(genA: String, genB: String,
-      keyCols: Seq[String]): Option[DataFrame] =
+      keyCols: Seq[String] = Nil): Option[DataFrame] =
     for {
       a <- manifest.readGen(genA)
       b <- manifest.readGen(genB)
-      have = a.entries.map(_.rel).toSet
-      added = b.entries.filterNot(e => have(e.rel))
-      df <- plannedOrEmpty(added, b.entries, b.schema)
-    } yield antiOnKeys(df, a.entries, a.schema, keyCols)
+      df <- newerRows(a, b, keyCols)
+    } yield df
 
-  /** The delete side of the keyed CDC: rows whose `keyCols` exist in
-    * `genA` but nowhere in `genB` — true deletes under any lineage
-    * (same prefilter: only genA's REMOVED files can hold them).
+  /** The delete side of [[changesBetween]]: the rows in files `genA`
+    * references that `genB` no longer does (row-exact on `keyCols`
+    * when given: true deletes under any lineage) — what a downstream
+    * consumer must INVALIDATE when retention ([[expire]]) ran between
+    * the generations. Plannable only while the removed files are
+    * still on disk (they are tombstoned, not deleted, until vacuum's
+    * grace passes — the same window that bounds time travel). The
+    * file-granular form has the insert side's rewrite caveat: a
+    * compaction between the generations moves rows across files and
+    * surfaces them here as removed (and in changesBetween as added) —
+    * spurious-but-consistent churn.
     */
   def removedBetween(genA: String, genB: String,
-      keyCols: Seq[String]): Option[DataFrame] =
+      keyCols: Seq[String] = Nil): Option[DataFrame] =
     for {
       a <- manifest.readGen(genA)
       b <- manifest.readGen(genB)
-      kept = b.entries.map(_.rel).toSet
-      removed = a.entries.filterNot(e => kept(e.rel))
-      df <- plannedOrEmpty(removed, a.entries, a.schema)
-    } yield antiOnKeys(df, b.entries, b.schema, keyCols)
+      df <- newerRows(b, a, keyCols)
+    } yield df
 
-  /** Plan `subset` as a frame; an empty subset plans the full list
-    * limited to 0 (Catalyst's OptimizeLimitZero folds it to an empty
-    * relation — no scan) so a pure re-layout still yields a typed
-    * empty result instead of None.
+  /** The rows of `to`'s files that `from` does not reference; keyed,
+    * anti-joined against `from`'s key set. An empty keyed subset plans
+    * `to`'s full list limited to 0 (Catalyst's OptimizeLimitZero folds
+    * it to an empty relation — no scan), so a pure re-layout still
+    * yields a typed empty result instead of None.
     */
-  private def plannedOrEmpty(subset: Seq[StoreManifest.Entry],
-      all: Seq[StoreManifest.Entry],
-      schema: StructType): Option[DataFrame] =
-    relationFor(subset, schema)
-      .orElse(relationFor(all, schema).map(_.limit(0)))
-
-  private def antiOnKeys(df: DataFrame,
-      otherEntries: Seq[StoreManifest.Entry],
-      otherSchema: StructType, keyCols: Seq[String]): DataFrame =
-    relationFor(otherEntries, otherSchema) match {
-      case Some(other) =>
+  private def newerRows(from: StoreManifest.Snapshot,
+      to: StoreManifest.Snapshot, keyCols: Seq[String]): Option[DataFrame] = {
+    val have = from.entries.map(_.rel).toSet
+    val fresh = relationFor(to.entries.filterNot(e => have(e.rel)), to.schema)
+    if (keyCols.isEmpty) fresh
+    else fresh.orElse(relationFor(to.entries, to.schema).map(_.limit(0)))
+      .map(df => relationFor(from.entries, from.schema).fold(df)(other =>
         // key columns only (column-pruned scan) + distinct: the anti
         // join's build side is the key SET, not the other snapshot
         df.join(other.select(keyCols.map(col): _*).distinct(),
-          keyCols, "left_anti")
-      case None => df // the other generation is empty: all rows differ
-    }
+          keyCols, "left_anti")))
+  }
 
   /** Recursive delete (no-op when absent). */
   private def rm(p: Path): Unit = { fs.delete(p, true): Unit }
@@ -359,7 +328,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   /** Wraps every public mutator body but [[write]]'s: rewrites of
     * one instance run one at a time under its monitor. The epoch bump
-    * on EXIT pairs with the entry-side bump in [[fence]] (ADVICE r21):
+    * on EXIT pairs with the entry-side bump in `fence` (ADVICE r21):
     * a reader that plans between the two must not memoize the
     * pre-mutation plan under a key no later read distinguishes, and
     * an aborted partial landing must not be memo-servable either.
@@ -379,38 +348,35 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * publish) runs under this lock, which guards metadata work only.
     * It also guards `rewrites` (mutators in flight, nested ones
     * counted twice) and `appendsInRewrite` (appends committed while
-    * one ran: generation → landed entries and batch schema).
+    * one ran: generation → batch schema).
     */
   private val commitLock = new Object
   private var rewrites = 0
-  private val appendsInRewrite = scala.collection.mutable.Map
-    .empty[String, (Seq[StoreManifest.Entry], StructType)]
+  private val appendsInRewrite =
+    scala.collection.mutable.Map.empty[String, StructType]
 
   /** Trees appends are landing: unreferenced yet, so vacuum skips them. */
   private val landing =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Commit a rewrite planned from generation `planned`. Appends this
-    * instance committed since then added only their own trees, so the
-    * rewrite's change still applies over them: `publish` gets the
-    * newest generation as parent, the appended entries, and a widener
-    * adding their columns to a recorded schema. Any other newer
-    * generation is another writer's, and the CAS on `planned` fails.
+  /** Commit a patch planned from generation `planned`. Appends this
+    * instance committed since then added only their own trees, which
+    * the patch never drops, so it still applies over them: `publish`
+    * gets the newest generation as parent and a widener adding their
+    * columns to a recorded schema. Any other newer generation is
+    * another writer's, and the CAS on `planned` fails.
     */
   private def commitOver[A](planned: Option[String])(
-      publish: (Option[String], Seq[StoreManifest.Entry],
-        StructType => StructType) => A): A =
+      publish: (Option[String], StructType => StructType) => A): A =
     commitLock.synchronized {
       fence()
       val newer =
         if (appendsInRewrite.isEmpty) Nil
         else manifest.genNames().filter(g => planned.forall(_ < g))
       val mine = newer.flatMap(appendsInRewrite.get)
-      if (newer.isEmpty || mine.size < newer.size)
-        publish(planned, Nil, identity)
-      else publish(newer.lastOption, mine.flatMap(_._1), schema =>
-        mine.foldLeft(schema)((acc, m) =>
-          ParquetStore.appendSchema(acc, m._2)))
+      if (newer.isEmpty || mine.size < newer.size) publish(planned, identity)
+      else publish(newer.lastOption,
+        mine.foldLeft(_)(ParquetStore.appendSchema))
     }
 
   private def fenceLease(): Unit = leaseLock.synchronized { myLease match {
@@ -442,15 +408,15 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   // ---- writes ----
 
   /** Append a batch — the one partitioned landing: the rows land in
-    * a fresh `_gen-*` tree ([[landGenTree]]) and one generation
+    * a fresh `_gen-*` tree (`landGenTree`) and one generation
     * publish, carrying the caller's `info` audit line, makes them the
     * table's truth. That one rename is what [[CdcFeed.consumeInto]]
     * builds exactly-once delivery on. A crash before it leaves an
     * orphan tree for [[vacuum]]. The first write folds duo's native
     * layout into the first generation, serialized like a
-    * [[mutation]]; later writes land with no lock held and take only
+    * `mutation`; later writes land with no lock held and take only
     * the commit lock, so a running rewrite never stalls them (it
-    * commits over them, [[commitOver]]). The recorded schema stays
+    * commits over them, `commitOver`). The recorded schema stays
     * exact: the parent's columns plus the batch's new ones, the union
     * the footers merge to. A batch that re-types or re-cases a
     * recorded column throws [[ParquetStore.SchemaConflictException]]
@@ -496,11 +462,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       commitLock.synchronized {
         fence()
         val base = baseFor(None)
-        val name = manifest.publishPatch(adds = landed, drops = Nil,
-          deadPlus = Nil, deadMinus = Nil,
+        val name = manifest.publish(adds = base.carried(Nil) ++ landed,
+          drops = Nil, deadPlus = Nil, deadMinus = Nil,
           schema = ParquetStore.appendSchema(base.schema, batchSchema),
           parent = base.parent, info = info)
-        if (rewrites > 0) appendsInRewrite(name) = (landed, batchSchema)
+        if (rewrites > 0) appendsInRewrite(name) = batchSchema
       }
     } finally landing.remove(gen): Unit
   }
@@ -570,21 +536,11 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     }
     val gen = newGenName()
     toLand.foreach(landGenTree(_, gen))
-    beforeCommit()
-    val landed =
-      if (toLand.isDefined) manifest.walkSubtree(gen) else Nil
-    val now = System.currentTimeMillis()
     // the recorded columns, then any the adds bring (the survivors
     // were read with the recorded schema)
     val schema = toLand.fold(t.schema)(r => ParquetStore.appendSchema(
       t.schema, StoreManifest.allNullable(r.schema)))
-    commitOver(t.parent) { (parent, _, widen) =>
-      manifest.publishPatch(adds = landed,
-        drops = affected.map(_.rel),
-        deadPlus = affected.map(e => StoreManifest.Dead(e.rel, now)),
-        deadMinus = Nil, schema = widen(schema),
-        parent = parent, info = info): Unit
-    }
+    commitRetiring(t, toLand.map(_ => gen), affected, schema, _ => info)
     } finally removedCached.foreach(_.unpersist(): Unit)
   }
 
@@ -604,17 +560,37 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     val t = baseFor(None)
     val gen = newGenName()
     batch.foreach(landGenTree(_, gen))
+    // a truncate keeps the recorded schema; a reload records its own
+    commitRetiring(t, batch.map(_ => gen), t.entries,
+      batch.fold(t.schema)(b => StoreManifest.allNullable(b.schema)),
+      _ => info)
+  }
+
+  /** The one commit tail of every mutation that retires files
+    * ([[compact]], [[compactDate]], [[applyMirror]],
+    * [[replaceCommitted]], [[expire]]): walk the `_gen-*` tree the
+    * mutation landed (if any), tombstone `retired` at `now` and
+    * publish the patch over `base` through `commitOver` — appends
+    * committed meanwhile are never dropped, so they survive. A
+    * never-committed store's patch also carries its legacy walk minus
+    * `retired` (`Base.carried`). `info` sees the landed entries. The
+    * lease is re-verified here: a rewrite may have run for minutes,
+    * and a writer fenced meanwhile must not land a stale truth.
+    */
+  private def commitRetiring(base: ParquetStore.Base,
+      landed: Option[String], retired: Seq[StoreManifest.Entry],
+      schema: StructType,
+      info: Seq[StoreManifest.Entry] => Option[String]): Unit = {
     beforeCommit()
-    val landed =
-      if (batch.isDefined) manifest.walkSubtree(gen) else Nil
+    val adds = landed.fold(Seq.empty[StoreManifest.Entry])(
+      manifest.walkSubtree)
     val now = System.currentTimeMillis()
-    commitOver(t.parent) { (parent, appended, widen) =>
-      // a truncate keeps the recorded schema; a reload records its own
-      manifest.publish(landed ++ appended,
-        widen(batch.fold(t.schema)(b =>
-          StoreManifest.allNullable(b.schema))),
-        t.dead ++ t.entries.map(e => StoreManifest.Dead(e.rel, now)),
-        parent = parent, info = info): Unit
+    commitOver(base.parent) { (parent, widen) =>
+      manifest.publish(base.carried(retired) ++ adds,
+        drops = retired.map(_.rel),
+        deadPlus = retired.map(e => StoreManifest.Dead(e.rel, now)),
+        deadMinus = Nil, schema = widen(schema), parent = parent,
+        info = info(adds)): Unit
     }
   }
 
@@ -672,25 +648,23 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
   }
 
   /** What a mutation plans from and commits over: the newest
-    * generation ([[truthFor]]), or for a never-committed store its
+    * generation (`truthFor`), or for a never-committed store its
     * legacy walk and the schema listing mode reads it with, inferred
-    * here once. The commit records that schema, and its patch with
-    * `parent = None` checkpoints over the walk.
+    * here once from the walked files' footers. The commit records that
+    * schema and folds the walk in (`Base.carried`): one walk, and no
+    * other listing of the legacy tree.
     */
   private def baseFor(admit: Option[String => Boolean]): ParquetStore.Base =
     truthFor(admit) match {
-      case Some(t) =>
-        ParquetStore.Base(Some(t.gen), t.entries, t.schema, t.dead)
+      case Some(t) => ParquetStore.Base(Some(t.gen), t.entries, t.schema)
       case None =>
         val legacy = manifest.walkLegacy()
         ParquetStore.Base(None, legacy,
-          if (legacy.isEmpty) new StructType()
-          else tryRead(dir).fold(new StructType())(df =>
-            StoreManifest.allNullable(ParquetStore.logical(df).schema)),
-          Nil)
+          ManifestFileIndex.footerSchema(spark, dir, legacy)
+            .fold(new StructType())(StoreManifest.allNullable))
     }
 
-  /** An older binary's [[writeStaged]] appended plain files under
+  /** An older binary's [[writeStaged]] wrote plain files under
     * `_staging`, which no generation lists, so planning from the
     * manifest would silently drop their rows. Such a store is refused
     * loudly, reads and commits alike, until an older binary's
@@ -784,8 +758,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
 
   /** The legacy tree as a DataFrame via Spark directory discovery,
     * None when it holds no data yet. Only listing mode plans this
-    * way, and a never-committed store's first commit infers its
-    * schema from it ([[baseFor]]). Schema inference doubles as the
+    * way. Schema inference doubles as the
     * distributed "any files?" probe — a driver-side walk would not
     * scale to a real store's file count.
     */
@@ -805,7 +778,7 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * generation's recorded schema, the union every commit widens;
     * older files read the columns they lack as null. Only listing mode
     * (no generation yet) merges footers. Each partition depth is
-    * pruned at its own grain before the union ([[relationFor]]), and
+    * pruned at its own grain before the union (`relationFor`), and
     * partition columns are dropped after pruning so the result
     * matches the logical table schema.
     */
@@ -908,8 +881,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * rewrite (at 100 TB the [[compact]] full rewrite is a migration
     * tool, not a cadence). The date's current files (whatever trees
     * they live in) are rewritten into a fresh immutable `_gen-*` tree;
-    * the manifest publish — prior entries minus the date's, plus the
-    * rewrite's, tombstones extended — is the atomic commit. Old files
+    * the manifest publish — a patch dropping and tombstoning the
+    * date's files and adding the rewrite's — is the atomic commit. It
+    * is [[compact]]'s rewrite over one date at minute grain. Old files
     * stay on disk for concurrent readers until [[vacuum]]. Never
     * touches other dates or the [[writeStaged]] landings (folding
     * those is the whole-table pass's job).
@@ -920,77 +894,28 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     * generation published (the mutation is fully visible).
     */
   def compactDate(date: String, filesPerPartition: Int = 1,
-      zorderOn: Option[(org.apache.spark.sql.Column,
-        org.apache.spark.sql.Column)] = None,
+      zorderOn: Option[(Column, Column)] = None,
       blockSize: Option[Long] = None,
       crashAfterStep: Int = Int.MaxValue): Unit = mutation {
     fence()
     val part0 = s"date=$date"
     // the rolling heal only needs ITS date's entries (plus the
-    // catch-all) — the patch-shaped commit below never republishes
-    // the rest of the table, so the other partitions' manifests are
-    // never read: per-date maintenance is O(date) metadata end to end
+    // catch-all) — the patch commit never touches the rest of the
+    // table, so the other partitions' manifests are never read:
+    // per-date maintenance is O(date) metadata end to end
     val t = baseFor(Some(pk => pk.isEmpty || pk == part0))
     val eD = t.entries.filter(e => logicalRel(e.rel).startsWith(part0 + "/"))
-    if (eD.isEmpty) return
-    // partition columns re-derived from the row's own time (the store
-    // invariant: dir values are pure functions of timeCol in the
-    // session zone) — one derivation path whatever trees the input
-    // files lived in. compactDate targets the minute layout
-    // (planCompactions only flags minute-grain dates).
-    val dataRows = relationFor(eD, t.schema).getOrElse(return)
-    val rows = ParquetStore.withPartCols(dataRows, timeCol)
-    // `filesPerPartition` is a hash-partition count, so one dir's rows
-    // land wholly in one task at ANY value — the file-per-dir layout
-    // is count-independent. Raise it to the cluster's parallelism so
-    // the rewrite spreads its dirs across cores instead of opening
-    // every parquet writer in one serial task (measured on g13's
-    // maintenance heals: 2-3 s single-task rewrite stages at the
-    // default 1).
-    val base = rows.repartition(
-      math.max(filesPerPartition, spark.sparkContext.defaultParallelism),
-      col("hour"), col("minute"))
-    val sorted = zorderOn.fold(base) { case (x, y) =>
-      base.sortWithinPartitions(col("hour"), col("minute"),
-        graft.operators.Pipelines.zorderKey(x, y))
-    }
-    val gen = newGenName()
-    val writer = bloomWriter(sorted)
-    blockSize.fold(writer)(b => writer
-        .option("parquet.block.size", b.toString))
-      .partitionBy("date", "hour", "minute")
-      .parquet(s"$dir/$gen")
-    if (crashAfterStep <= 1) return
-    // COMMIT: prior entries outside the date kept verbatim — no walk —
-    // plus the rewrite's walk (bounded by the files just written).
-    // The recorded schema stays exact: the rewrite read with it
-    // pinned, so its files carry the full unified column set (a
-    // never-committed store's patch folds its legacy walk and records
-    // the inferred schema the rewrite read with). The lease is
-    // RE-verified here (the rewrite may have run for minutes; a writer
-    // fenced mid-rewrite must not land a stale truth) and the publish
-    // CASes on the planning snapshot's generation.
-    beforeCommit()
-    val now = System.currentTimeMillis()
-    val rewritten = manifest.walkSubtree(gen)
-    val info = Some(s"""{"op":"compactDate","date":"$date",""" +
-      s""""wrote":${rewritten.size},"retired":${eD.size}}""")
-    commitOver(t.parent) { (parent, _, widen) =>
-      // patch-shaped: this mutation KNOWS its delta (the one date it
-      // rewrote) — O(date), not O(table), per commit
-      manifest.publishPatch(
-        adds = rewritten,
-        drops = eD.map(_.rel),
-        deadPlus = eD.map(e => StoreManifest.Dead(e.rel, now)),
-        deadMinus = Nil,
-        schema = widen(t.schema), parent = parent, info = info): Unit
-    }
+    // minute grain: planCompactions only flags minute-grain dates
+    rewrite(t, eD, ParquetStore.partColsFor("minute"), filesPerPartition,
+      zorderOn, blockSize, crashAfterStep)(wrote =>
+      s"""{"op":"compactDate","date":"$date","wrote":$wrote,""" +
+        s""""retired":${eD.size}}""")
   }
 
   /** Compact the small files the minute-grained ingest leaves behind:
     * fold the whole truth, [[writeStaged]] landings included, into one
     * fresh `_gen-*` tree at the target granularity, committed by a
-    * manifest generation whose tombstones cover every superseded file
+    * manifest patch that drops and tombstones every superseded file
     * (they stay on disk for concurrent readers until [[vacuum]]).
     * Readers are unaffected (same hive layout per tree, same
     * pruning); at scale this runs
@@ -1046,64 +971,62 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
     */
   def compact(filesPerPartition: Int = 1,
       crashAfterStep: Int = Int.MaxValue,
-      zorderOn: Option[(org.apache.spark.sql.Column,
-        org.apache.spark.sql.Column)] = None,
+      zorderOn: Option[(Column, Column)] = None,
       blockSize: Option[Long] = None,
       granularity: String = "minute"): Unit = mutation {
     val partCols = ParquetStore.partColsFor(granularity)
     fence()
     if (!exists) return
     // SNAPSHOT: the truth is captured NOW; an append committing after
-    // it is cleanly "late" — outside the rewrite, carried over it by
-    // [[commitOver]], visible before and after the commit.
+    // it is cleanly "late" — outside the rewrite, never dropped by its
+    // patch, visible before and after the commit
     val t = baseFor(None)
-    val all = relationFor(t.entries, t.schema)
-    if (all.isEmpty) return
-    // partition columns re-derived from the row's own time at the
-    // TARGET granularity (the store invariant: dir values are pure
-    // functions of timeCol) — one derivation path whatever mix of
-    // granularities the input trees carried
-    // hash-partition count raised to cluster parallelism — layout-
-    // neutral, write-parallel (see [[compactDate]])
-    val base = ParquetStore.withPartCols(all.get, timeCol, partCols)
-      .repartition(
-        math.max(filesPerPartition, spark.sparkContext.defaultParallelism),
-        partCols.map(col): _*)
-    // partition columns lead the sort so the writer's own
-    // required-ordering (it otherwise re-sorts each task by the
-    // dynamic partition keys, unstably) is already satisfied and the
-    // z-order survives into the files
-    val gen = newGenName()
-    val writer = bloomWriter(zorderOn.fold(base) { case (x, y) =>
-      base.sortWithinPartitions(
-        partCols.map(col) :+ graft.operators.Pipelines.zorderKey(x, y): _*)
-    })
-    blockSize.fold(writer)(b => writer
-        .option("parquet.block.size", b.toString))
-      .partitionBy(partCols: _*)
-      .parquet(s"$dir/$gen")
-    if (crashAfterStep <= 1) return
-    // COMMIT: one manifest publish flips the table to the rewrite —
-    // entries walked from the files just written (bounded), schema
-    // the one the rewrite read with, tombstones =
-    // everything superseded plus the prior not-yet-vacuumed set
-    // carried forward. The lease is RE-verified at the commit point
-    // (a whole-table rewrite can run for minutes; a writer fenced
-    // mid-rewrite must fail here, not publish a truth missing the
-    // fencer's commits) and the publish CASes on the planning
-    // snapshot's generation.
-    beforeCommit()
-    val now = System.currentTimeMillis()
-    val rewritten = manifest.walkSubtree(gen)
-    commitOver(t.parent) { (parent, appended, widen) =>
-      manifest.publish(rewritten ++ appended, widen(t.schema),
-        t.dead ++ t.entries.map(e => StoreManifest.Dead(e.rel, now)),
-        parent = parent,
-        info = Some(s"""{"op":"compact","granularity":"$granularity",""" +
-          s""""wrote":${rewritten.size},""" +
-          s""""retired":${t.entries.size}}""")): Unit
-    }
+    rewrite(t, t.entries, partCols, filesPerPartition, zorderOn,
+      blockSize, crashAfterStep)(wrote =>
+      s"""{"op":"compact","granularity":"$granularity",""" +
+        s""""wrote":$wrote,"retired":${t.entries.size}}""")
   }
+
+  /** The rewrite [[compact]] and [[compactDate]] share: `retired`'s
+    * rows land in one fresh `_gen-*` tree at the `partCols` grain,
+    * which `commitRetiring` then publishes in their place (nothing
+    * when `retired` is empty; no commit when `crashAfterStep` ≤ 1).
+    * Partition columns are re-derived from the row's own time (the
+    * store invariant: dir values are pure functions of timeCol in the
+    * session zone) — one derivation path whatever trees and grains
+    * the input files carried. `filesPerPartition` is a hash-partition
+    * count, so one dir's rows land wholly in one task at ANY value;
+    * it is raised to the cluster's parallelism so the rewrite spreads
+    * its dirs across cores instead of opening every parquet writer in
+    * one serial task (measured on g13's maintenance heals: 2-3 s
+    * single-task rewrite stages at the default 1). The partition
+    * columns lead the z-order sort, so the writer's own required
+    * ordering (it otherwise re-sorts each task by the dynamic
+    * partition keys, unstably) is already satisfied and the z-order
+    * survives into the files. `info` gets the written file count.
+    */
+  private def rewrite(base: ParquetStore.Base,
+      retired: Seq[StoreManifest.Entry], partCols: Seq[String],
+      filesPerPartition: Int, zorderOn: Option[(Column, Column)],
+      blockSize: Option[Long], crashAfterStep: Int)(
+      info: Int => String): Unit =
+    relationFor(retired, base.schema).foreach { rows =>
+      val parts = ParquetStore.withPartCols(rows, timeCol, partCols)
+        .repartition(math.max(filesPerPartition,
+          spark.sparkContext.defaultParallelism), partCols.map(col): _*)
+      val gen = newGenName()
+      val writer = bloomWriter(zorderOn.fold(parts) { case (x, y) =>
+        parts.sortWithinPartitions(
+          partCols.map(col) :+ graft.operators.Pipelines.zorderKey(x, y): _*)
+      })
+      blockSize.fold(writer)(b => writer
+          .option("parquet.block.size", b.toString))
+        .partitionBy(partCols: _*)
+        .parquet(s"$dir/$gen")
+      if (crashAfterStep > 1)
+        commitRetiring(base, Some(gen), retired, base.schema,
+          landed => Some(info(landed.size)))
+    }
 
   /** The generation files currently standing vacuum's destructive
     * sweeps down, as (name, reason, reclaimable) — the operator
@@ -1254,8 +1177,8 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       // patch-shaped: the reclaim's delta is exactly the ripe
       // tombstone list — no O(table) entry diff on a maintenance tick
       if (manifest.recordsSchema(g)) commitOver(Some(g)) {
-        (parent, _, widen) =>
-          manifest.publishPatch(adds = Nil, drops = Nil,
+        (parent, widen) =>
+          manifest.publish(adds = Nil, drops = Nil,
             deadPlus = Nil, deadMinus = ripe.map(_.rel),
             schema = widen(manifest.readGen(g).get.schema), parent = parent,
             info = Some(s"""{"op":"vacuum","reclaimed":${ripe.size}}""")
@@ -1486,17 +1409,9 @@ final class ParquetStore(spark: SparkSession, root: String, table: String,
       fileMaxStat(new Path(s"$dir/${e.rel}")).exists(_ < dayFloorUs))
     val dropped = droppedE ++ stagedDead
     if (dropped.isEmpty) return (0, 0)
-    val now = System.currentTimeMillis()
-    // patch-shaped: the expiry's delta is exactly the dropped dates'
-    // entries
-    commitOver(t.parent) { (parent, _, widen) =>
-      manifest.publishPatch(adds = Nil,
-        drops = dropped.map(_.rel),
-        deadPlus = dropped.map(e => StoreManifest.Dead(e.rel, now)),
-        deadMinus = Nil, schema = widen(t.schema), parent = parent,
-        info = Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
-          s""""retired":${dropped.size}}""")): Unit
-    }
+    commitRetiring(t, None, dropped, t.schema, _ =>
+      Some(s"""{"op":"expire","cutoffDate":"$cutoffDate",""" +
+        s""""retired":${dropped.size}}"""))
     (droppedE.map(e => logicalRel(e.rel).takeWhile(_ != '/'))
       .distinct.size, stagedDead.size)
   }
@@ -1811,12 +1726,24 @@ object ParquetStore {
   final class SchemaConflictException(msg: String)
     extends IllegalArgumentException(msg)
 
-  /** A mutation's planning state ([[ParquetStore.baseFor]]); `parent`
-    * None for a never-committed store.
+  /** A mutation's planning state (`baseFor`); `parent` None for a
+    * never-committed store, whose `entries` are its legacy walk.
     */
   private final case class Base(parent: Option[String],
-      entries: Seq[StoreManifest.Entry], schema: StructType,
-      dead: Seq[StoreManifest.Dead])
+      entries: Seq[StoreManifest.Entry], schema: StructType) {
+    /** What a commit over this base carries besides its landed files:
+      * nothing over a generation (the patch keeps the rest), and for a
+      * never-committed store the legacy walk minus `retired` — its
+      * first commit folds duo's native layout in.
+      */
+    def carried(retired: Seq[StoreManifest.Entry])
+        : Seq[StoreManifest.Entry] =
+      if (parent.isDefined) Nil
+      else {
+        val gone = retired.map(_.rel).toSet
+        entries.filterNot(e => gone(e.rel))
+      }
+  }
 
   /** `df` without the partition columns: the logical table. */
   private def logical(df: DataFrame): DataFrame =

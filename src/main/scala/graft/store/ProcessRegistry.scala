@@ -21,7 +21,7 @@ import graft.model.{Process, TagValue}
   * i64, out-of-Long-range unsigned values as u64 bit patterns — the
   * Jaeger edge renders both as "int64" either way.
   *
-  * IO goes through [[StoreFs]] so the registry file lives wherever the
+  * IO goes through `StoreFs` so the registry file lives wherever the
   * store root does (S5: local path, HDFS, or object-store URI alike).
   */
 final class ProcessRegistry(path: String) {

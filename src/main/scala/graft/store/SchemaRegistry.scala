@@ -77,7 +77,7 @@ object SchemaRegistry {
 
   /** Persist / load the merged schema as JSON (StructType's own JSON
     * codec — engine-portable, like the reference's serialized Arrow
-    * schema at schema/log_schema.json). Through [[StoreFs]] so the
+    * schema at schema/log_schema.json). Through `StoreFs` so the
     * registry lives wherever the store root does (S5: a path under an
     * `s3a://` root works the same as a local one).
     */

@@ -58,8 +58,15 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * manifest ref is keyed `date=…` or `""`: one manifest per date once
   * merged, whatever the date's size. Future formats announce
   * themselves per body with a `protocol` capability line
-  * ([[StoreManifest.SupportedProtocols]], empty in this binary),
+  * (`StoreManifest.SupportedProtocols`, empty in this binary),
   * rejected whole by a reader that lacks the capability.
+  *
+  * One commit form: every mutation — append, rewrite, retention,
+  * mirror, vacuum — publishes the PATCH it knows ([[publish]]: files
+  * added and dropped, tombstones added and reclaimed, the schema it
+  * records), never an absolute file list the manifest would have to
+  * diff. A never-committed store's first commit is a checkpoint of
+  * exactly its adds; the caller folds duo's native layout into them.
   *
   * Snapshot-isolation contract (round-16, unchanged): the manifest
   * generation IS the commit point for every layout mutation. Rewrites
@@ -86,7 +93,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * rewrites. A `dirty-*` marker left in `_manifest` by an older
   * binary's direct appends names rows no generation lists, so every
   * read and commit refuses the store until it is compacted
-  * ([[listState]]).
+  * (`listState`).
   *
   * The underscore prefix hides `_manifest` from Spark's partition
   * discovery, like the `_gen-*` trees.
@@ -274,7 +281,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * (count mismatch / malformed), and the expected-parent CAS makes
     * any mutation they then plan from the stale fallback fail loudly.
     * This binary emits no capability and interprets none
-    * ([[StoreManifest.SupportedProtocols]] is empty), so every
+    * (`StoreManifest.SupportedProtocols` is empty), so every
     * `protocol` line rejects its generation — the fail-closed gate a
     * future format relies on.
     */
@@ -653,119 +660,54 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   // ---- publish (commit layer) ----
 
-  /** Publish a new generation carrying the ABSOLUTE intended state
-    * and return its name:
-    * the complete live-file list, the merged data schema, and the
-    * cumulative tombstone list. The
-    * manifest diffs that state against the parent snapshot and
-    * commits the diff through [[publishPatch]]'s machinery — a
-    * manifest-level DELTA when the diff is small and the chain short,
-    * a CHECKPOINT otherwise — either way the temp-write + single-file
-    * rename is the atomic commit point. Prior generations are
-    * retained (newest [[StoreManifest.KeepGens]] heads and those
-    * younger than [[StoreManifest.RetainMs]], plus their chains and
-    * referenced manifests) so a corrupt latest degrades to
+  /** Publish one mutation's patch as a new generation and return its
+    * name — the one commit form: every mutation states what it changed
+    * (the files it added and dropped, the tombstones it added and
+    * reclaimed, the schema it records), so a commit costs O(delta) CPU
+    * and bytes. Adds-only partitions get a new manifest holding JUST
+    * the adds (accumulation — merged back to one file per partition at
+    * the next checkpoint); partitions with drops rewrite their
+    * manifests (cost ∝ touched partition, never the table). Rolls a
+    * checkpoint on cadence ([[StoreManifest.CheckpointEvery]]) or for
+    * outsized patches. The temp-write + single-file rename is the
+    * atomic commit point, behind an expected-parent CAS; prior
+    * generations are retained (newest [[StoreManifest.KeepGens]] heads
+    * and those younger than [[StoreManifest.RetainMs]], plus their
+    * chains and referenced manifests) so a corrupt latest degrades to
     * the previous consistent snapshot instead of a tree walk.
-    */
-  def publish(entries: Seq[Entry],
-      schema: org.apache.spark.sql.types.StructType,
-      dead: Seq[Dead], parent: Option[String],
-      info: Option[String] = None): String = {
-    val normSchema = StoreManifest.allNullable(schema)
-    val gens = listState()
-    parent.flatMap(p => assembleFull(p, gens)) match {
-      case Some((pst, pEntries)) =>
-        // entry-level diff against the parent snapshot, full-Entry
-        // comparison: a rel whose size/mtime changed (a re-walked
-        // legacy file) re-publishes as drop+add so folds carry the
-        // fresh FileStatus. Presized java maps — the diff runs once
-        // per commit over the full lists and an immutable .toMap of
-        // 10⁶ tuples was the measured bulk of a 1M-file publish.
-        def byRel(es: Seq[Entry]): java.util.HashMap[String, Entry] = {
-          val m = new java.util.HashMap[String, Entry](es.size * 2)
-          es.foreach(e => m.put(e.rel, e))
-          m
-        }
-        val pByRel = byRel(pEntries)
-        val nByRel = byRel(entries)
-        val adds = entries.filter(e => pByRel.get(e.rel) != e)
-        val drops = pEntries.collect {
-          case e if nByRel.get(e.rel) != e => e.rel }
-        val pDead = pst.dead.map(d => d.rel -> d).toMap
-        val nDead = dead.map(d => d.rel -> d).toMap
-        val deadPlus = dead.filter(d => !pDead.get(d.rel).contains(d))
-        val deadMinus = pst.dead.collect {
-          case d if !nDead.get(d.rel).contains(d) => d.rel }
-        commitTwoLevel(Some(pst), parent, adds, drops,
-          deadPlus, deadMinus, Some(dead), normSchema, info,
-          newSize = entries.size.toLong)
-      case None =>
-        // first publish, or the parent no longer folds/assembles: the
-        // absolute state is in hand, write a fresh checkpoint (the
-        // CAS below still verifies `parent` is the newest name)
-        commitTwoLevel(None, parent, adds = entries, drops = Nil,
-          deadPlus = Nil, deadMinus = Nil, absDead = Some(dead),
-          schema = normSchema, info = info,
-          newSize = entries.size.toLong)
-    }
-  }
-
-  /** Patch-shaped publish, returning the new generation's name —
-    * O(delta) CPU and bytes per commit, the
-    * form the store's own mutations use: they KNOW their deltas (the
-    * date they rewrote, the files they retired), so re-deriving the
-    * patch by diffing two full entry lists is pure waste on the
-    * flush/maintenance cadence. Adds-only partitions get a new
-    * manifest holding JUST the adds (accumulation — merged back to
-    * one file per partition at the next checkpoint); partitions with
-    * drops rewrite their manifests (cost ∝ touched partition, never
-    * the table). Rolls a checkpoint on cadence ([[CheckpointEvery]])
-    * or for outsized patches.
-    * Same CAS + rename atom + rollback + retention as [[publish]].
     * Throws IllegalStateException when the parent no longer folds or
     * a touched partition's manifest is unreadable (the caller's
     * planning snapshot is gone — re-plan, like a CAS failure).
-    * `parent = None` is a never-committed store's first commit: the
-    * patch applies over [[walkLegacy]], published as one checkpoint.
+    * `parent = None` is a never-committed store's first commit: a
+    * checkpoint of exactly `adds` and `deadPlus` (`drops` and
+    * `deadMinus` name nothing yet).
     */
-  def publishPatch(adds: Seq[Entry], drops: Seq[String],
+  def publish(adds: Seq[Entry], drops: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
-      parent: Option[String], info: Option[String] = None): String =
-    parent match {
-      case None =>
-        val dropped = drops.toSet
-        publish(walkLegacy().filterNot(e => dropped(e.rel)) ++ adds,
-          schema, deadPlus, parent = None, info = info)
-      case Some(p) =>
-        val ps = fold(p, listState()).getOrElse(throw new
-          IllegalStateException(s"$tableDir: publishPatch parent " +
-            s"$p no longer folds — re-plan and retry"))
-        // approximate resulting size for the delta-vs-checkpoint
-        // heuristic (duplicate rels across accumulated manifests skew
-        // it, but the choice is cosmetic — both forms fold identically)
-        val approxNewSize = ps.approxSize + adds.size - drops.size
-        commitTwoLevel(Some(ps), parent, adds, drops, deadPlus,
-          deadMinus, absDead = None,
-          schema = StoreManifest.allNullable(schema), info = info,
-          newSize = approxNewSize)
-    }
+      parent: Option[String], info: Option[String] = None): String = {
+    val ps = parent.map(p => fold(p, listState()).getOrElse(throw new
+      IllegalStateException(s"$tableDir: publish parent " +
+        s"$p no longer folds — re-plan and retry")))
+    // approximate resulting size for the delta-vs-checkpoint heuristic
+    // (duplicate rels across accumulated manifests skew it, but the
+    // choice is cosmetic — both forms fold identically)
+    val approxNewSize =
+      ps.fold(0L)(_.approxSize) + adds.size - drops.size
+    commitTwoLevel(ps, parent, adds, drops, deadPlus, deadMinus,
+      StoreManifest.allNullable(schema), info, approxNewSize)
+  }
 
   /** The shared two-level commit: decide delta vs checkpoint, write
     * the touched partitions' manifest files, then commit the
     * generation body through the CAS + rename atom. Any failure after
     * manifests were written deletes them before rethrowing (they are
     * unreferenced, but eager cleanup beats waiting for vacuum).
-    *
-    * `absDead` carries the absolute resulting tombstone list when the
-    * caller knows it ([[publish]]); otherwise the checkpoint form
-    * computes it from the parent's list ± the patch.
     */
   private def commitTwoLevel(parentState: Option[GenState],
       parentName: Option[String],
       adds: Seq[Entry], drops: Seq[String],
       deadPlus: Seq[Dead], deadMinus: Seq[String],
-      absDead: Option[Seq[Dead]],
       schema: org.apache.spark.sql.types.StructType,
       info: Option[String], newSize: Long): String = {
     val patchLines = adds.size.toLong + drops.size + deadPlus.size +
@@ -846,28 +788,25 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
               if (!touched(part) && refs.size == 1) finalRefs ++= refs
               else finalRefs ++= rewrite(part, refs)
             }
-          case None => // first publish (or absolute re-publish over
-                       // an unreadable parent): all partitions fresh
+          case None => // first publish: all partitions fresh
             addsByPart.toSeq.sortBy(_._1).foreach { case (part, es) =>
               val r = writeMf(part, es)
               newMfs += r; finalRefs += r
             }
         }
-        val deadFinal: Seq[Dead] = absDead.getOrElse {
-          val m = scala.collection.mutable.LinkedHashMap
-            .from(parentState.map(_.dead).getOrElse(Nil)
-              .map(d => d.rel -> d))
-          deadMinus.foreach(m.remove(_): Unit)
-          deadPlus.foreach(d => m(d.rel) = d)
-          m.values.toSeq
-        }
+        val deadFinal = scala.collection.mutable.LinkedHashMap
+          .from(parentState.map(_.dead).getOrElse(Nil)
+            .map(d => d.rel -> d))
+        deadMinus.foreach(deadFinal.remove(_): Unit)
+        deadPlus.foreach(d => deadFinal(d.rel) = d)
         val mLines = finalRefs.sortBy(_.name)
           .map(r => s"m\t${r.name}\t${r.partKey}\t${r.n}\t${r.size}")
         Iterator(s"mlist=${mLines.size}") ++
           parentName.toSeq.map(p => s"parent\t$p") ++
           Iterator(s"schema\t${schema.json}") ++
           infoLineOf(info) ++
-          deadFinal.map(d => s"dead\t${d.rel}\t${d.millis}").sorted ++
+          deadFinal.values.map(d => s"dead\t${d.rel}\t${d.millis}")
+            .toSeq.sorted ++
           mLines
       }
       commitBody(bodyLines, if (isDelta) ".delta" else ".list",
@@ -1171,9 +1110,8 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * partitions, and only their manifest files are read — the plan
     * wall of a windowed query scales with the partitions the window
     * admits, flat as the table grows. The pruned snapshot is a
-    * PLANNING view: publishing it as absolute truth would drop every
-    * non-admitted partition, so mutations that republish must use the
-    * full [[read]] (or patch-shaped commits).
+    * PLANNING view: a mutation planned from it publishes its patch,
+    * which never touches the non-admitted partitions.
     */
   def readStateFor(admit: String => Boolean): Option[Snapshot] = {
     val gens = listState()
@@ -1185,7 +1123,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
 
   /** Generation files this binary cannot INTERPRET that are not mere
     * crash debris: an unknown body-form header, a `protocol`
-    * capability outside [[StoreManifest.SupportedProtocols]] (the
+    * capability outside `StoreManifest.SupportedProtocols` (the
     * shape a FUTURE binary's commits take), or a header region this
     * pass could not read whole (zero-byte / header-torn artifacts —
     * a non-atomic object-store copy can produce them — and transient
@@ -1209,7 +1147,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
     * wide the header grows (a drifted-schema `schema\t` line can run
     * to megabytes; a fixed read cap would truncate the `protocol`
     * line away and silently fail the gate open). Any `protocol\t`
-    * value outside [[StoreManifest.SupportedProtocols]] classifies,
+    * value outside `StoreManifest.SupportedProtocols` classifies,
     * exactly as the reader refuses to interpret it; a body line never
     * starts with `protocol\t` (`m`/`dead` and delta patch lines do
     * not), so no such line is ever mistaken for a capability.
@@ -1302,7 +1240,7 @@ final class StoreManifest(fs: FileSystem, tableDir: String) {
       } finally in2.close()
     } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** The header-region line scan of [[classifyHeader]] (split out so
+  /** The header-region line scan of `classifyHeader` (split out so
     * the gzip-decode catch above wraps exactly the decode reads).
     */
   private def scanHeader(n: String,
@@ -1489,7 +1427,7 @@ object StoreManifest {
 
   /** One partition-manifest reference as a generation body carries
     * it: the immutable file name under `_manifest/mf/`, the partition
-    * key its entries share ([[partKeyOf]]: `date=…`, or `""` for the
+    * key its entries share (`partKeyOf`: `date=…`, or `""` for the
     * catch-all), its
     * entry count (pruning and size heuristics — duplicates across a
     * partition's accumulated manifests make it an upper bound), and

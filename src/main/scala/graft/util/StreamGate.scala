@@ -69,7 +69,7 @@ private[graft] object StreamGate {
 
   /** Block until every queued Spark listener event is delivered (Bench
     * reads its job/stage/task counters after this). Best-effort like
-    * [[unloadStateStores]]: `listenerBus` is private[spark].
+    * `unloadStateStores`: `listenerBus` is private[spark].
     */
   private[graft] def drainListenerBus(
       s: org.apache.spark.sql.SparkSession): Unit =
@@ -165,7 +165,7 @@ private[graft] object StreamGate {
 
   /** Exit-scoped deletion for MEMOIZED gate artifacts (the g06/g07/g08
     * stores, built once per corpus dir and reused across bench
-    * repeats): unlike [[deferDelete]] these must SURVIVE intermediate
+    * repeats): unlike `deferDelete` these must SURVIVE intermediate
     * reclaims — the whole point is the next invocation reads them — so
     * they live until the JVM exit hook.
     */
@@ -379,7 +379,7 @@ private[graft] object StreamGate {
     * captured at stream start and pinned into the checkpoint); the
     * session values are restored after, so surrounding batch plans
     * are untouched. The set/run/restore
-    * window is serialized under [[shuffleLock]]: the override mutates
+    * window is serialized under `shuffleLock`: the override mutates
     * SESSION-global conf, so two concurrent gates (or a gate beside a
     * batch query) on the shared session could otherwise observe or
     * clobber each other's temporary value — one gate's pinned
@@ -442,7 +442,7 @@ private[graft] object StreamGate {
     new scala.collection.concurrent.TrieMap[String, Seq[java.nio.file.Path]]
 
   /** Populate the feed memo for one (key, tag) batch — the staging leg
-    * of [[landBatch]].
+    * of `landBatch`.
     */
   private def memoStage(k: String, tag: String,
       df: DataFrame): Seq[java.nio.file.Path] =

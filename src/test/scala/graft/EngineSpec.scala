@@ -248,42 +248,50 @@ class EngineSpec extends SparkSpec {
 
   test("an append commits while a rewrite is in flight, and the " +
       "rewrite commits over it: neither waits out nor fails the other") {
-    // the append lands on another thread from inside compactDate's
+    // the append lands on another thread from inside the rewrite's
     // commit seam, i.e. while the rewrite holds the store's monitor;
-    // it must finish there, and the heal must then re-parent onto it
-    val root = tmpRoot()
-    val st = new ParquetStore(spark, root, "log", "time")
+    // it must finish there, and the rewrite's patch must then commit
+    // over it without dropping it — for a date heal, a whole-table
+    // compaction and a reload of the planned rows alike
     def batch(ids: Seq[Int], extra: Boolean) = {
       val df = ids.map(i => ("svc-0", t0 + i * 1000000L, "INFO", s"m$i"))
         .toDF("process_id", "time", "level", "message")
       if (extra) df.withColumn("region", lit("eu")) else df
     }
-    st.write(batch(Seq(1, 2), extra = false))
-    st.write(batch(Seq(3), extra = false))
     val date = java.time.LocalDate.ofInstant(
       java.time.Instant.ofEpochSecond(t0 / 1000000L),
       java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
       .toString
-    val landedInFlight = new java.util.concurrent.atomic.AtomicBoolean
-    st.beforeCommit = () => {
-      st.beforeCommit = () => ()
-      val t = new Thread(() => st.write(batch(Seq(4, 5), extra = true)))
-      t.start()
-      t.join(120000L)
-      landedInFlight.set(!t.isAlive)
+    val rewrites = Seq[(String, ParquetStore => Unit)](
+      "compactDate" -> (_.compactDate(date)),
+      "compact" -> (_.compact()),
+      "replace" -> (_.replaceCommitted(Some(batch(1 to 3, extra = false)),
+        info = Some("""{"op":"replace"}"""))))
+    for ((op, rewrite) <- rewrites) {
+      val st = new ParquetStore(spark, tmpRoot(), "log", "time")
+      st.write(batch(Seq(1, 2), extra = false))
+      st.write(batch(Seq(3), extra = false))
+      val landedInFlight = new java.util.concurrent.atomic.AtomicBoolean
+      st.beforeCommit = () => {
+        st.beforeCommit = () => ()
+        val t = new Thread(() => st.write(batch(Seq(4, 5), extra = true)))
+        t.start()
+        t.join(120000L)
+        landedInFlight.set(!t.isAlive)
+      }
+      try rewrite(st) finally st.beforeCommit = () => ()
+      assert(landedInFlight.get, s"$op: the append waited for the rewrite")
+      val infos = st.generationInfos()
+      assert(infos(st.generations().last).exists(_.contains(s""""op":"$op"""")),
+        s"$op: the rewrite is the newest commit, over the append")
+      val msgs = st.read(None, None).get.select("message").as[String]
+        .collect()
+      assert(msgs.sorted.toSeq == (1 to 5).map(i => s"m$i"), op)
+      // the rewrite's recorded schema took the append's new column on
+      assert(st.manifestSchema.exists(_.fieldNames.contains("region")), op)
+      assert(st.read(None, None).get.where(col("region") === "eu")
+        .count() == 2, op)
     }
-    try st.compactDate(date) finally st.beforeCommit = () => ()
-    assert(landedInFlight.get, "the append waited for the rewrite")
-    val infos = st.generationInfos()
-    assert(infos(st.generations().last).exists(_.contains("compactDate")),
-      "the heal is the newest commit, over the append")
-    val msgs = st.read(None, None).get.select("message").as[String]
-      .collect()
-    assert(msgs.sorted.toSeq == (1 to 5).map(i => s"m$i"))
-    // the heal's recorded schema took the append's new column on
-    assert(st.manifestSchema.exists(_.fieldNames.contains("region")))
-    assert(st.read(None, None).get.where(col("region") === "eu")
-      .count() == 2)
   }
 
   test("flush-cadence history: after a heal and five more flushes the " +

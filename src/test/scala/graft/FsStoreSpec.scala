@@ -77,6 +77,7 @@ object CountingListFileSystem {
 }
 
 class FsStoreSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
   import spark.implicits._
 
   /** The schema raw-manifest fixtures record: every generation records
@@ -220,24 +221,22 @@ class FsStoreSpec extends SparkSpec {
     val m = new graft.store.StoreManifest(fs, tableDir)
     def e(rel: String) = graft.store.StoreManifest.Entry(rel, 1L, 1L)
     // first-ever publish expects NO generation…
-    m.publish(Seq(e("a.parquet")), fx, Nil, parent = None)
+    m.publish(Seq(e("a.parquet")), Nil, Nil, Nil, fx, parent = None)
     val g1 = m.genNames().last
     // …and a second first-ever publish (two writers both planning from
     // an empty store) is rejected
     intercept[graft.store.StoreManifest.ConcurrentCommitException] {
-      m.publish(Seq(e("b.parquet")), fx, Nil, parent = None)
+      m.publish(Seq(e("b.parquet")), Nil, Nil, Nil, fx, parent = None)
     }
     // a chained commit names its planning generation and lands;
     // lineage is recorded in the generation body
-    m.publish(Seq(e("a.parquet"), e("b.parquet")), fx, Nil,
-      parent = Some(g1))
+    m.publish(Seq(e("b.parquet")), Nil, Nil, Nil, fx, parent = Some(g1))
     val g2 = m.genNames().last
     assert(m.read().get.parent.contains(g1))
     // a commit still naming g1 — planned before g2 landed — is
-    // rejected: landing it would drop b.parquet from the newest truth
+    // rejected: its patch was planned without b.parquet
     intercept[graft.store.StoreManifest.ConcurrentCommitException] {
-      m.publish(Seq(e("a.parquet"), e("c.parquet")), fx, Nil,
-        parent = Some(g1))
+      m.publish(Seq(e("c.parquet")), Nil, Nil, Nil, fx, parent = Some(g1))
     }
     // the rejected publishes left no generation and no temp debris;
     // the table is exactly g2's
@@ -256,12 +255,10 @@ class FsStoreSpec extends SparkSpec {
     var raced = false
     m.beforeRename = () => if (!raced) {
       raced = true
-      m.publish(Seq(e("a.parquet"), e("b.parquet"), e("d.parquet")),
-        fx, Nil, parent = Some(g2))
+      m.publish(Seq(e("d.parquet")), Nil, Nil, Nil, fx, parent = Some(g2))
     }
     try intercept[graft.store.StoreManifest.ConcurrentCommitException] {
-      m.publish(Seq(e("a.parquet"), e("b.parquet"), e("x.parquet")),
-        fx, Nil, parent = Some(g2))
+      m.publish(Seq(e("x.parquet")), Nil, Nil, Nil, fx, parent = Some(g2))
     } finally m.beforeRename = () => ()
     // the in-window winner's commit is the newest truth and the
     // loser's generation is gone from the retained set
@@ -279,7 +276,7 @@ class FsStoreSpec extends SparkSpec {
     val mfsBefore = mfNames()
     m.beforeRename = () => throw new RuntimeException("crash-at-rename")
     val crash = try intercept[RuntimeException] {
-      m.publishPatch(adds = Seq(e("date=2024-01-15/y.parquet")),
+      m.publish(adds = Seq(e("date=2024-01-15/y.parquet")),
         drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
         parent = Some(snap.gen))
     } finally m.beforeRename = () => ()
@@ -481,6 +478,38 @@ class FsStoreSpec extends SparkSpec {
           s"$name: $read ran $jobs jobs, opened $planOpens files to plan")
       }
     }
+  }
+
+  test("a first write over duo's native layout walks the legacy tree " +
+      "once: its commit folds in the walk its planning took") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lcount.impl", classOf[CountingListFileSystem].getName)
+    val local = java.nio.file.Files.createTempDirectory("lcountwalk")
+    val root = s"lcount://$local"
+    def rows(ids: Seq[Long]) = ids.map(i => (i, t0 + i * 60L * 1000000L, i))
+      .toDF("id", "start", "trace_id")
+    ScaleProbe.writeNativeLayout(rows(1L to 6L), s"$root/span", "start")
+    val table = local.resolve("span")
+    // one walk lists the table dir and every date/hour/minute dir
+    val legacyDirs = {
+      val it = java.nio.file.Files.walk(table)
+      try it.iterator().asScala.count(p => java.nio.file.Files.isDirectory(p))
+      finally it.close()
+    }
+    val store = new ParquetStore(spark, root, "span", "start")
+    CountingListFileSystem.reset()
+    store.write(rows(Seq(7L)))
+    val listed = CountingListFileSystem.paths.asScala.toSeq
+      .map(p => p.substring(p.indexOf(table.toString) +
+        table.toString.length).stripPrefix("/"))
+    // outside the legacy tree only the generation, manifest and lease
+    // lookups and the landed `_gen-*` tree are listed
+    val (other, legacy) = listed.partition(_.startsWith("_"))
+    assert(other.forall(r => Set("_manifest", "_manifest/mf", "_lock")(r) ||
+        r.startsWith("_gen-")), s"listed outside the tree: $other")
+    assert(legacy.size <= legacyDirs,
+      s"${legacy.size} legacy listings for $legacyDirs dirs: $legacy")
+    assert(store.read(None, None).get.count() == 7L)
   }
 
   test("incremental manifest maintenance: a per-date drain walks only " +
@@ -1000,7 +1029,7 @@ class FsStoreSpec extends SparkSpec {
     // each append's commit must NOT
     val base = (0 until 5000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/part-$i%05d.parquet", 1000L + i, 1700000000000L + i))
-    m.publish(base, fx, Nil, parent = None)
+    m.publish(base, Nil, Nil, Nil, fx, parent = None)
     assert(genFiles().last.getPath.getName.endsWith(".list"),
       "first publish must be a checkpoint")
     val checkpointBytes = metaBytes()
@@ -1010,9 +1039,10 @@ class FsStoreSpec extends SparkSpec {
     var parent = m.read().map(_.gen)
     val deltaSizes = (0 until 6).map { k =>
       val before = metaBytes()
-      entries = entries ++ (0 until 5).map(i => StoreManifest.Entry(
+      val adds = (0 until 5).map(i => StoreManifest.Entry(
         f"date=2024-01-16/part-$k%02d-$i.parquet", 999L, 1700000100000L + k))
-      m.publish(entries, fx, Nil, parent)
+      entries = entries ++ adds
+      m.publish(adds, Nil, Nil, Nil, fx, parent)
       val newest = genFiles().last
       parent = Some(newest.getPath.getName)
       assert(newest.getPath.getName.endsWith(".delta"),
@@ -1033,10 +1063,11 @@ class FsStoreSpec extends SparkSpec {
     val firstCkpt = genFiles().head.getPath.getName
     def rollChain(): Unit = (0 until StoreManifest.CheckpointEvery)
       .foreach { k =>
-        entries = entries ++ Seq(StoreManifest.Entry(
+        val add = StoreManifest.Entry(
           s"date=2024-01-17/part-${entries.size}.parquet", 1L,
-          1700000200000L + k))
-        m.publish(entries, fx, Nil, parent)
+          1700000200000L + k)
+        entries = entries :+ add
+        m.publish(Seq(add), Nil, Nil, Nil, fx, parent)
         parent = m.read().map(_.gen)
       }
     rollChain()
@@ -1062,9 +1093,9 @@ class FsStoreSpec extends SparkSpec {
       assert(m.readGen(n).isDefined, s"retained head $n must fold"))
     // TORN newest delta: the fold rejects it whole and falls back to
     // its parent's state — never half a patch
-    entries = entries ++ Seq(StoreManifest.Entry(
-      "date=2024-01-18/part-x.parquet", 1L, 1700000300000L))
-    m.publish(entries, fx, Nil, m.read().map(_.gen))
+    m.publish(Seq(StoreManifest.Entry(
+      "date=2024-01-18/part-x.parquet", 1L, 1700000300000L)),
+      Nil, Nil, Nil, fx, m.read().map(_.gen))
     val newest = genFiles().last
     assert(newest.getPath.getName.endsWith(".delta"))
     val beforeTear = m.read().get.entries.size
@@ -1112,9 +1143,8 @@ class FsStoreSpec extends SparkSpec {
     // other writer would; the store re-reads it at vacuum time
     val m = new StoreManifest(fsys, s"$root/span")
     val snap = m.read().get
-    m.publish(snap.entries, snap.schema,
-      snap.dead ++ junk.map(StoreManifest.Dead(_, 0L)),
-      parent = Some(snap.gen))
+    m.publish(Nil, Nil, junk.map(StoreManifest.Dead(_, 0L)), Nil,
+      snap.schema, parent = Some(snap.gen))
     val (ripe, _, _) = store.vacuum(graceMs = 0L)
     assert(ripe >= 100, s"expected the junk batch ripe, got $ripe")
     junk.foreach(r => assert(!fsys.exists(
@@ -1207,9 +1237,9 @@ class FsStoreSpec extends SparkSpec {
       .maxBy(_.getPath.getName).getPath.getName
     val base = (0 until 1000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/part-$i%04d.parquet", 100L + i, 1L))
-    m.publish(base, fx, Nil, None)
+    m.publish(base, Nil, Nil, Nil, fx, None)
     // a small patch lands as a delta and folds exactly
-    m.publishPatch(
+    m.publish(
       adds = Seq(StoreManifest.Entry("date=2024-01-16/a.parquet", 1L, 2L)),
       drops = Seq(base.head.rel),
       deadPlus = Seq(StoreManifest.Dead(base.head.rel, 5L)),
@@ -1223,11 +1253,11 @@ class FsStoreSpec extends SparkSpec {
       snap.dead.map(_.rel) == Seq(base.head.rel) &&
       snap.info.contains("""{"op":"spec"}"""))
     // tombstone reclaim (vacuum's shape) is a delta too
-    m.publishPatch(Nil, Nil, Nil, deadMinus = Seq(base.head.rel),
+    m.publish(Nil, Nil, Nil, deadMinus = Seq(base.head.rel),
       schema = fx, parent = Some(snap.gen))
     assert(newest().endsWith(".delta") && m.read().get.dead.isEmpty)
     // a patch that rivals the table's size rolls a checkpoint instead
-    m.publishPatch(Nil, drops = base.drop(1).map(_.rel),
+    m.publish(Nil, drops = base.drop(1).map(_.rel),
       deadPlus = Nil, deadMinus = Nil, schema = fx,
       parent = m.read().map(_.gen))
     assert(newest().endsWith(".list"),
@@ -1237,7 +1267,7 @@ class FsStoreSpec extends SparkSpec {
     // cadence rollover: CheckpointEvery patches on, a fresh checkpoint
     var parent = m.read().get.gen
     (0 until StoreManifest.CheckpointEvery + 1).foreach { k =>
-      m.publishPatch(Seq(StoreManifest.Entry(s"date=2024-01-17/p$k.parquet",
+      m.publish(Seq(StoreManifest.Entry(s"date=2024-01-17/p$k.parquet",
         1L, 1L)), Nil, Nil, Nil, fx, Some(parent))
       parent = m.read().get.gen
     }
@@ -1248,7 +1278,7 @@ class FsStoreSpec extends SparkSpec {
     // a stale parent is rejected whole, nothing lands
     val before = m.genNames()
     intercept[StoreManifest.ConcurrentCommitException] {
-      m.publishPatch(Nil, Nil, Nil, Nil, fx, before.headOption)
+      m.publish(Nil, Nil, Nil, Nil, fx, before.headOption)
     }
     assert(m.genNames() == before)
   }
@@ -1283,7 +1313,7 @@ class FsStoreSpec extends SparkSpec {
     val snap = m.read().get
     val feed = store.cdcFeed("audit-consumer", keyCols = Seq("id"))
     feed.commit(snap.gen)
-    m.publish(snap.entries, snap.schema, snap.dead, Some(snap.gen))
+    m.publish(Nil, Nil, Nil, Nil, snap.schema, Some(snap.gen))
     assert(store.generationInfo(store.generations().last).isEmpty)
     // that republish changed no entry: a caught-up consumer receives
     // it as a plain zero-row increment, not a resync
@@ -1305,7 +1335,7 @@ class FsStoreSpec extends SparkSpec {
     val entries = (0 until 2000).map(i => StoreManifest.Entry(
       f"date=2024-01-15/hour=${i / 100}%02d/part-$i%05d.parquet",
       1000L + i, 1700000000000L + i))
-    m.publish(entries, fx, Nil, parent = None)
+    m.publish(entries, Nil, Nil, Nil, fx, parent = None)
     val ckpt = fsys.listStatus(mdir)
       .filter(_.getPath.getName.endsWith(".list")).maxBy(_.getPath.getName)
     // on-disk form: gzip magic, and far below the plain body's size
@@ -1610,13 +1640,21 @@ class FsStoreSpec extends SparkSpec {
     }
     val init = dates.flatMap(p => (0 until 5).map(_ => mk(p)))
     init.foreach(e => model(e.rel) = e)
-    m.publish(init, fx, Nil, parent = None)
+    m.publish(init, Nil, Nil, Nil, fx, parent = None)
+    val dead = scala.collection.mutable.Set.empty[String]
     (0 until 30).foreach { i =>
       val parent = m.read().get.gen
       if (i % 7 == 6) {
-        // absolute republish of the whole intended state (the
-        // publish() diff path over whatever mf accumulation exists)
-        m.publish(model.values.toSeq, fx, Nil, Some(parent))
+        // whole-table rewrite (compact's shape): every live rel
+        // dropped and tombstoned, fresh ones added in their dates,
+        // over whatever mf accumulation exists
+        val drops = model.keys.toSeq
+        val fresh = model.keys.toSeq.map(r => mk(r.takeWhile(_ != '/')))
+        model.clear()
+        fresh.foreach(e => model(e.rel) = e)
+        dead ++= drops
+        m.publish(fresh, drops, drops.map(StoreManifest.Dead(_, i.toLong)),
+          Nil, fx, Some(parent))
       } else if (i % 3 == 2 && model.nonEmpty) {
         // partition rewrite: drop 1-2 random rels, add one — the
         // mdel + madd arm, plus newest-wins dedupe
@@ -1625,7 +1663,7 @@ class FsStoreSpec extends SparkSpec {
         val add = mk(dates(rnd.nextInt(dates.size)))
         victims.foreach(model.remove(_): Unit)
         model(add.rel) = add
-        m.publishPatch(adds = Seq(add), drops = victims,
+        m.publish(adds = Seq(add), drops = victims,
           deadPlus = Nil, deadMinus = Nil, schema = fx,
           parent = Some(parent))
       } else {
@@ -1641,7 +1679,7 @@ class FsStoreSpec extends SparkSpec {
         val adds = (0 until 1 + rnd.nextInt(3))
           .map(_ => mk(dates(rnd.nextInt(dates.size)))) ++ readd
         adds.foreach(e => model(e.rel) = e)
-        m.publishPatch(adds = adds, drops = Nil, deadPlus = Nil,
+        m.publish(adds = adds, drops = Nil, deadPlus = Nil,
           deadMinus = Nil, schema = fx, parent = Some(parent))
       }
       // the fold must equal the model after EVERY commit — across
@@ -1651,6 +1689,7 @@ class FsStoreSpec extends SparkSpec {
       val snap = m.read().get
       assert(snap.entries == model.values.toSeq.sortBy(_.rel),
         s"fold diverged from the model at commit $i (${snap.gen})")
+      assert(snap.deadRels == dead, s"tombstones diverged at commit $i")
       // and a window over one partition equals the model's slice
       val d = dates(i % dates.size)
       val win = m.readStateFor(pk => pk.isEmpty || pk == d)
@@ -1673,9 +1712,9 @@ class FsStoreSpec extends SparkSpec {
     val fsys = StoreFs.fs(new org.apache.hadoop.fs.Path(root))
     val m = new StoreManifest(fsys, s"$root/span")
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
-    m.publish(Seq(e("date=2024-01-15/a.parquet")), fx, Nil,
+    m.publish(Seq(e("date=2024-01-15/a.parquet")), Nil, Nil, Nil, fx,
       parent = None)
-    m.publishPatch(adds = Seq(e("date=2024-01-15/b.parquet")),
+    m.publish(adds = Seq(e("date=2024-01-15/b.parquet")),
       drops = Nil, deadPlus = Nil, deadMinus = Nil, schema = fx,
       parent = m.read().map(_.gen))
     val gen2 = m.read().get.gen
@@ -1769,7 +1808,7 @@ class FsStoreSpec extends SparkSpec {
     val m = new StoreManifest(fsys, local.toString)
     def e(rel: String) = StoreManifest.Entry(rel, 1L, 1L)
     m.publish(Seq(e("date=2024-01-15/a.parquet"),
-      e("date=2024-01-16/b.parquet")), fx, Nil, parent = None)
+      e("date=2024-01-16/b.parquet")), Nil, Nil, Nil, fx, parent = None)
     assert(m.read().get.entries.size == 2)
     // locate day-16's manifest and tear it IN PLACE (half the bytes:
     // the ref-recorded length check rejects it)
@@ -2067,7 +2106,7 @@ class FsStoreSpec extends SparkSpec {
       .listFiles().map(_.getName).filter(_.endsWith(".parquet")).head
     val fsys = graft.store.StoreFs.fs(new org.apache.hadoop.fs.Path(root))
     val m = new graft.store.StoreManifest(fsys, s"$root/span")
-    m.publishPatch(adds = Nil, drops = Nil,
+    m.publish(adds = Nil, drops = Nil,
       deadPlus = Seq(graft.store.StoreManifest.Dead(s"_staging/$name",
         System.currentTimeMillis())),
       deadMinus = Nil, schema = store.manifestSchema.get,

@@ -351,6 +351,41 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("an upper-half u64 trace_id renders unsigned in /api/logs rows, " +
+      "/api/changes rows and /api/logs/stats/trace_id") {
+    val root = java.nio.file.Files.createTempDirectory("httpu64").toString
+    val engine = new DuoEngine(spark, root)
+    def log(off: Long, traceId: Long, msg: String) =
+      Seq(("example-0", t0 + off, Some(traceId), "INFO", msg))
+        .toDF("process_id", "time", "trace_id", "level", "message")
+    engine.appendLogBatch(log(0L, 9001L, "low"))
+    engine.flush()
+    // a bit-cast negative long: the u64 id space's upper half
+    engine.appendLogBatch(log(1000L, -1L, "high"))
+    engine.flush()
+    val gens = engine.generations("log")
+    val u64 = java.lang.Long.toUnsignedString(-1L)
+    val api = new HttpApi(engine)
+    api.start()
+    try {
+      val port = api.boundPort
+      val win = s"start=${t0 - 1000000L}&end=${t0 + 1000000L}"
+      val (scL, logs) = get(port, s"/api/logs?service=example&$win")
+      assert(scL == 200 && logs.contains(s""""trace_id":$u64,""") &&
+        logs.contains(""""trace_id":9001,"""), logs)
+      val (scC, changes) = get(port, s"/api/changes?table=log&" +
+        s"from=${gens.head}&to=${gens.last}")
+      assert(scC == 200 && changes.contains(s""""trace_id":$u64""") &&
+        !changes.contains("low"), changes)
+      val (scS, stats) = get(port,
+        s"/api/logs/stats/trace_id?service=example&$win")
+      assert(scS == 200 && stats.contains(s""""value":$u64,""") &&
+        stats.contains(""""value":9001,"""), stats)
+      Seq(logs, changes, stats).foreach(body =>
+        assert(!body.contains(":-1"), body))
+    } finally api.stop()
+  }
+
   test("cadence loops make the server durable unattended: HTTP ingest " +
       "→ cadence flush → crash WITHOUT the shutdown hook → a fresh " +
       "engine answers from cold parquet") {
